@@ -1,9 +1,6 @@
 """Market-basket association mining (Agrawal & Srikant 1994).
 
-Split into mergeable COUNT stages and a pure PRICING stage so the
-incremental streaming twin (:mod:`..streaming.basket`) can maintain
-the counts as plain sums and render rules identical to the at-rest
-operator:
+Split into mergeable COUNT stages and a pure PRICING stage:
 
 - :func:`basket_item_counts` / :func:`basket_pair_counts` — map-side-
   combined aggregations whose merge across batches is exact addition

@@ -39,9 +39,8 @@ from rootstock_collective_state_sync_spark.operators.text import tokens, word_sh
 
 def normalized_hash(text_col) -> "F.Column":
     """Canonical content identity: lower-cased, whitespace-collapsed
-    md5 — the ONE definition of "same document", shared by the at-rest
-    pass (:func:`exact_groups`) and the streaming-ingest pass
-    (:mod:`..streaming.dedup`) so the two tiers always agree."""
+    md5 — the ONE definition of "same document" (:func:`exact_groups`
+    keys on it)."""
     return F.md5(F.regexp_replace(F.lower(text_col), r"\s+", " ").cast("binary"))
 
 
@@ -569,10 +568,9 @@ def contamination_against_index(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """:func:`benchmark_contamination` against a PRE-BUILT distinct
-    eval shingle index (column ``s``) — the shape the incremental
-    ingest leg needs (``streaming/contamination.py``: the eval set is
-    FIXED, so its index is built once and persisted; each ingest batch
-    joins against it). Same broadcast-overlap plan, same columns.
+    eval shingle index (column ``s``): a FIXED eval set's index can be
+    built once and persisted, and each train batch joins against it.
+    Same broadcast-overlap plan, same columns.
     """
     t = shingle_index(train, text_col=text_col, id_col=id_col, n=n)
     b = index.select("s")

@@ -270,7 +270,7 @@ def benford_digit_counts(
 ) -> DataFrame:
     """(digit, n) first-significant-digit counts over the positive
     values — the MERGEABLE half of the Benford audit (counts over
-    disjoint row sets add exactly), shared with the streaming twin."""
+    disjoint row sets add exactly)."""
     vc = (
         F.round(F.col(value_col) * 100).cast("long")
         if cents
@@ -287,8 +287,7 @@ def benford_digit_counts(
 
 
 def benford_from_counts(per: DataFrame) -> DataFrame:
-    """(digit, n) counts -> the full audit report (the render half,
-    shared by the at-rest scan and the streaming store)."""
+    """(digit, n) counts -> the full audit report (the render half)."""
     spark = per.sparkSession
     spine = local_df(
         spark,
@@ -680,14 +679,13 @@ def equidepth_from_counts(
     per_v: DataFrame, buckets: int = 8
 ) -> DataFrame:
     """Render the equi-depth histogram from a per-VALUE count table
-    ``(v, c)`` — the mergeable-summary form that makes the histogram
-    incrementally maintainable (``streaming/equidepth.py``): counts
-    over disjoint row sets add exactly, and the ``(bucket, n, lo,
-    hi)`` report is a pure function of the merged counts. The report
-    equals :func:`equidepth_histogram` over the raw rows bit-for-bit:
-    the id tie-split only decides WHICH equal-valued rows land in a
+    ``(v, c)`` — the mergeable-summary form: counts over disjoint row
+    sets add exactly, and the ``(bucket, n, lo, hi)`` report is a pure
+    function of the merged counts. The report equals
+    :func:`equidepth_histogram` over the raw rows bit-for-bit: the id
+    tie-split only decides WHICH equal-valued rows land in a
     straddling bucket, never the bucket's value extent or size
-    (pinned by ``tests/test_streaming_equidepth.py``).
+    (pinned by ``tests/test_properties.py``).
 
     Mechanics: the distributed prefix sum gives each value its
     exclusive global offset; the value's rows occupy ranks
@@ -979,10 +977,7 @@ def mann_whitney_u(
 
     One row: ``(n_a, n_b, r2_a, u2_a, tie_t, z_e6)``. ``value_col``
     must be integer-typed (snap to cents first — fixed-point policy).
-    NULL ``value_col`` rows are dropped (a NULL is not a rank), the
-    SAME policy as the streaming twin (``streaming/ranktests.py``) so
-    the documented bit-for-bit stream/at-rest equivalence holds on
-    nullable inputs too.
+    NULL ``value_col`` rows are dropped (a NULL is not a rank).
 
     Scale shape: per-value counts (one map-side-combined shuffle),
     the distributed prefix sum for ``off`` (never a global ordered
@@ -1010,9 +1005,7 @@ def mann_whitney_u(
 def mann_whitney_u_from_counts(per_v: DataFrame) -> DataFrame:
     """:func:`mann_whitney_u` from a per-VALUE count table ``(v, c,
     ca)`` — the mergeable-summary form (counts over disjoint row sets
-    add exactly) that makes the test incrementally maintainable
-    (``streaming/ranktests.py``, same split as
-    ``equidepth_from_counts``)."""
+    add exactly), the same split as ``equidepth_from_counts``."""
     dec = "decimal(38,0)"
     off = _distributed_prefix_sum(per_v, "v", "c", "off")
     tot = per_v.agg(
@@ -1096,9 +1089,7 @@ def ks_two_sample(
     maximum. Reports the SMALLEST value attaining the max so the
     result is deterministic under ties. One row: ``(n_a, n_b, d_e9,
     at_v)``. NULL ``value_col`` rows are dropped (no place on the
-    ECDF) — the same policy as the streaming twin
-    (``streaming/ranktests.py``) so stream/at-rest stay bit-equal on
-    nullable inputs.
+    ECDF).
 
     Scale shape: per-value counts, ONE distributed prefix sum for the
     joint cumulative (A's rides along as a second measure), a
@@ -1123,8 +1114,7 @@ def ks_two_sample(
 
 def ks_two_sample_from_counts(per_v: DataFrame) -> DataFrame:
     """:func:`ks_two_sample` from the same per-VALUE count table
-    ``(v, c, ca)`` as :func:`mann_whitney_u_from_counts` — one
-    mergeable store serves both rank tests incrementally."""
+    ``(v, c, ca)`` as :func:`mann_whitney_u_from_counts`."""
     per_v = per_v.withColumn("cb", (F.col("c") - F.col("ca")).cast("long"))
     # both cumulatives in ONE prefix pass (shared boundary probe +
     # window tower; the columns co-exist on the input rows)
@@ -1193,8 +1183,7 @@ def cliffs_delta(
     e6-snapped. One row: ``(n_a, n_b, n_gt, n_lt, n_tie, delta_e6,
     cles_e6)`` — NULL statistics when either side is empty.
     ``value_col`` must be integer-typed (fixed-point policy); NULL
-    values are dropped (the shared rank-test policy, matching the
-    streaming twin so stream/at-rest stay bit-equal).
+    values are dropped (the shared rank-test policy).
 
     Scale shape: identical to `mann_whitney_u` — per-value counts,
     one distributed prefix sum, bounded aggregates; the n²-scale
@@ -1217,9 +1206,7 @@ def cliffs_delta(
 
 def cliffs_delta_from_counts(per_v: DataFrame) -> DataFrame:
     """:func:`cliffs_delta` from the same per-VALUE count table
-    ``(v, c, ca)`` as :func:`mann_whitney_u_from_counts` — the sixth
-    report of the shared mergeable rank-test store
-    (``streaming/ranktests.py``)."""
+    ``(v, c, ca)`` as :func:`mann_whitney_u_from_counts`."""
     dec = "decimal(38,0)"
     per_v = per_v.withColumn("cb", (F.col("c") - F.col("ca")).cast("long"))
     offb = _distributed_prefix_sum(per_v, "v", "cb", "offb")
@@ -1607,7 +1594,7 @@ def spearman_rho(
     one double division is e6-snapped. Returns ``(*group_cols,
     n_rows, rho_e6)``. NULL x or y rows are dropped (the shared
     rank-test NULL policy; r14 — no behavior change on non-null
-    inputs, and the streaming pair store filters identically).
+    inputs).
     """
     g = list(group_cols or [])
     base = df.select(
@@ -1625,11 +1612,9 @@ def spearman_rho_from_pairs(
 ) -> DataFrame:
     """Render Spearman from a ``(x, y, n_xy)`` PAIR-count table — the
     mergeable-summary form (pair counts over disjoint row sets add
-    exactly) that makes rank correlation incrementally maintainable
-    (``streaming/rankcorr.py``, X-ST23): both marginal rank tables
-    derive from the pair table by summation, so the store IS the
-    sufficient statistic for Spearman AND Kendall — one store, two
-    reports, the X-ST21/22 pattern."""
+    exactly): both marginal rank tables derive from the pair table by
+    summation, so it IS the sufficient statistic for Spearman AND
+    Kendall."""
     g = list(group_cols or [])
     per_x = pairs.groupBy(*g, F.col("x").alias("v")).agg(
         F.sum("n_xy").cast("long").alias("c")
@@ -1800,7 +1785,7 @@ def kendall_tau(
     double sqrt + e6 round at the end is the `spearman_rho` /
     `kaplan_meier` determinism class (IEEE-correctly-rounded on both
     engines). NULL x or y rows are dropped — the shared rank-test
-    NULL policy (streaming twins filter the same way).
+    NULL policy.
 
     Input contract / scale shape: the cell self-join is bounded by
     |distinct (x,y) cells|² PER GROUP — the Theil-Sen calendar-bound
@@ -1826,9 +1811,8 @@ def kendall_tau_from_pairs(
     group_cols: "list[str] | None" = None,
 ) -> DataFrame:
     """Render tau-b from the same ``(x, y, n_xy)`` PAIR-count table
-    :func:`spearman_rho_from_pairs` consumes — the X-ST23 store's
-    second report (concordance and rank covariance share one exactly-
-    additive sufficient statistic)."""
+    :func:`spearman_rho_from_pairs` consumes (concordance and rank
+    covariance share one exactly-additive sufficient statistic)."""
     g = list(group_cols or [])
     cells = pairs.select(*g, "x", "y", F.col("n_xy").alias("c"))
     dec = "decimal(38,0)"
@@ -1901,129 +1885,6 @@ def kendall_tau_from_pairs(
     return out.orderBy(*g) if g else out
 
 
-def gini_from_counts(
-    per_v: DataFrame,
-    group_cols: "list[str] | None" = None,
-) -> DataFrame:
-    """Render the exact Gini index from a per-VALUE count table
-    ``(v, c)`` (per group when ``group_cols`` given) — the
-    mergeable-summary form that makes X-A26 incrementally
-    maintainable (``streaming/gini.py``, X-ST22): counts over
-    disjoint row sets add exactly, and the index is a pure function
-    of the merged counts. Bit-equal to :func:`gini_index` over the
-    raw rows: the rank formulation is tie-invariant, and a value's
-    rows occupy ranks ``off+1..off+c``, so ``Σ rn·v`` contributes
-    ``v·(c·off + c(c+1)/2)`` per value — kept DOUBLED
-    (``2Σrn·v = Σ v·(2·c·off + c(c+1))``) so every intermediate is
-    integral, in DECIMAL(38,0) like the raw operator. The prefix
-    offsets come from the shared distributed two-level prefix sum —
-    no global ordered window."""
-    g = list(group_cols or [])
-    off = _distributed_prefix_sum(per_v, "v", "c", "off", group_cols=g)
-    dec = "decimal(38,0)"
-    term = F.col("v").cast(dec) * (
-        F.lit(2).cast(dec) * F.col("c").cast(dec) * F.col("off").cast(dec)
-        + F.col("c").cast(dec) * (F.col("c").cast(dec) + 1)
-    )
-    agg = off.groupBy(*g).agg(
-        F.sum("c").cast("long").alias("n"),
-        F.sum(F.col("c").cast(dec) * F.col("v")).alias("s"),
-        F.sum(term).alias("ws2"),
-    )
-    return agg.select(
-        *g,
-        "n",
-        F.col("s").cast("long").alias("total"),
-        F.expr(
-            "CAST((ws2 - (n + 1) * s) * 1000000 div (n * s) AS BIGINT)"
-        ).alias("gini_e6"),
-    ).orderBy(*g) if g else agg.select(
-        "n",
-        F.col("s").cast("long").alias("total"),
-        F.expr(
-            "CAST((ws2 - (n + 1) * s) * 1000000 div (n * s) AS BIGINT)"
-        ).alias("gini_e6"),
-    )
-
-
-def lorenz_from_counts(per_v: DataFrame, buckets: int = 10) -> DataFrame:
-    """Render the Lorenz-curve decile table from the same per-VALUE
-    count store (X-ST22's second report — one store, two reports,
-    like the X-ST21 rank-test pair). Bit-equal to the raw-row
-    renderer (`plans/analytics.py::q_lorenz_curve`'s ntile path): the
-    id tie-split only decides WHICH equal-valued rows straddle a
-    decile boundary, never how many or their value sum, so per-decile
-    ``n`` and ``Σv`` are pure functions of the counts. A value with
-    exclusive offset ``off`` and count ``c`` spans ntile buckets
-    ``bucket(off+1)..bucket(off+c)`` (an explode bounded by
-    ``buckets``) and contributes its rank-range overlap with each —
-    exact integer arithmetic end-to-end; the cumulative shares run
-    over the ``buckets``-row table (bounded window, like the
-    equi-depth base offsets)."""
-    B = int(buckets)
-    off = _distributed_prefix_sum(per_v, "v", "c", "off")
-    tot = per_v.agg(
-        F.sum("c").cast("long").alias("_n"),
-        F.sum(F.col("c").cast("decimal(38,0)") * F.col("v")).alias("_s"),
-    )
-
-    def bucket_of(r: str) -> str:
-        return (
-            f"CAST(CASE WHEN {r} <= (_n % {B}) * (_n div {B} + 1) "
-            f"THEN ({r} - 1) div (_n div {B} + 1) + 1 "
-            f"ELSE (_n % {B}) + "
-            f"({r} - (_n % {B}) * (_n div {B} + 1) - 1) div (_n div {B}) + 1 "
-            f"END AS INT)"
-        )
-
-    # ntile bucket b's global rank range: lo = (b-1)·q + min(b-1, r) + 1,
-    # hi = b·q + min(b, r), with q = n div B, r = n mod B
-    lo_b = f"((bucket - 1) * (_n div {B}) + least(bucket - 1, _n % {B}) + 1)"
-    hi_b = f"(bucket * (_n div {B}) + least(bucket, _n % {B}))"
-    spans = (
-        off.crossJoin(F.broadcast(tot))
-        .withColumn("_b1", F.expr(bucket_of("(off + 1)")))
-        .withColumn("_b2", F.expr(bucket_of("(off + c)")))
-        .select(
-            "v",
-            "c",
-            "off",
-            "_n",
-            F.explode(F.sequence("_b1", "_b2")).alias("bucket"),
-        )
-        .withColumn(
-            "rows_in_b",
-            F.expr(
-                f"least(off + c, {hi_b}) - greatest(off + 1, {lo_b}) + 1"
-            ).cast("long"),
-        )
-    )
-    per_b = spans.groupBy("bucket").agg(
-        F.sum("rows_in_b").cast("long").alias("n"),
-        F.sum(F.col("rows_in_b").cast("decimal(38,0)") * F.col("v")).alias(
-            "sv"
-        ),
-    )
-    w = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return (
-        per_b.crossJoin(F.broadcast(tot))
-        .withColumn("cn", F.sum("n").over(w))
-        .withColumn("cs", F.sum("sv").over(w))
-        .select(
-            "bucket",
-            "n",
-            F.expr("CAST(sv * 1000000 div _s AS BIGINT)").alias("share_e6"),
-            F.expr("CAST(cn * 1000000 div _n AS BIGINT)").alias("cum_pop_e6"),
-            F.expr("CAST(cs * 1000000 div _s AS BIGINT)").alias(
-                "cum_value_e6"
-            ),
-        )
-        .orderBy("bucket")
-    )
-
-
 def wasserstein_1d(
     df: DataFrame,
     value_col: str,
@@ -2072,8 +1933,7 @@ def wasserstein_1d(
 
 def wasserstein_from_counts(per_v: DataFrame) -> DataFrame:
     """:func:`wasserstein_1d` from the same per-VALUE count table
-    ``(v, c, ca)`` as the MWU/KS renderers — the X-ST21 store's THIRD
-    report (one store, three reports)."""
+    ``(v, c, ca)`` as the MWU/KS renderers."""
     per_v = per_v.withColumn("cb", (F.col("c") - F.col("ca")).cast("long"))
     # both cumulatives in ONE prefix pass (shared boundary probe +
     # window tower; the columns co-exist on the input rows)
@@ -2119,9 +1979,7 @@ def group_moments(
     """Per-group moment table ``(g, n, s, q)`` — count, sum, sum of
     squares, the EXACTLY-ADDITIVE sufficient statistic for the whole
     mean/variance test family (one-way ANOVA, Welch t, effect sizes):
-    moments over disjoint row sets add exactly, so the same table the
-    at-rest operators reduce to is also the incremental store
-    (``streaming/moments.py``, X-ST24 — the X-ST21/22/23 split).
+    moments over disjoint row sets add exactly.
     ``s``/``q`` accumulate in DECIMAL(38,0) (q grows value²·n — past
     long at cents-scale corpora); ``value_col`` must be integer-typed
     (snap to cents first — fixed-point policy; fractional input
@@ -2228,8 +2086,7 @@ def welch_from_moments(
     m: DataFrame, a_groups: "list[str]"
 ) -> DataFrame:
     """Welch's unequal-variance t between the union of ``a_groups``
-    and the remaining groups, from the same moment table (the
-    X-ST24 store's second report): ``t = (m_A − m_B)/√(v_A/n_A +
+    and the remaining groups, from the same moment table: ``t = (m_A − m_B)/√(v_A/n_A +
     v_B/n_B)`` with the Welch–Satterthwaite df. Two-row reduction —
     every double expression has a FIXED operand order, so the result
     is bit-determined (no multi-group float summation). One row:
@@ -2295,7 +2152,7 @@ def effect_size_from_moments(
 ) -> DataFrame:
     """Cohen's d and Hedges' g between the union of ``a_groups`` and
     the remaining groups, from the same ``(g, n, s, q)`` moment table
-    (X-A53; the X-ST24 store's THIRD report): `welch_t` says whether
+    (X-A53): `welch_t` says whether
     the means differ, this says by how many pooled standard
     deviations — the magnitude number a significance test cannot
     give, and (unlike the z/t statistics) one that does NOT grow with
@@ -2372,7 +2229,7 @@ def energy_distance(
     sensitive drift statistic beside KS (max gap, X-A39) and W1
     (transport mass, X-A44); E ≥ 0 with equality iff the
     distributions coincide. Same input slice, same ``(v, c, ca)``
-    sufficient statistic — the X-ST21 store's FOURTH report.
+    sufficient statistic.
 
     EXACT INTEGERS throughout: for sorted distinct values, every
     pairwise-|difference| sum decomposes over prefix sums —
@@ -2581,8 +2438,7 @@ def hellinger_distance(
     on empty buckets, so drift magnitudes are comparable across
     features on one scale. Same bucket construction as
     `population_stability` (reference-side deciles, tie-split
-    invariant), same ``(v, c, ca)`` sufficient statistic — the
-    X-ST21 store's SEVENTH report.
+    invariant), same ``(v, c, ca)`` sufficient statistic.
 
     Each bucket's ``√(p_i·q_i)`` (the Bhattacharyya coefficient term)
     is one fixed-operand-order double, e9-snapped before the exact

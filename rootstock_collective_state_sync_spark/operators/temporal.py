@@ -399,9 +399,8 @@ def ohlc_bars(
     aggregated map-side (every accumulator — struct-min, struct-max,
     min, max, sum — is associative and commutative, which is also what
     makes the bar MERGEABLE: :func:`ohlc_render` over merged
-    :func:`ohlc_partial` partials equals the at-rest bars, the
-    contract the streaming twin relies on). Bars are keys x buckets —
-    control-plane output.
+    :func:`ohlc_partial` partials equals the at-rest bars). Bars are
+    keys x buckets — control-plane output.
     """
     return ohlc_render(
         ohlc_partial(df, key_col, ts_col, value_col, id_col, bar)
@@ -502,147 +501,6 @@ def ohlc_render(partials: DataFrame) -> DataFrame:
     ]
     return partials.select(
         *keep, "open_c", "high_c", "low_c", "close_c", "n_events", "volume_c"
-    )
-
-
-def twap_partial(
-    df: DataFrame,
-    group_col: str,
-    ts_col: str,
-    value_col: str,
-    id_col: str,
-) -> DataFrame:
-    """Mergeable TWAP partial per group: boundary coordinates (first /
-    last observation under the (t, id) total order) + the INTERNAL
-    segment sums. Two partials where one's events all precede the
-    other's merge exactly via :func:`twap_merge2` — the bridge segment
-    between them is ``earlier.last_vc x (later.first_t -
-    earlier.last_t)``, which is precisely the segment the at-rest
-    :func:`time_weighted_mean` would have built. Columns: ``(group,
-    first_t, first_id, first_vc, last_t, last_id, last_vc, n_events,
-    span_us, vdt)`` with ``vdt`` in DECIMAL(38,0) cent-microseconds."""
-    t = F.expr(
-        f"timestampdiff(MICROSECOND, to_timestamp_ntz('1970-01-01'), "
-        f"cast({ts_col} as timestamp_ntz))"
-    )
-    base = df.select(
-        F.col(group_col),
-        F.col(id_col).alias("id_"),
-        t.alias("t"),
-        F.round(F.col(value_col) * 100).cast("long").alias("vc"),
-    )
-    return twap_partial_from_base(base, group_col)
-
-
-def twap_partial_from_base(base: DataFrame, group_col: str) -> DataFrame:
-    """:func:`twap_partial` over an already-projected ``(group, t,
-    id_, vc)`` frame (naive-epoch-microsecond ``t``, integer-cent
-    ``vc``) — the shape the watermark-bounded streaming twin buffers
-    pending events in, so finalization can build chunk partials
-    without round-tripping through timestamps."""
-    w = Window.partitionBy(group_col).orderBy(
-        F.col("t").asc(), F.col("id_").asc()
-    )
-    seg = base.select(
-        group_col,
-        "t",
-        "id_",
-        "vc",
-        (F.lead("t").over(w) - F.col("t")).alias("dt"),
-    )
-    return (
-        seg.groupBy(group_col)
-        .agg(
-            F.min(F.struct("t", "id_", "vc")).alias("f"),
-            F.max(F.struct("t", "id_", "vc")).alias("l"),
-            F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.coalesce(F.sum("dt"), F.lit(0)).cast("long").alias("span_us"),
-            F.coalesce(
-                F.sum(F.col("vc").cast("decimal(38,0)") * F.col("dt")),
-                F.lit(0),
-            )
-            .cast("decimal(38,0)")
-            .alias("vdt"),
-        )
-        .select(
-            group_col,
-            F.col("f.t").alias("first_t"),
-            F.col("f.id_").cast("long").alias("first_id"),
-            F.col("f.vc").alias("first_vc"),
-            F.col("l.t").alias("last_t"),
-            F.col("l.id_").cast("long").alias("last_id"),
-            F.col("l.vc").alias("last_vc"),
-            "n_events",
-            "span_us",
-            "vdt",
-        )
-    )
-
-
-def twap_merge2(
-    earlier: DataFrame, later: DataFrame, group_col: str
-) -> DataFrame:
-    """Merge two TWAP partial tables under the monotone-arrival
-    contract (every ``later`` event's (t, id) follows every
-    ``earlier`` event's for the same group — the append-log ingest
-    order, the same contract as the novelty/CDC incremental stores).
-    Groups present on one side pass through unchanged; shared groups
-    gain the bridge segment."""
-    e = earlier.select(
-        F.col(group_col).alias("g"),
-        *[F.col(c).alias(f"e_{c}") for c in earlier.columns if c != group_col],
-    )
-    l = later.select(
-        F.col(group_col).alias("g"),
-        *[F.col(c).alias(f"l_{c}") for c in later.columns if c != group_col],
-    )
-    both = e.join(l, "g", "full_outer")
-    has_e = F.col("e_n_events").isNotNull()
-    has_l = F.col("l_n_events").isNotNull()
-    bridge_dt = F.col("l_first_t") - F.col("e_last_t")
-    bridge_vdt = F.col("e_last_vc").cast("decimal(38,0)") * bridge_dt
-    return both.select(
-        F.col("g").alias(group_col),
-        F.when(has_e, F.col("e_first_t")).otherwise(F.col("l_first_t")).alias("first_t"),
-        F.when(has_e, F.col("e_first_id")).otherwise(F.col("l_first_id")).alias("first_id"),
-        F.when(has_e, F.col("e_first_vc")).otherwise(F.col("l_first_vc")).alias("first_vc"),
-        F.when(has_l, F.col("l_last_t")).otherwise(F.col("e_last_t")).alias("last_t"),
-        F.when(has_l, F.col("l_last_id")).otherwise(F.col("e_last_id")).alias("last_id"),
-        F.when(has_l, F.col("l_last_vc")).otherwise(F.col("e_last_vc")).alias("last_vc"),
-        (
-            F.coalesce("e_n_events", F.lit(0))
-            + F.coalesce("l_n_events", F.lit(0))
-        )
-        .cast("long")
-        .alias("n_events"),
-        (
-            F.coalesce("e_span_us", F.lit(0))
-            + F.coalesce("l_span_us", F.lit(0))
-            + F.when(has_e & has_l, bridge_dt).otherwise(F.lit(0))
-        )
-        .cast("long")
-        .alias("span_us"),
-        (
-            F.coalesce(F.col("e_vdt"), F.lit(0).cast("decimal(38,0)"))
-            + F.coalesce(F.col("l_vdt"), F.lit(0).cast("decimal(38,0)"))
-            + F.when(has_e & has_l, bridge_vdt).otherwise(
-                F.lit(0).cast("decimal(38,0)")
-            )
-        )
-        .cast("decimal(38,0)")
-        .alias("vdt"),
-    )
-
-
-def twap_render(partials: DataFrame, group_col: str) -> DataFrame:
-    """The serving view of TWAP partials — identical columns and
-    values to :func:`time_weighted_mean` over the same events
-    (single-event groups carry no segments and drop, as there)."""
-    return partials.filter(F.col("span_us") > 0).select(
-        group_col,
-        (F.col("n_events") - 1).cast("long").alias("n_segments"),
-        "span_us",
-        F.expr("CAST(vdt div span_us AS BIGINT)").alias("twap_c"),
     )
 
 

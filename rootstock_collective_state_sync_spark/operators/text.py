@@ -405,9 +405,7 @@ def vocab_census(
 def vocab_census_from_tf(tf: DataFrame, group_col: str = "source") -> DataFrame:
     """Render the vocabulary census from a ``(g, term, n)`` frequency
     table — the mergeable-summary form (term counts over disjoint doc
-    sets add exactly) that makes the census incrementally
-    maintainable (``streaming/vocab.py``, same split as
-    ``equidepth_from_counts``)."""
+    sets add exactly), the same split as ``equidepth_from_counts``."""
     return (
         tf.groupBy("g")
         .agg(
@@ -461,11 +459,9 @@ def vocab_overlap_matrix(
 
 def vocab_overlap_from_incidence(inc: DataFrame) -> DataFrame:
     """Render the overlap matrix from a ``(g, term)`` incidence table
-    — the X-ST20 store's view (``n > 0`` rows of the (source, term,
-    n) frequency store ARE the incidence, so the streamed store
-    renders this report too: one store, two reports, r13 verdict
-    item 6; pinned at every prefix by
-    ``tests/test_streaming_vocab.py``)."""
+    (the ``n > 0`` rows of a ``(g, term, n)`` frequency table ARE the
+    incidence, so one frequency table renders both vocabulary
+    reports)."""
     sizes = inc.groupBy("g").agg(F.count(F.lit(1)).cast("long").alias("nv"))
     a = inc.select(F.col("g").alias("sa"), "term")
     b = inc.select(F.col("g").alias("sb"), "term")
@@ -1279,56 +1275,6 @@ def _dsir_doc_scores(
     )
 
 
-def dsir_increment(
-    batch: DataFrame,
-    prev_counts: DataFrame | None,
-    target_col: str = "is_target",
-    num_buckets: int = 4096,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> tuple[DataFrame, DataFrame]:
-    """One micro-batch step of incremental DSIR: merge the batch's
-    gram-bucket counts into the persistent model (``prev_counts`` =
-    (bucket, c_raw, c_tgt) or None for the first batch) and score the
-    BATCH documents against the POST-merge model — prequential
-    (progressive-validation) scoring: every doc is scored by the model
-    as of its own arrival, and count merging is a plain sum, so the
-    final store equals the at-rest model exactly and re-scoring any
-    corpus against it reproduces :func:`dsir_log_ratio` bit-for-bit
-    (pinned by ``tests/test_streaming_dsir.py``).
-
-    Returns ``(updated_counts, batch_scores)``; the caller persists
-    ``updated_counts`` (≤ B rows — a control-plane-sized store) and
-    appends ``batch_scores``.
-    """
-    bkt = _dsir_gram_buckets(batch, target_col, num_buckets, id_col, text_col)
-    bcounts = _dsir_bucket_counts(bkt)
-    if prev_counts is None:
-        updated = bcounts
-    else:
-        p = prev_counts.select(
-            "bucket",
-            F.col("c_raw").alias("p_raw"),
-            F.col("c_tgt").alias("p_tgt"),
-        )
-        updated = (
-            bcounts.join(p, "bucket", "full_outer")
-            .select(
-                "bucket",
-                (F.coalesce("c_raw", F.lit(0)) + F.coalesce("p_raw", F.lit(0)))
-                .cast("long")
-                .alias("c_raw"),
-                (F.coalesce("c_tgt", F.lit(0)) + F.coalesce("p_tgt", F.lit(0)))
-                .cast("long")
-                .alias("c_tgt"),
-            )
-        )
-    scores = _dsir_doc_scores(
-        batch, bkt, _dsir_weights(updated, num_buckets), id_col
-    )
-    return updated, scores
-
-
 def entropy_scores(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -1654,73 +1600,6 @@ def cdc_dup_stats(
             ),
         )
     )
-
-
-def merge_chunk_stores(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Associative min-merge of ``(chunk_hash, first_id)`` owner
-    stores — idempotent (re-merging a replayed batch converges), the
-    crash-recovery property the streaming leg relies on."""
-    return (
-        a.unionByName(b)
-        .groupBy("chunk_hash")
-        .agg(F.min("first_id").cast("bigint").alias("first_id"))
-    )
-
-
-def cdc_dup_increment(
-    batch: DataFrame,
-    store: DataFrame,
-    window: int = 8,
-    modulus: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> "tuple[DataFrame, DataFrame]":
-    """Incremental chunk-level dup census: merge the batch's CDC
-    chunk owners into the persistent ``(chunk_hash, first_id)`` store
-    and score the BATCH documents against the post-merge store —
-    identical to the at-rest :func:`cdc_dup_stats` semantics for the
-    batch docs under the monotone-id append-log contract (future docs
-    have higher ids, so the global min-owner comparison ``owner <
-    id`` is already decided by the docs seen so far; same argument as
-    ``ngram_novelty_incremental``, pinned by
-    ``tests/test_streaming_cdc.py``).
-
-    Returns ``(updated_store, batch_scores)`` with the
-    :func:`cdc_dup_stats` output schema. Per-batch cost is
-    batch-sized + one store min-merge; the corpus is never
-    re-chunked. Store rows are (16-byte hash, id) — never text.
-    """
-    chunks = cdc_chunks(batch, window, modulus, id_col, text_col)
-    updated = merge_chunk_stores(
-        store,
-        chunks.groupBy("chunk_hash").agg(
-            F.min(id_col).cast("bigint").alias("first_id")
-        ),
-    )
-    dup = F.col("first_id") < F.col(id_col)
-    scores = (
-        chunks.join(updated, "chunk_hash")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_chunks"),
-            F.sum(F.when(dup, 1).otherwise(0)).cast("long").alias(
-                "n_dup_chunks"
-            ),
-            F.sum(F.when(dup, F.col("chunk_len")).otherwise(0))
-            .cast("long")
-            .alias("dup_chars"),
-            F.sum("chunk_len").cast("long").alias("total_chars"),
-        )
-        .withColumn(
-            "dup_char_ratio",
-            F.round(
-                F.col("dup_chars").cast("double")
-                / F.greatest(F.col("total_chars"), F.lit(1)).cast("double"),
-                6,
-            ),
-        )
-    )
-    return updated, scores
 
 
 # ---------------------------------------------------------------------------

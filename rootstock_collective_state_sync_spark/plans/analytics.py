@@ -1472,8 +1472,8 @@ def q_ohlc_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (struct-min/max open/close picks, min/max/sum elsewhere) — the
     oracle computes the daily bars DIRECTLY from raw events, so the
     driver hash verifies the merge law itself (bars of merged partials
-    == bars over the union), the property the streaming twin and any
-    rollup hierarchy rely on. One extra control-plane aggregation over
+    == bars over the union), the property any rollup hierarchy
+    relies on. One extra control-plane aggregation over
     the keys x hours partial table."""
     from rootstock_collective_state_sync_spark.operators.temporal import (
         ohlc_merge,
@@ -1685,9 +1685,7 @@ def q_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cusum_from_daily(daily: DataFrame) -> DataFrame:
     """:func:`q_cusum_changepoints` from the per-(type, day) count
     table — the mergeable-summary form (daily counts over disjoint
-    row sets add exactly), so the CUSUM census is incrementally
-    maintainable from the X-ST25 daily-volume store
-    (``streaming/dailyvol.py``)."""
+    row sets add exactly)."""
     means = daily.groupBy("event_type").agg(
         F.expr("sum(n) * 1000000 div count(1)").cast("long").alias("mean_e6")
     )
@@ -2858,7 +2856,7 @@ def q_pettitt_daily_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pettitt_from_daily(daily: DataFrame) -> DataFrame:
     """:func:`q_pettitt_daily_volume` from the per-(type, day) count
     table — the mergeable-summary form shared with
-    :func:`cusum_from_daily` (one X-ST25 store, multiple censuses)."""
+    :func:`cusum_from_daily`."""
     base = daily.groupBy("event_type").agg(F.min("day").alias("d0"))
     x = daily.join(F.broadcast(base), "event_type").select(
         "event_type",

@@ -1,11 +1,10 @@
 """Event-time window conformance queries over the ``events`` table.
 
 The reference has no event-time windows (block numbers are monotone,
-SURVEY §2.10); these cover the engine's extended streaming scope in
-batch form — the same ``window()`` / ``session_window()`` expressions
-run unchanged under Structured Streaming with ``withWatermark``
-(:mod:`..streaming`). Oracles reconstruct Spark's window semantics
-(epoch-aligned starts; session end = last event + gap) in ANSI SQL.
+SURVEY §2.10); these cover event-time windows in batch form with
+Spark's ``window()`` / ``session_window()`` expressions. Oracles
+reconstruct Spark's window semantics (epoch-aligned starts; session
+end = last event + gap) in ANSI SQL.
 """
 
 from __future__ import annotations

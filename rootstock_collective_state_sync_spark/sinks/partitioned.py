@@ -16,8 +16,7 @@ Built on the engine primitives Spark already ships:
 - ``spark.sql.sources.partitionOverwriteMode=dynamic`` scopes
   ``mode("overwrite")`` to the partitions present in the incoming
   DataFrame. The conf is set per-write and restored, never leaked to
-  the session (same restore discipline as
-  ``streaming/windows.py``'s schema probe).
+  the session.
 """
 
 from __future__ import annotations

@@ -42,10 +42,15 @@ def pytest_collection_modifyitems(config, items):
         if item.nodeid in slow:
             item.add_marker(full)
             continue
-        if window is not None and "test_conformance.py" in item.nodeid:
-            name = item.nodeid.rsplit("[", 1)[-1].rstrip("]")
-            if "[" in item.nodeid and name not in window:
-                item.add_marker(full)
+        callspec = getattr(item, "callspec", None)
+        name = callspec.params.get("name") if callspec else None
+        if (
+            window is not None
+            and item.path.name == "test_conformance.py"
+            and name is not None
+            and name not in window
+        ):
+            item.add_marker(full)
 
 
 @pytest.fixture(scope="session")

@@ -38,6 +38,62 @@ def test_exact_dedup_finds_planted_copies(spark):
     assert groups == {1: 2, 3: 1}
 
 
+def test_normalized_hash_matches_exact_groups(spark):
+    """`normalized_hash` is the content identity `exact_groups` keys on
+    — same md5 over the same normalization."""
+    df = spark.createDataFrame(
+        [(1, "A  b\tC"), (2, "a b c")], ["doc_id", "text"]
+    )
+    hashes = {
+        r.h
+        for r in df.select(D.normalized_hash(F.col("text")).alias("h")).collect()
+    }
+    assert len(hashes) == 1
+    batch = D.exact_groups(df).collect()
+    assert batch[0].content_hash in hashes
+
+
+def test_incremental_near_dups_matches_at_rest(spark, docs):
+    """Feeding the corpus in two batches through the incremental path
+    must find exactly the pairs the at-rest full pass finds (cap set
+    high so no shingle crosses it between batches — the documented
+    exact-equivalence regime)."""
+    docs = docs.select("doc_id", "text")
+    cap = 10_000
+    want = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in D.minhash_lsh_pairs(docs, threshold=0.5).collect()
+        # at-rest uses cap 100; rerun uncapped for the comparison
+    }
+    want_uncapped = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in D._verified_jaccard(
+            D._hashed(D._capped_index(D.shingle_index(docs), cap)),
+            D.lsh_candidates(
+                D.minhash_signatures(
+                    docs, _index=D._capped_index(D.shingle_index(docs), cap)
+                )
+            ),
+            0.5,
+        ).collect()
+    }
+    b1 = docs.filter(F.col("doc_id") % 2 == 0)
+    b2 = docs.filter(F.col("doc_id") % 2 == 1)
+    empty_sh = spark.createDataFrame([], "id long, s string")
+    empty_bd = spark.createDataFrame([], "id long, band int, bh string")
+    p1, sh, bd = D.incremental_near_dups(
+        b1, empty_sh, empty_bd, threshold=0.5, max_docs_per_shingle=cap
+    )
+    p2, sh, bd = D.incremental_near_dups(
+        b2, sh, bd, threshold=0.5, max_docs_per_shingle=cap
+    )
+    got = {(r.id_a, r.id_b): r.jaccard for r in p1.collect()}
+    got.update({(r.id_a, r.id_b): r.jaccard for r in p2.collect()})
+    assert got == want_uncapped
+    # sanity: the capped at-rest pass is a subset of the uncapped one
+    assert set(want) <= set(want_uncapped)
+
+
 def test_minhash_lsh_recall_vs_exact(docs):
     """LSH must recover a large fraction of true near-dup pairs
     (16 hashes / 4 bands: P(candidate) = 1-(1-j^4)^4 ≈ 0.93 at j=0.8;

@@ -226,6 +226,28 @@ def test_ivfpq_topk_probe_broadcast(spark):
     assert "CartesianProduct" not in p
 
 
+def test_kmv_dedup_partial_group_limit_below_exchange(spark):
+    """`kmv_bottom_k(dedup=True)` ranks on a lone dense_rank so the
+    rank-limit pushdown plants a PARTIAL WindowGroupLimit directly
+    under the level-1 (grp, sub-bucket) exchange: each map task prunes
+    to its local bottom-k before anything shuffles. A companion
+    expression in that window would drop the partial limit and put
+    the raw hash stream on the wire."""
+    from rootstock_collective_state_sync_spark.operators.sketches import (
+        kmv_bottom_k,
+    )
+
+    h = spark.range(0, 2000).selectExpr(
+        "id % 3 AS grp", "xxhash64(id % 500) AS h"
+    )
+    lines = plan(spark, kmv_bottom_k(h, 16, dedup=True), "simple").splitlines()
+    first = max(i for i, line in enumerate(lines) if "Exchange" in line)
+    assert re.search(r"Exchange hashpartitioning\(grp#\d+L, _sl#", lines[first])
+    assert re.search(
+        r"WindowGroupLimit .*dense_rank\(h#\d+L\), 16, Partial", lines[first + 1]
+    )
+
+
 def test_drop_dup_spans_bounded_shuffles(spark):
     """Span dedup is window-over-hash + anti-join + per-doc rollup:
     bounded hash exchanges, never a cartesian, and no single-partition

@@ -335,8 +335,7 @@ _ohlc_events = st.lists(
 @given(events=_ohlc_events, cut=st.integers(min_value=0, max_value=23))
 def test_ohlc_merge_equals_at_rest_for_any_split(spark, events, cut):
     """OHLC merge law: partial(batch1) ⊕ partial(batch2) rendered ==
-    ohlc_bars over the union, for ANY split point — the contract the
-    streaming twin relies on."""
+    ohlc_bars over the union, for ANY split point."""
     from rootstock_collective_state_sync_spark.operators.temporal import (
         ohlc_bars,
         ohlc_merge,
@@ -732,7 +731,7 @@ def test_distributed_prefix_sum_string_keys(spark, rows):
     buckets=st.sampled_from([2, 4, 8, 13]),
 )
 def test_equidepth_from_counts_equals_raw_rows(spark, counts, buckets):
-    """X-ST18's renderer contract as a property: for ANY per-value
+    """The renderer contract as a property: for ANY per-value
     count table, equidepth_from_counts == equidepth_histogram over
     rows expanded from those counts (ids synthesized — the tie-split
     must never move a bucket's size or value extent)."""
@@ -772,7 +771,7 @@ def test_equidepth_from_counts_equals_raw_rows(spark, counts, buckets):
     )
 )
 def test_rank_tests_from_counts_equal_raw(spark, rows):
-    """X-ST21's renderer contract as a property: MWU and KS from the
+    """The renderer contract as a property: MWU and KS from the
     merged (v, c, ca) table equal the raw-row operators for any mix,
     including all-one-group edges (z/d undefined -> NULL-safe)."""
     from rootstock_collective_state_sync_spark.operators.profile import (
@@ -802,10 +801,8 @@ def test_rank_tests_from_counts_equal_raw(spark, rows):
 
 
 def test_rank_tests_drop_null_values(spark):
-    """r13 advisor (medium): the at-rest MWU/KS/Kruskal must share
-    the streaming twin's NULL policy — NULL value rows are dropped,
-    not ranked — so stream/at-rest equivalence holds on nullable
-    inputs."""
+    """r13 advisor (medium): MWU/KS/Kruskal share one NULL policy —
+    NULL value rows are dropped, not ranked."""
     from rootstock_collective_state_sync_spark.operators.profile import (
         kruskal_wallis,
         ks_two_sample,
@@ -1112,3 +1109,112 @@ def test_energy_distance_matches_brute_force(spark, rows):
         - 2 * snap(m_bb, nb * nb)
     )
     assert got["e_e9"] == want
+
+
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(min_value=-1000, max_value=1000),  # value
+            st.integers(min_value=0, max_value=3),  # group id
+        ),
+        min_size=2,
+        max_size=50,
+    )
+)
+def test_anova_welch_match_python_reference(spark, rows):
+    """X-A45 against a pure-Python reference computed the same way
+    (exact integer moments, double only at the same final
+    expressions): f/eta²/t/df within 1 e6-ulp; degenerate inputs
+    (k<2, zero variance, empty side, n<2 per side) go NULL."""
+    import math
+
+    from rootstock_collective_state_sync_spark.operators.profile import (
+        anova_oneway,
+        welch_t,
+    )
+
+    df = spark.createDataFrame(
+        [(v, f"g{g}") for v, g in rows], "vc long, o_orderpriority string"
+    )
+    got_a = anova_oneway(df, "vc", "o_orderpriority").collect()[0]
+    got_w = welch_t(df, "vc", "o_orderpriority", ["g0", "g1"]).collect()[0]
+
+    by_g: dict[str, list[int]] = {}
+    for v, g in rows:
+        by_g.setdefault(f"g{g}", []).append(v)
+    n = len(rows)
+    k = len(by_g)
+    s = sum(v for v, _ in rows)
+    q = sum(v * v for v, _ in rows)
+    # the reference's one double reduction folds in sorted-g order —
+    # the SAME fixed order the operator and oracle use (r14 advisor
+    # fix: the reduction must not be partition-order-dependent)
+    s2n = sum(
+        float(sum(vs)) ** 2 / len(vs) for _, vs in sorted(by_g.items())
+    )
+    grand = float(s) ** 2 / n
+    ssb, sst = s2n - grand, float(q) - grand
+    ssw = sst - ssb
+    assert got_a["n"] == n and got_a["k"] == k
+    if k > 1 and n > k and ssw > 0:
+        f = (ssb / (k - 1)) / (ssw / (n - k))
+        assert abs(got_a["f_e6"] - round(f * 1e6)) <= 1
+    else:
+        assert got_a["f_e6"] is None
+    if sst > 0:
+        assert abs(got_a["eta2_e6"] - round(ssb / sst * 1e6)) <= 1
+    else:
+        assert got_a["eta2_e6"] is None
+
+    a_vals = [v for v, g in rows if f"g{g}" in ("g0", "g1")]
+    b_vals = [v for v, g in rows if f"g{g}" not in ("g0", "g1")]
+    assert got_w["n_a"] == len(a_vals) and got_w["n_b"] == len(b_vals)
+    if len(a_vals) > 1 and len(b_vals) > 1:
+        va_n = (
+            (sum(v * v for v in a_vals) - float(sum(a_vals)) ** 2 / len(a_vals))
+            / (len(a_vals) - 1) / len(a_vals)
+        )
+        vb_n = (
+            (sum(v * v for v in b_vals) - float(sum(b_vals)) ** 2 / len(b_vals))
+            / (len(b_vals) - 1) / len(b_vals)
+        )
+        se2 = va_n + vb_n
+        if se2 > 0:
+            t = (
+                sum(a_vals) / len(a_vals) - sum(b_vals) / len(b_vals)
+            ) / math.sqrt(se2)
+            assert abs(got_w["t_e6"] - round(t * 1e6)) <= 1
+        else:
+            assert got_w["t_e6"] is None
+    else:
+        assert got_w["t_e6"] is None
+
+
+def test_anova_partition_order_invariance(spark):
+    """The r14 advisor's flake class: the per-group s²/n reduction
+    must not depend on partition count / merge order. With the
+    fixed-order left fold over the g-sorted term array the statistic
+    is bit-identical across repartitionings (a plain double F.sum was
+    not guaranteed to be)."""
+    from rootstock_collective_state_sync_spark.operators.profile import (
+        anova_oneway,
+    )
+    from rootstock_collective_state_sync_spark.plans.tables import load_table
+
+    from tests.conftest import SF_SMOKE
+
+    orders = load_table(spark, SF_SMOKE, "orders").select(
+        "o_orderpriority",
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("vc"),
+    )
+    want = None
+    for parts in (1, 7, 32):
+        got = tuple(
+            anova_oneway(
+                orders.repartition(parts), "vc", "o_orderpriority"
+            ).collect()[0]
+        )
+        if want is None:
+            want = got
+        assert got == want, parts

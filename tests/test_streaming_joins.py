@@ -8,13 +8,11 @@ from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import types as T
+from pyspark.sql import functions as F, types as T
 
 from rootstock_collective_state_sync_spark.streaming import joins as sj
-from rootstock_collective_state_sync_spark.streaming import windows as sw
 
 from tests.conftest import SF_SMOKE
-from tests.test_streaming_windows import run_stream
 
 EV_SCHEMA = T.StructType(
     [
@@ -25,6 +23,66 @@ EV_SCHEMA = T.StructType(
         T.StructField("value", T.DoubleType(), True),
     ]
 )
+
+
+def run_stream(spark, df, name: str):
+    q = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(180)
+    return spark.sql(f"SELECT * FROM {name}")
+
+
+def stream_events_parquet(spark, sf_dir: str):
+    """Stream the events table through the file source (one
+    micro-batch per trigger; the downstream plan is what a Kafka or
+    blockstream reader would feed).
+
+    ``ts`` encoding is probed from the file rather than assumed: a
+    TIMESTAMP(NANOS) file surfaces as LongType under ``nanosAsLong``
+    and gets the same floor-to-micros conversion as the batch path
+    (``plans/tables.py``); a TIMESTAMP(MICROS) file streams as a
+    native timestamp untouched."""
+    # probe under nanosAsLong, then restore the session conf so the
+    # setting doesn't leak to unrelated reads on a shared session —
+    # UNLESS the file really is TIMESTAMP(NANOS): then the streaming
+    # scans themselves need the legacy conf for the lifetime of the
+    # query, so it must stay set (it already is in get_spark sessions).
+    conf_key = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = spark.conf.get(conf_key, None)
+    spark.conf.set(conf_key, "true")
+    raw_schema = None
+    try:
+        raw_schema = (
+            spark.read.option("pathGlobFilter", "events.parquet")
+            .parquet(sf_dir)
+            .schema
+        )
+    finally:
+        if raw_schema is None or not isinstance(
+            raw_schema["ts"].dataType, T.LongType
+        ):
+            if prior is None:
+                spark.conf.unset(conf_key)
+            else:
+                spark.conf.set(conf_key, prior)
+    stream = (
+        spark.readStream.schema(raw_schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
+    if isinstance(raw_schema["ts"].dataType, T.LongType):
+        # integral `div`, not `/`: nanos exceed 2^53 (see load_table)
+        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    elif isinstance(raw_schema["ts"].dataType, T.TimestampNTZType):
+        # withWatermark requires TIMESTAMP (ltz); session tz is pinned
+        # to UTC in get_spark, so the cast is value-preserving
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    return stream
 
 
 def _t(mm: int) -> datetime.datetime:
@@ -56,7 +114,7 @@ def test_planted_funnel_interval_semantics(spark, tmp_path):
 def test_stream_join_equals_batch(spark):
     from rootstock_collective_state_sync_spark.plans.tables import load_table
 
-    ev_stream = sw.stream_events_parquet(spark, SF_SMOKE)
+    ev_stream = stream_events_parquet(spark, SF_SMOKE)
     got = {
         (r["user_id"], r["l_event_id"], r["r_event_id"])
         for r in run_stream(
@@ -74,8 +132,6 @@ def test_stream_join_equals_batch(spark):
     # the stream may legitimately still sit in state; the horizon
     # check below uses the batch side to bound what must appear.
     assert got <= want
-    import pyspark.sql.functions as F
-
     max_ts = ev_batch.agg(F.max("ts").alias("m")).collect()[0].m
     horizon = max_ts - datetime.timedelta(hours=3)
     must = {
