@@ -1,27 +1,25 @@
 """Targeted deletion ("right to be forgotten") over a
 :class:`.table.VersionedTable` — the governance counterpart of
 :func:`..operators.profile.k_anonymity_census`: once a privacy review
-says rows must go, this is the machinery that removes them without
-rewriting the table.
+says rows must go, :func:`forget_keys` removes them without rewriting
+the table.
 
-Two halves, deliberately separate:
+It rewrites ONLY the buckets containing the doomed keys (the bucket
+assignment is the same stable ``bucket_expr`` hash the upsert sink
+uses, so the affected bucket set is computable from the keys alone — a
+control-plane value ≤ num_buckets). Unaffected buckets keep their exact
+files; readers on the previous version are untouched until the new
+version's manifest is committed. At 100 TB with K doomed users this
+touches K buckets' worth of data, not the corpus.
 
-- :func:`forget_keys` — rewrite ONLY the buckets containing the
-  doomed keys (the bucket assignment is the same stable
-  ``bucket_expr`` hash the upsert sink uses, so the affected bucket
-  set is computable from the keys alone — a control-plane value ≤
-  num_buckets). Unaffected buckets keep their exact files; readers on
-  the previous version are untouched until the atomic pointer swing.
-  At 100 TB with K doomed users this touches K buckets' worth of
-  data, not the corpus.
-- :func:`purge_history` — versioned tables keep every snapshot for
-  time travel, so a forget alone leaves the doomed rows readable AT
-  OLDER VERSIONS (and their files on disk). Purging drops manifests
-  older than the current version and deletes every data file no
-  retained manifest references — the step that makes deletion REAL.
-  Run it after the forget commit (and after any readers drained).
+Versioned tables keep older snapshots for time travel, so a forget
+alone leaves the doomed rows readable at older versions, and their
+files on disk. ``table.vacuum(retain_last=1, grace_seconds=0.0)``, run
+after the forget commit once readers and writers have drained, drops
+every older manifest and every file the tip does not reference: the
+step that makes deletion real.
 
-Cite: reference ``schema.ts:10-49`` for the blue/green pointer-swing
+Cite: reference ``schema.ts:10-49`` for the blue/green publish
 semantics this builds on; the bucket-pruned rewrite mirrors
 ``VersionedTable.diff``'s manifest-level pruning.
 """
@@ -32,7 +30,6 @@ from pyspark.sql import DataFrame
 
 from rootstock_collective_state_sync_spark.sinks.table import (
     VersionedTable,
-    _manifest_version as _parse_version,
     bucket_expr,
 )
 
@@ -72,98 +69,3 @@ def forget_keys(
         meta={"forget": meta_note, "forgotten_buckets": present},
     )
 
-
-def purge_history(
-    table: VersionedTable, inflight: str = "refuse"
-) -> dict[str, int]:
-    """Delete all manifests older than the current version and every
-    data file they alone reference. Returns counts
-    ``{"versions_removed": n, "files_removed": k}``. After this, no
-    snapshot or on-disk file contains previously-forgotten rows.
-
-    Same retention anchor as ``VersionedTable.vacuum`` (r13): the
-    retained set is the CURRENT manifest plus any manifest ABOVE it.
-    But unlike vacuum, a purge is a PRIVACY action — an in-flight
-    manifest (a crashed commit that staged files and wrote its
-    manifest but never swung the pointer) may reference pre-forget
-    data containing the doomed keys, and retaining it would silently
-    violate the "no on-disk file contains previously-forgotten rows"
-    contract. So in-doubt commits must be RESOLVED first, and this
-    function enforces it (r13 verdict item 2):
-
-    * ``inflight="refuse"`` (default) — raise ``RuntimeError`` when
-      manifests above ``_CURRENT`` exist; the operator resolves them
-      explicitly (``table.resolve_inflight``) after confirming no
-      writer is live.
-    * ``inflight="abort"`` — resolve by aborting the orphan
-      manifests; their staged files become unreferenced and are
-      deleted by THIS purge (no grace window — the privacy-safe
-      resolution).
-    * ``inflight="adopt"`` — swing the pointer through contiguous
-      in-flight manifests first, then purge below the NEW current.
-      CAUTION: an adopted commit staged before the forget may
-      resurrect doomed rows at the new tip — re-run ``forget_keys``
-      after adopting, then purge again.
-
-    No mtime grace: unreferenced files go immediately — run after
-    writers and readers drained, as the module docstring says.
-    Crash-safety: manifests are unlinked only AFTER the retained file
-    set is computed, and re-running a purge interrupted anywhere
-    completes the deletion (idempotent)."""
-    if inflight not in ("refuse", "abort", "adopt"):
-        raise ValueError(
-            f"inflight must be 'refuse', 'abort' or 'adopt', got {inflight!r}"
-        )
-    cur = table.current_version()
-    above = sorted(
-        v
-        for v in (
-            _parse_version(p) for p in table._versions_dir.glob("v*.json")
-        )
-        if v is not None and v > cur
-    )
-    if above:
-        if inflight == "refuse":
-            raise RuntimeError(
-                f"purge_history: in-flight manifest(s) {above} above "
-                f"current v{cur} — a crashed commit's staged files may "
-                "contain doomed rows; resolve first "
-                "(resolve_inflight or inflight='abort'|'adopt')"
-            )
-        table.resolve_inflight(inflight)
-        cur = table.current_version()
-    referenced: set[str] = set()
-    for vpath in sorted(table._versions_dir.glob("v*.json")):
-        try:
-            v = int(vpath.stem.lstrip("v"))
-        except ValueError:
-            continue
-        if v >= cur:
-            m = table.manifest(v)
-            for files in m.buckets.values():
-                referenced.update(files)
-    versions_removed = 0
-    for vpath in sorted(table._versions_dir.glob("v*.json")):
-        try:
-            v = int(vpath.stem.lstrip("v"))
-        except ValueError:
-            continue
-        if v < cur:
-            vpath.unlink()
-            versions_removed += 1
-    files_removed = 0
-    data_root = table.path / "data"
-    if data_root.exists():
-        for f in sorted(data_root.rglob("*.parquet")):
-            rel = str(f.relative_to(table.path))
-            if rel not in referenced:
-                f.unlink()
-                files_removed += 1
-        # drop now-empty tx/bucket dirs
-        for d in sorted(data_root.rglob("*"), reverse=True):
-            if d.is_dir() and not any(d.iterdir()):
-                d.rmdir()
-    return {
-        "versions_removed": versions_removed,
-        "files_removed": files_removed,
-    }

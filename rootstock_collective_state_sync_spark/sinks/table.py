@@ -8,19 +8,24 @@ deployment these are Delta/Iceberg features; this module is a small
 self-contained equivalent so the engine runs anywhere Spark + a
 filesystem exist.
 
-Layout (all data files immutable):
+Layout (all files immutable once published):
 
     <root>/<table>/
-        _versions/v0000000001.json   # manifest per version
-        _CURRENT                     # pointer file: current version no
+        _versions/v0000000001.json   # manifest per version; highest = current
         data/<txid>/bucket=<k>/*.parquet
 
 A manifest maps bucket-id -> list of data files and carries the
 schema, merge keys, and arbitrary engine metadata (e.g. the block
-watermark). Commits are optimistic: write a new manifest, then
-atomically swing ``_CURRENT`` (``os.replace``); writers retry on
-version races with exponential backoff — the engine analog of the
-reference's retry policy (``dbUpsert.ts:25-48``).
+watermark). Creating ``v{n+1}.json`` IS the commit of version n+1: a
+writer stages its data files, writes the manifest to a temp file in
+``_versions/`` and hard-links it into place (``os.link``), which fails
+if the name already exists — the put-if-absent log append of Delta
+Lake's transaction log. There is no second step, so a crash at any
+point leaves either the old or the new version current, never a commit
+in doubt. The commit needs a filesystem with hard links (POSIX local
+disks and NFS have them). A writer that loses the race gets
+:class:`CommitConflict` and retries with exponential backoff — the
+engine analog of the reference's retry policy (``dbUpsert.ts:25-48``).
 
 Scale design: rows are hash-partitioned into ``num_buckets`` by merge
 key. An upsert touches only the buckets its batch keys hash into, so
@@ -88,16 +93,6 @@ class Manifest:
     @property
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(json.loads(self.schema_json))
-
-
-def _manifest_version(p: Path) -> int | None:
-    """Version number of a ``v*.json`` manifest path, or None for
-    unparsable/foreign names (never crash a maintenance scan on a
-    stray file)."""
-    try:
-        return int(p.stem[1:])
-    except ValueError:
-        return None
 
 
 _STATS_OPS = ("=", "<", "<=", ">", ">=")
@@ -185,38 +180,57 @@ class VersionedTable:
     def _versions_dir(self) -> Path:
         return self.path / "_versions"
 
-    @property
-    def _pointer(self) -> Path:
-        return self.path / "_CURRENT"
+    def _manifest_path(self, version: int) -> Path:
+        return self._versions_dir / f"v{version:010d}.json"
+
+    def _versions(self) -> list[int]:
+        """Every committed version, ascending, from one directory scan.
+        Temp manifests (``.v*.tmp.*``) and foreign names are skipped."""
+        try:
+            with os.scandir(self._versions_dir) as it:
+                names = [e.name for e in it]
+        except FileNotFoundError:
+            return []
+        versions = []
+        for n in names:
+            if n.startswith("v") and n.endswith(".json"):
+                try:
+                    versions.append(int(n[1:-5]))
+                except ValueError:
+                    pass
+        return sorted(versions)
 
     def exists(self) -> bool:
-        return self._pointer.exists()
+        return bool(self._versions())
 
     def current_version(self) -> int:
-        return int(self._pointer.read_text().strip())
+        versions = self._versions()
+        if not versions:
+            raise FileNotFoundError(f"no committed version at {self.path}")
+        return versions[-1]
 
     def manifest(self, version: int | None = None) -> Manifest:
         v = self.current_version() if version is None else version
-        return Manifest.from_json((self._versions_dir / f"v{v:010d}.json").read_text())
+        return Manifest.from_json(self._manifest_path(v).read_text())
 
     def _commit(self, m: Manifest, expected_prev: int) -> None:
-        """Optimistic commit: fail if someone advanced past expected_prev."""
-        mf = self._versions_dir / f"v{m.version:010d}.json"
-        if mf.exists():
-            raise CommitConflict(f"version {m.version} already committed")
-        if self.current_version() != expected_prev:
-            raise CommitConflict(
-                f"expected v{expected_prev}, found v{self.current_version()}"
-            )
-        # manifests are read by concurrent vacuum/purge (they scan
-        # above _CURRENT for in-flight commits) — publish atomically
-        # so a racing reader never sees a torn JSON
-        mtmp = self._versions_dir / f".{mf.name}.tmp.{uuid.uuid4().hex[:8]}"
-        mtmp.write_text(m.to_json())
-        os.replace(mtmp, mf)
-        tmp = self.path / f"_CURRENT.tmp.{uuid.uuid4().hex[:8]}"
-        tmp.write_text(str(m.version))
-        os.replace(tmp, self._pointer)  # atomic publish
+        """Optimistic commit of ``m`` (version ``expected_prev + 1``):
+        exclusively create its manifest file. Losing the race to
+        another writer raises :class:`CommitConflict`. The pre-check
+        also stops a stale writer from reusing a slot below the
+        current version that ``vacuum`` has freed."""
+        found = max(self._versions(), default=0)
+        if found != expected_prev:
+            raise CommitConflict(f"expected v{expected_prev}, found v{found}")
+        mf = self._manifest_path(m.version)
+        tmp = self._versions_dir / f".{mf.name}.tmp.{uuid.uuid4().hex[:8]}"
+        tmp.write_text(m.to_json())
+        try:
+            os.link(tmp, mf)  # put-if-absent: the commit point
+        except FileExistsError:
+            raise CommitConflict(f"version {m.version} already committed") from None
+        finally:
+            tmp.unlink()
 
     # ---- DDL ---------------------------------------------------------------
 
@@ -245,13 +259,7 @@ class VersionedTable:
             buckets={},
             meta=meta or {},
         )
-        mf = self._versions_dir / "v0000000001.json"
-        mtmp = self._versions_dir / f".{mf.name}.tmp.{uuid.uuid4().hex[:8]}"
-        mtmp.write_text(m.to_json())
-        os.replace(mtmp, mf)
-        tmp = self.path / "_CURRENT.tmp"
-        tmp.write_text("1")
-        os.replace(tmp, self._pointer)
+        self._commit(m, 0)
         return self
 
     def create_if_not_exists(self, schema, merge_keys, num_buckets=16) -> bool:
@@ -422,8 +430,8 @@ class VersionedTable:
 
     def overwrite(self, df: DataFrame, meta: dict[str, Any] | None = None) -> int:
         """Full-snapshot replace (atomic). The engine's blue/green swap:
-        readers on the old version are unaffected until the pointer
-        swings (reference ``schema.ts:10-49`` semantics). On tables
+        readers on the old version are unaffected until the new
+        manifest is committed (reference ``schema.ts:10-49`` semantics). On tables
         with ``stats_cols`` configured (create meta), per-file min/max
         stats are recomputed for the new snapshot (X-E9)."""
         prev = self.manifest()
@@ -627,33 +635,33 @@ class VersionedTable:
     ) -> dict[str, int]:
         """Snapshot expiration (Iceberg ``expireSnapshots`` / Delta
         ``VACUUM`` semantics): drop every version manifest older than
-        the newest ``retain_last`` AT OR BELOW the version ``_CURRENT``
-        points to, and physically delete the data files no retained
-        manifest references. Without it a continuously-overwritten
-        store (every streaming twin commits a full snapshot per batch)
-        grows unboundedly even though only the tip is ever read.
+        the newest ``retain_last``, and physically delete the data
+        files no retained manifest references. Without it a
+        continuously-committed table grows unboundedly even though only
+        the tip is ever read.
 
         Safety properties:
 
-        * the version ``_CURRENT`` points to is ALWAYS retained — the
-          retained window is anchored at ``current_version()``, not at
-          the newest manifest file, so a crashed commit that wrote
-          manifest v(n+1) but never swung the pointer cannot evict the
-          live version (the orphan v(n+1) is retained too, as are all
-          manifests above CURRENT: they may be a concurrent writer's
-          in-flight commit);
+        * the current version is the newest manifest, so it is ALWAYS
+          retained;
         * files referenced by ANY retained manifest are never touched
           (immutable-file sharing across versions — ``restore``
           snapshots alias older files);
         * files younger than ``grace_seconds`` (mtime) are never
-          deleted even when unreferenced — a concurrent writer stages
-          data files BEFORE its manifest commit, so without the grace
+          deleted even when unreferenced — a live writer stages data
+          files BEFORE it links its manifest, so without the grace
           window a vacuum racing that writer would delete files its
           about-to-commit manifest references (Delta VACUUM's retention
-          check, same reasoning);
+          check, same reasoning). A crashed writer's staged files and
+          temp manifest are removed once they are older than the
+          window;
         * deletion happens AFTER the retained set is computed, so a
           crash mid-vacuum leaves only harmless orphans for the next
           vacuum.
+
+        ``vacuum(retain_last=1, grace_seconds=0.0)`` after a
+        ``forget_keys`` commit, once readers and writers have drained,
+        leaves no file on disk that holds a forgotten row.
 
         The trade is the standard one: ``restore``/``read`` of an
         expired version now fails loudly (manifest gone), and a reader
@@ -665,22 +673,11 @@ class VersionedTable:
         """
         if retain_last < 1:
             raise ValueError("retain_last must be >= 1")
-        cur = self.current_version()
-        # skip unparsable/foreign v*.json names (purge_history's
-        # guard) — a stray file must not crash or be unlinked
-        manifests = [
-            m
-            for m in sorted(self._versions_dir.glob("v*.json"))
-            if _manifest_version(m) is not None
-        ]
-        committed = [m for m in manifests if _manifest_version(m) <= cur]
-        in_flight = [m for m in manifests if _manifest_version(m) > cur]
-        keep = committed[-retain_last:] + in_flight
-        drop = committed[: max(0, len(committed) - retain_last)]
+        versions = self._versions()
+        keep, drop = versions[-retain_last:], versions[:-retain_last]
         live: set[str] = set()
-        for mf in keep:
-            m = Manifest.from_json(mf.read_text())
-            for files in m.buckets.values():
+        for v in keep:
+            for files in self.manifest(v).buckets.values():
                 live.update(files)
         files_removed = bytes_removed = 0
         now = time.time()
@@ -702,65 +699,24 @@ class VersionedTable:
                     d.rmdir()
                 except OSError:
                     pass
-        for mf in drop:
-            mf.unlink()
+        for tmp in self._versions_dir.glob(".v*.tmp.*"):
+            try:
+                if now - tmp.stat().st_mtime >= grace_seconds:
+                    tmp.unlink()
+            except FileNotFoundError:
+                pass  # its writer finished and removed it meanwhile
+        for v in drop:
+            self._manifest_path(v).unlink()
         return {
             "versions_removed": len(drop),
             "files_removed": files_removed,
             "bytes_removed": bytes_removed,
         }
 
-    def resolve_inflight(self, action: str = "abort") -> dict[str, int]:
-        """Resolve IN-DOUBT commits: manifests above the version
-        ``_CURRENT`` points to (a writer wrote its manifest, crashed
-        before the pointer swing — or is still alive and about to
-        swing). They are retained by ``vacuum``/``purge_history`` as
-        possibly-live, and they BLOCK the next commit's version slot
-        (``_commit`` refuses an occupied slot — the lost-update guard
-        for genuinely concurrent writers), so after a crash an
-        operator must decide, exactly like a 2PC in-doubt transaction.
-        ONLY call this after confirming no writer is live.
-
-        ``action="abort"``: delete the orphan manifests; their staged
-        data files become unreferenced and age out under ``vacuum``'s
-        grace window. ``action="adopt"``: swing the pointer forward
-        through each CONTIGUOUS next manifest (gaps stop adoption —
-        a gap means the slot's writer never even staged a manifest,
-        so later manifests were built on unpublished state).
-
-        Returns ``{"aborted": n, "adopted": n}``."""
-        if action not in ("abort", "adopt"):
-            raise ValueError(f"action must be 'abort' or 'adopt', got {action!r}")
-        cur = self.current_version()
-        above = sorted(
-            v
-            for v in (
-                _manifest_version(p)
-                for p in self._versions_dir.glob("v*.json")
-            )
-            if v is not None and v > cur
-        )
-        aborted = adopted = 0
-        if action == "abort":
-            for v in above:
-                (self._versions_dir / f"v{v:010d}.json").unlink()
-                aborted += 1
-        else:
-            for v in above:
-                if v != cur + adopted + 1:
-                    break  # gap: everything past it is unfounded
-                adopted += 1
-            if adopted:
-                new = cur + adopted
-                tmp = self.path / f"_CURRENT.tmp.{uuid.uuid4().hex[:8]}"
-                tmp.write_text(str(new))
-                os.replace(tmp, self._pointer)
-        return {"aborted": aborted, "adopted": adopted}
-
     def history(self) -> list[dict[str, Any]]:
         out = []
-        for p in sorted(self._versions_dir.glob("v*.json")):
-            d = json.loads(p.read_text())
+        for v in self._versions():
+            d = json.loads(self._manifest_path(v).read_text())
             out.append({"version": d["version"], "meta": d.get("meta", {})})
         return out
 
@@ -781,7 +737,9 @@ class TableCatalog:
         if not self.root.exists():
             return []
         return sorted(
-            p.name for p in self.root.iterdir() if (p / "_CURRENT").exists()
+            p.name
+            for p in self.root.iterdir()
+            if p.is_dir() and self.table(p.name).exists()
         )
 
     def create_all(

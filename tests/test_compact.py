@@ -220,16 +220,13 @@ def test_vacuum_expires_old_versions_keeps_tip(spark, tmp_path):
 
 
 def test_vacuum_anchors_on_current_and_spares_inflight(spark, tmp_path):
-    """X-E8 crash/concurrency safety (r12 advisor, medium): (a) a
-    crashed commit that wrote manifest v(n+1) but never swung _CURRENT
-    must NOT cause vacuum(retain_last=1) to evict the CURRENT
-    version — retention is anchored at current_version(), and the
-    orphan manifest above CURRENT survives too (it may be a concurrent
-    writer's in-flight commit); (b) unreferenced data files younger
-    than the grace window are never deleted (a concurrent writer
-    stages data before its manifest commit)."""
-    import json as _json
-
+    """X-E8 crash/concurrency safety: a writer killed before its commit
+    leaves staged data files and a temp manifest, and no new version.
+    (a) The table still reads the last committed version and the next
+    commit takes the next slot; (b) vacuum keeps the tip and spares the
+    crashed writer's files inside the grace window (a live writer
+    stages data before it links its manifest); (c) with the grace
+    waived, vacuum reclaims the staged files and the temp manifest."""
     from pyspark.sql import types as T
 
     from rootstock_collective_state_sync_spark.sinks.table import (
@@ -254,52 +251,49 @@ def test_vacuum_anchors_on_current_and_spares_inflight(spark, tmp_path):
     cur = t.current_version()  # v4
     tip = sorted(tuple(r) for r in t.read().collect())
 
-    # simulate a crashed commit: stage NEW data files + manifest
-    # v(cur+1), but never swing _CURRENT (crash between steps)
+    # a writer stages data files and its manifest's temp file, then is
+    # killed before the link that would commit v(cur+1)
     staged = t._write_tx(
         spark.createDataFrame([(j, 99) for j in range(6)], schema),
         num_buckets=2,
         keys=["k"],
     )
-    orphan = Manifest(
-        version=cur + 1,
-        schema_json=_json.dumps(schema.jsonValue()),
-        merge_keys=["k"],
-        num_buckets=2,
-        buckets=staged,
-        meta={"crashed": True},
+    m = t.manifest()
+    tmp_manifest = t._versions_dir / f".v{cur + 1:010d}.json.tmp.crashed"
+    tmp_manifest.write_text(
+        Manifest(
+            version=cur + 1,
+            schema_json=m.schema_json,
+            merge_keys=m.merge_keys,
+            num_buckets=m.num_buckets,
+            buckets=staged,
+            meta={"crashed": True},
+        ).to_json()
     )
-    (tmp_path / "t" / "_versions" / f"v{cur + 1:010d}.json").write_text(
-        orphan.to_json()
-    )
-    assert t.current_version() == cur  # pointer untouched
-
-    rep = t.vacuum(retain_last=1, grace_seconds=0.0)
-    # CURRENT (v4) retained even though a newer manifest file exists;
-    # the orphan v5 is retained as possibly-in-flight; v1..v3 expired
     assert t.current_version() == cur
     assert sorted(tuple(r) for r in t.read().collect()) == tip
+
+    rep = t.vacuum(retain_last=1)  # default 1h grace
+    assert rep["versions_removed"] == 3  # v1..v3; the tip stays
     versions = sorted(
         int(p.stem[1:])
         for p in (tmp_path / "t" / "_versions").glob("v*.json")
     )
-    assert versions == [cur, cur + 1]
-    # the orphan's staged data files survive (referenced by a retained
-    # manifest), so finishing the commit later would still be sound
-    for files in staged.values():
-        for rel in files:
-            assert (tmp_path / "t" / rel).exists()
-    assert rep["versions_removed"] == 3
-
-    # grace window: drop the orphan manifest so its fresh files become
-    # unreferenced — a graced vacuum must still leave them alone
-    (tmp_path / "t" / "_versions" / f"v{cur + 1:010d}.json").unlink()
-    rep2 = t.vacuum(retain_last=1)  # default 1h grace
-    assert rep2["files_removed"] == 0
-    for files in staged.values():
-        for rel in files:
-            assert (tmp_path / "t" / rel).exists()
-    # with the grace waived they are reclaimed
-    rep3 = t.vacuum(retain_last=1, grace_seconds=0.0)
-    assert rep3["files_removed"] > 0
+    assert versions == [cur]
     assert sorted(tuple(r) for r in t.read().collect()) == tip
+    staged_paths = [tmp_path / "t" / rel for fs in staged.values() for rel in fs]
+    assert all(p.exists() for p in staged_paths)
+    assert tmp_manifest.exists()
+
+    rep2 = t.vacuum(retain_last=1, grace_seconds=0.0)
+    assert rep2["versions_removed"] == 0
+    # staged files plus v1..v3 files the first vacuum spared
+    assert rep2["files_removed"] > len(staged_paths)
+    assert not any(p.exists() for p in staged_paths)
+    assert not tmp_manifest.exists()
+    assert sorted(tuple(r) for r in t.read().collect()) == tip
+
+    # the crash blocked nothing: the next commit takes v(cur+1)
+    assert t.overwrite(
+        spark.createDataFrame([(j, 7) for j in range(6)], schema)
+    ) == cur + 1

@@ -1,8 +1,8 @@
 """Targeted deletion e2e: forget_keys rewrites ONLY the buckets
 holding the doomed keys (unaffected buckets keep their exact files),
-older versions still time-travel until purge_history deletes their
-manifests and orphaned files — after which no parquet file on disk
-contains a forgotten row."""
+older versions still time-travel until ``vacuum(retain_last=1,
+grace_seconds=0.0)`` deletes their manifests and orphaned files —
+after which no parquet file on disk contains a forgotten row."""
 
 from __future__ import annotations
 
@@ -11,10 +11,7 @@ import glob
 import pandas as pd
 from pyspark.sql import types as T
 
-from rootstock_collective_state_sync_spark.sinks.forget import (
-    forget_keys,
-    purge_history,
-)
+from rootstock_collective_state_sync_spark.sinks.forget import forget_keys
 from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
 
 SCHEMA = T.StructType(
@@ -64,16 +61,16 @@ def test_forget_rewrites_only_affected_buckets(spark, tmp_path):
     assert {3, 17} <= old
 
 
-def test_purge_history_makes_deletion_real(spark, tmp_path):
+def test_vacuum_makes_forget_real(spark, tmp_path):
     t = _mk(spark, tmp_path)
     doomed = spark.createDataFrame([(3,), (17,)], "user_id long")
     forget_keys(t, doomed)
-    stats = purge_history(t)
+    stats = t.vacuum(retain_last=1, grace_seconds=0.0)
     assert stats["versions_removed"] >= 2  # create + first overwrite
     assert stats["files_removed"] > 0
 
     # no retained manifest older than current
-    assert len(list(t._versions_dir.glob("v*.json"))) == 1
+    assert [h["version"] for h in t.history()] == [t.current_version()]
     # every parquet file on disk is referenced and free of doomed rows
     files = glob.glob(str(t.path / "data" / "**" / "*.parquet"), recursive=True)
     assert files
@@ -81,58 +78,6 @@ def test_purge_history_makes_deletion_real(spark, tmp_path):
     assert not set(seen["user_id"]) & {3, 17}
     # table still reads correctly after the purge
     assert t.read().count() == 38
-
-
-def test_purge_history_adopt_resolves_then_purges(spark, tmp_path):
-    """inflight='adopt' swings the pointer through the contiguous
-    in-flight manifest FIRST, then purges below the NEW current —
-    and the docstring's caution is real: an adopted pre-forget commit
-    resurrects doomed rows, so the forget must be re-run after."""
-    from rootstock_collective_state_sync_spark.sinks.table import Manifest
-
-    t = _mk(spark, tmp_path)  # v1 create, v2 overwrite
-    doomed = spark.createDataFrame([(3,)], "user_id long")
-    forget_keys(t, doomed)  # v3
-    # in-flight commit staged BEFORE the forget (contains user 3)
-    staged = t._write_tx(
-        spark.createDataFrame([(3, "pre-forget")], SCHEMA), 8, ["user_id"]
-    )
-    m = t.manifest()
-    orphan_v = t.current_version() + 1
-    merged = dict(m.buckets)
-    for b, fs in staged.items():
-        merged[b] = list(merged.get(b, [])) + fs
-    (t._versions_dir / f"v{orphan_v:010d}.json").write_text(
-        Manifest(
-            version=orphan_v,
-            schema_json=m.schema_json,
-            merge_keys=m.merge_keys,
-            num_buckets=m.num_buckets,
-            buckets=merged,
-            meta={"crashed": True},
-        ).to_json()
-    )
-    stats = purge_history(t, inflight="adopt")
-    assert t.current_version() == orphan_v  # pointer adopted forward
-    assert stats["versions_removed"] >= 1  # everything below adopted tip
-    assert len(list(t._versions_dir.glob("v*.json"))) == 1
-    # the adopted tip resurrected the doomed row — re-run the forget
-    assert 3 in {r["user_id"] for r in t.read().collect()}
-    forget_keys(t, doomed)
-    purge_history(t)
-    files = glob.glob(
-        str(t.path / "data" / "**" / "*.parquet"), recursive=True
-    )
-    seen = pd.concat([pd.read_parquet(f) for f in files])
-    assert 3 not in set(seen["user_id"])
-
-
-def test_purge_history_rejects_unknown_inflight_policy(spark, tmp_path):
-    import pytest as _pytest
-
-    t = _mk(spark, tmp_path, n=5)
-    with _pytest.raises(ValueError, match="inflight"):
-        purge_history(t, inflight="ignore")
 
 
 def test_forget_noop_when_keys_absent(spark, tmp_path):
@@ -147,14 +92,12 @@ def test_forget_noop_when_keys_absent(spark, tmp_path):
 
 
 def test_forget_vacuum_restore_interleave(spark, tmp_path):
-    """r12 verdict item 8: E7 (forget/purge) and E8 (vacuum) share
-    manifest retention rules but were tested in isolation. One store
-    driven through overwrite -> forget -> vacuum -> diff -> crashed
-    commit -> purge -> restore, with a raw-disk scan proving doomed
-    rows gone and shared immutable files intact, and a crash between
-    the forget's pointer swing and the purge's deletion recovering by
-    re-run."""
-    import json as _json
+    """E7 (forget) and E8 (vacuum) share manifest retention rules. One
+    store driven through overwrite -> forget -> vacuum -> diff ->
+    crashed commit -> restore -> vacuum -> restore, with a raw-disk
+    scan proving doomed rows gone (including bytes a crashed writer
+    staged) and the tip intact."""
+    import pytest as _pytest
 
     from rootstock_collective_state_sync_spark.sinks.table import Manifest
 
@@ -183,22 +126,23 @@ def test_forget_vacuum_restore_interleave(spark, tmp_path):
     on_disk = pd.concat([pd.read_parquet(f) for f in files])
     assert {5, 23} <= set(on_disk["user_id"])
 
-    # crashed concurrent commit: manifest above CURRENT with staged
-    # files CONTAINING A DOOMED ROW (the writer staged pre-forget
-    # data), pointer never swung — the privacy hazard purge_history
-    # must not ignore (r13 verdict item 2)
+    # a writer killed mid-commit: it staged files CONTAINING A DOOMED
+    # ROW (built on pre-forget data) and its manifest's temp file, but
+    # never linked the manifest, so no version holds them
     staged = t._write_tx(
         spark.createDataFrame(
-            [(5, "doomed-resurrect"), (100, "inflight")], SCHEMA
+            [(5, "doomed-resurrect"), (100, "crashed")], SCHEMA
         ),
         8,
         ["user_id"],
     )
     m = t.manifest()
-    orphan_v = t.current_version() + 1
-    (t._versions_dir / f"v{orphan_v:010d}.json").write_text(
+    tmp_manifest = (
+        t._versions_dir / f".v{v_forget + 1:010d}.json.tmp.crashed"
+    )
+    tmp_manifest.write_text(
         Manifest(
-            version=orphan_v,
+            version=v_forget + 1,
             schema_json=m.schema_json,
             merge_keys=m.merge_keys,
             num_buckets=m.num_buckets,
@@ -206,32 +150,18 @@ def test_forget_vacuum_restore_interleave(spark, tmp_path):
             meta={"crashed": True},
         ).to_json()
     )
+    assert t.current_version() == v_forget
+    assert sorted(tuple(r) for r in t.read().collect()) == tip
 
-    import pytest as _pytest
+    # the crash blocks nothing: the next commit takes the next slot
+    v_new = t.restore(t.current_version())
+    assert v_new == v_forget + 1
+    assert sorted(tuple(r) for r in t.read().collect()) == tip
 
-    from rootstock_collective_state_sync_spark.sinks.table import (
-        CommitConflict,
-    )
-
-    # the in-doubt manifest BLOCKS the next commit slot (lost-update
-    # guard for genuinely concurrent writers)
-    with _pytest.raises(CommitConflict):
-        t.restore(t.current_version())
-    # ...and purge REFUSES by default: the in-flight commit's staged
-    # files may hold doomed bytes (here they do)
-    with _pytest.raises(RuntimeError, match="in-flight"):
-        purge_history(t)
-    # doomed bytes are in fact still on disk at this point
-    files = glob.glob(
-        str(t.path / "data" / "**" / "*.parquet"), recursive=True
-    )
-    on_disk = pd.concat([pd.read_parquet(f) for f in files])
-    assert {5, 23} <= set(on_disk["user_id"])
-
-    # privacy-safe resolution: abort the in-doubt commit and purge
-    # its staged files in the SAME call (no grace window)
-    stats = purge_history(t, inflight="abort")
-    assert stats["versions_removed"] >= 1
+    # vacuum down to the tip with no grace window: older manifests,
+    # v3's files and the crashed writer's staged bytes all go
+    stats = t.vacuum(retain_last=1, grace_seconds=0.0)
+    assert stats["versions_removed"] == 2  # v3, v4
     files = glob.glob(
         str(t.path / "data" / "**" / "*.parquet"), recursive=True
     )
@@ -241,61 +171,19 @@ def test_forget_vacuum_restore_interleave(spark, tmp_path):
     for rel_files in staged.values():
         for rel in rel_files:
             assert not (t.path / rel).exists()
-    # tip unchanged bit-for-bit through vacuum + purge
+    assert not tmp_manifest.exists()
+    # tip unchanged bit-for-bit through vacuum
     assert sorted(tuple(r) for r in t.read().collect()) == tip
-    # re-run purge: idempotent no-op (and nothing in-flight remains)
-    stats2 = purge_history(t)
-    assert stats2 == {"versions_removed": 0, "files_removed": 0}
+    # re-run: idempotent no-op
+    assert t.vacuum(retain_last=1, grace_seconds=0.0) == {
+        "versions_removed": 0,
+        "files_removed": 0,
+        "bytes_removed": 0,
+    }
 
     # restore: expired pre-forget versions fail LOUDLY
     with _pytest.raises(FileNotFoundError):
         t.restore(2)
-    # the purge resolved the in-doubt slot — commits flow again
-    v_new = t.restore(t.current_version())
-    assert v_new == v_forget + 1
+    # commits keep flowing
+    assert t.restore(t.current_version()) == v_new + 1
     assert sorted(tuple(r) for r in t.read().collect()) == tip
-
-
-def test_resolve_inflight_adopt(spark, tmp_path):
-    """The adopt path: a crashed writer's contiguous manifest is
-    published by the operator decision; a GAPPED later manifest is
-    never adopted (its writer built on unpublished state)."""
-    import json as _json
-
-    from rootstock_collective_state_sync_spark.sinks.table import Manifest
-
-    t = _mk(spark, tmp_path, n=10)  # v1, v2
-    cur = t.current_version()
-    staged = t._write_tx(
-        spark.createDataFrame([(77, "late")], SCHEMA), 8, ["user_id"]
-    )
-    m = t.manifest()
-    merged = dict(m.buckets)
-    for b, fs in staged.items():
-        merged[b] = merged.get(b, []) + fs
-    (t._versions_dir / f"v{cur + 1:010d}.json").write_text(
-        Manifest(
-            version=cur + 1,
-            schema_json=m.schema_json,
-            merge_keys=m.merge_keys,
-            num_buckets=m.num_buckets,
-            buckets=merged,
-            meta={},
-        ).to_json()
-    )
-    # a GAPPED manifest two slots up must not be adopted
-    (t._versions_dir / f"v{cur + 3:010d}.json").write_text(
-        Manifest(
-            version=cur + 3,
-            schema_json=m.schema_json,
-            merge_keys=m.merge_keys,
-            num_buckets=m.num_buckets,
-            buckets=m.buckets,
-            meta={},
-        ).to_json()
-    )
-    rz = t.resolve_inflight("adopt")
-    assert rz == {"aborted": 0, "adopted": 1}
-    assert t.current_version() == cur + 1
-    got = {r["user_id"] for r in t.read().collect()}
-    assert 77 in got and len(got) == 11

@@ -471,17 +471,15 @@ def test_weighted_median_matches_reference_fold(spark, rows):
     doomed=st.sets(st.integers(min_value=0, max_value=29), max_size=8),
 )
 def test_forget_keys_equals_set_difference(spark, tmp_path_factory, doomed):
-    """forget(K) == table minus K for ANY key set, and after
-    purge_history no on-disk parquet file carries a doomed key."""
+    """forget(K) == table minus K for ANY key set, and after a
+    vacuum down to the tip no on-disk parquet file carries a doomed
+    key."""
     import glob as _glob
 
     import pandas as _pd
     from pyspark.sql import types as T
 
-    from rootstock_collective_state_sync_spark.sinks.forget import (
-        forget_keys,
-        purge_history,
-    )
+    from rootstock_collective_state_sync_spark.sinks.forget import forget_keys
     from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
 
     root = tmp_path_factory.mktemp("forget_prop")
@@ -497,7 +495,7 @@ def test_forget_keys_equals_set_difference(spark, tmp_path_factory, doomed):
         spark.createDataFrame([(i, f"p{i}") for i in range(30)], schema)
     )
     forget_keys(t, spark.createDataFrame([(k,) for k in doomed] or [(-1,)], "user_id long"))
-    purge_history(t)
+    t.vacuum(retain_last=1, grace_seconds=0.0)
     got = {r["user_id"] for r in t.read().collect()}
     assert got == set(range(30)) - doomed
     files = _glob.glob(str(root / "t" / "data" / "**" / "*.parquet"), recursive=True)

@@ -11,6 +11,7 @@ canonical branch (``reorgCleanupStrategy.ts:21-56`` semantics).
 from __future__ import annotations
 
 import json
+import os
 import re
 from pathlib import Path
 
@@ -267,6 +268,50 @@ def test_strategy_error_isolation(spark, tmp_path, world):
     assert isinstance(res["boom"], RuntimeError)
     assert res["changelog"] != "throttled"  # later/earlier steps still ran
     assert eng.get_watermark() is not None
+
+
+def test_restart_after_kill_in_watermark_commit(spark, tmp_path, world, monkeypatch):
+    """Kill the follower at each publish call of one block's
+    ``LastProcessedBlock`` commit; a fresh engine on the same catalog
+    must converge on the next ``run_block`` with no operator action.
+    With a manifest + ``_CURRENT`` two-step commit, the kill between
+    the steps blocks every later watermark commit."""
+    import shutil
+
+    from rootstock_collective_state_sync_spark.sinks import table as table_mod
+    from tests.test_table_commit import Crash, CrashOnPublish
+
+    base = make_engine(spark, tmp_path, world, "base")
+    base.bootstrap(at_block=5)
+    base.run_block(world.chain().head_block())
+    world.extend(
+        synthetic_blocks(6, 2, fork_tag="a"),
+        {
+            6: {"VoteCast": [vote(1, support=2, reason="changed")]},
+            7: {"VoteCast": [vote(4)]},
+        },
+    )
+    head = world.chain().head_block()
+    k = 1
+    while True:
+        name = f"kill{k}"
+        shutil.copytree(tmp_path / "base", tmp_path / name)
+        crasher = CrashOnPublish(k, scope="LastProcessedBlock")
+        monkeypatch.setattr(table_mod, "os", crasher)
+        try:
+            make_engine(spark, tmp_path, world, name).run_block(head)
+        except Crash:
+            pass
+        finally:
+            monkeypatch.setattr(table_mod, "os", os)
+        if crasher.calls < k:
+            break  # the commit completed without reaching kill point k
+        restarted = make_engine(spark, tmp_path, world, name)
+        restarted.run_block(head)
+        assert table_state(restarted, "VoteCast") == expected_votes(world), k
+        assert restarted.get_watermark().number == head.number, k
+        k += 1
+    assert k > 1
 
 
 def _reorged_world(world: World) -> World:
