@@ -28,10 +28,10 @@ disks and NFS have them). A writer that loses the race gets
 engine analog of the reference's retry policy (``dbUpsert.ts:25-48``).
 
 Scale design: rows are hash-partitioned into ``num_buckets`` by merge
-key. An upsert touches only the buckets its batch keys hash into, so
-merge cost is proportional to batch size, not table size — at 100 TB
-with 2^14 buckets a 1 M-row batch rewrites a few GB, never the table.
-Bucket count is fixed at table-creation (like Hive/Spark bucketing) so
+key. An upsert rewrites only the buckets its batch keys hash into, so
+it writes the rows of the touched buckets (table size over bucket
+count, per bucket), never more than the table; a batch of k random
+keys touches about min(k, num_buckets) buckets. Bucket count is fixed at table-creation (like Hive/Spark bucketing) so
 key -> bucket is stable across versions; co-bucketed tables can join
 without a shuffle by reading matching buckets.
 """
@@ -40,13 +40,19 @@ from __future__ import annotations
 
 import json
 import os
+import struct
 import time
 import uuid
 from dataclasses import dataclass, field
+from decimal import Context, Decimal
 from pathlib import Path
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 BUCKET_COL = "__bucket"
 
@@ -93,6 +99,11 @@ class Manifest:
     @property
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(json.loads(self.schema_json))
+
+    def files(self, buckets: list[int] | None = None) -> list[str]:
+        """Relative data file paths, of ``buckets`` only when given."""
+        wanted = self.buckets if buckets is None else [str(b) for b in buckets]
+        return [f for b in wanted for f in self.buckets.get(b, [])]
 
 
 _STATS_OPS = ("=", "<", "<=", ">", ">=")
@@ -167,6 +178,93 @@ _STATS_SAFE_TYPES = (
 def bucket_expr(keys: list[str], num_buckets: int):
     """Stable key -> bucket assignment (hash of concatenated keys)."""
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)).cast("int")
+
+
+# Spark's XxHash64 (seed 42, each column's hash seeding the next), in
+# Python so a merge of driver-held rows buckets its keys exactly as
+# ``bucket_expr`` does without a Spark job.
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` (unsigned 64-bit result)."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            lanes = struct.unpack_from("<4Q", data, i)
+            v = [_round(a, b) for a, b in zip(v, lanes)]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _round(0, struct.unpack_from("<Q", data, i)[0])
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= struct.unpack_from("<I", data, i)[0] * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        h ^= data[i] * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+        i += 1
+    h ^= h >> 33
+    h = h * _P2 & _M64
+    h ^= h >> 29
+    h = h * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def _hash_input(v: Any, dtype: T.DataType) -> bytes:
+    """The bytes Spark's XxHash64 hashes for one non-null value."""
+    if isinstance(dtype, T.StringType):
+        return v.encode("utf-8")
+    if isinstance(dtype, T.BinaryType):
+        return bytes(v)
+    if isinstance(dtype, (T.BooleanType, T.ByteType, T.ShortType, T.IntegerType)):
+        return struct.pack("<i", int(v))
+    if isinstance(dtype, T.LongType):
+        return struct.pack("<q", v)
+    if isinstance(dtype, T.DecimalType):
+        n = int(Decimal(v).scaleb(dtype.scale, Context(prec=80)))  # exact: 38 digits fit
+        if dtype.precision <= 18:
+            return struct.pack("<q", n)
+        # java.math.BigInteger.toByteArray: minimal big-endian two's complement
+        return n.to_bytes((n if n >= 0 else ~n).bit_length() // 8 + 1, "big", signed=True)
+    raise TypeError(f"no driver-side bucket hash for key type {dtype.simpleString()}")
+
+
+def bucket_of(key: tuple, types: list[T.DataType], num_buckets: int) -> int:
+    """The bucket ``bucket_expr`` assigns to one key (null parts skipped)."""
+    h = 42
+    for v, t in zip(key, types):
+        if v is not None:
+            h = _xxh64(_hash_input(v, t), h)
+    return (h - (1 << 64) if h >> 63 else h) % num_buckets
+
+
+def arrow_schema(schema: T.StructType) -> pa.Schema:
+    """The Arrow schema driver-side reads and writes use: the table's
+    types, every field nullable (as Spark writes them)."""
+    return pa.schema([pa.field(f.name, to_arrow_type(f.dataType)) for f in schema.fields])
 
 
 class VersionedTable:
@@ -291,12 +389,7 @@ class VersionedTable:
         full-scan filter exactly (NULLs never satisfy these
         predicates, so null counts cannot affect skip safety)."""
         m = self.manifest(version)
-        wanted = (
-            list(m.buckets)
-            if buckets is None
-            else [str(b) for b in buckets if str(b) in m.buckets]
-        )
-        rels = [f for b in wanted for f in m.buckets[b]]
+        rels = m.files(buckets)
         if where:
             stats = m.meta.get("file_stats", {})
             rels = [r for r in rels if not _stats_prune(stats.get(r), where)]
@@ -332,6 +425,64 @@ class VersionedTable:
         for col, op, val in where or []:
             df = df.filter(_pred_expr(col, op, val))
         return df
+
+    # ---- driver-side access (pyarrow; starts no Spark job) -------------------
+
+    def read_files(self, rels: list[str], schema: pa.Schema) -> pa.Table:
+        """Read the given manifest-relative files, file by file (no
+        hive-partition discovery), cast to ``schema``."""
+        parts = [
+            pq.ParquetFile(self.path / r).read(columns=schema.names).cast(schema)
+            for r in rels
+        ]
+        return pa.concat_tables(parts) if parts else schema.empty_table()
+
+    def read_arrow(self, buckets: list[int] | None = None) -> pa.Table:
+        """:meth:`read` of the current version on the driver, for
+        snapshots small enough to hold there (the watermark row)."""
+        m = self.manifest()
+        return self.read_files(m.files(buckets), arrow_schema(m.schema))
+
+    def column_max(self, col: str) -> Any:
+        """``max(col)`` over the current version (``None`` when it has
+        no non-null value), from the parquet footer statistics of its
+        files. A row group whose footer has no min/max for ``col``
+        (and is not all null) has the column itself read."""
+        top = None
+        for rel in self.manifest().files():
+            pf = pq.ParquetFile(self.path / rel)
+            md = pf.metadata
+            j = [md.schema.column(i).path for i in range(md.num_columns)].index(col)
+            for g in range(md.num_row_groups):
+                rg = md.row_group(g)
+                st = rg.column(j).statistics
+                if st is not None and st.has_min_max:
+                    v = st.max
+                elif st is not None and st.has_null_count and st.null_count == rg.num_rows:
+                    continue
+                else:
+                    v = pc.max(pf.read_row_group(g, columns=[col]).column(0)).as_py()
+                if v is not None and (top is None or v > top):
+                    top = v
+        return top
+
+    def num_rows(self) -> int:
+        """Rows in the current version, from its files' footers."""
+        files = self.manifest().files()
+        return sum(pq.read_metadata(self.path / f).num_rows for f in files)
+
+    def write_buckets(self, parts: dict[int, pa.Table]) -> dict[str, list[str]]:
+        """Write one file per bucket under a fresh tx dir, laid out as
+        :meth:`_write_tx` lays them out (the bucket in the directory
+        name, not in the file); return bucket -> relative file list."""
+        tx = f"data/tx-{uuid.uuid4().hex[:12]}"
+        out: dict[str, list[str]] = {}
+        for b, part in parts.items():
+            rel = f"{tx}/{BUCKET_COL}={b}/part-00000-{uuid.uuid4().hex}.parquet"
+            (self.path / rel).parent.mkdir(parents=True)
+            pq.write_table(part, self.path / rel)
+            out[str(b)] = [rel]
+        return out
 
     def diff(self, old_version: int, new_version: int | None = None) -> DataFrame:
         """Row-level change feed between two committed versions:

@@ -14,30 +14,49 @@ Semantics (parity with the reference's ``executeUpsert``,
 - re-applying the same batch is a no-op on table content (idempotent);
 - commit races retry with exponential backoff (``dbUpsert.ts:25-48``).
 
-Spark-first physical plan: the batch is hashed into the table's fixed
-buckets; ONLY the affected buckets are read back, anti-joined-by-merge
-(window latest-wins), and rewritten. No full-table rewrite, no
-driver-side loops — merge cost scales with batch size, not table size.
-The reference's ``batchSize`` chunking (10 000 rows/statement) has no
-analog: Spark writes all buckets in parallel in one job.
+One entry point, two physical paths, chosen by the batch's type:
+
+- **rows held on the driver** (a list of tuples in the table's column
+  order: what the sync loop builds from GraphQL pages, bounded by its
+  ``merge_chunk_rows``) merge with pyarrow and start no Spark job. The
+  keys are bucketed in Python with the hash :func:`bucket_expr` uses,
+  only the affected buckets' files are read, and each affected bucket
+  is rewritten as one file. For a block of tens of rows, the fixed
+  cost of a Spark action is most of the work, so this is what makes a
+  block visible in milliseconds;
+- **DataFrames** (bulk hydration, rollups) merge in Spark: the batch
+  is hashed into the table's fixed buckets, only the affected buckets
+  are read back, merged latest-wins with a window, and rewritten. Into
+  a table with no files the merge is a plain write in one job.
+
+Both paths write the same layout and commit through
+:meth:`VersionedTable.commit_buckets` with the same retry, so a table
+takes merges from either path in any order. A merge rewrites every
+bucket its keys hash into, so the bytes it writes scale with the rows
+per touched bucket (table size over bucket count), not with the batch.
 """
 
 from __future__ import annotations
 
 from typing import Any
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from rootstock_collective_state_sync_spark.sinks.table import (
     BUCKET_COL,
     CommitConflict,
     VersionedTable,
+    arrow_schema,
     bucket_expr,
+    bucket_of,
     with_retry,
 )
 
 _SEQ = "__seq"
 _SRC = "__is_batch"
+_NOT_NULL = "NOT NULL violation in batch for one of"
 
 
 def prepare_batch(df: DataFrame, schema: T.StructType) -> DataFrame:
@@ -51,6 +70,20 @@ def prepare_batch(df: DataFrame, schema: T.StructType) -> DataFrame:
       (Spark does not enforce nullability on write; the reference
       delegated this to Postgres constraints).
     """
+    out = _project(df, schema)
+    required = [f.name for f in schema.fields if not f.nullable]
+    if required:
+        # engine-side NOT NULL enforcement, one distributed pass
+        bad = out.filter(
+            " OR ".join(f"`{c}` IS NULL" for c in required)
+        ).limit(1).count()
+        if bad:
+            raise ValueError(f"{_NOT_NULL} {required}")
+    return out
+
+
+def _project(df: DataFrame, schema: T.StructType) -> DataFrame:
+    """:func:`prepare_batch` without its NOT NULL probe."""
     in_fields = {f.name: f for f in df.schema.fields}
     cols = []
     for f in schema.fields:
@@ -64,21 +97,35 @@ def prepare_batch(df: DataFrame, schema: T.StructType) -> DataFrame:
         if isinstance(src.dataType, T.StructType) and "id" in src.dataType.names:
             c = c.getField("id")  # FK object -> scalar id
         cols.append(c.cast(f.dataType).alias(f.name))
-    out = df.select(*cols)
-    required = [f.name for f in schema.fields if not f.nullable]
-    if required:
-        # engine-side NOT NULL enforcement, one distributed pass
-        bad = out.filter(
-            " OR ".join(f"`{c}` IS NULL" for c in required)
-        ).limit(1).count()
-        if bad:
-            raise ValueError(f"NOT NULL violation in batch for one of {required}")
-    return out
+    return df.select(*cols)
+
+
+def prepare_rows(rows: list[tuple], schema: T.StructType) -> pa.Table:
+    """:func:`prepare_batch` for rows held on the driver: tuples in the
+    schema's column order. Nested FK objects ``{id: …}`` are flattened
+    to the id, a null in a NOT NULL column raises, and the values are
+    cast to the schema (a value out of range, such as a decimal above
+    10^38-1, raises)."""
+    names = schema.names
+    for r in rows:
+        if len(r) != len(names):
+            raise ValueError(f"row has {len(r)} values, schema has {len(names)} columns")
+    cols = [
+        [v.get("id") if isinstance(v, dict) else v for v in col]
+        for col in zip(*rows)
+    ] or [[] for _ in names]
+    required = [i for i, f in enumerate(schema.fields) if not f.nullable]
+    if any(v is None for i in required for v in cols[i]):
+        raise ValueError(f"{_NOT_NULL} {[names[i] for i in required]}")
+    target = arrow_schema(schema)
+    return pa.Table.from_arrays(
+        [pa.array(c, type=t) for c, t in zip(cols, target.types)], schema=target
+    )
 
 
 def merge_upsert(
     table: VersionedTable,
-    batch: DataFrame,
+    batch: DataFrame | list[tuple],
     meta: dict[str, Any] | None = None,
     max_retries: int = 3,
     initial_delay: float = 0.1,
@@ -87,13 +134,26 @@ def merge_upsert(
     """MERGE ``batch`` INTO ``table`` ON its merge keys; returns the new
     table version (or the current one for an empty batch).
 
+    ``batch`` is a DataFrame (merged in Spark) or a list of tuples in
+    the table's column order (merged on the driver, no Spark job).
+
     ``when_matched_condition``: optional SQL boolean over ``src``/``tgt``
     aliases, e.g. ``"src.rawState <> tgt.rawState"`` — matched target
     rows are replaced only when it holds (the reference's diff-update,
-    ``blockProposalStateStrategy.ts:116-131``, set-based).
+    ``blockProposalStateStrategy.ts:116-131``, set-based). It needs a
+    DataFrame batch.
     """
+    if isinstance(batch, (list, tuple)):
+        if when_matched_condition is not None:
+            raise ValueError("when_matched_condition needs a DataFrame batch")
+        return _merge_rows(table, batch, meta, max_retries, initial_delay)
     m0 = table.manifest()
     schema, keys, nb = m0.schema, m0.merge_keys, m0.num_buckets
+    if not m0.buckets:
+        try:
+            return _write_into_empty(table, batch, m0, meta)
+        except CommitConflict:
+            pass  # another writer filled the table first: merge into it
     src = prepare_batch(batch, schema)
     if not src.take(1):
         return m0.version
@@ -139,15 +199,7 @@ def merge_upsert(
                 )
                 s = s.join(blocked_keys, keys, "left_anti")
 
-            unioned = t.unionByName(s)
-            w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
-                F.col(_SEQ).desc()
-            )
-            merged = (
-                unioned.withColumn("__rn", F.row_number().over(w))
-                .filter(F.col("__rn") == 1)
-                .select(*schema.names)
-            )
+            merged = _last_per_key(t.unionByName(s), keys).select(*schema.names)
             # merged covers exactly the affected buckets (src and tgt
             # were both restricted to them); empty list drops a bucket.
             new_files = table._write_tx(merged, nb, keys)
@@ -157,3 +209,82 @@ def merge_upsert(
         return with_retry(attempt, max_retries=max_retries, initial_delay=initial_delay)
     finally:
         src.unpersist()
+
+
+def _last_per_key(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Keep each key's last row; ``_SEQ`` orders the rows."""
+    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(F.col(_SEQ).desc())
+    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
+
+
+def _write_into_empty(table: VersionedTable, batch: DataFrame, m0, meta) -> int:
+    """Merge into a table with no files: a plain write in one job.
+    NOT NULL is checked in the same pass, and the last row per key is
+    kept."""
+    schema = m0.schema
+    required = [f.name for f in schema.fields if not f.nullable]
+    msg = f"{_NOT_NULL} {required}"
+    src = _project(batch, schema).select(
+        *[
+            F.coalesce(F.col(f.name), F.raise_error(F.lit(msg)).cast(f.dataType)).alias(f.name)
+            if not f.nullable
+            else F.col(f.name)
+            for f in schema.fields
+        ]
+    )
+    # tag arrival order before the shuffle moves rows around
+    src = src.withColumn(_SEQ, F.monotonically_increasing_id())
+    merged = _last_per_key(src, m0.merge_keys).select(*schema.names)
+    try:
+        new_files = table._write_tx(merged, m0.num_buckets, m0.merge_keys)
+    except Exception as exc:
+        if _NOT_NULL in str(exc):
+            raise ValueError(msg) from None
+        raise
+    if not new_files:
+        return m0.version
+    return table.commit_buckets(new_files, m0.version, meta=meta)
+
+
+def _merge_rows(
+    table: VersionedTable,
+    rows: list[tuple],
+    meta: dict[str, Any] | None,
+    max_retries: int,
+    initial_delay: float,
+) -> int:
+    """The driver-side merge: pyarrow reads and writes, no Spark job."""
+    m0 = table.manifest()
+    schema, keys, nb = m0.schema, m0.merge_keys, m0.num_buckets
+    src = prepare_rows(rows, schema)
+    if not src.num_rows:
+        return m0.version
+    key_cols = list(zip(*(src[k].to_pylist() for k in keys)))
+    last = {k: i for i, k in enumerate(key_cols)}  # last occurrence wins
+    types = [schema[k].dataType for k in keys]
+    by_bucket: dict[int, list[int]] = {}
+    for k, i in last.items():
+        by_bucket.setdefault(bucket_of(k, types, nb), []).append(i)
+    parts = {b: src.take(idx) for b, idx in by_bucket.items()}
+
+    def attempt() -> int:
+        prev = table.manifest()
+        out = {}
+        for b, part in parts.items():
+            tgt = table.read_files(prev.files([b]), part.schema)
+            if tgt.num_rows:
+                tgt = tgt.filter(pc.invert(_key_in(tgt, part, keys)))
+                part = pa.concat_tables([tgt, part])
+            out[b] = part
+        return table.commit_buckets(table.write_buckets(out), prev.version, meta=meta)
+
+    return with_retry(attempt, max_retries=max_retries, initial_delay=initial_delay)
+
+
+def _key_in(tgt: pa.Table, src: pa.Table, keys: list[str]):
+    """Mask of the ``tgt`` rows whose key occurs in ``src`` (a null
+    key part matches a null, as in the Spark path's window)."""
+    if len(keys) == 1:
+        return pc.is_in(tgt[keys[0]], value_set=src[keys[0]].combine_chunks())
+    want = set(zip(*(src[k].to_pylist() for k in keys)))
+    return pa.array([k in want for k in zip(*(tgt[k].to_pylist() for k in keys))])

@@ -29,8 +29,6 @@ import shutil
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import functions as F
-
 from rootstock_collective_state_sync_spark.sinks import TableCatalog
 from rootstock_collective_state_sync_spark.streaming.chain import ChainClient
 from rootstock_collective_state_sync_spark.streaming.sync import (
@@ -67,18 +65,19 @@ class ReorgManager:
         table = self.engine.catalog.table(CHANGELOG_ENTITY)
         if not table.exists():
             return 0
-        rows = (
-            table.read()
-            .orderBy(F.col("blockNumber").desc())
-            .limit(self.max_reorg_depth)
-            .select("blockNumber", "id")
-            .collect()
+        entries = table.read_arrow()  # on the driver: the search starts no Spark job
+        stored = sorted(
+            (
+                (int(n), h)
+                for n, h in zip(entries["blockNumber"].to_pylist(), entries["id"].to_pylist())
+                if n is not None
+            ),
+            reverse=True,
         )
-        for r in rows:
-            stored_hash = "0x" + bytes(r["id"]).hex()
-            onchain = self.chain.get_block(int(r["blockNumber"]))
-            if onchain is not None and onchain.hash.lower() == stored_hash.lower():
-                return int(r["blockNumber"])
+        for number, h in stored[: self.max_reorg_depth]:
+            onchain = self.chain.get_block(number)
+            if onchain is not None and onchain.hash.lower() == "0x" + bytes(h).hex():
+                return number
         return 0
 
     # ---- recovery: restore + replay -------------------------------------------
@@ -93,11 +92,13 @@ class ReorgManager:
         the MINIMUM as-of height across restored tables — replaying
         from the ancestor itself would silently skip records that the
         oldest-restored table is missing. Versions without block
-        metadata count as height 0 (forces a from-genesis replay)."""
+        metadata count as height 0 (forces a from-genesis replay).
+        Tables the replayed change log does not name re-sync their
+        own changes since their as-of height."""
         if ancestor <= 0:
             raise ValueError("no common ancestor — use recover_rebuild()")
         restored: dict[str, int] = {}
-        as_of: list[int] = []
+        as_of: dict[str, int] = {}
         for name in self.engine.catalog.list_tables():
             table = self.engine.catalog.table(name)
             target, target_bn = None, 0
@@ -110,8 +111,8 @@ class ReorgManager:
                 if target != table.current_version():
                     table.restore(target)
                     restored[name] = target
-                as_of.append(target_bn)
-        replay_from = min(as_of) if as_of else 0
+                as_of[name] = target_bn
+        replay_from = min(as_of.values(), default=0)
 
         # align the watermark with the weakest restored table, then
         # replay the canonical branch through the normal changelog path
@@ -128,7 +129,18 @@ class ReorgManager:
                 self.engine.spark.createDataFrame([], wm_table.manifest().schema)
             )
         head = self.chain.head_block()
-        self.engine.sync_from_changelog(head)
+        replayed = self.engine.sync_from_changelog(head)
+        # the change log names only the entities it tracks; a table kept
+        # by another strategy (look-back, append-only) catches up on its
+        # own changes since its as-of height, which may lie further back
+        # than that strategy's next run reaches
+        for name, bn in as_of.items():
+            if name not in replayed and name != CHANGELOG_ENTITY:
+                self.engine.sync_entities(
+                    [name],
+                    where={"_change_block": {"number_gte": bn + 1}},
+                    meta={"blockNumber": head.number},
+                )
         return restored
 
     # ---- recovery: shadow rebuild + swap ---------------------------------------

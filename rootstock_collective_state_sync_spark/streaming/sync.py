@@ -19,9 +19,13 @@ The engine analog of the reference's lifecycle (SURVEY §3):
 Unlike the reference — which buffers every page in driver memory
 before any write (``subgraphSyncer.ts:124-127``, SURVEY §3.1 note) —
 pages are flushed to the merge sink every ``merge_chunk_rows`` rows,
-bounding driver memory; bulk hydration of very large entities should
-use the partition-parallel DataSource path instead
-(``spark.read.format("subgraph")`` -> ``merge_upsert``).
+bounding driver memory. Those chunks, the change log and the
+watermark are rows already on the driver, so ``merge_upsert`` merges
+them with pyarrow, and the watermark and append-only high-water marks
+are read from parquet files and footers: a clean block starts no
+Spark job. Bulk hydration of very large entities uses the
+partition-parallel DataSource path instead
+(``spark.read.format("subgraph")`` -> ``merge_upsert`` in Spark).
 """
 
 from __future__ import annotations
@@ -84,8 +88,9 @@ class SyncEngine:
     config_path: str | None = None
     transport_path: str | None = None
     bulk_num_partitions: int = 8
-    # per-strategy last-run block (T2). NOTE: driver state — rebuilt
-    # from table metadata on restart, never authoritative.
+    # per-strategy last-run block (T2). In-memory driver state: it
+    # resets on restart, so the first block after one runs every
+    # strategy; nothing persists or rebuilds it.
     _last_run: dict[str, int] = field(default_factory=dict)
 
     # ---- DDL / bootstrap ---------------------------------------------------
@@ -122,7 +127,8 @@ class SyncEngine:
         from the wire straight into the merge shuffle — the driver
         never materializes a page. This is the 100 TB path; the
         driver-side :meth:`sync_entity` loop remains only for small
-        incremental per-block batches."""
+        incremental per-block batches. Returns the rows in the table
+        afterwards, from its files' footers."""
         from rootstock_collective_state_sync_spark.sources.subgraph_source import (
             SubgraphDataSource,
         )
@@ -138,13 +144,9 @@ class SyncEngine:
         )
         if self.transport_path:
             reader = reader.option("transport", self.transport_path)
-        df = reader.load().persist()
-        try:
-            n = df.count()
-            merge_upsert(self.catalog.table(name), df, meta=meta)
-        finally:
-            df.unpersist()
-        return n
+        table = self.catalog.table(name)
+        merge_upsert(table, reader.load(), meta=meta)
+        return table.num_rows()
 
     # ---- entity sync (pagination -> merge) ---------------------------------
 
@@ -184,7 +186,6 @@ class SyncEngine:
         """Paginate one entity from the subgraph and merge-upsert into
         its table in bounded chunks. Returns rows ingested."""
         entity = self.schema[name]
-        struct = compile_entity(self.schema, entity)
         table = self.catalog.table(name)
         buffer: list[tuple] = []
         total = 0
@@ -192,8 +193,7 @@ class SyncEngine:
         def flush():
             nonlocal buffer
             if buffer:
-                df = self.spark.createDataFrame(buffer, struct)
-                merge_upsert(table, df, meta=meta)
+                merge_upsert(table, buffer, meta=meta)
                 buffer = []
 
         for page in self._pages(name, where, first_page):
@@ -221,7 +221,7 @@ class SyncEngine:
         table = self.catalog.table(WATERMARK_ENTITY)
         if not table.exists():
             return None
-        rows = table.read().collect()
+        rows = table.read_arrow().to_pylist()
         if not rows:
             return None
         r = rows[0]
@@ -232,21 +232,15 @@ class SyncEngine:
         )
 
     def set_watermark(self, block: Block) -> None:
-        struct = compile_entity(self.schema, self.schema[WATERMARK_ENTITY])
-        df = self.spark.createDataFrame(
-            [
-                (
-                    True,
-                    Decimal(block.number),
-                    Decimal(block.timestamp),
-                    _hex_to_bytes(block.hash),
-                )
-            ],
-            struct,
+        row = (
+            True,
+            Decimal(block.number),
+            Decimal(block.timestamp),
+            _hex_to_bytes(block.hash),
         )
         merge_upsert(
             self.catalog.table(WATERMARK_ENTITY),
-            df,
+            [row],
             meta={"blockNumber": block.number},
         )
 
@@ -305,14 +299,9 @@ class SyncEngine:
         )
 
         # ingest the changelog feed itself + advance the watermark
-        entity = self.schema[CHANGELOG_ENTITY]
-        struct = compile_entity(self.schema, entity)
-        df = self.spark.createDataFrame(
-            records_to_rows(self.schema, entity, entries), struct
-        )
         merge_upsert(
             self.catalog.table(CHANGELOG_ENTITY),
-            df,
+            records_to_rows(self.schema, self.schema[CHANGELOG_ENTITY], entries),
             meta={"blockNumber": head.number},
         )
         latest = max(entries, key=lambda e: int(e["blockNumber"]))
@@ -326,11 +315,9 @@ class SyncEngine:
         return counts
 
     def _append_where(self, name: str, block_col: str) -> dict[str, Any]:
-        """High-water-mark filter for an append-only entity (T5)."""
-        from pyspark.sql import functions as F
-
-        table = self.catalog.table(name)
-        top = table.read().agg(F.max(block_col).alias("m")).collect()[0]["m"]
+        """High-water-mark filter for an append-only entity (T5); the
+        mark comes from the table's parquet footer statistics."""
+        top = self.catalog.table(name).column_max(block_col)
         from_block = int(top) + 1 if top is not None else 0
         return {f"{block_col}_gte": from_block}
 

@@ -739,3 +739,57 @@ def test_streaming_shell_end_to_end(spark, tmp_path, world):
     ]
     assert len(coalesced) == 4
     assert len(new_calls) == 6
+
+
+def test_many_reorgs_converge_to_the_canonical_fold(spark, tmp_path):
+    """A follower whose blocks cost milliseconds meets many reorgs per
+    run: over the benchmark's simulator at its tiny sizes, twelve seeded
+    reorgs of depth 1-4, each followed by a clean block. Every recovery
+    must leave ``detect()`` clean, and at the end every table and the
+    watermark must equal the simulator's canonical fold."""
+    import random
+    from dataclasses import replace
+
+    from perfbench.run import ENTITIES, TINY, WORKLOADS, check_replica
+    from perfbench.sim import World as SimWorld, spec_url
+
+    w = WORKLOADS["chain_follow"]
+    # a short look-back (still longer than a proposal's active span plus
+    # the deepest reorg) lets proposals age out of it within the run, so
+    # a recovery that rewinds a table further back than the look-back
+    # reaches cannot hide behind the next block's look-back
+    spec = replace(w.spec, seed=11, **TINY["chain_follow"], active=6, window=12)
+    world = SimWorld(spec)
+    eng = SyncEngine(
+        spark=spark,
+        schema=load_entities(ENTITIES),
+        catalog=TableCatalog(spark, tmp_path / "live"),
+        client=SubgraphClient(url=spec_url(spec), transport=world.transport),
+        lookback_window=spec.window,
+    )
+    eng.bootstrap(at_block=world.head)
+    eng.set_watermark(world.head_block())
+    mgr = ReorgManager(engine=eng, chain=world)
+
+    def follow():
+        res = eng.run_block(
+            world.head_block(),
+            append_only_entities=w.append_only,
+            lookback_entities=w.lookback,
+        )
+        assert not [v for v in res.values() if isinstance(v, Exception)], res
+        assert eng.get_watermark().number == world.head
+
+    for _ in range(w.behind):  # room for the first reorg's full depth
+        world.advance()
+    follow()
+    depths = random.Random("many-reorgs")
+    for cycle in range(12):
+        ancestor = world.reorg(depths.randint(1, w.max_depth))
+        outcome = mgr.detect_and_recover()
+        assert outcome in (f"restored@{ancestor}", "rebuilt"), (cycle, outcome)
+        assert mgr.detect() is None, cycle
+        world.advance()
+        follow()
+    failed = [msg for ok, msg in check_replica(eng, world) if not ok]
+    assert not failed, failed
