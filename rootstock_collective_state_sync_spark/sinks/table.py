@@ -31,9 +31,23 @@ Scale design: rows are hash-partitioned into ``num_buckets`` by merge
 key. An upsert rewrites only the buckets its batch keys hash into, so
 it writes the rows of the touched buckets (table size over bucket
 count, per bucket), never more than the table; a batch of k random
-keys touches about min(k, num_buckets) buckets. Bucket count is fixed at table-creation (like Hive/Spark bucketing) so
-key -> bucket is stable across versions; co-bucketed tables can join
-without a shuffle by reading matching buckets.
+keys touches about min(k, num_buckets) buckets. The bucket count is
+fixed at table creation (like Hive/Spark bucketing), so key -> bucket
+is stable across versions.
+
+What the sync engine uses, and from where:
+
+- writes: :func:`..sinks.upsert.merge_upsert` (``_write_tx`` on its
+  Spark path, :meth:`VersionedTable.write_buckets` on its driver path,
+  both committed by :meth:`VersionedTable.commit_buckets`);
+- driver-side reads that start no Spark job: ``read_arrow`` (the
+  watermark row, the change log), ``column_max`` (append-only
+  high-water marks) and ``num_rows`` (bulk-hydration counts);
+- reorg recovery: ``history`` and ``restore``;
+- Spark reads: ``read`` (the Spark merge, the graph store, the
+  benchmark's replica check); ``overwrite`` is the graph store's
+  snapshot replace;
+- retention: ``vacuum`` (expires old versions and unreferenced files).
 """
 
 from __future__ import annotations
@@ -106,9 +120,6 @@ class Manifest:
         return [f for b in wanted for f in self.buckets.get(b, [])]
 
 
-_STATS_OPS = ("=", "<", "<=", ">", ">=")
-
-
 #: Spark byte-size conf suffixes (JavaUtils.byteStringAsBytes): plain
 #: numbers are BYTES; "128m"-style values carry a binary-unit suffix.
 _BYTE_SUFFIXES = {
@@ -131,48 +142,6 @@ def _parse_bytes_conf(v: str) -> int:
     if s and s[-1] in _BYTE_SUFFIXES:
         return int(float(s[:-1]) * _BYTE_SUFFIXES[s[-1]])
     return int(s)
-
-
-def _pred_expr(col: str, op: str, val) -> F.Column:
-    if op not in _STATS_OPS:
-        raise ValueError(f"unsupported predicate op {op!r}; use {_STATS_OPS}")
-    c, v = F.col(col), F.lit(val)
-    return {
-        "=": c == v,
-        "<": c < v,
-        "<=": c <= v,
-        ">": c > v,
-        ">=": c >= v,
-    }[op]
-
-
-def _stats_prune(fstats: "dict | None", where) -> bool:
-    """True when the file's recorded stats PROVE no row satisfies the
-    predicate conjunction. Missing stats/column/min/max -> keep."""
-    if not fstats:
-        return False
-    for col, op, val in where:
-        mm = fstats.get(col)
-        if not isinstance(mm, (list, tuple)) or len(mm) < 2:
-            continue
-        mn, mx = mm[0], mm[1]
-        if mn is None or mx is None:
-            continue
-        if (
-            (op == "=" and (val < mn or val > mx))
-            or (op == "<" and mn >= val)
-            or (op == "<=" and mn > val)
-            or (op == ">" and mx <= val)
-            or (op == ">=" and mx < val)
-        ):
-            return True  # one unsatisfiable conjunct kills the file
-    return False
-
-
-_STATS_SAFE_TYPES = (
-    T.ByteType, T.ShortType, T.IntegerType, T.LongType,
-    T.FloatType, T.DoubleType, T.StringType, T.BooleanType,
-)
 
 
 def bucket_expr(keys: list[str], num_buckets: int):
@@ -368,32 +337,10 @@ class VersionedTable:
 
     # ---- read --------------------------------------------------------------
 
-    def read(
-        self,
-        version: int | None = None,
-        buckets: list[int] | None = None,
-        where: "list[tuple[str, str, Any]] | None" = None,
-    ) -> DataFrame:
-        """Read a snapshot (optionally bucket-pruned) as a DataFrame.
-
-        ``where`` is a conjunction of simple predicates
-        ``(col, op, literal)`` with op in ``= < <= > >=``: files whose
-        recorded min/max statistics (X-E9; written by :meth:`append` /
-        :meth:`overwrite` on tables with ``stats_cols``, or backfilled
-        by :meth:`analyze`) prove zero matching rows are SKIPPED
-        before any scan — Delta-style data skipping, which on
-        append-mostly time-correlated tables (block numbers,
-        timestamps) turns a "recent window" read into a tail-files
-        read. Files without stats are conservatively kept; the
-        residual filter is always applied, so the result equals a
-        full-scan filter exactly (NULLs never satisfy these
-        predicates, so null counts cannot affect skip safety)."""
+    def read(self, version: int | None = None, buckets: list[int] | None = None) -> DataFrame:
+        """Read a snapshot (optionally bucket-pruned) as a DataFrame."""
         m = self.manifest(version)
-        rels = m.files(buckets)
-        if where:
-            stats = m.meta.get("file_stats", {})
-            rels = [r for r in rels if not _stats_prune(stats.get(r), where)]
-        files = [str(self.path / f) for f in rels]
+        files = [str(self.path / f) for f in m.files(buckets)]
         if not files:
             df = self.spark.createDataFrame([], m.schema)
         else:
@@ -422,8 +369,6 @@ class VersionedTable:
                     df = df.coalesce(want)
             except (OSError, ValueError):
                 pass  # non-local or odd conf: keep the planner's layout
-        for col, op, val in where or []:
-            df = df.filter(_pred_expr(col, op, val))
         return df
 
     # ---- driver-side access (pyarrow; starts no Spark job) -------------------
@@ -484,75 +429,6 @@ class VersionedTable:
             out[str(b)] = [rel]
         return out
 
-    def diff(self, old_version: int, new_version: int | None = None) -> DataFrame:
-        """Row-level change feed between two committed versions:
-        ``(op, <merge keys>, <non-key columns of the NEW row; for
-        deletes, of the OLD row>)`` with ``op`` in
-        ``insert | update | delete``. The CDC view a consumer tails to
-        mirror the table without re-reading snapshots — the version-
-        level analog of the engine's per-batch diff-update
-        (``sinks/upsert.py``, reference changelog semantics).
-
-        Plan shape: both snapshots are bucketed on the SAME keys and
-        bucket count by construction, and only buckets whose file
-        lists differ between the two manifests are read at all —
-        unchanged buckets are pruned out by manifest comparison before
-        any scan, so the diff costs O(changed buckets), not O(table).
-        The join inside each changed bucket is key-colocated.
-        """
-        m_old = self.manifest(old_version)
-        m_new = self.manifest(new_version)
-        changed = [
-            b
-            for b in set(m_old.buckets) | set(m_new.buckets)
-            if m_old.buckets.get(b) != m_new.buckets.get(b)
-        ]
-        keys = m_new.merge_keys
-        val_cols = [c for c in m_new.schema.names if c not in keys]
-        ib = [int(b) for b in changed]
-        o = self.read(old_version, buckets=ib)
-        n = self.read(new_version, buckets=ib)
-        oj = o.select(
-            *[F.col(k).alias(f"_ok_{k}") for k in keys],
-            *[F.col(c).alias(f"_ov_{c}") for c in val_cols],
-        )
-        nj = n.select(
-            *[F.col(k).alias(f"_nk_{k}") for k in keys],
-            *[F.col(c).alias(f"_nv_{c}") for c in val_cols],
-        )
-        cond = None
-        for k in keys:
-            c = F.col(f"_ok_{k}") == F.col(f"_nk_{k}")
-            cond = c if cond is None else (cond & c)
-        j = oj.join(nj, cond, "full_outer")
-        is_del = F.col(f"_nk_{keys[0]}").isNull()
-        is_ins = F.col(f"_ok_{keys[0]}").isNull()
-        changed_val = F.lit(False)
-        for c in val_cols:
-            ne = ~(
-                F.col(f"_ov_{c}").eqNullSafe(F.col(f"_nv_{c}"))
-            )
-            changed_val = changed_val | ne
-        op = (
-            F.when(is_del, F.lit("delete"))
-            .when(is_ins, F.lit("insert"))
-            .when(changed_val, F.lit("update"))
-        )
-        out_key = [
-            F.coalesce(F.col(f"_nk_{k}"), F.col(f"_ok_{k}")).alias(k)
-            for k in keys
-        ]
-        out_val = [
-            F.when(is_del, F.col(f"_ov_{c}"))
-            .otherwise(F.col(f"_nv_{c}"))
-            .alias(c)
-            for c in val_cols
-        ]
-        return (
-            j.select(op.alias("op"), *out_key, *out_val)
-            .filter(F.col("op").isNotNull())
-        )
-
     # ---- write -------------------------------------------------------------
 
     def _write_tx(self, df: DataFrame, num_buckets: int, keys: list[str]) -> dict[str, list[str]]:
@@ -582,160 +458,20 @@ class VersionedTable:
     def overwrite(self, df: DataFrame, meta: dict[str, Any] | None = None) -> int:
         """Full-snapshot replace (atomic). The engine's blue/green swap:
         readers on the old version are unaffected until the new
-        manifest is committed (reference ``schema.ts:10-49`` semantics). On tables
-        with ``stats_cols`` configured (create meta), per-file min/max
-        stats are recomputed for the new snapshot (X-E9)."""
+        manifest is committed (reference ``schema.ts:10-49`` semantics)."""
         prev = self.manifest()
         df = df.select(*prev.schema.names)
         new_buckets = self._write_tx(df, prev.num_buckets, prev.merge_keys)
-        new_meta = {**prev.meta, **(meta or {})}
-        new_meta.pop("file_stats", None)  # old snapshot's files are gone
-        scols = new_meta.get("stats_cols")
-        if scols:
-            new_meta["file_stats"] = self._compute_file_stats(
-                new_buckets, scols, prev.schema
-            )
         m = Manifest(
             version=prev.version + 1,
             schema_json=prev.schema_json,
             merge_keys=prev.merge_keys,
             num_buckets=prev.num_buckets,
             buckets=new_buckets,
-            meta=new_meta,
+            meta={**prev.meta, **(meta or {})},
         )
         self._commit(m, prev.version)
         return m.version
-
-    def append(self, df: DataFrame, meta: dict[str, Any] | None = None) -> int:
-        """APPEND-ONLY commit (X-E9): write the batch's files and add
-        them to the current buckets WITHOUT reading or rewriting any
-        existing data — the true fast path for insert-only entities
-        (the engine's append-only sync strategy, event logs, block
-        streams), where the keyed MERGE's read-modify-write is pure
-        overhead. Rows still hash into the same bucket layout, so
-        co-bucketed joins and the diff reader are unaffected; the
-        caller owns key uniqueness (appending an existing key creates
-        a duplicate — use the merge sink when upserts are possible).
-
-        On tables with ``stats_cols`` configured, each new file's
-        per-column min/max/null-count is recorded in the manifest —
-        because appended files are naturally time-correlated, this is
-        what makes ``read(where=...)`` skip cold files (the
-        Delta-style skipping story: stats + append = tail reads)."""
-        prev = self.manifest()
-        df = df.select(*prev.schema.names)
-        new_buckets = self._write_tx(df, prev.num_buckets, prev.merge_keys)
-        buckets = {b: list(fs) for b, fs in prev.buckets.items()}
-        for b, fs in new_buckets.items():
-            buckets.setdefault(b, []).extend(fs)
-        new_meta = {**prev.meta, **(meta or {})}
-        scols = new_meta.get("stats_cols")
-        if scols:
-            new_stats = self._compute_file_stats(
-                new_buckets, scols, prev.schema
-            )
-            new_meta["file_stats"] = {
-                **prev.meta.get("file_stats", {}),
-                **new_stats,
-            }
-        m = Manifest(
-            version=prev.version + 1,
-            schema_json=prev.schema_json,
-            merge_keys=prev.merge_keys,
-            num_buckets=prev.num_buckets,
-            buckets=buckets,
-            meta=new_meta,
-        )
-        self._commit(m, prev.version)
-        return m.version
-
-    def analyze(self, cols: list[str] | None = None) -> int:
-        """Backfill per-file statistics for the CURRENT snapshot (the
-        ANALYZE TABLE equivalent): computes min/max/null-count for
-        ``cols`` (default: the table's configured ``stats_cols``) on
-        every current data file and commits a metadata-only version —
-        data files untouched. Makes ``read(where=...)`` skipping
-        available on tables populated before stats were configured
-        (or through the merge sink, which does not collect them)."""
-        prev = self.manifest()
-        scols = list(cols or prev.meta.get("stats_cols") or [])
-        if not scols:
-            raise ValueError("no stats columns given or configured")
-        stats = self._compute_file_stats(prev.buckets, scols, prev.schema)
-        m = Manifest(
-            version=prev.version + 1,
-            schema_json=prev.schema_json,
-            merge_keys=prev.merge_keys,
-            num_buckets=prev.num_buckets,
-            buckets=prev.buckets,
-            meta={**prev.meta, "stats_cols": scols, "file_stats": stats},
-        )
-        self._commit(m, prev.version)
-        return m.version
-
-    def _compute_file_stats(
-        self,
-        buckets: dict[str, list[str]],
-        cols: list[str],
-        schema: T.StructType,
-    ) -> dict[str, dict[str, Any]]:
-        """One aggregate job over the given files: per file, row count
-        + (min, max, nulls) per stats column. Only JSON-safe column
-        types participate (numeric/string/bool); others raise — a
-        stats column must round-trip the manifest exactly."""
-        for c in cols:
-            if c not in schema.names:
-                raise ValueError(f"stats column {c!r} not in schema")
-            if not isinstance(schema[c].dataType, _STATS_SAFE_TYPES):
-                raise ValueError(
-                    f"stats column {c!r} has non-JSON-safe type "
-                    f"{schema[c].dataType.simpleString()}"
-                )
-        rels = [f for fs in buckets.values() for f in fs]
-        if not rels:
-            return {}
-        files = [str(self.path / f) for f in rels]
-        aggs = [F.count(F.lit(1)).alias("_rows")]
-        for c in cols:
-            aggs += [
-                F.min(c).alias(f"_mn_{c}"),
-                F.max(c).alias(f"_mx_{c}"),
-                F.sum(F.col(c).isNull().cast("long")).alias(f"_nu_{c}"),
-            ]
-        rows = (
-            self.spark.read.schema(schema)
-            .parquet(*files)
-            .groupBy(F.input_file_name().alias("_f"))
-            .agg(*aggs)
-            .collect()
-        )
-        # input_file_name is a URI; map back to manifest-relative
-        # paths ANCHORED at the table root (a bare uri.endswith(rel)
-        # suffix test could attribute stats to the wrong file when one
-        # rel path is a suffix of another file's URI — r14 advisor
-        # item; tx-uuid dirs make that unreachable today, make the
-        # invariant explicit instead of implicit)
-        from urllib.parse import unquote, urlparse
-
-        def _uri_path(u: str) -> str:
-            parsed = urlparse(u)
-            return unquote(parsed.path) if parsed.scheme else u
-
-        by_path = {
-            str((self.path / rel).resolve()).replace("\\", "/"): rel
-            for rel in rels
-        }
-        out: dict[str, dict[str, Any]] = {}
-        for r in rows:
-            p = str(Path(_uri_path(r["_f"])).resolve()).replace("\\", "/")
-            rel = by_path.get(p)
-            if rel is None:
-                continue
-            st: dict[str, Any] = {"rows": int(r["_rows"])}
-            for c in cols:
-                st[c] = [r[f"_mn_{c}"], r[f"_mx_{c}"], int(r[f"_nu_{c}"])]
-            out[rel] = st
-        return out
 
     def commit_buckets(
         self,
@@ -744,7 +480,7 @@ class VersionedTable:
         meta: dict[str, Any] | None = None,
     ) -> int:
         """Commit a new version replacing only the given buckets'
-        file lists (used by the merge sink)."""
+        file lists; an empty list drops its bucket."""
         prev = self.manifest(expected_prev)
         buckets = dict(prev.buckets)
         for b, files in replaced.items():
@@ -810,9 +546,9 @@ class VersionedTable:
           crash mid-vacuum leaves only harmless orphans for the next
           vacuum.
 
-        ``vacuum(retain_last=1, grace_seconds=0.0)`` after a
-        ``forget_keys`` commit, once readers and writers have drained,
-        leaves no file on disk that holds a forgotten row.
+        ``vacuum(retain_last=1, grace_seconds=0.0)``, once readers and
+        writers have drained, leaves on disk only the files the tip
+        references.
 
         The trade is the standard one: ``restore``/``read`` of an
         expired version now fails loudly (manifest gone), and a reader

@@ -55,7 +55,6 @@ from rootstock_collective_state_sync_spark.sinks.table import (
 )
 
 _SEQ = "__seq"
-_SRC = "__is_batch"
 _NOT_NULL = "NOT NULL violation in batch for one of"
 
 
@@ -129,23 +128,14 @@ def merge_upsert(
     meta: dict[str, Any] | None = None,
     max_retries: int = 3,
     initial_delay: float = 0.1,
-    when_matched_condition: str | None = None,
 ) -> int:
     """MERGE ``batch`` INTO ``table`` ON its merge keys; returns the new
     table version (or the current one for an empty batch).
 
     ``batch`` is a DataFrame (merged in Spark) or a list of tuples in
     the table's column order (merged on the driver, no Spark job).
-
-    ``when_matched_condition``: optional SQL boolean over ``src``/``tgt``
-    aliases, e.g. ``"src.rawState <> tgt.rawState"`` — matched target
-    rows are replaced only when it holds (the reference's diff-update,
-    ``blockProposalStateStrategy.ts:116-131``, set-based). It needs a
-    DataFrame batch.
     """
     if isinstance(batch, (list, tuple)):
-        if when_matched_condition is not None:
-            raise ValueError("when_matched_condition needs a DataFrame batch")
         return _merge_rows(table, batch, meta, max_retries, initial_delay)
     m0 = table.manifest()
     schema, keys, nb = m0.schema, m0.merge_keys, m0.num_buckets
@@ -172,34 +162,7 @@ def merge_upsert(
                 .withColumn(_SEQ, F.lit(-1).cast("long"))
                 .withColumn(BUCKET_COL, bucket_expr(keys, nb))
             )
-            s = src.withColumn(_SRC, F.lit(True))
-            t = tgt.withColumn(_SRC, F.lit(False))
-
-            if when_matched_condition is not None:
-                # drop source rows whose matched target row fails the
-                # condition (target kept unchanged); unmatched source
-                # rows always insert.
-                s_pref = s.select([F.col(c).alias(f"s_{c}") for c in s.columns])
-                t_pref = t.select([F.col(c).alias(f"t_{c}") for c in t.columns])
-                joined = s_pref.join(
-                    t_pref,
-                    [F.col(f"s_{k}") == F.col(f"t_{k}") for k in keys],
-                    "left",
-                )
-                cond = F.expr(
-                    when_matched_condition.replace("src.", "s_").replace("tgt.", "t_")
-                )
-                blocked_keys = (
-                    joined.filter(
-                        F.col(f"t_{keys[0]}").isNotNull()
-                        & ~F.coalesce(cond, F.lit(False))
-                    )
-                    .select(*[F.col(f"s_{k}").alias(k) for k in keys])
-                    .distinct()
-                )
-                s = s.join(blocked_keys, keys, "left_anti")
-
-            merged = _last_per_key(t.unionByName(s), keys).select(*schema.names)
+            merged = _last_per_key(tgt.unionByName(src), keys).select(*schema.names)
             # merged covers exactly the affected buckets (src and tgt
             # were both restricted to them); empty list drops a bucket.
             new_files = table._write_tx(merged, nb, keys)

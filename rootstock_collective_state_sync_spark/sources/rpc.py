@@ -6,10 +6,10 @@ one multicall and diff-updates rows whose on-chain state changed
 
 Spark shape: ``mapInPandas`` over the id column — each Arrow batch
 issues ONE batched RPC for its ids (vectorized enrichment), so RPC
-round-trips scale with partition count, not row count. The joined
-result feeds a ``when_matched_condition`` merge so only rows whose
-state actually differs are rewritten (set-based, replacing the
-reference's per-row update loop).
+round-trips scale with partition count, not row count. The on-chain
+states are joined to the stored ones and only the rows whose state
+differs are merged back (set-based, replacing the reference's per-row
+update loop).
 
 The RPC callable is injectable; :func:`.abi.make_multicall_fn` is the
 production default — a pure-Python ``state(uint256)`` ABI encoder +
@@ -107,16 +107,16 @@ def refresh_proposal_states(
 ) -> int:
     """S6+J1+K2 end-to-end: read live proposals, fetch on-chain states
     in batched RPC calls, merge back ONLY the rows whose state
-    differs. Returns the new table version."""
+    differs. Returns the new table version (the current one when no
+    state changed)."""
     live = table.read().filter(F.col("rawState").isin(*live_states))
     onchain = multicall_states(live, multicall_fn)
-    updated = (
-        live.drop("rawState", "state")
+    changed = (
+        live.withColumnRenamed("rawState", "_storedState")
+        .drop("state")
         .join(onchain, "id")
+        .filter(F.col("rawState") != F.col("_storedState"))
+        .drop("_storedState")
         .withColumn("state", state_label_expr("rawState"))
     )
-    return merge_upsert(
-        table,
-        updated,
-        when_matched_condition="src.rawState <> tgt.rawState",
-    )
+    return merge_upsert(table, changed)

@@ -124,10 +124,10 @@ class ReorgManager:
         if replay_from > 0 and self.chain.get_block(replay_from) is not None:
             self.engine.set_watermark(self.chain.get_block(replay_from))
         else:
-            # no usable floor: clear the watermark -> full re-fetch
-            wm_table.overwrite(
-                self.engine.spark.createDataFrame([], wm_table.manifest().schema)
-            )
+            # no usable floor: clear the watermark -> full re-fetch (a
+            # metadata-only commit, so the restore starts no Spark job)
+            wm = wm_table.manifest()
+            wm_table.commit_buckets({b: [] for b in wm.buckets}, wm.version)
         head = self.chain.head_block()
         replayed = self.engine.sync_from_changelog(head)
         # the change log names only the entities it tracks; a table kept

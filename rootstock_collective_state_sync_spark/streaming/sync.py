@@ -324,13 +324,19 @@ class SyncEngine:
     def sync_append_only(
         self,
         name: str,
+        head: Block,
         block_col: str = "blockNumber",
         first_page: list[dict] | None = None,
     ) -> int:
         """T5: immutable event stream — fetch only rows above the
-        stored high-water mark; merge keeps re-fetches idempotent."""
+        stored high-water mark; merge keeps re-fetches idempotent. The
+        version is stamped with ``head``'s height, so a reorg restore
+        below it rolls the fetched rows back."""
         return self.sync_entity(
-            name, where=self._append_where(name, block_col), first_page=first_page
+            name,
+            where=self._append_where(name, block_col),
+            meta={"blockNumber": head.number},
+            first_page=first_page,
         )
 
     # ---- look-back window strategy (F3) --------------------------------------
@@ -431,7 +437,7 @@ class SyncEngine:
                 where = self._append_where(n, "blockNumber")
                 req = first_page_request(self.schema, n, self.page_size, where=where)
                 return req, lambda b, page, nn=n: self.sync_append_only(
-                    nn, first_page=page
+                    nn, b, first_page=page
                 )
 
             plan(f"append:{name}", plan_append)

@@ -13,8 +13,9 @@ import yaml
 from rootstock_collective_state_sync_spark.config import load_config
 
 FIXTURE = str(Path(__file__).parent / "fixtures" / "entities.yml")
-REF_DEFAULT = "/root/reference/config/default.yml"
-REF_ENV_MAP = "/root/reference/config/custom-environment-variables.yml"
+REF_CONFIG = Path(__file__).parent / "fixtures" / "reference_config"
+REF_DEFAULT = str(REF_CONFIG / "default.yml")
+REF_ENV_MAP = str(REF_CONFIG / "custom-environment-variables.yml")
 
 
 def test_mapping_file_env_wins_over_yaml(tmp_path):
@@ -71,9 +72,10 @@ def test_builtin_db_and_provider_conventions():
 
 
 def test_reference_env_map_applies_to_reference_config():
-    """The reference's own mapping file works verbatim against the
-    reference's own default config (parity with
-    config/custom-environment-variables.yml:1-9)."""
+    """A reference-format mapping file applies to a reference-format
+    config (parity with config/custom-environment-variables.yml:1-9).
+    The fixture holds only the two keys and env names checked here,
+    not the reference's full files."""
     doc = load_config(
         REF_DEFAULT,
         env_map_path=REF_ENV_MAP,

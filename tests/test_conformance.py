@@ -131,3 +131,65 @@ def test_slow_test_ids_name_existing_tests():
         if name not in defined[path]:
             stale.append(node)
     assert not stale, f"stale ids in {listing.name}: {stale}"
+
+
+def _reached_modules(root) -> set[str]:
+    """Dotted names of the modules an import walk reaches from the
+    repo's entry points (``bench.py``, ``__spark_entry__.py``,
+    ``perfbench/*.py``, ``tools/*.py``). It parses sources, imports
+    nothing, and follows every ``import``/``from … import``, function
+    level ones included; importing a module also runs its packages'
+    ``__init__``."""
+    import ast
+
+    def source(mod: str):
+        base = root.joinpath(*mod.split("."))
+        for p in (base.with_suffix(".py"), base / "__init__.py"):
+            if p.is_file():
+                return p
+        return None
+
+    def imports(mod: str, path):
+        pkg = mod.split(".") if path.name == "__init__.py" else mod.split(".")[:-1]
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                yield from (a.name for a in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                parts = pkg[: len(pkg) - node.level + 1] if node.level else []
+                base = ".".join(parts + ([node.module] if node.module else []))
+                yield base
+                yield from (f"{base}.{a.name}" for a in node.names)
+
+    todo = ["bench", "__spark_entry__"] + [
+        f"{d}.{p.stem}" for d in ("perfbench", "tools") for p in sorted(root.joinpath(d).glob("*.py"))
+    ]
+    seen: set[str] = set()
+    while todo:
+        mod = todo.pop()
+        parts = mod.split(".")
+        for i in range(1, len(parts) + 1):
+            name = ".".join(parts[:i])
+            path = source(name)
+            if name not in seen and path is not None:
+                seen.add(name)
+                todo.extend(imports(name, path))
+    return seen
+
+
+def test_every_sink_and_streaming_module_is_reached():
+    """Reachability guard: every module under ``sinks/`` and
+    ``streaming/`` is imported, directly or not, by the engine's entry
+    points, the benchmark or a tool. A module that only its own tests
+    reach is dead weight on the sync path."""
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    pkg = "rootstock_collective_state_sync_spark"
+    reached = _reached_modules(root)
+    unreached = sorted(
+        f"{sub}/{p.name}"
+        for sub in ("sinks", "streaming")
+        for p in root.joinpath(pkg, sub).glob("*.py")
+        if p.name != "__init__.py" and f"{pkg}.{sub}.{p.stem}" not in reached
+    )
+    assert not unreached, f"modules no entry point reaches: {unreached}"

@@ -647,6 +647,51 @@ def test_export_shards_roundtrip_and_validate(spark, tmp_path):
     assert {r.shard for r in diffs.collect()} == {2}
 
 
+def test_jsonl_roundtrip_preserves_values_and_quarantines_corrupt(
+    spark, tmp_path
+):
+    from pyspark.sql import types as T
+
+    from rootstock_collective_state_sync_spark.sinks.export import (
+        export_jsonl,
+        read_jsonl,
+    )
+
+    schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType(), True),
+            T.StructField("text", T.StringType(), True),
+            T.StructField("vec", T.ArrayType(T.DoubleType()), True),
+        ]
+    )
+    rows = [
+        (1, "plain ascii", [1.0, 2.5]),
+        (2, 'quotes " and \\ backslash\nnewline', [0.0]),
+        (3, "unicode ü中文", None),
+    ]
+    df = spark.createDataFrame(rows, schema)
+    path = str(tmp_path / "out.jsonl")
+    export_jsonl(df, path, order_col="doc_id", shards=2)
+    back = read_jsonl(spark, path, schema)
+    got = sorted(
+        (r["doc_id"], r["text"], tuple(r["vec"]) if r["vec"] else None)
+        for r in back.collect()
+    )
+    want = sorted(
+        (i, t, tuple(v) if v else None) for i, t, v in rows
+    )
+    assert got == want
+    # corrupt line lands in the quarantine column, not an exception
+    bad = tmp_path / "bad.jsonl" / "part-corrupt.json"
+    bad.parent.mkdir()
+    bad.write_text('{"doc_id": 1, "text": "ok", "vec": []}\n{not json}\n')
+    schema2 = schema.add("_corrupt_record", T.StringType())
+    r = read_jsonl(spark, str(bad.parent), schema2)
+    recs = r.collect()
+    assert len(recs) == 2
+    assert sum(1 for x in recs if x["_corrupt_record"] is not None) == 1
+
+
 def test_export_manifest_self_describing_modulus(spark, tmp_path):
     """The manifest records its own shard modulus (r16 item 6): an
     export whose TOP shard is empty validates clean without the

@@ -466,45 +466,6 @@ def test_weighted_median_matches_reference_fold(spark, rows):
     assert got["total_weight"] == total
 
 
-@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
-@given(
-    doomed=st.sets(st.integers(min_value=0, max_value=29), max_size=8),
-)
-def test_forget_keys_equals_set_difference(spark, tmp_path_factory, doomed):
-    """forget(K) == table minus K for ANY key set, and after a
-    vacuum down to the tip no on-disk parquet file carries a doomed
-    key."""
-    import glob as _glob
-
-    import pandas as _pd
-    from pyspark.sql import types as T
-
-    from rootstock_collective_state_sync_spark.sinks.forget import forget_keys
-    from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
-
-    root = tmp_path_factory.mktemp("forget_prop")
-    schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType(), False),
-            T.StructField("payload", T.StringType(), False),
-        ]
-    )
-    t = VersionedTable(spark, root / "t")
-    t.create(schema, ["user_id"], num_buckets=4)
-    t.overwrite(
-        spark.createDataFrame([(i, f"p{i}") for i in range(30)], schema)
-    )
-    forget_keys(t, spark.createDataFrame([(k,) for k in doomed] or [(-1,)], "user_id long"))
-    t.vacuum(retain_last=1, grace_seconds=0.0)
-    got = {r["user_id"] for r in t.read().collect()}
-    assert got == set(range(30)) - doomed
-    files = _glob.glob(str(root / "t" / "data" / "**" / "*.parquet"), recursive=True)
-    on_disk = set(
-        _pd.concat([_pd.read_parquet(f, columns=["user_id"]) for f in files])["user_id"]
-    )
-    assert not on_disk & doomed
-
-
 @given(
     pts=st.lists(
         st.tuples(

@@ -41,6 +41,9 @@ class World:
     def __init__(self):
         self.blocks: list[Block] = []
         self.log: list[tuple[int, str, dict]] = []
+        # entities whose changes the change log leaves out (as for an
+        # entity only an append-only strategy follows)
+        self.unlogged: set[str] = set()
 
     def extend(self, blocks: list[Block], changes: dict[int, dict[str, list[dict]]]):
         self.blocks.extend(blocks)
@@ -69,7 +72,8 @@ class World:
     def changelog(self) -> list[dict]:
         by_block: dict[int, set[str]] = {}
         for n, entity, _ in self.log:
-            by_block.setdefault(n, set()).add(entity)
+            if entity not in self.unlogged:
+                by_block.setdefault(n, set()).add(entity)
         blocks = {b.number: b for b in self.blocks}
         return [
             {
@@ -386,11 +390,110 @@ def test_append_only_strategy(spark, tmp_path, world):
     world.log.append(
         (5, "VoteCast", {**vote(8), "blockNumber": "5"})
     )
-    n = eng.sync_append_only("VoteCast")
+    head = world.chain().head_block()
+    n = eng.sync_append_only("VoteCast", head)
     assert n >= 1
     assert "0x%08x" % 8 in {"0x" + k for k in table_state(eng, "VoteCast")}
     # re-run: idempotent, nothing newer
-    assert eng.sync_append_only("VoteCast") <= n
+    assert eng.sync_append_only("VoteCast", head) <= n
+
+
+def claim(i: int, block: int) -> dict:
+    return {
+        "id": f"0x{i:064x}",
+        "backer": "0x" + "aa" * 20,
+        "amount": str(1000 + i),
+        "blockNumber": str(block),
+    }
+
+
+def claims(engine: SyncEngine) -> set[str]:
+    rows = engine.catalog.table("ClaimedRewardsHistory").read_arrow()
+    return {bytes(b).hex() for b in rows["id"].to_pylist()}
+
+
+def test_append_only_version_carries_its_block_height(spark, tmp_path, world):
+    """An append-only merge is stamped with the height of the block it
+    syncs at, not the height of the table's previous version. The
+    change log leaves the claims out, so only the append step syncs
+    them."""
+    world.unlogged.add("ClaimedRewardsHistory")
+    eng = make_engine(spark, tmp_path, world)
+    eng.bootstrap(at_block=5)
+    world.extend(synthetic_blocks(6, 2, fork_tag="a"), {6: {"ClaimedRewardsHistory": [claim(1, 6)]}})
+    head = world.chain().head_block()
+    res = eng.run_block(head, append_only_entities=["ClaimedRewardsHistory"])
+    assert res["append:ClaimedRewardsHistory"] == 1
+    table = eng.catalog.table("ClaimedRewardsHistory")
+    assert table.manifest().meta["blockNumber"] == head.number == 7
+
+
+def test_append_only_rows_of_an_orphaned_block_roll_back(spark, tmp_path, world):
+    """A claim minted only on the orphaned branch, in an entity the
+    change log does not name, is gone once the reorg is recovered and
+    the next clean block is synced: the restore must take the claim's
+    version as lying above the fork point."""
+    world.unlogged.add("ClaimedRewardsHistory")
+    eng = make_engine(spark, tmp_path, world)
+    eng.bootstrap(at_block=5)
+
+    def follow():
+        res = eng.run_block(world.chain().head_block(), append_only_entities=["ClaimedRewardsHistory"])
+        assert not [v for v in res.values() if isinstance(v, Exception)], res
+
+    follow()  # watermark -> 4
+    world.extend(
+        synthetic_blocks(6, 2, fork_tag="a"),
+        {6: {"VoteCast": [vote(1, support=2, reason="a-only")], "ClaimedRewardsHistory": [claim(1, 6)]}},
+    )
+    follow()
+    assert claims(eng) == {f"{1:064x}"}
+
+    _reorged_world(world)  # fork at 4; branch b runs to block 7
+    world.extend(synthetic_blocks(8, 1, fork_tag="b"), {})
+    mgr = ReorgManager(engine=eng, chain=world.chain())
+    assert mgr.detect_and_recover() == "restored@4"
+    follow()
+    assert claims(eng) == set()
+    assert table_state(eng, "VoteCast") == expected_votes(world)
+    assert mgr.detect() is None
+
+
+def test_restore_with_no_floor_clears_the_watermark_without_spark(spark, tmp_path, world):
+    """Versions hydrated without ``at_block`` carry no height, so the
+    restore lands on a floor of 0 although the watermark table itself
+    restores to a row at the fork point: the watermark is cleared and
+    the canonical branch replays from genesis, all on the driver."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def jobs() -> int:
+        ids = tracker.getJobIdsForGroup()
+        return max(ids) + 1 if ids else 0
+
+    eng = make_engine(spark, tmp_path, world)
+    eng.bootstrap()
+    eng.sync_from_changelog(world.chain().head_block())  # watermark -> 4
+    world.extend(
+        synthetic_blocks(6, 2, fork_tag="a"),
+        {6: {"VoteCast": [vote(1, support=2, reason="a-only")]}, 7: {"VoteCast": [vote(7)]}},
+    )
+    eng.sync_from_changelog(world.chain().head_block())
+    assert eng.get_watermark().number == 7
+
+    _reorged_world(world)  # fork at 4
+    mgr = ReorgManager(engine=eng, chain=world.chain())
+    before = jobs()
+    assert mgr.detect_and_recover() == "restored@4"
+    assert jobs() == before
+
+    wm_table = eng.catalog.table("LastProcessedBlock")
+    cur = wm_table.current_version()
+    restored, cleared = wm_table.manifest(cur - 2), wm_table.manifest(cur - 1)
+    assert restored.meta["restoredFrom"] and restored.buckets  # the row of block 4
+    assert not cleared.buckets
+    assert eng.get_watermark().number == 6  # the newest change on branch b
+    assert table_state(eng, "VoteCast") == expected_votes(world)
+    assert mgr.detect() is None
 
 
 # ---------------------------------------------------------------------------

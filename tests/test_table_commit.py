@@ -191,3 +191,27 @@ def test_stale_writer_cannot_reuse_a_vacuumed_slot(tmp_path):
         t._commit(stale, 1)
     assert [h["version"] for h in t.history()] == [3]
     assert t.manifest().buckets == {"0": ["data/1.parquet"]}
+
+
+def test_a_manifest_with_per_file_statistics_still_reads_and_commits(tmp_path):
+    """Manifests written while the store kept per-file statistics carry
+    ``stats_cols`` and ``file_stats`` in their meta. Meta is opaque:
+    such a table still reads, takes driver merges and restores, and the
+    old keys ride along untouched."""
+    from rootstock_collective_state_sync_spark.sinks.upsert import merge_upsert
+
+    t = VersionedTable(None, tmp_path / "t")
+    t.create(SCHEMA, ["k"], num_buckets=4, meta={"stats_cols": ["k"]})
+    v2 = merge_upsert(t, [(1,), (2,), (3,)])
+    legacy = {"stats_cols": ["k"], "file_stats": {f: {"rows": 1, "k": [1, 3, 0]} for f in t.manifest().files()}}
+    v3 = t.commit_buckets({}, v2, meta=legacy)
+    assert sorted(t.read_arrow()["k"].to_pylist()) == [1, 2, 3]
+
+    v4 = merge_upsert(t, [(3,), (4,)])
+    assert v4 == v3 + 1
+    assert sorted(t.read_arrow()["k"].to_pylist()) == [1, 2, 3, 4]
+    assert t.column_max("k") == 4 and t.num_rows() == 4
+    assert t.manifest().meta == legacy
+    t.restore(v3)
+    assert sorted(t.read_arrow()["k"].to_pylist()) == [1, 2, 3]
+    assert t.manifest().meta == {**legacy, "restoredFrom": v3}

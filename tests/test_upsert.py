@@ -2,12 +2,14 @@
 
 Coverage model: the reference's upsert suite (``dbUpsert.test.ts:62-240``)
 — empty batch, undeclared-key dropping, FK flattening, duplicate-PK
-latest-wins, idempotence — plus versioning/restore and the
-changed-rows-only merge (FIXTURES.md F8).
+latest-wins, idempotence — plus versioning/restore, snapshot
+expiration (``vacuum``) and the changed-rows-only merge (FIXTURES.md
+F8).
 """
 
 from __future__ import annotations
 
+import os
 from decimal import Decimal
 
 import pytest
@@ -123,21 +125,6 @@ def test_missing_not_null_column_raises(spark, table):
         prepare_batch(df, SCHEMA)
 
 
-def test_when_matched_condition(spark, table):
-    """J1/K2 parity: update only when the incoming state differs."""
-    merge_upsert(table, make(spark, [("a", Decimal(1), "keep"), ("b", Decimal(2), "old")]))
-    merge_upsert(
-        table,
-        make(spark, [("a", Decimal(1), "CLOBBERED"), ("b", Decimal(99), "new"), ("c", Decimal(3), "ins")]),
-        when_matched_condition="src.amount <> tgt.amount",
-    )
-    assert rows(table) == {
-        "a": (Decimal(1), "keep"),      # matched, amount equal -> untouched
-        "b": (Decimal(99), "new"),      # matched, differs -> updated
-        "c": (Decimal(3), "ins"),       # unmatched -> inserted
-    }
-
-
 def test_restore_version(spark, table):
     merge_upsert(table, make(spark, [("a", Decimal(1), "v2")]))
     v2 = table.current_version()
@@ -183,36 +170,216 @@ def test_catalog_create_all_and_list(spark, tmp_table_dir):
     assert cat.create_all({"A": SCHEMA, "B": SCHEMA}, {"A": ["id"], "B": ["id"]}) == []
 
 
-def test_version_diff_change_feed(spark, table):
-    """diff(v_old, v_new) = exact row-level CDC between snapshots:
-    inserts, updates, deletes, unchanged rows absent — and unchanged
-    BUCKETS pruned before any scan (manifest-level comparison)."""
-    v1 = merge_upsert(
-        table,
-        make(spark, [("a", Decimal(1), "x"), ("b", Decimal(2), "y"),
-                     ("c", Decimal(3), "z")]),
+def test_vacuum_expires_old_versions_keeps_tip(spark, tmp_path):
+    """X-E8: snapshot expiration — old manifests + unreferenced files
+    go, the retained tip reads identically, shared immutable files
+    survive (restore aliases old files into a NEW version), expired
+    reads fail loudly, and vacuum is idempotent."""
+    import pytest as _pytest
+    from pyspark.sql import types as T
+
+    from rootstock_collective_state_sync_spark.sinks.table import (
+        VersionedTable,
     )
-    # update a, delete b (via overwrite), insert d, keep c unchanged
-    v2 = table.overwrite(
-        make(spark, [("a", Decimal(10), "x"), ("c", Decimal(3), "z"),
-                     ("d", Decimal(4), "w")])
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType(), False),
+            T.StructField("v", T.LongType(), False),
+        ]
     )
-    got = {
-        (r["op"], r["id"]): (r["amount"], r["note"])
-        for r in table.diff(v1, v2).collect()
+    t = VersionedTable(spark, tmp_path / "t").create(
+        schema, merge_keys=["k"], num_buckets=2
+    )
+    for i in range(4):
+        t.overwrite(
+            spark.createDataFrame([(j, i) for j in range(6)], schema),
+            meta={"i": i},
+        )
+    # v5 aliases v4's files (restore shares immutable files)
+    t.restore(t.current_version() - 1)
+    tip_before = sorted(tuple(r) for r in t.read().collect())
+    n_files_before = len(list((tmp_path / "t" / "data").rglob("*.parquet")))
+
+    # default grace window refuses to touch freshly-written files
+    # (they could be a concurrent writer's pre-commit staging) —
+    # manifests still expire, bytes do not
+    rep_graced = t.vacuum(retain_last=2)
+    assert rep_graced["versions_removed"] == 4  # v0..v3 of v0..v5
+    assert rep_graced["files_removed"] == 0
+    rep = t.vacuum(retain_last=2, grace_seconds=0.0)
+    assert rep["versions_removed"] == 0  # manifests expired by the graced pass
+    assert rep["files_removed"] > 0 and rep["bytes_removed"] > 0
+    # tip unchanged bit-for-bit; history shrank to the retained pair
+    assert sorted(tuple(r) for r in t.read().collect()) == tip_before
+    assert [h["version"] for h in t.history()] == [5, 6]
+    # the tip (v6 = restore of v4) ALIASES v4's files: vacuum must
+    # keep files referenced by any retained manifest even though
+    # their origin version expired — checked by the tip read above
+    # and the penultimate retained version here
+    assert t.read(5).count() == 6
+    # expired versions fail loudly
+    with _pytest.raises(FileNotFoundError):
+        t.manifest(2)
+    with _pytest.raises(FileNotFoundError):
+        t.restore(1)
+    # idempotent: nothing left to remove
+    rep2 = t.vacuum(retain_last=2)
+    assert rep2 == {
+        "versions_removed": 0,
+        "files_removed": 0,
+        "bytes_removed": 0,
     }
-    assert got == {
-        ("update", "a"): (Decimal(10), "x"),
-        ("delete", "b"): (Decimal(2), "y"),
-        ("insert", "d"): (Decimal(4), "w"),
-    }
-    # no-change diff is empty
-    assert table.diff(v2, v2).count() == 0
-    # null-safe value compare: note NULL <-> NULL is not an update
-    v3 = table.overwrite(
-        make(spark, [("a", Decimal(10), None), ("c", Decimal(3), "z"),
-                     ("d", Decimal(4), "w")])
+    assert (
+        len(list((tmp_path / "t" / "data").rglob("*.parquet")))
+        < n_files_before
     )
-    got3 = {(r["op"], r["id"]) for r in table.diff(v2, v3).collect()}
-    assert got3 == {("update", "a")}
-    assert table.diff(v3, v3).count() == 0
+
+
+def test_vacuum_anchors_on_current_and_spares_inflight(spark, tmp_path):
+    """X-E8 crash/concurrency safety: a writer killed before its commit
+    leaves staged data files and a temp manifest, and no new version.
+    (a) The table still reads the last committed version and the next
+    commit takes the next slot; (b) vacuum keeps the tip and spares the
+    crashed writer's files inside the grace window (a live writer
+    stages data before it links its manifest); (c) with the grace
+    waived, vacuum reclaims the staged files and the temp manifest."""
+    from pyspark.sql import types as T
+
+    from rootstock_collective_state_sync_spark.sinks.table import (
+        Manifest,
+        VersionedTable,
+    )
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.LongType(), False),
+            T.StructField("v", T.LongType(), False),
+        ]
+    )
+    t = VersionedTable(spark, tmp_path / "t").create(
+        schema, merge_keys=["k"], num_buckets=2
+    )
+    for i in range(3):
+        t.overwrite(
+            spark.createDataFrame([(j, i) for j in range(6)], schema),
+            meta={"i": i},
+        )
+    cur = t.current_version()  # v4
+    tip = sorted(tuple(r) for r in t.read().collect())
+
+    # a writer stages data files and its manifest's temp file, then is
+    # killed before the link that would commit v(cur+1)
+    staged = t._write_tx(
+        spark.createDataFrame([(j, 99) for j in range(6)], schema),
+        num_buckets=2,
+        keys=["k"],
+    )
+    m = t.manifest()
+    tmp_manifest = t._versions_dir / f".v{cur + 1:010d}.json.tmp.crashed"
+    tmp_manifest.write_text(
+        Manifest(
+            version=cur + 1,
+            schema_json=m.schema_json,
+            merge_keys=m.merge_keys,
+            num_buckets=m.num_buckets,
+            buckets=staged,
+            meta={"crashed": True},
+        ).to_json()
+    )
+    assert t.current_version() == cur
+    assert sorted(tuple(r) for r in t.read().collect()) == tip
+
+    rep = t.vacuum(retain_last=1)  # default 1h grace
+    assert rep["versions_removed"] == 3  # v1..v3; the tip stays
+    versions = sorted(
+        int(p.stem[1:])
+        for p in (tmp_path / "t" / "_versions").glob("v*.json")
+    )
+    assert versions == [cur]
+    assert sorted(tuple(r) for r in t.read().collect()) == tip
+    staged_paths = [tmp_path / "t" / rel for fs in staged.values() for rel in fs]
+    assert all(p.exists() for p in staged_paths)
+    assert tmp_manifest.exists()
+
+    rep2 = t.vacuum(retain_last=1, grace_seconds=0.0)
+    assert rep2["versions_removed"] == 0
+    # staged files plus v1..v3 files the first vacuum spared
+    assert rep2["files_removed"] > len(staged_paths)
+    assert not any(p.exists() for p in staged_paths)
+    assert not tmp_manifest.exists()
+    assert sorted(tuple(r) for r in t.read().collect()) == tip
+
+    # the crash blocked nothing: the next commit takes v(cur+1)
+    assert t.overwrite(
+        spark.createDataFrame([(j, 7) for j in range(6)], schema)
+    ) == cur + 1
+
+
+def test_vacuum_to_the_tip_after_a_crashed_commit(spark, table):
+    """Vacuum and restore interleaved with a writer killed before its
+    manifest link: the crash blocks no commit, a vacuum down to the tip
+    with no grace window leaves on disk only the tip's files (the
+    crashed writer's staged bytes and temp manifest included), a second
+    vacuum is a no-op, an expired version fails to restore loudly, and
+    commits keep flowing."""
+    import glob
+
+    from rootstock_collective_state_sync_spark.sinks.table import Manifest
+
+    def on_disk() -> set[str]:
+        files = glob.glob(str(table.path / "data" / "**" / "*.parquet"), recursive=True)
+        return {os.path.relpath(f, table.path) for f in files}
+
+    data = [(f"k{i}", Decimal(i), "x") for i in range(40)]
+    table.overwrite(make(spark, data))  # v2
+    table.overwrite(make(spark, [(k, a + 1, n) for k, a, n in data]))  # v3
+    v_tip = table.overwrite(make(spark, [(k, a + 2, n) for k, a, n in data[2:]]))  # v4
+    tip = sorted(tuple(r) for r in table.read().collect())
+    assert len(tip) == 38
+
+    # vacuum keeps the tip and its predecessor, whose files stay on disk
+    rep = table.vacuum(retain_last=2, grace_seconds=0.0)
+    assert rep["versions_removed"] == 2  # v1, v2
+    assert table.read(v_tip - 1).count() == 40
+
+    # a writer killed mid-commit staged files and its manifest's temp
+    # file but never linked the manifest, so no version holds them
+    staged = table._write_tx(make(spark, [("k0", Decimal(9), "crashed")]), 4, ["id"])
+    m = table.manifest()
+    tmp_manifest = table._versions_dir / f".v{v_tip + 1:010d}.json.tmp.crashed"
+    tmp_manifest.write_text(
+        Manifest(
+            version=v_tip + 1,
+            schema_json=m.schema_json,
+            merge_keys=m.merge_keys,
+            num_buckets=m.num_buckets,
+            buckets=staged,
+            meta={"crashed": True},
+        ).to_json()
+    )
+    assert table.current_version() == v_tip
+    assert sorted(tuple(r) for r in table.read().collect()) == tip
+
+    # the crash blocks nothing: the next commit takes the next slot
+    v_new = table.restore(table.current_version())
+    assert v_new == v_tip + 1
+
+    stats = table.vacuum(retain_last=1, grace_seconds=0.0)
+    assert stats["versions_removed"] == 2  # v3, v4
+    assert stats["files_removed"] > 0
+    assert [h["version"] for h in table.history()] == [v_new]
+    assert on_disk() == set(table.manifest().files())
+    assert not any((table.path / rel).exists() for fs in staged.values() for rel in fs)
+    assert not tmp_manifest.exists()
+    assert sorted(tuple(r) for r in table.read().collect()) == tip
+    assert table.vacuum(retain_last=1, grace_seconds=0.0) == {
+        "versions_removed": 0,
+        "files_removed": 0,
+        "bytes_removed": 0,
+    }
+
+    with pytest.raises(FileNotFoundError):
+        table.restore(2)
+    assert table.restore(table.current_version()) == v_new + 1
+    assert sorted(tuple(r) for r in table.read().collect()) == tip

@@ -214,12 +214,6 @@ def test_fk_objects_flatten_on_both_paths(spark, new_table):
     assert contents(driver) == contents(spark_t) == [("a", Decimal(5), None, None, None)]
 
 
-def test_rows_refuse_a_when_matched_condition(new_table):
-    t = new_table(("s",))
-    with pytest.raises(ValueError, match="DataFrame"):
-        merge_upsert(t, [("a", Decimal(1), None, None, None)], when_matched_condition="src.n <> tgt.n")
-
-
 # -- a DataFrame into an empty table is a write, not a merge -------------------
 
 
