@@ -314,72 +314,3 @@ def test_vacuum_anchors_on_current_and_spares_inflight(spark, tmp_path):
     assert t.overwrite(
         spark.createDataFrame([(j, 7) for j in range(6)], schema)
     ) == cur + 1
-
-
-def test_vacuum_to_the_tip_after_a_crashed_commit(spark, table):
-    """Vacuum and restore interleaved with a writer killed before its
-    manifest link: the crash blocks no commit, a vacuum down to the tip
-    with no grace window leaves on disk only the tip's files (the
-    crashed writer's staged bytes and temp manifest included), a second
-    vacuum is a no-op, an expired version fails to restore loudly, and
-    commits keep flowing."""
-    import glob
-
-    from rootstock_collective_state_sync_spark.sinks.table import Manifest
-
-    def on_disk() -> set[str]:
-        files = glob.glob(str(table.path / "data" / "**" / "*.parquet"), recursive=True)
-        return {os.path.relpath(f, table.path) for f in files}
-
-    data = [(f"k{i}", Decimal(i), "x") for i in range(40)]
-    table.overwrite(make(spark, data))  # v2
-    table.overwrite(make(spark, [(k, a + 1, n) for k, a, n in data]))  # v3
-    v_tip = table.overwrite(make(spark, [(k, a + 2, n) for k, a, n in data[2:]]))  # v4
-    tip = sorted(tuple(r) for r in table.read().collect())
-    assert len(tip) == 38
-
-    # vacuum keeps the tip and its predecessor, whose files stay on disk
-    rep = table.vacuum(retain_last=2, grace_seconds=0.0)
-    assert rep["versions_removed"] == 2  # v1, v2
-    assert table.read(v_tip - 1).count() == 40
-
-    # a writer killed mid-commit staged files and its manifest's temp
-    # file but never linked the manifest, so no version holds them
-    staged = table._write_tx(make(spark, [("k0", Decimal(9), "crashed")]), 4, ["id"])
-    m = table.manifest()
-    tmp_manifest = table._versions_dir / f".v{v_tip + 1:010d}.json.tmp.crashed"
-    tmp_manifest.write_text(
-        Manifest(
-            version=v_tip + 1,
-            schema_json=m.schema_json,
-            merge_keys=m.merge_keys,
-            num_buckets=m.num_buckets,
-            buckets=staged,
-            meta={"crashed": True},
-        ).to_json()
-    )
-    assert table.current_version() == v_tip
-    assert sorted(tuple(r) for r in table.read().collect()) == tip
-
-    # the crash blocks nothing: the next commit takes the next slot
-    v_new = table.restore(table.current_version())
-    assert v_new == v_tip + 1
-
-    stats = table.vacuum(retain_last=1, grace_seconds=0.0)
-    assert stats["versions_removed"] == 2  # v3, v4
-    assert stats["files_removed"] > 0
-    assert [h["version"] for h in table.history()] == [v_new]
-    assert on_disk() == set(table.manifest().files())
-    assert not any((table.path / rel).exists() for fs in staged.values() for rel in fs)
-    assert not tmp_manifest.exists()
-    assert sorted(tuple(r) for r in table.read().collect()) == tip
-    assert table.vacuum(retain_last=1, grace_seconds=0.0) == {
-        "versions_removed": 0,
-        "files_removed": 0,
-        "bytes_removed": 0,
-    }
-
-    with pytest.raises(FileNotFoundError):
-        table.restore(2)
-    assert table.restore(table.current_version()) == v_new + 1
-    assert sorted(tuple(r) for r in table.read().collect()) == tip
