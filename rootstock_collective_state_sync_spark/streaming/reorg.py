@@ -8,13 +8,14 @@ height; a mismatch means the synced state includes orphaned blocks.
 Recovery goes beyond the reference's only strategy (rebuild the world
 into a shadow schema and swap, ``:43-50``):
 
-1. **restore + replay (fast path)** — every engine merge records the
-   block height in the table-version metadata, so each table can be
-   ``RESTORE``d to its last version at-or-below the fork point (the
-   versioned-table analog of Delta ``RESTORE VERSION AS OF``), after
-   which normal incremental sync replays the canonical branch. The
-   fork point is found by walking the stored ``BlockChangeLog`` hashes
-   backwards against the chain.
+1. **restore + replay (fast path)** — every commit records the block
+   its sync ran at in the version metadata, and the watermark versions,
+   each committed after its sync's tables, are the progress log (the
+   Structured Streaming commit log). Each table is ``RESTORE``d (Delta
+   ``RESTORE VERSION AS OF``) to where the newest watermark version
+   at-or-below the fork point left it, the watermark last; incremental
+   sync then replays the canonical branch. The fork point is found by
+   walking the stored ``BlockChangeLog`` hashes back against the chain.
 2. **shadow rebuild + atomic swap (general fallback)** — full re-sync
    into a shadow catalog directory, then an atomic directory swap
    (tmp -> live, parity with the reference's ``tmp_public`` ->
@@ -30,13 +31,27 @@ import uuid
 from dataclasses import dataclass
 
 from rootstock_collective_state_sync_spark.sinks import TableCatalog
+from rootstock_collective_state_sync_spark.sinks.table import Manifest, VersionedTable
 from rootstock_collective_state_sync_spark.streaming.chain import ChainClient
 from rootstock_collective_state_sync_spark.streaming.sync import (
     CHANGELOG_ENTITY,
+    WATERMARK_ENTITY,
     SyncEngine,
 )
 
 log = logging.getLogger(__name__)
+
+
+def _newest_at_or_below(table: VersionedTable, height: int) -> Manifest:
+    """Newest version stamped at or below ``height``, read newest first;
+    an unstamped one (a create, a hydration without ``at_block``)
+    qualifies, and a vacuumed one raises ``FileNotFoundError``."""
+    for version in range(table.current_version(), 0, -1):
+        m = table.manifest(version)
+        bn = m.meta.get("blockNumber")
+        if bn is None or int(bn) <= height:
+            return m
+    raise LookupError(f"no version of {table.path.name} at or below block {height}")
 
 
 @dataclass
@@ -83,64 +98,44 @@ class ReorgManager:
     # ---- recovery: restore + replay -------------------------------------------
 
     def recover_restore(self, ancestor: int) -> dict[str, int]:
-        """Point-in-time restore of every table to its last version
-        at-or-below ``ancestor`` (versions carry ``blockNumber`` meta),
-        then incremental replay of the canonical branch.
+        """Rewind every table below ``ancestor``, then replay the
+        canonical branch; returns ``{table: version restored}``.
 
-        Tables may land on versions OLDER than the ancestor (their
-        last eligible commit predates it), so the replay watermark is
-        the MINIMUM as-of height across restored tables — replaying
-        from the ancestor itself would silently skip records that the
-        oldest-restored table is missing. Versions without block
-        metadata count as height 0 (forces a from-genesis replay).
-        Tables the replayed change log does not name re-sync their
-        own changes since their as-of height."""
+        The floor is the newest watermark version stamped at or below
+        ``ancestor`` (its empty v1 replays from genesis). Every other
+        table goes back to its newest version at or below the floor's
+        stamp, then the watermark to the floor: a crash before that
+        leaves the orphaned watermark for the next ``detect``, and the
+        restore reruns. The replay re-syncs what the change log names
+        past the restored watermark; every other table catches up on
+        its own changes past it."""
         if ancestor <= 0:
             raise ValueError("no common ancestor — use recover_rebuild()")
+        catalog = self.engine.catalog
+        floor = _newest_at_or_below(catalog.table(WATERMARK_ENTITY), ancestor)
+        floor_bn = int(floor.meta.get("blockNumber", 0))
+        names = [n for n in catalog.list_tables() if n != WATERMARK_ENTITY]
         restored: dict[str, int] = {}
-        as_of: dict[str, int] = {}
-        for name in self.engine.catalog.list_tables():
-            table = self.engine.catalog.table(name)
-            target, target_bn = None, 0
-            for h in table.history():
-                bn = h["meta"].get("blockNumber")
-                if bn is None or int(bn) <= ancestor:
-                    target = h["version"]
-                    target_bn = 0 if bn is None else int(bn)
-            if target is not None:
-                if target != table.current_version():
-                    table.restore(target)
-                    restored[name] = target
-                as_of[name] = target_bn
-        replay_from = min(as_of.values(), default=0)
+        for name in names + [WATERMARK_ENTITY]:
+            table = catalog.table(name)
+            target = floor if name == WATERMARK_ENTITY else _newest_at_or_below(table, floor_bn)
+            if target.version != table.current_version():
+                table.restore(target.version)
+                restored[name] = target.version
 
-        # align the watermark with the weakest restored table, then
-        # replay the canonical branch through the normal changelog path
-        from rootstock_collective_state_sync_spark.streaming.sync import (
-            WATERMARK_ENTITY,
-        )
-
-        wm_table = self.engine.catalog.table(WATERMARK_ENTITY)
-        if replay_from > 0 and self.chain.get_block(replay_from) is not None:
-            self.engine.set_watermark(self.chain.get_block(replay_from))
-        else:
-            # no usable floor: clear the watermark -> full re-fetch (a
-            # metadata-only commit, so the restore starts no Spark job)
-            wm = wm_table.manifest()
-            wm_table.commit_buckets({b: [] for b in wm.buckets}, wm.version)
+        wm = self.engine.get_watermark()
+        cursor = wm.number if wm else 0
         head = self.chain.head_block()
         replayed = self.engine.sync_from_changelog(head)
         # the change log names only the entities it tracks; a table kept
         # by another strategy (look-back, append-only) catches up on its
-        # own changes since its as-of height, which may lie further back
-        # than that strategy's next run reaches
-        for name, bn in as_of.items():
-            if name not in replayed and name != CHANGELOG_ENTITY:
-                self.engine.sync_entities(
-                    [name],
-                    where={"_change_block": {"number_gte": bn + 1}},
-                    meta={"blockNumber": head.number},
-                )
+        # own changes past the cursor, which may lie further back than
+        # that strategy's next run reaches
+        self.engine.sync_entities(
+            [n for n in names if n not in replayed and n != CHANGELOG_ENTITY],
+            where={"_change_block": {"number_gte": cursor + 1}},
+            meta={"blockNumber": head.number},
+        )
         return restored
 
     # ---- recovery: shadow rebuild + swap ---------------------------------------

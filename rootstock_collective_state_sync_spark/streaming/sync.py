@@ -43,7 +43,7 @@ from rootstock_collective_state_sync_spark.config import (
     merge_key_columns,
 )
 from rootstock_collective_state_sync_spark.sinks import TableCatalog, merge_upsert
-from rootstock_collective_state_sync_spark.sources.graphql import SubgraphClient
+from rootstock_collective_state_sync_spark.sources.graphql import SubgraphClient, first_page_request
 from rootstock_collective_state_sync_spark.sources.subgraph_source import (
     records_to_rows,
 )
@@ -58,13 +58,6 @@ CHANGELOG_ENTITY = "BlockChangeLog"
 def _hex_to_bytes(h: str) -> bytes:
     s = h[2:] if h.startswith("0x") else h
     return bytes.fromhex(s)
-
-
-@dataclass
-class Watermark:
-    number: int
-    hash: str
-    timestamp: int
 
 
 @dataclass
@@ -208,16 +201,22 @@ class SyncEngine:
         self, names: list[str], where: dict[str, Any] | None = None,
         meta: dict[str, Any] | None = None,
     ) -> dict[str, int]:
+        """Sync ``names`` under one filter, their first pages fetched
+        in one routed document (T7) as :meth:`run_block` does."""
         # schema-membership guard (F7): silently drop unknown names
-        return {
-            n: self.sync_entity(n, where, meta)
-            for n in names
-            if n in self.schema and n != WATERMARK_ENTITY
-        }
+        names = [n for n in names if n in self.schema and n != WATERMARK_ENTITY]
+        try:
+            pages = self.client.execute_routed(
+                [first_page_request(self.schema, n, self.page_size, where=where) for n in names]
+            )
+        except Exception:
+            log.exception("coalesced first pages of %s failed", names)
+            pages = [None] * len(names)  # each entity paginates on its own
+        return {n: self.sync_entity(n, where, meta, first_page=p) for n, p in zip(names, pages)}
 
     # ---- watermark singleton (K3) -------------------------------------------
 
-    def get_watermark(self) -> Watermark | None:
+    def get_watermark(self) -> Block | None:
         table = self.catalog.table(WATERMARK_ENTITY)
         if not table.exists():
             return None
@@ -225,13 +224,15 @@ class SyncEngine:
         if not rows:
             return None
         r = rows[0]
-        return Watermark(
+        return Block(
             number=int(r["number"]),
             hash="0x" + bytes(r["hash"]).hex(),
             timestamp=int(r["timestamp"]),
         )
 
-    def set_watermark(self, block: Block) -> None:
+    def set_watermark(self, block: Block, head: Block | None = None) -> None:
+        """Store ``block`` in a version stamped with ``head`` (default
+        ``block``), the block the sync ran at, as its tables are."""
         row = (
             True,
             Decimal(block.number),
@@ -241,7 +242,7 @@ class SyncEngine:
         merge_upsert(
             self.catalog.table(WATERMARK_ENTITY),
             [row],
-            meta={"blockNumber": block.number},
+            meta={"blockNumber": (head or block).number},
         )
 
     # ---- strategies ----------------------------------------------------------
@@ -274,14 +275,11 @@ class SyncEngine:
         ``_change_block`` incremental filter, F4), ingests the change
         log itself, and advances the watermark.
         """
-        wm = self.get_watermark()
-        from_block = wm.number if wm else 0
-        if wm and wm.number >= head.number:
+        where = self._changelog_where(head)
+        if where is None:
             return {}  # head unchanged — short-circuit (X12)
-
-        pages = self._pages(
-            CHANGELOG_ENTITY, {"blockNumber_gt": from_block}, first_page
-        )
+        from_block = where["blockNumber_gt"]
+        pages = self._pages(CHANGELOG_ENTITY, where, first_page)
         entries: list[dict] = [r for page in pages for r in page]
         if not entries:
             return {}
@@ -310,7 +308,8 @@ class SyncEngine:
                 number=int(latest["blockNumber"]),
                 hash=latest["id"],
                 timestamp=int(latest.get("blockTimestamp", 0)),
-            )
+            ),
+            head,
         )
         return counts
 
@@ -396,10 +395,6 @@ class SyncEngine:
         page was full. N strategies -> 1 HTTP round-trip in steady
         state. ``extra_steps`` (arbitrary callables) stay unbatched.
         """
-        from rootstock_collective_state_sync_spark.sources.graphql import (
-            first_page_request,
-        )
-
         results: dict[str, Any] = {}
         # (label, request, consume(block, first_page) -> result)
         batched: list[tuple[str, Any, Callable[[Block, list[dict] | None], Any]]] = []

@@ -459,11 +459,12 @@ def test_append_only_rows_of_an_orphaned_block_roll_back(spark, tmp_path, world)
     assert mgr.detect() is None
 
 
-def test_restore_with_no_floor_clears_the_watermark_without_spark(spark, tmp_path, world):
-    """Versions hydrated without ``at_block`` carry no height, so the
-    restore lands on a floor of 0 although the watermark table itself
-    restores to a row at the fork point: the watermark is cleared and
-    the canonical branch replays from genesis, all on the driver."""
+def test_restore_to_the_empty_watermark_replays_from_genesis_without_spark(spark, tmp_path, world):
+    """Versions hydrated without ``at_block`` carry no height, and the
+    first watermark version carries the head of its sync (block 5),
+    which lies above the fork at 4: the restore point is the
+    watermark's empty v1, and the canonical branch replays from
+    genesis, all on the driver."""
     tracker = spark.sparkContext.statusTracker()
 
     def jobs() -> int:
@@ -487,13 +488,139 @@ def test_restore_with_no_floor_clears_the_watermark_without_spark(spark, tmp_pat
     assert jobs() == before
 
     wm_table = eng.catalog.table("LastProcessedBlock")
-    cur = wm_table.current_version()
-    restored, cleared = wm_table.manifest(cur - 2), wm_table.manifest(cur - 1)
-    assert restored.meta["restoredFrom"] and restored.buckets  # the row of block 4
-    assert not cleared.buckets
+    restored = wm_table.manifest(wm_table.current_version() - 1)
+    assert restored.meta == {"restoredFrom": 1} and not restored.buckets
     assert eng.get_watermark().number == 6  # the newest change on branch b
     assert table_state(eng, "VoteCast") == expected_votes(world)
     assert mgr.detect() is None
+
+
+def _follow_from_a_bootstrap_then_fork(spark, tmp_path, world):
+    """Bootstrap at block 5 with the watermark set to it, as the
+    benchmark sets a follower up; follow branch a to block 7, then fork
+    at 6. Four tables hold only their create version. Returns the
+    engine, its reorg manager and the list of query documents sent."""
+    transport, calls = _counting(world)
+    eng = make_engine(spark, tmp_path, world)
+    eng.client.transport = transport
+    eng.bootstrap(at_block=5)
+    eng.set_watermark(world.chain().get_block(5))
+    world.extend(
+        synthetic_blocks(6, 2, fork_tag="a"),
+        {6: {"VoteCast": [vote(1, support=2, reason="a-only")]}, 7: {"VoteCast": [vote(7)]}},
+    )
+    eng.run_block(world.chain().head_block())
+    assert eng.get_watermark().number == 7
+    world.reorg(6)
+    world.extend(synthetic_blocks(7, 2, fork_tag="b"), {7: {"VoteCast": [vote(9)]}})
+    return eng, ReorgManager(engine=eng, chain=world.chain()), calls
+
+
+def test_recovery_replays_from_the_watermark_not_from_genesis(spark, tmp_path, world):
+    """A table that never received rows holds only its unstamped create
+    version. It must not pull the replay back to genesis: the restore
+    point is the watermark of block 5, so the change log is read past
+    block 5 and no table re-syncs from block 1."""
+    eng, mgr, calls = _follow_from_a_bootstrap_then_fork(spark, tmp_path, world)
+    assert [eng.catalog.table(n).current_version() for n in ("Proposal", "SlotRef")] == [1, 1]
+    before = len(calls)
+    assert mgr.detect_and_recover() == "restored@6"
+    recovery = calls[before:]
+    assert [d for d in recovery if "BlockChangeLog_0" in d][0].count("blockNumber_gt: 5,") == 1
+    assert not [d for d in recovery if re.search(r"number_gte: 1\b", d)], recovery
+    assert table_state(eng, "VoteCast") == expected_votes(world)
+    assert mgr.detect() is None
+
+
+def test_recovery_catches_up_unnamed_tables_in_one_request(spark, tmp_path, world):
+    """At page size 3, one recovery sends three requests: the change
+    log past the watermark, the first pages of the entities it names,
+    and one document for every other table's catch-up."""
+    eng, mgr, calls = _follow_from_a_bootstrap_then_fork(spark, tmp_path, world)
+    before = len(calls)
+    assert mgr.detect_and_recover() == "restored@6"
+    recovery = calls[before:]
+    assert len(recovery) == 3, recovery
+    catch_up = recovery[-1]
+    for n in ("Account", "ClaimedRewardsHistory", "EpochSlot", "Proposal", "SlotRef"):
+        assert f"{n}_" in catch_up
+    assert "VoteCast_" not in catch_up and "BlockChangeLog_" not in catch_up
+    assert table_state(eng, "VoteCast") == expected_votes(world)
+
+
+def test_watermark_version_carries_the_head_of_its_sync(spark, tmp_path, world):
+    """One sync from the watermark at block 4 catches up to head 9,
+    whose newest change-log entry is block 7. Its watermark version
+    carries block 9, like the ``VoteCast`` version it wrote. Were it
+    stamped 7, it would be the restore point for the fork at 8 (common
+    ancestor 7): ``VoteCast`` would rewind below the votes of blocks 6
+    and 7, and the replay past block 7 would skip them."""
+    eng = make_engine(spark, tmp_path, world)
+    eng.bootstrap(at_block=4)  # block 5 changes nothing
+    eng.set_watermark(world.chain().get_block(4))
+    world.extend(
+        synthetic_blocks(6, 4, fork_tag="a"),
+        {6: {"VoteCast": [vote(1, support=2, reason="a-6")]}, 7: {"VoteCast": [vote(7)]}},
+    )
+    eng.run_block(world.chain().head_block())
+    assert eng.get_watermark().number == 7
+    assert eng.catalog.table("LastProcessedBlock").manifest().meta["blockNumber"] == 9
+    # one more block on branch a, so that the fork orphans the watermark
+    world.extend(synthetic_blocks(10, 1, fork_tag="a"), {10: {"VoteCast": [vote(10)]}})
+    eng.run_block(world.chain().head_block())
+
+    world.reorg(8)
+    world.extend(synthetic_blocks(9, 3, fork_tag="b"), {9: {"VoteCast": [vote(9)]}})
+    mgr = ReorgManager(engine=eng, chain=world.chain())
+    assert mgr.detect_and_recover() == "restored@7"
+    assert table_state(eng, "VoteCast") == expected_votes(world)
+    assert mgr.detect() is None
+
+
+def test_restart_after_kill_during_reorg_recovery(spark, tmp_path, world, monkeypatch):
+    """Kill the follower at each publish call of one reorg recovery; a
+    fresh engine on the same catalog must converge with its own
+    ``detect_and_recover`` and next ``run_block``. The watermark is
+    restored after every other table, so a kill before that leaves the
+    orphaned watermark for the restart to detect."""
+    import shutil
+
+    from rootstock_collective_state_sync_spark.sinks import table as table_mod
+    from tests.test_table_commit import Crash, CrashOnPublish
+
+    base = make_engine(spark, tmp_path, world, "base")
+    base.bootstrap(at_block=5)
+    base.run_block(world.chain().head_block())
+    world.extend(
+        synthetic_blocks(6, 2, fork_tag="a"),
+        {6: {"VoteCast": [vote(1, support=2, reason="a-only")]}, 7: {"VoteCast": [vote(7)]}},
+    )
+    base.run_block(world.chain().head_block())
+    _reorged_world(world)  # fork at 4
+    head = world.chain().head_block()
+    k = 1
+    while True:
+        name = f"kill{k}"
+        shutil.copytree(tmp_path / "base", tmp_path / name)
+        crasher = CrashOnPublish(k)
+        monkeypatch.setattr(table_mod, "os", crasher)
+        try:
+            engine = make_engine(spark, tmp_path, world, name)
+            ReorgManager(engine=engine, chain=world.chain()).detect_and_recover()
+        except Crash:
+            pass
+        finally:
+            monkeypatch.setattr(table_mod, "os", os)
+        if crasher.calls < k:
+            break  # the recovery completed without reaching kill point k
+        restarted = make_engine(spark, tmp_path, world, name)
+        mgr = ReorgManager(engine=restarted, chain=world.chain())
+        mgr.detect_and_recover()
+        restarted.run_block(head)
+        assert table_state(restarted, "VoteCast") == expected_votes(world), k
+        assert mgr.detect() is None, k
+        k += 1
+    assert k > 5
 
 
 # ---------------------------------------------------------------------------
