@@ -29,6 +29,7 @@ from rootstock_collective_state_sync_spark.streaming import (
 from rootstock_collective_state_sync_spark.streaming.chain import synthetic_blocks
 
 from tests import fake_subgraph
+from tests.test_upsert_paths import jobs_started
 
 FIXTURE = Path(__file__).parent / "fixtures" / "entities.yml"
 
@@ -179,33 +180,121 @@ def expected_votes(world: World) -> dict:
     }
 
 
-def test_bootstrap_full_hydration(spark, tmp_path, world):
-    """Bulk hydration goes through the partition-parallel DataSource
-    (X7): executors walk disjoint id ranges; the driver-side client is
-    never touched and buffers no rows."""
-    state_url = "fake-state://" + world.dump(tmp_path / "world_state.json")
-    driver_calls: list[int] = []
-
-    def counting(url, body):
-        driver_calls.append(1)
-        return fake_subgraph.state_transport(url, body)
-
+def bulk_engine(spark, tmp_path, world, name="live", **kw):
+    """An engine with ``config_path`` set: executors serve ``world``
+    from a dump through the DataSource, the driver from its transport.
+    Returns the engine and the driver's request documents."""
+    transport, calls = _counting(world)
+    kw = {"page_size": 3, "bulk_num_partitions": 2, **kw}
     eng = SyncEngine(
         spark=spark,
         schema=load_entities(FIXTURE),
-        catalog=TableCatalog(spark, tmp_path / "live"),
-        client=SubgraphClient(url=state_url, transport=counting),
-        page_size=3,
+        catalog=TableCatalog(spark, tmp_path / name),
+        client=SubgraphClient(
+            url="fake-state://" + world.dump(tmp_path / f"{name}_state.json"),
+            transport=transport,
+        ),
         block_interval_threshold=1,
         config_path=str(FIXTURE),
         transport_path="tests.fake_subgraph:state_transport",
-        bulk_num_partitions=4,
+        **kw,
     )
+    return eng, calls
+
+
+def bulk_loaded(monkeypatch) -> list[str]:
+    """Names the engine hands to ``hydrate_entity_bulk``, in order."""
+    names: list[str] = []
+    load = SyncEngine.hydrate_entity_bulk
+
+    def recording(self, name, meta=None):
+        names.append(name)
+        return load(self, name, meta=meta)
+
+    monkeypatch.setattr(SyncEngine, "hydrate_entity_bulk", recording)
+    return names
+
+
+def test_bootstrap_full_hydration(spark, tmp_path, world, monkeypatch):
+    """With ``config_path`` the bootstrap walks each entity on the
+    driver up to one merge chunk, 2 rows here. ``VoteCast`` (3 rows)
+    overflows it in its first page and is loaded by the DataSource in
+    one write into its empty table; ``Account`` (1 row) and the change
+    log (2 entries: it leaves ``Account`` out) commit on the driver.
+    The driver sent only the routed first-page document: the pivot
+    needed no page past it."""
+    world.unlogged.add("Account")
+    bulk = bulk_loaded(monkeypatch)
+    eng, calls = bulk_engine(spark, tmp_path, world, merge_chunk_rows=2)
     counts = eng.bootstrap(at_block=5)
     assert counts["VoteCast"] == 3 and counts["Account"] == 1
+    assert counts["BlockChangeLog"] == 2
+    assert bulk == ["VoteCast"]
+    assert len(calls) == 1
+    assert "VoteCast_" in calls[0] and "Account_" in calls[0]
+    for name in ("VoteCast", "Account"):
+        t = eng.catalog.table(name)
+        assert t.current_version() == 2  # created empty, then one data version
+        assert t.manifest().meta == {"blockNumber": 5}
     assert table_state(eng, "VoteCast") == expected_votes(world)
+    accounts = eng.catalog.table("Account").read_arrow()["id"].to_pylist()
+    assert accounts == [bytes.fromhex("aa" * 20)]
     assert eng.get_watermark() is None  # watermark only via changelog
-    assert not driver_calls  # hydration never routed through the driver
+
+
+def bucket_rows(table) -> dict[str, list[dict]]:
+    """Each bucket's rows, read on the driver, in a fixed order."""
+    return {
+        b: sorted(table.read_arrow(buckets=[int(b)]).to_pylist(), key=repr)
+        for b in table.manifest().buckets
+    }
+
+
+def test_bootstrap_paths_agree(spark, tmp_path, monkeypatch):
+    """One world bootstrapped all on the driver (the default chunk)
+    and all through the DataSource (``merge_chunk_rows=1``; every
+    entity with rows has at least two) gives the same rows in every
+    bucket, the same counts and the same stamp. The driver bootstrap
+    starts no Spark job and commits one data version per entity."""
+    w = World()
+    w.extend(
+        synthetic_blocks(1, 4, fork_tag="a"),
+        {
+            1: {"Account": [{"id": "0x" + "aa" * 20}, {"id": "0x" + "cc" * 20}]},
+            2: {"VoteCast": [vote(1), vote(2)]},
+            4: {"VoteCast": [vote(3, support=1), vote(1, support=2, reason="again")]},
+        },
+    )
+    filled = ["BlockChangeLog", "Account", "VoteCast"]
+    bulk = bulk_loaded(monkeypatch)
+    on_driver, _ = bulk_engine(spark, tmp_path, w, "driver")
+    before = jobs_started(spark)
+    driver_counts = on_driver.bootstrap(at_block=4)
+    assert jobs_started(spark) == before and bulk == []
+    through_source, _ = bulk_engine(spark, tmp_path, w, "source", merge_chunk_rows=1)
+    assert through_source.bootstrap(at_block=4) == driver_counts
+    assert sorted(bulk) == sorted(filled)
+    assert {n: driver_counts[n] for n in filled} == {"BlockChangeLog": 3, "Account": 2, "VoteCast": 3}
+    for name in driver_counts:
+        a, b = on_driver.catalog.table(name), through_source.catalog.table(name)
+        if name not in filled:  # nothing to write: no data version on either path
+            assert a.current_version() == b.current_version() == 1, name
+            continue
+        assert a.current_version() == b.current_version() == 2, name
+        assert a.manifest().meta == b.manifest().meta == {"blockNumber": 4}, name
+        assert bucket_rows(a) == bucket_rows(b), name
+
+
+def test_bootstrap_of_one_page_entities_sends_one_request(spark, tmp_path, world):
+    """When every entity fits in its first page, the bootstrap is one
+    routed request and no Spark job."""
+    eng, calls = bulk_engine(spark, tmp_path, world, page_size=10)
+    before = jobs_started(spark)
+    counts = eng.bootstrap(at_block=5)
+    assert jobs_started(spark) == before
+    assert len(calls) == 1
+    assert counts["VoteCast"] == 3 and counts["Account"] == 1 and counts["BlockChangeLog"] == 3
+    assert table_state(eng, "VoteCast") == expected_votes(world)
 
 
 def test_bootstrap_serial_fallback(spark, tmp_path, world):
@@ -465,12 +554,6 @@ def test_restore_to_the_empty_watermark_replays_from_genesis_without_spark(spark
     which lies above the fork at 4: the restore point is the
     watermark's empty v1, and the canonical branch replays from
     genesis, all on the driver."""
-    tracker = spark.sparkContext.statusTracker()
-
-    def jobs() -> int:
-        ids = tracker.getJobIdsForGroup()
-        return max(ids) + 1 if ids else 0
-
     eng = make_engine(spark, tmp_path, world)
     eng.bootstrap()
     eng.sync_from_changelog(world.chain().head_block())  # watermark -> 4
@@ -483,9 +566,9 @@ def test_restore_to_the_empty_watermark_replays_from_genesis_without_spark(spark
 
     _reorged_world(world)  # fork at 4
     mgr = ReorgManager(engine=eng, chain=world.chain())
-    before = jobs()
+    before = jobs_started(spark)
     assert mgr.detect_and_recover() == "restored@4"
-    assert jobs() == before
+    assert jobs_started(spark) == before
 
     wm_table = eng.catalog.table("LastProcessedBlock")
     restored = wm_table.manifest(wm_table.current_version() - 1)

@@ -253,20 +253,20 @@ def test_write_into_empty_rejects_not_null_in_a_late_partition(spark, new_table)
 # -- driver-side reads ------------------------------------------------------------
 
 
+def jobs_started(spark) -> int:
+    """Spark jobs the session has started so far."""
+    ids = spark.sparkContext.statusTracker().getJobIdsForGroup()
+    return max(ids) + 1 if ids else 0
+
+
 def test_driver_merge_and_reads_start_no_spark_job(spark, new_table):
-    tracker = spark.sparkContext.statusTracker()
-
-    def jobs() -> int:
-        ids = tracker.getJobIdsForGroup()
-        return max(ids) + 1 if ids else 0
-
     t = new_table(("s",))
     merge_upsert(t, spark.createDataFrame([("a", Decimal(1), None, None, 1)], schema_for(("s",))))
-    before = jobs()
+    before = jobs_started(spark)
     merge_upsert(t, [("a", Decimal(2), None, None, 2), ("b", Decimal(3), None, None, 3)])
     assert t.read_arrow().num_rows == t.num_rows() == 2
     assert t.column_max("n") == 3
-    assert jobs() == before
+    assert jobs_started(spark) == before
 
 
 def test_column_max_reads_the_column_only_without_footer_statistics(spark, new_table):
