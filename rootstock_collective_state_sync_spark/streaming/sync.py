@@ -25,13 +25,14 @@ them with pyarrow, and the watermark and append-only high-water marks
 are read from parquet files and footers: a clean block starts no
 Spark job.
 
-With ``config_path`` set, the bootstrap picks each entity's path from
-the pages it has fetched: an entity whose keyset walk ends within one
-merge chunk commits on the driver, and one whose pages overflow it is
-loaded by the partition-parallel DataSource
-(``spark.read.format("subgraph")`` -> one Spark write into the empty
-table). The driver's own memory bound is the pivot, so no size knob
-decides it.
+The bootstrap is the same driver walk: the first pages of every entity
+come in one routed document and each walk commits every
+``merge_chunk_rows`` rows. The partition-parallel DataSource
+(``spark.read.format("subgraph")`` -> one Spark write into an empty
+table) stays as :meth:`SyncEngine.hydrate_entity_bulk`; the bootstrap
+does not call it, because at every size measured so far (10^3-10^5
+rows of one entity) the driver walk was faster, or even with it at
+10^5 rows and 0.2 s per request.
 """
 
 from __future__ import annotations
@@ -78,11 +79,8 @@ class SyncEngine:
     num_buckets: int = 16
     # F3 look-back horizon (reference blockProposalStrategy.ts:20)
     lookback_window: int = 25_000
-    # bulk-hydration (DataSource) knobs: when ``config_path`` is set,
-    # ``bootstrap`` hands every entity whose pages overflow one merge
-    # chunk to the partition-parallel ``format("subgraph")`` reader —
-    # executors walk disjoint id ranges, nothing more is buffered on
-    # the driver — and commits the smaller ones on the driver.
+    # DataSource knobs for :meth:`hydrate_entity_bulk`: executors walk
+    # disjoint id ranges, nothing is buffered on the driver.
     # ``transport_path`` ("module:callable") reaches executor workers
     # by import, unlike ``client.transport``.
     config_path: str | None = None
@@ -110,40 +108,21 @@ class SyncEngine:
         height they represent, so a later reorg restore knows whether
         the bootstrap state is at-or-below the fork point.
 
-        Without ``config_path`` every entity is paginated into its
-        table by :meth:`sync_entity`. With it, the first pages of all
-        entities come in one routed document (T7) and each entity's
-        keyset walk continues on the driver for up to
-        ``merge_chunk_rows`` rows: a walk that ends within them commits
-        in one driver-side merge, and an entity whose pages overflow
-        them is dropped and loaded by :meth:`hydrate_entity_bulk` into
-        its still empty table. The rows read twice are at most one
-        chunk and one page, and only for an entity larger than a
-        chunk."""
+        Every entity is walked on the driver by :meth:`sync_entities`:
+        one routed document for all first pages (T7), then a commit
+        every ``merge_chunk_rows`` rows."""
         self.create_tables()
         meta = {"blockNumber": at_block} if at_block is not None else None
-        names = [n for n in self.schema.entities if n != WATERMARK_ENTITY]
-        if self.config_path is None:
-            return {n: self.sync_entity(n, meta=meta) for n in names}
-        counts = {}
-        for name, first_page in zip(names, self._first_pages(names)):
-            rows = self._rows_within_one_chunk(name, first_page)
-            if rows is None:
-                counts[name] = self.hydrate_entity_bulk(name, meta=meta)
-                continue
-            if rows:
-                merge_upsert(self.catalog.table(name), rows, meta=meta)
-            counts[name] = len(rows)
-        return counts
+        return self.sync_entities(list(self.schema.entities), meta=meta)
 
     def hydrate_entity_bulk(self, name: str, meta: dict[str, Any] | None = None) -> int:
         """Full hydration of one entity through the partition-parallel
         DataSource (X7): ``bulk_num_partitions`` executors each walk
         their own keyset cursor over a disjoint id range; rows stream
         from the wire straight into the table's write — the driver
-        never materializes a page. :meth:`bootstrap` sends an entity
-        here once its pages overflow one merge chunk; smaller ones
-        cost less on the driver, where no Spark job starts. Returns
+        never materializes a page. :meth:`bootstrap` does not call it:
+        up to 10^5 rows of one entity, the most measured, the driver
+        walk was faster or even (``tools/hydrate_probe.py``). Returns
         the rows in the table afterwards, from its files' footers."""
         from rootstock_collective_state_sync_spark.sources.subgraph_source import (
             SubgraphDataSource,
@@ -192,20 +171,6 @@ class SyncEngine:
                 start_cursor=first_page[-1]["id"],
             )
 
-    def _rows_within_one_chunk(
-        self, name: str, first_page: list[dict] | None
-    ) -> list[tuple] | None:
-        """Every row of ``name``, walked on the driver from
-        ``first_page``, or ``None`` as soon as the pages fetched hold
-        more than ``merge_chunk_rows`` of them."""
-        entity = self.schema[name]
-        rows: list[tuple] = []
-        for page in self._pages(name, None, first_page):
-            rows.extend(records_to_rows(self.schema, entity, page))
-            if len(rows) > self.merge_chunk_rows:
-                return None
-        return rows
-
     def sync_entity(
         self,
         name: str,
@@ -242,22 +207,14 @@ class SyncEngine:
         in one routed document (T7) as :meth:`run_block` does."""
         # schema-membership guard (F7): silently drop unknown names
         names = [n for n in names if n in self.schema and n != WATERMARK_ENTITY]
-        pages = self._first_pages(names, where)
-        return {n: self.sync_entity(n, where, meta, first_page=p) for n, p in zip(names, pages)}
-
-    def _first_pages(
-        self, names: list[str], where: dict[str, Any] | None = None
-    ) -> list[list[dict] | None]:
-        """First pages of ``names`` under one filter, in one routed
-        document; if that request fails, ``None`` for each, so each
-        entity paginates on its own."""
         try:
-            return self.client.execute_routed(
+            pages = self.client.execute_routed(
                 [first_page_request(self.schema, n, self.page_size, where=where) for n in names]
             )
         except Exception:
             log.exception("coalesced first pages of %s failed", names)
-            return [None] * len(names)
+            pages = [None] * len(names)  # each entity paginates on its own
+        return {n: self.sync_entity(n, where, meta, first_page=p) for n, p in zip(names, pages)}
 
     # ---- watermark singleton (K3) -------------------------------------------
 

@@ -185,7 +185,7 @@ def bulk_engine(spark, tmp_path, world, name="live", **kw):
     from a dump through the DataSource, the driver from its transport.
     Returns the engine and the driver's request documents."""
     transport, calls = _counting(world)
-    kw = {"page_size": 3, "bulk_num_partitions": 2, **kw}
+    kw = {"page_size": 3, **kw}
     eng = SyncEngine(
         spark=spark,
         schema=load_entities(FIXTURE),
@@ -202,40 +202,26 @@ def bulk_engine(spark, tmp_path, world, name="live", **kw):
     return eng, calls
 
 
-def bulk_loaded(monkeypatch) -> list[str]:
-    """Names the engine hands to ``hydrate_entity_bulk``, in order."""
-    names: list[str] = []
-    load = SyncEngine.hydrate_entity_bulk
-
-    def recording(self, name, meta=None):
-        names.append(name)
-        return load(self, name, meta=meta)
-
-    monkeypatch.setattr(SyncEngine, "hydrate_entity_bulk", recording)
-    return names
-
-
-def test_bootstrap_full_hydration(spark, tmp_path, world, monkeypatch):
-    """With ``config_path`` the bootstrap walks each entity on the
-    driver up to one merge chunk, 2 rows here. ``VoteCast`` (3 rows)
-    overflows it in its first page and is loaded by the DataSource in
-    one write into its empty table; ``Account`` (1 row) and the change
-    log (2 entries: it leaves ``Account`` out) commit on the driver.
-    The driver sent only the routed first-page document: the pivot
-    needed no page past it."""
-    world.unlogged.add("Account")
-    bulk = bulk_loaded(monkeypatch)
-    eng, calls = bulk_engine(spark, tmp_path, world, merge_chunk_rows=2)
+def test_bootstrap_full_hydration(spark, tmp_path, world):
+    """With ``config_path`` set the bootstrap still walks every entity
+    on the driver and commits every ``merge_chunk_rows`` rows: with
+    pages of 2 and a chunk of 2, ``VoteCast`` (3 rows) commits twice
+    and ``Account`` (1 row) once, every version stamped with the
+    bootstrap block. The driver sends one routed document for all
+    first pages, then one more page for each entity whose first page
+    was full; the DataSource is not used, so no Spark job starts."""
+    eng, calls = bulk_engine(spark, tmp_path, world, page_size=2, merge_chunk_rows=2)
+    before = jobs_started(spark)
     counts = eng.bootstrap(at_block=5)
+    assert jobs_started(spark) == before
     assert counts["VoteCast"] == 3 and counts["Account"] == 1
-    assert counts["BlockChangeLog"] == 2
-    assert bulk == ["VoteCast"]
-    assert len(calls) == 1
+    assert counts["BlockChangeLog"] == 3
+    assert len(calls) == 3
     assert "VoteCast_" in calls[0] and "Account_" in calls[0]
-    for name in ("VoteCast", "Account"):
+    for name, versions in (("VoteCast", 3), ("Account", 2)):
         t = eng.catalog.table(name)
-        assert t.current_version() == 2  # created empty, then one data version
-        assert t.manifest().meta == {"blockNumber": 5}
+        assert t.current_version() == versions, name  # created empty, then one per chunk
+        assert all(t.manifest(v).meta == {"blockNumber": 5} for v in range(2, versions + 1))
     assert table_state(eng, "VoteCast") == expected_votes(world)
     accounts = eng.catalog.table("Account").read_arrow()["id"].to_pylist()
     assert accounts == [bytes.fromhex("aa" * 20)]
@@ -250,12 +236,12 @@ def bucket_rows(table) -> dict[str, list[dict]]:
     }
 
 
-def test_bootstrap_paths_agree(spark, tmp_path, monkeypatch):
-    """One world bootstrapped all on the driver (the default chunk)
-    and all through the DataSource (``merge_chunk_rows=1``; every
-    entity with rows has at least two) gives the same rows in every
-    bucket, the same counts and the same stamp. The driver bootstrap
-    starts no Spark job and commits one data version per entity."""
+def test_bootstrap_paths_agree(spark, tmp_path):
+    """One world bootstrapped on the driver and hydrated entity by
+    entity through the DataSource, the reference full scan, gives the
+    same rows in every bucket, the same counts and the same stamp. The
+    driver bootstrap starts no Spark job, commits one data version per
+    entity with rows and none for an entity without."""
     w = World()
     w.extend(
         synthetic_blocks(1, 4, fork_tag="a"),
@@ -265,30 +251,34 @@ def test_bootstrap_paths_agree(spark, tmp_path, monkeypatch):
             4: {"VoteCast": [vote(3, support=1), vote(1, support=2, reason="again")]},
         },
     )
-    filled = ["BlockChangeLog", "Account", "VoteCast"]
-    bulk = bulk_loaded(monkeypatch)
+    filled = {"BlockChangeLog": 3, "Account": 2, "VoteCast": 3}
     on_driver, _ = bulk_engine(spark, tmp_path, w, "driver")
     before = jobs_started(spark)
     driver_counts = on_driver.bootstrap(at_block=4)
-    assert jobs_started(spark) == before and bulk == []
-    through_source, _ = bulk_engine(spark, tmp_path, w, "source", merge_chunk_rows=1)
-    assert through_source.bootstrap(at_block=4) == driver_counts
-    assert sorted(bulk) == sorted(filled)
-    assert {n: driver_counts[n] for n in filled} == {"BlockChangeLog": 3, "Account": 2, "VoteCast": 3}
+    assert jobs_started(spark) == before
+    assert {n: driver_counts[n] for n in filled} == filled
+    assert not any(c for n, c in driver_counts.items() if n not in filled)
+    through_source, _ = bulk_engine(spark, tmp_path, w, "source", bulk_num_partitions=1)
+    through_source.create_tables()
+    meta = {"blockNumber": 4}
+    assert {n: through_source.hydrate_entity_bulk(n, meta=meta) for n in filled} == filled
     for name in driver_counts:
         a, b = on_driver.catalog.table(name), through_source.catalog.table(name)
-        if name not in filled:  # nothing to write: no data version on either path
-            assert a.current_version() == b.current_version() == 1, name
+        if name not in filled:  # nothing to write: no data version
+            assert a.current_version() == 1, name
             continue
         assert a.current_version() == b.current_version() == 2, name
-        assert a.manifest().meta == b.manifest().meta == {"blockNumber": 4}, name
+        assert a.manifest().meta == b.manifest().meta == meta, name
         assert bucket_rows(a) == bucket_rows(b), name
 
 
 def test_bootstrap_of_one_page_entities_sends_one_request(spark, tmp_path, world):
     """When every entity fits in its first page, the bootstrap is one
     routed request and no Spark job."""
-    eng, calls = bulk_engine(spark, tmp_path, world, page_size=10)
+    eng = make_engine(spark, tmp_path, world)
+    transport, calls = _counting(world)
+    eng.client = SubgraphClient(url="fake://w", transport=transport)
+    eng.page_size = 10
     before = jobs_started(spark)
     counts = eng.bootstrap(at_block=5)
     assert jobs_started(spark) == before
@@ -298,8 +288,8 @@ def test_bootstrap_of_one_page_entities_sends_one_request(spark, tmp_path, world
 
 
 def test_bootstrap_serial_fallback(spark, tmp_path, world):
-    """Without ``config_path`` the engine falls back to the bounded
-    driver-side pagination loop (small incremental batches)."""
+    """Without ``config_path`` the bootstrap is the same bounded
+    driver-side walk."""
     eng = make_engine(spark, tmp_path, world)
     counts = eng.bootstrap(at_block=5)
     assert counts["VoteCast"] == 3 and counts["Account"] == 1
