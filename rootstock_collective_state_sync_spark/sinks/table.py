@@ -39,7 +39,10 @@ What the sync engine uses, and from where:
 
 - writes: :func:`..sinks.upsert.merge_upsert` (``_write_tx`` on its
   Spark path, :meth:`VersionedTable.write_buckets` on its driver path,
-  both committed by :meth:`VersionedTable.commit_buckets`);
+  both committed by :meth:`VersionedTable.commit_buckets`). Both place
+  a key in the same bucket: Spark through :func:`bucket_expr`, the
+  driver through :func:`bucket_ids`, the same XXH64 run over numpy
+  ``uint64`` lanes for a whole batch at once;
 - driver-side reads that start no Spark job: ``read_arrow`` (the
   watermark row, the change log), ``column_max`` (append-only
   high-water marks) and ``num_rows`` (bulk-hydration counts);
@@ -54,14 +57,14 @@ from __future__ import annotations
 
 import json
 import os
-import struct
 import time
 import uuid
 from dataclasses import dataclass, field
-from decimal import Context, Decimal
+from decimal import Context
 from pathlib import Path
 from typing import Any
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -149,85 +152,128 @@ def bucket_expr(keys: list[str], num_buckets: int):
     return F.pmod(F.xxhash64(*[F.col(k) for k in keys]), F.lit(num_buckets)).cast("int")
 
 
-# Spark's XxHash64 (seed 42, each column's hash seeding the next), in
-# Python so a merge of driver-held rows buckets its keys exactly as
-# ``bucket_expr`` does without a Spark job.
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
-_M64 = (1 << 64) - 1
+# Spark's XxHash64 (seed 42, each key part's hash seeding the next, null
+# parts skipped) over numpy ``uint64`` lanes, so a merge of rows held on
+# the driver buckets its keys exactly as ``bucket_expr`` does without a
+# Spark job. numpy integer arrays wrap on overflow, which is the
+# arithmetic modulo 2^64 the hash is defined in.
+_P1 = np.uint64(0x9E3779B185EBCA87)
+_P2 = np.uint64(0xC2B2AE3D27D4EB4F)
+_P3 = np.uint64(0x165667B19E3779F9)
+_P4 = np.uint64(0x85EBCA77C2B2AE63)
+_P5 = np.uint64(0x27D4EB2F165667C5)
 
 
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
+def _rotl(x: np.ndarray, r: int) -> np.ndarray:
+    return (x << np.uint64(r)) | (x >> np.uint64(64 - r))
 
 
-def _round(acc: int, lane: int) -> int:
-    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+def _round(acc: np.ndarray, lane: np.ndarray) -> np.ndarray:
+    return _rotl(acc + lane * _P2, 31) * _P1
 
 
-def _xxh64(data: bytes, seed: int) -> int:
-    """XXH64 of ``data`` (unsigned 64-bit result)."""
-    n, i = len(data), 0
+def _xxh64_rows(data: np.ndarray, seed: np.ndarray) -> np.ndarray:
+    """XXH64 of every row of an ``(m, n)`` uint8 array, row ``i``
+    hashed with ``seed[i]``."""
+    m, n = data.shape
+    # zero-padded to whole words: 8-byte lanes, and the 4-byte tail is
+    # the low half of the word it starts
+    padded = np.zeros((m, -(-n // 8) * 8), np.uint8)
+    padded[:, :n] = data
+    words = padded.view("<u8")
+    i = 0
     if n >= 32:
-        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        v = [seed + _P1 + _P2, seed + _P2, seed.copy(), seed - _P1]
         while i + 32 <= n:
-            lanes = struct.unpack_from("<4Q", data, i)
-            v = [_round(a, b) for a, b in zip(v, lanes)]
+            v = [_round(a, words[:, i // 8 + j]) for j, a in enumerate(v)]
             i += 32
-        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        h = _rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)
         for a in v:
-            h = ((h ^ _round(0, a)) * _P1 + _P4) & _M64
+            h = (h ^ _round(np.zeros_like(a), a)) * _P1 + _P4
     else:
-        h = (seed + _P5) & _M64
-    h = (h + n) & _M64
+        h = seed + _P5
+    h = h + np.uint64(n)
     while i + 8 <= n:
-        h ^= _round(0, struct.unpack_from("<Q", data, i)[0])
-        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        h = h ^ _round(np.zeros_like(h), words[:, i // 8])
+        h = _rotl(h, 27) * _P1 + _P4
         i += 8
     if i + 4 <= n:
-        h ^= struct.unpack_from("<I", data, i)[0] * _P1 & _M64
-        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        h = h ^ (words[:, i // 8] & np.uint64(0xFFFFFFFF)) * _P1
+        h = _rotl(h, 23) * _P2 + _P3
         i += 4
     while i < n:
-        h ^= data[i] * _P5 & _M64
-        h = _rotl(h, 11) * _P1 & _M64
+        h = h ^ data[:, i].astype(np.uint64) * _P5
+        h = _rotl(h, 11) * _P1
         i += 1
-    h ^= h >> 33
-    h = h * _P2 & _M64
-    h ^= h >> 29
-    h = h * _P3 & _M64
-    return h ^ (h >> 32)
+    h = h ^ (h >> np.uint64(33))
+    h = h * _P2
+    h = h ^ (h >> np.uint64(29))
+    h = h * _P3
+    return h ^ (h >> np.uint64(32))
 
 
-def _hash_input(v: Any, dtype: T.DataType) -> bytes:
-    """The bytes Spark's XxHash64 hashes for one non-null value."""
-    if isinstance(dtype, T.StringType):
-        return v.encode("utf-8")
-    if isinstance(dtype, T.BinaryType):
-        return bytes(v)
+def _big_integer_bytes(col: pa.Array, scale: int) -> pa.Array:
+    """``java.math.BigInteger.toByteArray`` of each decimal's unscaled
+    value (minimal big-endian two's complement): what Spark hashes for
+    a decimal wider than 18 digits. Built row by row."""
+    out = []
+    for v in col.to_pylist():
+        if v is None:
+            out.append(None)
+            continue
+        n = int(v.scaleb(scale, Context(prec=80)))  # exact: 38 digits fit
+        out.append(n.to_bytes((n if n >= 0 else ~n).bit_length() // 8 + 1, "big", signed=True))
+    return pa.array(out, pa.binary())
+
+
+def _hash_part(h: np.ndarray, col: pa.Array, dtype: T.DataType) -> None:
+    """Fold one key part into the running hashes ``h`` in place; rows
+    whose part is null keep their hash."""
+    if not len(col):
+        return
+    valid = col.is_valid().to_numpy(zero_copy_only=False)
     if isinstance(dtype, (T.BooleanType, T.ByteType, T.ShortType, T.IntegerType)):
-        return struct.pack("<i", int(v))
-    if isinstance(dtype, T.LongType):
-        return struct.pack("<q", v)
+        fixed = pc.fill_null(col.cast(pa.int32()), 0).to_numpy().astype("<i4")
+    elif isinstance(dtype, T.LongType):
+        fixed = pc.fill_null(col, 0).to_numpy().astype("<i8")
+    elif isinstance(dtype, T.DecimalType) and dtype.precision <= 18:
+        # the unscaled value, in the low word of each 16-byte decimal
+        lanes = np.frombuffer(col.buffers()[1], "<i8").reshape(-1, 2)
+        fixed = lanes[col.offset : col.offset + len(col), 0].copy()
+    else:
+        fixed = None
+    if fixed is not None:
+        data = fixed.view(np.uint8).reshape(len(col), -1)
+        h[valid] = _xxh64_rows(data[valid], h[valid])
+        return
     if isinstance(dtype, T.DecimalType):
-        n = int(Decimal(v).scaleb(dtype.scale, Context(prec=80)))  # exact: 38 digits fit
-        if dtype.precision <= 18:
-            return struct.pack("<q", n)
-        # java.math.BigInteger.toByteArray: minimal big-endian two's complement
-        return n.to_bytes((n if n >= 0 else ~n).bit_length() // 8 + 1, "big", signed=True)
-    raise TypeError(f"no driver-side bucket hash for key type {dtype.simpleString()}")
+        col = _big_integer_bytes(col, dtype.scale)
+    elif isinstance(dtype, T.StringType):
+        col = col.cast(pa.binary())
+    elif not isinstance(dtype, T.BinaryType):
+        raise TypeError(f"no driver-side bucket hash for key type {dtype.simpleString()}")
+    # variable length: rows of one byte length run the same rounds, so
+    # each length is hashed as one (rows, length) block
+    offsets = np.frombuffer(col.buffers()[1], "<i4")[col.offset : col.offset + len(col) + 1]
+    payload = col.buffers()[2]
+    heap = np.frombuffer(payload, np.uint8) if payload is not None else np.zeros(0, np.uint8)
+    lengths = np.diff(offsets)
+    for n in np.unique(lengths[valid]):
+        rows = np.flatnonzero(valid & (lengths == n))
+        h[rows] = _xxh64_rows(heap[offsets[rows][:, None] + np.arange(n)], h[rows])
 
 
-def bucket_of(key: tuple, types: list[T.DataType], num_buckets: int) -> int:
-    """The bucket ``bucket_expr`` assigns to one key (null parts skipped)."""
-    h = 42
-    for v, t in zip(key, types):
-        if v is not None:
-            h = _xxh64(_hash_input(v, t), h)
-    return (h - (1 << 64) if h >> 63 else h) % num_buckets
+def bucket_ids(
+    tbl: pa.Table, keys: list[str], types: list[T.DataType], num_buckets: int
+) -> np.ndarray:
+    """The bucket ``bucket_expr`` assigns to each row of ``tbl``, as an
+    int array. Binary, string, integer and long keys are hashed without
+    per-row Python; a decimal key wider than 18 digits builds its
+    hashed bytes row by row."""
+    h = np.full(tbl.num_rows, 42, np.uint64)
+    for k, t in zip(keys, types):
+        _hash_part(h, tbl[k].combine_chunks(), t)
+    return np.mod(h.view(np.int64), num_buckets)
 
 
 def arrow_schema(schema: T.StructType) -> pa.Schema:

@@ -16,14 +16,19 @@ Semantics (parity with the reference's ``executeUpsert``,
 
 One entry point, two physical paths, chosen by the batch's type:
 
-- **rows held on the driver** (a list of tuples in the table's column
-  order: what the sync loop builds from GraphQL pages, bounded by its
-  ``merge_chunk_rows``) merge with pyarrow and start no Spark job. The
-  keys are bucketed in Python with the hash :func:`bucket_expr` uses,
-  only the affected buckets' files are read, and each affected bucket
-  is rewritten as one file. For a block of tens of rows, the fixed
-  cost of a Spark action is most of the work, so this is what makes a
-  block visible in milliseconds;
+- **rows held on the driver** (an Arrow table: what the sync loop
+  builds from GraphQL pages, bounded by its ``merge_chunk_rows``; or a
+  list of tuples in the table's column order, which
+  :func:`prepare_rows` turns into one) merge with pyarrow and start no
+  Spark job. The work is columnar: Arrow casts the batch and checks
+  NOT NULL, a group-by over the row index keeps each key's last row
+  (skipped when a single-column key does not repeat),
+  :func:`..table.bucket_ids` hashes the keys into the buckets
+  :func:`bucket_expr` gives them, and a sort by bucket id splits the
+  rows. Only the affected buckets' files are read, and each affected
+  bucket is rewritten as one file. For a block of tens of rows, the
+  fixed cost of a Spark action is most of the work, so this is what
+  makes a block visible in milliseconds;
 - **DataFrames** (bulk hydration, rollups) merge in Spark: the batch
   is hashed into the table's fixed buckets, only the affected buckets
   are read back, merged latest-wins with a window, and rewritten. Into
@@ -40,6 +45,7 @@ from __future__ import annotations
 
 from typing import Any
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window, functions as F, types as T
@@ -50,7 +56,7 @@ from rootstock_collective_state_sync_spark.sinks.table import (
     VersionedTable,
     arrow_schema,
     bucket_expr,
-    bucket_of,
+    bucket_ids,
     with_retry,
 )
 
@@ -100,11 +106,11 @@ def _project(df: DataFrame, schema: T.StructType) -> DataFrame:
 
 
 def prepare_rows(rows: list[tuple], schema: T.StructType) -> pa.Table:
-    """:func:`prepare_batch` for rows held on the driver: tuples in the
-    schema's column order. Nested FK objects ``{id: …}`` are flattened
-    to the id, a null in a NOT NULL column raises, and the values are
-    cast to the schema (a value out of range, such as a decimal above
-    10^38-1, raises)."""
+    """Rows held on the driver as tuples in the schema's column order,
+    as an Arrow table of the schema's types. Nested FK objects
+    ``{id: …}`` are flattened to the id, and a value out of range (such
+    as a decimal above 10^38-1) raises. The NOT NULL check is the
+    merge's."""
     names = schema.names
     for r in rows:
         if len(r) != len(names):
@@ -113,18 +119,26 @@ def prepare_rows(rows: list[tuple], schema: T.StructType) -> pa.Table:
         [v.get("id") if isinstance(v, dict) else v for v in col]
         for col in zip(*rows)
     ] or [[] for _ in names]
-    required = [i for i, f in enumerate(schema.fields) if not f.nullable]
-    if any(v is None for i in required for v in cols[i]):
-        raise ValueError(f"{_NOT_NULL} {[names[i] for i in required]}")
     target = arrow_schema(schema)
     return pa.Table.from_arrays(
         [pa.array(c, type=t) for c, t in zip(cols, target.types)], schema=target
     )
 
 
+def _conform(src: pa.Table, schema: T.StructType) -> pa.Table:
+    """:func:`prepare_batch` for an Arrow table: the schema's columns in
+    its order, cast to its types (a value out of range raises); a null
+    in a NOT NULL column raises."""
+    out = src.select(schema.names).cast(arrow_schema(schema))
+    required = [f.name for f in schema.fields if not f.nullable]
+    if any(out[c].null_count for c in required):
+        raise ValueError(f"{_NOT_NULL} {required}")
+    return out
+
+
 def merge_upsert(
     table: VersionedTable,
-    batch: DataFrame | list[tuple],
+    batch: DataFrame | pa.Table | list[tuple],
     meta: dict[str, Any] | None = None,
     max_retries: int = 3,
     initial_delay: float = 0.1,
@@ -132,11 +146,12 @@ def merge_upsert(
     """MERGE ``batch`` INTO ``table`` ON its merge keys; returns the new
     table version (or the current one for an empty batch).
 
-    ``batch`` is a DataFrame (merged in Spark) or a list of tuples in
-    the table's column order (merged on the driver, no Spark job).
+    ``batch`` is a DataFrame (merged in Spark) or rows held on the
+    driver, merged there with no Spark job: an Arrow table with the
+    table's column names, or a list of tuples in its column order.
     """
-    if isinstance(batch, (list, tuple)):
-        return _merge_rows(table, batch, meta, max_retries, initial_delay)
+    if isinstance(batch, (pa.Table, list, tuple)):
+        return _merge_arrow(table, batch, meta, max_retries, initial_delay)
     m0 = table.manifest()
     schema, keys, nb = m0.schema, m0.merge_keys, m0.num_buckets
     if not m0.buckets:
@@ -209,9 +224,9 @@ def _write_into_empty(table: VersionedTable, batch: DataFrame, m0, meta) -> int:
     return table.commit_buckets(new_files, m0.version, meta=meta)
 
 
-def _merge_rows(
+def _merge_arrow(
     table: VersionedTable,
-    rows: list[tuple],
+    src: pa.Table | list[tuple],
     meta: dict[str, Any] | None,
     max_retries: int,
     initial_delay: float,
@@ -219,16 +234,24 @@ def _merge_rows(
     """The driver-side merge: pyarrow reads and writes, no Spark job."""
     m0 = table.manifest()
     schema, keys, nb = m0.schema, m0.merge_keys, m0.num_buckets
-    src = prepare_rows(rows, schema)
+    if not isinstance(src, pa.Table):
+        src = prepare_rows(src, schema)
+    src = _conform(src, schema)
     if not src.num_rows:
         return m0.version
-    key_cols = list(zip(*(src[k].to_pylist() for k in keys)))
-    last = {k: i for i, k in enumerate(key_cols)}  # last occurrence wins
-    types = [schema[k].dataType for k in keys]
-    by_bucket: dict[int, list[int]] = {}
-    for k, i in last.items():
-        by_bucket.setdefault(bucket_of(k, types, nb), []).append(i)
-    parts = {b: src.take(idx) for b, idx in by_bucket.items()}
+    keep = np.arange(src.num_rows)
+    if len(keys) > 1 or pc.count_distinct(src[keys[0]], mode="all").as_py() < len(keep):
+        # last occurrence of a key wins: the highest row index per key
+        seq = pa.Table.from_arrays([src[k] for k in keys] + [pa.array(keep)], names=keys + [_SEQ])
+        last = seq.group_by(keys, use_threads=False).aggregate([(_SEQ, "max")])
+        keep = np.sort(last[_SEQ + "_max"].to_numpy())
+    # split into buckets: sort the kept rows by bucket id
+    buckets = bucket_ids(src, keys, [schema[k].dataType for k in keys], nb)[keep]
+    order = np.argsort(buckets, kind="stable")
+    src, buckets = src.take(keep[order]), buckets[order]
+    starts = np.flatnonzero(np.diff(buckets, prepend=-1))
+    ends = np.append(starts[1:], len(buckets))
+    parts = {int(buckets[a]): src.slice(a, b - a) for a, b in zip(starts, ends)}
 
     def attempt() -> int:
         prev = table.manifest()
@@ -249,5 +272,19 @@ def _key_in(tgt: pa.Table, src: pa.Table, keys: list[str]):
     key part matches a null, as in the Spark path's window)."""
     if len(keys) == 1:
         return pc.is_in(tgt[keys[0]], value_set=src[keys[0]].combine_chunks())
-    want = set(zip(*(src[k].to_pylist() for k in keys)))
-    return pa.array([k in want for k in zip(*(tgt[k].to_pylist() for k in keys))])
+    return pc.is_in(_key_bytes(tgt, keys), value_set=_key_bytes(src, keys).combine_chunks())
+
+
+def _key_bytes(tbl: pa.Table, keys: list[str]) -> pa.ChunkedArray:
+    """Each row's composite key as one binary value: per part, its
+    byte length (``N`` for null), ``:`` and its bytes. The length
+    prefix keeps the encoding unambiguous."""
+    pieces = []
+    for k in keys:
+        col = tbl[k]
+        if not (pa.types.is_binary(col.type) or pa.types.is_string(col.type)):
+            col = col.cast(pa.string())
+        col = col.cast(pa.binary())
+        size = pc.fill_null(pc.binary_length(col).cast(pa.string()), "N")
+        pieces += [size.cast(pa.binary()), pc.fill_null(col, b"")]
+    return pc.binary_join_element_wise(*pieces, b":")

@@ -47,7 +47,9 @@ Scale design (replaces the reference's serial driver loop,
   top-``limit`` shortlists.
 - Records are converted to the entity's compiled ``StructType`` at
   the edge: ``0x…`` hex -> bytes, numeric strings -> Decimal(38,0),
-  nested FK objects -> scalar ids.
+  nested FK objects -> scalar ids. The reader converts row by row
+  (:func:`records_to_rows`); the driver-side sync converts whole pages
+  to Arrow columns (:func:`records_to_arrow`).
 
 The HTTP transport is importable-by-path (``transport`` option =
 ``"module:callable"``) so tests inject canned responses without
@@ -56,9 +58,14 @@ monkeypatching across the executor process boundary.
 
 from __future__ import annotations
 
+import binascii
 import importlib
 from decimal import Decimal
 from typing import Any, Iterator
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -80,6 +87,7 @@ from rootstock_collective_state_sync_spark.config import (
     load_entities,
 )
 from rootstock_collective_state_sync_spark.config.types import Column, Entity
+from rootstock_collective_state_sync_spark.sinks.table import arrow_schema
 from rootstock_collective_state_sync_spark.sources.graphql import (
     SubgraphClient,
     http_transport,
@@ -133,7 +141,10 @@ def records_to_rows(
     records: list[dict],
     hex_shadow: bool = False,
 ) -> list[tuple]:
-    """GraphQL JSON records -> tuples matching the compiled schema.
+    """GraphQL JSON records -> tuples matching the compiled schema: the
+    DataSource reader's converter, run on the executors. The driver
+    merge takes :func:`records_to_arrow`'s columns instead; this
+    row-at-a-time form is also its parity reference.
 
     With ``hex_shadow`` (matching ``compile_entity(..,
     hex_shadow=True)``), plain BigInt columns emit (canonical,
@@ -159,6 +170,83 @@ def records_to_rows(
             vals.append(_convert_column(r, col, ctx))
         rows.append(tuple(vals))
     return rows
+
+
+def _strings(values: list) -> pa.Array:
+    """Wire values as one string column (non-strings through ``str``)."""
+    try:
+        return pa.array(values, pa.string())
+    except (pa.ArrowInvalid, pa.ArrowTypeError):
+        return pa.array([None if v is None else str(v) for v in values], pa.string())
+
+
+def _hex_column(values: list) -> pa.Array:
+    """``0x…`` hex strings -> binary, the whole column decoded by one
+    ``unhexlify`` of its concatenated digits (an odd-length value gets
+    a leading zero, as :func:`_hex_to_bytes` gives it)."""
+    raw = _strings(values)
+    s = pc.replace_substring_regex(raw, pattern="^0x", replacement="")
+    odd = pc.equal(pc.bit_wise_and(pc.binary_length(s), 1), 1)
+    s = pc.fill_null(pc.if_else(odd, pc.binary_join_element_wise("0", s, ""), s), "")
+    offsets = np.frombuffer(s.buffers()[1], np.int32)[s.offset : s.offset + len(s) + 1]
+    digits = s.buffers()[2]
+    data = binascii.unhexlify(memoryview(digits)[offsets[0] : offsets[-1]] if digits else b"")
+    return pa.Array.from_buffers(
+        pa.binary(),
+        len(raw),
+        [raw.buffers()[0], pa.py_buffer((offsets - offsets[0]) // 2), pa.py_buffer(data)],
+        null_count=raw.null_count,
+    )
+
+
+def _primitive_column(values: list, ref_type: str) -> pa.Array:
+    """Wire values of one primitive type as one Arrow column of the
+    type :func:`compile_entity` gives it."""
+    if ref_type == "Bytes":
+        return _hex_column(values)
+    if ref_type == "String":
+        return _strings(values)
+    if ref_type == "BigInt":
+        return _strings(values).cast(pa.decimal128(38, 0))  # overflow raises
+    if ref_type == "Integer":
+        try:
+            arr = pa.array(values)  # ints, or numeric strings
+        except (pa.ArrowInvalid, pa.ArrowTypeError):
+            arr = pa.array([None if v is None else int(v) for v in values])
+        return arr.cast(pa.int32())
+    try:
+        return pa.array(values, pa.bool_())
+    except (pa.ArrowInvalid, pa.ArrowTypeError):
+        return pa.array([None if v is None else bool(v) for v in values], pa.bool_())
+
+
+def records_to_arrow(ctx: SchemaContext, entity: Entity, records: list[dict]) -> pa.Table:
+    """GraphQL JSON records -> an Arrow table of the compiled schema's
+    types, built column by column: what the driver merges. Gives the
+    table ``prepare_rows(records_to_rows(...))`` gives, without a
+    per-cell conversion. A BigInt above Decimal(38,0) raises."""
+    target = arrow_schema(compile_entity(ctx, entity))
+    cols = []
+    for col, t in zip(entity.columns, target.types):
+        values = [r.get(col.name) for r in records]
+        if ctx.is_reference(col):
+            ref = ctx[col.type]
+            if len(ref.primary_key) != 1:
+                raise ValueError(f"{entity.name}.{col.name}: composite foreign keys arrive as one id")
+            values = [v.get("id") if isinstance(v, dict) else v for v in values]
+            arr = _primitive_column(values, ref.column(ref.primary_key[0]).type)
+        elif col.is_array:
+            lengths = [0 if v is None else len(v) for v in values]
+            flat = [x for v in values if v is not None for x in v]
+            arr = pa.ListArray.from_arrays(
+                pa.array(np.concatenate([[0], np.cumsum(lengths, dtype=np.int32)]), pa.int32()),
+                _primitive_column(flat, col.type),
+                mask=pa.array([v is None for v in values], pa.bool_()),
+            )
+        else:
+            arr = _primitive_column(values, col.type)
+        cols.append(arr.cast(t))
+    return pa.Table.from_arrays(cols, schema=target)
 
 
 def _id_range_bounds(num_partitions: int) -> list[tuple[str, str | None]]:

@@ -19,11 +19,13 @@ The engine analog of the reference's lifecycle (SURVEY §3):
 Unlike the reference — which buffers every page in driver memory
 before any write (``subgraphSyncer.ts:124-127``, SURVEY §3.1 note) —
 pages are flushed to the merge sink every ``merge_chunk_rows`` rows,
-bounding driver memory. Those chunks, the change log and the
-watermark are rows already on the driver, so ``merge_upsert`` merges
-them with pyarrow, and the watermark and append-only high-water marks
-are read from parquet files and footers: a clean block starts no
-Spark job.
+bounding driver memory. Each page becomes an Arrow table as it
+arrives (:func:`..sources.subgraph_source.records_to_arrow`, column by
+column), and a chunk is the concatenation of its pages. Those chunks,
+the change log and the watermark are rows already on the driver, so
+``merge_upsert`` merges them with pyarrow, and the watermark and
+append-only high-water marks are read from parquet files and footers:
+a clean block starts no Spark job and no per-row Python.
 
 The bootstrap is the same driver walk: the first pages of every entity
 come in one routed document and each walk commits every
@@ -42,6 +44,7 @@ from dataclasses import dataclass, field
 from decimal import Decimal
 from typing import Any, Callable
 
+import pyarrow as pa
 from pyspark.sql import SparkSession
 
 from rootstock_collective_state_sync_spark.config import (
@@ -52,7 +55,8 @@ from rootstock_collective_state_sync_spark.config import (
 from rootstock_collective_state_sync_spark.sinks import TableCatalog, merge_upsert
 from rootstock_collective_state_sync_spark.sources.graphql import SubgraphClient, first_page_request
 from rootstock_collective_state_sync_spark.sources.subgraph_source import (
-    records_to_rows,
+    SubgraphDataSource,
+    records_to_arrow,
 )
 from rootstock_collective_state_sync_spark.streaming.chain import Block
 
@@ -90,6 +94,9 @@ class SyncEngine:
     # resets on restart, so the first block after one runs every
     # strategy; nothing persists or rebuilds it.
     _last_run: dict[str, int] = field(default_factory=dict)
+    # whether :meth:`hydrate_entity_bulk` has registered the DataSource
+    # with ``spark``: registering it again replaces it and logs so
+    _source_registered: bool = field(default=False, init=False, repr=False)
 
     # ---- DDL / bootstrap ---------------------------------------------------
 
@@ -124,11 +131,9 @@ class SyncEngine:
         up to 10^5 rows of one entity, the most measured, the driver
         walk was faster or even (``tools/hydrate_probe.py``). Returns
         the rows in the table afterwards, from its files' footers."""
-        from rootstock_collective_state_sync_spark.sources.subgraph_source import (
-            SubgraphDataSource,
-        )
-
-        self.spark.dataSource.register(SubgraphDataSource)
+        if not self._source_registered:
+            self.spark.dataSource.register(SubgraphDataSource)
+            self._source_registered = True
         reader = (
             self.spark.read.format("subgraph")
             .option("url", self.client.url)
@@ -182,19 +187,20 @@ class SyncEngine:
         its table in bounded chunks. Returns rows ingested."""
         entity = self.schema[name]
         table = self.catalog.table(name)
-        buffer: list[tuple] = []
-        total = 0
+        buffer: list[pa.Table] = []
+        buffered = total = 0
 
         def flush():
-            nonlocal buffer
+            nonlocal buffer, buffered
             if buffer:
-                merge_upsert(table, buffer, meta=meta)
-                buffer = []
+                merge_upsert(table, pa.concat_tables(buffer), meta=meta)
+                buffer, buffered = [], 0
 
         for page in self._pages(name, where, first_page):
-            buffer.extend(records_to_rows(self.schema, entity, page))
+            buffer.append(records_to_arrow(self.schema, entity, page))
+            buffered += len(page)
             total += len(page)
-            if len(buffer) >= self.merge_chunk_rows:
+            if buffered >= self.merge_chunk_rows:
                 flush()
         flush()
         return total
@@ -268,16 +274,23 @@ class SyncEngine:
         return {"blockNumber_gt": wm.number if wm else 0}
 
     def sync_from_changelog(
-        self, head: Block, first_page: list[dict] | None = None
+        self,
+        head: Block,
+        first_page: list[dict] | None = None,
+        where: dict[str, Any] | None = None,
     ) -> dict[str, int]:
         """T4: CDC-driven selective re-sync.
 
         Reads ``BlockChangeLog`` entries past the stored watermark from
         the subgraph, re-syncs exactly the entities they name (with a
         ``_change_block`` incremental filter, F4), ingests the change
-        log itself, and advances the watermark.
+        log itself, and advances the watermark. ``where`` is the
+        :meth:`_changelog_where` filter when the caller has already
+        read the watermark for it (``run_block``'s plan); without it
+        the watermark is read here.
         """
-        where = self._changelog_where(head)
+        if where is None:
+            where = self._changelog_where(head)
         if where is None:
             return {}  # head unchanged — short-circuit (X12)
         from_block = where["blockNumber_gt"]
@@ -301,7 +314,7 @@ class SyncEngine:
         # ingest the changelog feed itself + advance the watermark
         merge_upsert(
             self.catalog.table(CHANGELOG_ENTITY),
-            records_to_rows(self.schema, self.schema[CHANGELOG_ENTITY], entries),
+            records_to_arrow(self.schema, self.schema[CHANGELOG_ENTITY], entries),
             meta={"blockNumber": head.number},
         )
         latest = max(entries, key=lambda e: int(e["blockNumber"]))
@@ -424,7 +437,7 @@ class SyncEngine:
             req = first_page_request(
                 self.schema, CHANGELOG_ENTITY, self.page_size, where=where
             )
-            return req, lambda b, page: self.sync_from_changelog(b, first_page=page)
+            return req, lambda b, page: self.sync_from_changelog(b, first_page=page, where=where)
 
         plan("changelog", plan_changelog)
 

@@ -272,6 +272,27 @@ def test_bootstrap_paths_agree(spark, tmp_path):
         assert bucket_rows(a) == bucket_rows(b), name
 
 
+def test_bulk_hydration_registers_the_source_once(spark, tmp_path, world, monkeypatch):
+    """Two ``hydrate_entity_bulk`` calls on one session register the
+    DataSource once: a second registration would replace the first and
+    log that it did."""
+    from pyspark.sql.datasource import DataSourceRegistration
+
+    registered = []
+    original = DataSourceRegistration.register
+
+    def counting(self, source):
+        registered.append(self.sparkSession)
+        return original(self, source)
+
+    monkeypatch.setattr(DataSourceRegistration, "register", counting)
+    eng, _ = bulk_engine(spark, tmp_path, world, bulk_num_partitions=1)
+    eng.create_tables()
+    assert eng.hydrate_entity_bulk("VoteCast") == 3
+    assert eng.hydrate_entity_bulk("Account") == 1
+    assert registered == [spark]
+
+
 def test_bootstrap_of_one_page_entities_sends_one_request(spark, tmp_path, world):
     """When every entity fits in its first page, the bootstrap is one
     routed request and no Spark job."""
@@ -730,7 +751,7 @@ def test_run_block_coalesces_strategies_into_one_http(spark, tmp_path, world):
     """Mirror of the reference's 5-strategies->1-HTTP assertion
     (``src/watchers/strategies/batching.test.ts:162-186``): changelog +
     two append-only entities + one look-back entity all prefetch in a
-    single aliased document per block."""
+    single aliased document per block, and the watermark is read once."""
     transport, calls = _counting(world)
     eng = SyncEngine(
         spark=spark,
@@ -744,11 +765,16 @@ def test_run_block_coalesces_strategies_into_one_http(spark, tmp_path, world):
     eng.sync_from_changelog(world.chain().head_block())  # wm -> 4
 
     before = len(calls)
+    reads = []
+    read = eng.get_watermark
+    eng.get_watermark = lambda: reads.append(1) or read()
     res = eng.run_block(
         Block(5, "0xhead5", 0),
         append_only_entities=["VoteCast", "ClaimedRewardsHistory"],
         lookback_entities=["Proposal"],
     )
+    del eng.get_watermark
+    assert len(reads) == 1  # the plan's read also filters the changelog sync
     new_calls = calls[before:]
     assert len(new_calls) == 1, f"expected 1 coalesced HTTP, got {new_calls}"
     doc = new_calls[0]

@@ -21,7 +21,7 @@ from hypothesis import strategies as st
 from pyspark.sql import Row, types as T
 
 from rootstock_collective_state_sync_spark.sinks import TableCatalog, merge_upsert
-from rootstock_collective_state_sync_spark.sinks.table import arrow_schema, bucket_of
+from rootstock_collective_state_sync_spark.sinks.table import arrow_schema, bucket_ids
 
 NUM_BUCKETS = 5
 
@@ -34,11 +34,18 @@ KEY_TYPES = {
     "z": T.BooleanType(),
 }
 
+# byte lengths that take every branch of the XXH64 kernel: the 4-byte
+# and single-byte tails, whole 8-byte words, and one to three 32-byte
+# stripes
+HASH_LENGTHS = (3, 4, 7, 8, 31, 32, 33, 64, 100)
+
 # small pools force last-wins inside a batch and updates across batches;
 # the decimals include negative values and values above 10^18
 KEY_POOLS = {
-    "s": ["a", "bb", "é😀", "0x" + "ab" * 20, ""],
-    "b": [b"", b"\x00", b"\xff" * 13, bytes(range(40)), b"k"],
+    "s": ["a", "bb", "é😀", "0x" + "ab" * 20, ""]
+    + ["".join(chr(97 + (i * n) % 26) for i in range(n)) for n in HASH_LENGTHS],
+    "b": [b"", b"\x00", b"\xff" * 13, bytes(range(40)), b"k"]
+    + [bytes((7 * i + n) % 256 for i in range(n)) for n in HASH_LENGTHS],
     "i": [0, -1, 7, 2**31 - 1, -(2**31)],
     "l": [0, -1, 2**40, 2**63 - 1, -(2**63)],
     "d": [Decimal(v) for v in (0, -1, 10**18 + 7, -(10**18) - 3, 10**38 - 1, -(10**38 - 1), -255)],
@@ -280,7 +287,7 @@ def test_column_max_reads_the_column_only_without_footer_statistics(spark, new_t
     merge_upsert(t, spark.createDataFrame([("b", Decimal(1), None, None, 40)], schema_for(("s",))))
     merge_upsert(t, [("c", Decimal(-(10**30)), None, None, 7)])
     assert t.column_max("n") == 40 and t.column_max("amount") == Decimal(1)
-    b = bucket_of(("d",), [T.StringType()], NUM_BUCKETS)
+    b = int(bucket_ids(pa.table({"s": ["d"]}), ["s"], [T.StringType()], NUM_BUCKETS)[0])
     rel = f"data/tx-nostats/__bucket={b}/part-0.parquet"
     (t.path / rel).parent.mkdir(parents=True)
     row = {"s": "d", "amount": Decimal(5), "note": None, "tags": None, "n": 41}

@@ -1,10 +1,10 @@
 """Merge cost against table size, on the driver path.
 
-Times a 55-row merge of driver-held rows (30 updates, 25 inserts) into
-a 16-bucket table of 3k, 100k and 10^6 rows, and prints one JSON line:
-per size the median of five merges in seconds, and the rows and
-buckets each merge rewrote. The driver path starts no Spark job, so
-no session is started.
+Times a 55-row merge of driver-held rows (30 updates, 25 inserts), an
+Arrow table as the sync loop passes it, into a 16-bucket table of 3k,
+100k and 10^6 rows, and prints one JSON line: per size the median of
+five merges in seconds, and the rows and buckets each merge rewrote.
+The driver path starts no Spark job, so no session is started.
 
 Usage: python tools/merge_probe.py [--sizes 3000,100000,1000000]
 """
@@ -24,6 +24,7 @@ from decimal import Decimal
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import pyarrow as pa  # noqa: E402
 import pyarrow.parquet as pq  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
 
@@ -45,8 +46,18 @@ REPEATS = 5
 CHUNK = 100_000
 
 
-def row(rng: random.Random, rid: bytes, block: int) -> tuple:
-    return (rid, rng.randbytes(20), Decimal(rng.getrandbits(80)), "r" * rng.randint(0, 40), Decimal(block))
+def batch(rng: random.Random, ids: list[bytes], block: int) -> pa.Table:
+    """One merge batch, a row per id, in the table's Arrow types."""
+    dec = pa.decimal128(38, 0)
+    return pa.table(
+        {
+            "id": pa.array(ids, pa.binary()),
+            "voter": pa.array([rng.randbytes(20) for _ in ids], pa.binary()),
+            "weight": pa.array([Decimal(rng.getrandbits(80)) for _ in ids], dec),
+            "reason": pa.array(["r" * rng.randint(0, 40) for _ in ids], pa.string()),
+            "blockNumber": pa.array([Decimal(block)] * len(ids), dec),
+        }
+    )
 
 
 def probe(root: str, size: int, rng: random.Random) -> dict:
@@ -54,14 +65,14 @@ def probe(root: str, size: int, rng: random.Random) -> dict:
     table.create(SCHEMA, ["id"], num_buckets=BUCKETS)
     ids = [rng.randbytes(32) for _ in range(size)]
     for i in range(0, size, CHUNK):
-        merge_upsert(table, [row(rng, rid, 1) for rid in ids[i : i + CHUNK]])
+        merge_upsert(table, batch(rng, ids[i : i + CHUNK], 1))
     secs, rewritten, buckets = [], [], []
     for rep in range(REPEATS):
-        batch = [row(rng, rid, 2 + rep) for rid in rng.sample(ids, BATCH_UPDATES)]
-        batch += [row(rng, rng.randbytes(32), 2 + rep) for _ in range(BATCH_INSERTS)]
+        keys = rng.sample(ids, BATCH_UPDATES) + [rng.randbytes(32) for _ in range(BATCH_INSERTS)]
+        rows = batch(rng, keys, 2 + rep)
         before = table.manifest().buckets
         t0 = time.perf_counter()
-        merge_upsert(table, batch)
+        merge_upsert(table, rows)
         secs.append(time.perf_counter() - t0)
         after = table.manifest().buckets
         new = [f for b, fs in after.items() if fs != before.get(b) for f in fs]
