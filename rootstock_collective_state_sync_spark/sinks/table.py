@@ -12,11 +12,13 @@ Layout (all files immutable once published):
 
     <root>/<table>/
         _versions/v0000000001.json   # manifest per version; highest = current
-        data/<txid>/bucket=<k>/*.parquet
+        data/<txid>/__bucket=<k>/*.parquet   # base files of bucket k
+        data/<txid>/delta-*.parquet          # a delta: rows of any bucket
 
-A manifest maps bucket-id -> list of data files and carries the
-schema, merge keys, and arbitrary engine metadata (e.g. the block
-watermark). Creating ``v{n+1}.json`` IS the commit of version n+1: a
+A manifest maps bucket-id -> list of base files (and each bucket's
+base row count) and carries the schema, merge keys, an ordered list of
+deltas, and arbitrary engine metadata (e.g. the block watermark).
+Creating ``v{n+1}.json`` IS the commit of version n+1: a
 writer stages its data files, writes the manifest to a temp file in
 ``_versions/`` and hard-links it into place (``os.link``), which fails
 if the name already exists — the put-if-absent log append of Delta
@@ -28,18 +30,24 @@ disks and NFS have them). A writer that loses the race gets
 engine analog of the reference's retry policy (``dbUpsert.ts:25-48``).
 
 Scale design: rows are hash-partitioned into ``num_buckets`` by merge
-key. An upsert rewrites only the buckets its batch keys hash into, so
-it writes the rows of the touched buckets (table size over bucket
-count, per bucket), never more than the table; a batch of k random
-keys touches about min(k, num_buckets) buckets. The bucket count is
-fixed at table creation (like Hive/Spark bucketing), so key -> bucket
-is stable across versions.
+key. The bucket count is fixed at table creation (like Hive/Spark
+bucketing), so key -> bucket is stable across versions. A table is
+merge-on-read (an LSM tree's memtable flush, Delta Lake's deletion
+vectors): a driver merge appends one *delta* file, the batch with each
+key once, sorted by bucket and tagged with a ``__bucket`` column, and
+rewrites no base file, so its cost follows the batch, not the table.
+Every reader resolves the deltas: a key's row is its row in the newest
+delta that holds it, else its base row. A *fold* rewrites the buckets
+the deltas touch with their rows resolved and clears the list
+(:mod:`..sinks.upsert` decides when). A table without deltas reads
+exactly as a copy-on-write table.
 
 What the sync engine uses, and from where:
 
 - writes: :func:`..sinks.upsert.merge_upsert` (``_write_tx`` on its
-  Spark path, :meth:`VersionedTable.write_buckets` on its driver path,
-  both committed by :meth:`VersionedTable.commit_buckets`). Both place
+  Spark path, :meth:`VersionedTable.write_delta` and
+  :meth:`VersionedTable.write_buckets` on its driver path, all
+  committed by :meth:`VersionedTable.commit_buckets`). Both place
   a key in the same bucket: Spark through :func:`bucket_expr`, the
   driver through :func:`bucket_ids`, the same XXH64 run over numpy
   ``uint64`` lanes for a whole batch at once;
@@ -59,7 +67,8 @@ import json
 import os
 import time
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
+from functools import reduce
 from decimal import Context
 from pathlib import Path
 from typing import Any
@@ -68,10 +77,11 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_type
 
 BUCKET_COL = "__bucket"
+SEQ_COL = "__seq"
 
 
 class CommitConflict(RuntimeError):
@@ -84,8 +94,12 @@ class Manifest:
     schema_json: str
     merge_keys: list[str]
     num_buckets: int
-    buckets: dict[str, list[str]]  # bucket id (str) -> relative file paths
+    buckets: dict[str, list[str]]  # bucket id (str) -> relative base file paths
     meta: dict[str, Any] = field(default_factory=dict)
+    # bucket id -> base rows, for the buckets whose writer counted them
+    bucket_rows: dict[str, int] = field(default_factory=dict)
+    # {"file": relative path, "rows": n}, oldest first
+    deltas: list[dict[str, Any]] = field(default_factory=list)
 
     def to_json(self) -> str:
         return json.dumps(
@@ -95,6 +109,8 @@ class Manifest:
                 "mergeKeys": self.merge_keys,
                 "numBuckets": self.num_buckets,
                 "buckets": self.buckets,
+                "bucketRows": self.bucket_rows,
+                "deltas": self.deltas,
                 "meta": self.meta,
             },
             indent=1,
@@ -111,6 +127,8 @@ class Manifest:
             num_buckets=d["numBuckets"],
             buckets=d["buckets"],
             meta=d.get("meta", {}),
+            bucket_rows=d.get("bucketRows", {}),
+            deltas=d.get("deltas", []),
         )
 
     @property
@@ -118,9 +136,13 @@ class Manifest:
         return T.StructType.fromJson(json.loads(self.schema_json))
 
     def files(self, buckets: list[int] | None = None) -> list[str]:
-        """Relative data file paths, of ``buckets`` only when given."""
+        """Relative base file paths, of ``buckets`` only when given."""
         wanted = self.buckets if buckets is None else [str(b) for b in buckets]
         return [f for b in wanted for f in self.buckets.get(b, [])]
+
+    def all_files(self) -> list[str]:
+        """Every file the version reads: base files, then deltas."""
+        return self.files() + [d["file"] for d in self.deltas]
 
 
 #: Spark byte-size conf suffixes (JavaUtils.byteStringAsBytes): plain
@@ -282,6 +304,58 @@ def arrow_schema(schema: T.StructType) -> pa.Schema:
     return pa.schema([pa.field(f.name, to_arrow_type(f.dataType)) for f in schema.fields])
 
 
+def last_rows(tbl: pa.Table, keys: list[str]) -> np.ndarray:
+    """Row indices of each key's last row in ``tbl``, ascending. The
+    group-by is skipped when a single-column key does not repeat."""
+    idx = np.arange(tbl.num_rows)
+    if len(keys) == 1 and pc.count_distinct(tbl[keys[0]], mode="all").as_py() == len(idx):
+        return idx
+    seq = pa.Table.from_arrays([tbl[k] for k in keys] + [pa.array(idx)], names=keys + [SEQ_COL])
+    last = seq.group_by(keys, use_threads=False).aggregate([(SEQ_COL, "max")])
+    return np.sort(last[SEQ_COL + "_max"].to_numpy())
+
+
+def key_in(tgt: pa.Table, src: pa.Table, keys: list[str]):
+    """Mask of the ``tgt`` rows whose key occurs in ``src`` (a null
+    key part matches a null, as in the Spark path's window)."""
+    if len(keys) == 1:
+        return pc.is_in(tgt[keys[0]], value_set=src[keys[0]].combine_chunks())
+    return pc.is_in(_key_bytes(tgt, keys), value_set=_key_bytes(src, keys).combine_chunks())
+
+
+def _key_bytes(tbl: pa.Table, keys: list[str]) -> pa.ChunkedArray:
+    """Each row's composite key as one binary value: per part, its
+    byte length (``N`` for null), ``:`` and its bytes. The length
+    prefix keeps the encoding unambiguous."""
+    pieces = []
+    for k in keys:
+        col = tbl[k]
+        if not (pa.types.is_binary(col.type) or pa.types.is_string(col.type)):
+            col = col.cast(pa.string())
+        col = col.cast(pa.binary())
+        size = pc.fill_null(pc.binary_length(col).cast(pa.string()), "N")
+        pieces += [size.cast(pa.binary()), pc.fill_null(col, b"")]
+    return pc.binary_join_element_wise(*pieces, b":")
+
+
+def overlay(base: pa.Table, newer: pa.Table, keys: list[str]) -> pa.Table:
+    """``base`` with ``newer`` laid over it: the base rows whose key
+    ``newer`` lacks, then ``newer`` (each key at most once in it), in
+    ``base``'s columns."""
+    newer = newer.select(base.column_names)
+    if not base.num_rows:
+        return newer
+    if not newer.num_rows:
+        return base
+    return pa.concat_tables([base.filter(pc.invert(key_in(base, newer, keys))), newer])
+
+
+def last_per_key(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Keep each key's last row; ``SEQ_COL`` orders the rows."""
+    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(F.col(SEQ_COL).desc())
+    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+
+
 class VersionedTable:
     def __init__(self, spark: SparkSession, path: str | Path):
         self.spark = spark
@@ -384,7 +458,10 @@ class VersionedTable:
     # ---- read --------------------------------------------------------------
 
     def read(self, version: int | None = None, buckets: list[int] | None = None) -> DataFrame:
-        """Read a snapshot (optionally bucket-pruned) as a DataFrame."""
+        """Read a snapshot (optionally bucket-pruned) as a DataFrame.
+        Deltas are resolved with a window over the merge keys, each
+        read filtered on its ``__bucket`` column when ``buckets`` is
+        given; a snapshot without deltas is a plain scan."""
         m = self.manifest(version)
         files = [str(self.path / f) for f in m.files(buckets)]
         if not files:
@@ -415,7 +492,17 @@ class VersionedTable:
                     df = df.coalesce(want)
             except (OSError, ValueError):
                 pass  # non-local or odd conf: keep the planner's layout
-        return df
+        if not m.deltas:
+            return df
+        tagged = m.schema.add(BUCKET_COL, T.IntegerType())
+        parts = [df.withColumn(SEQ_COL, F.lit(-1))]
+        for i, d in enumerate(m.deltas):
+            delta = self.spark.read.schema(tagged).parquet(str(self.path / d["file"]))
+            if buckets is not None:
+                delta = delta.filter(F.col(BUCKET_COL).isin(list(buckets)))
+            parts.append(delta.drop(BUCKET_COL).withColumn(SEQ_COL, F.lit(i)))
+        union = reduce(DataFrame.unionByName, parts)
+        return last_per_key(union, m.merge_keys).drop(SEQ_COL)
 
     # ---- driver-side access (pyarrow; starts no Spark job) -------------------
 
@@ -428,19 +515,43 @@ class VersionedTable:
         ]
         return pa.concat_tables(parts) if parts else schema.empty_table()
 
+    def read_deltas(
+        self, m: Manifest, schema: pa.Schema, buckets: list[int] | None = None
+    ) -> pa.Table:
+        """The deltas of ``m`` in list order as one table of ``schema``'s
+        columns and ``__bucket``, of ``buckets`` only when given. Each
+        file is read once; a key may occur in several."""
+        tagged = schema.append(pa.field(BUCKET_COL, pa.int32()))
+        out = self.read_files([d["file"] for d in m.deltas], tagged)
+        if buckets is not None:
+            out = out.filter(pc.is_in(out[BUCKET_COL], value_set=pa.array(buckets, pa.int32())))
+        return out
+
+    def _resolved(self, m: Manifest, schema: pa.Schema, buckets: list[int] | None = None) -> pa.Table:
+        """``schema``'s columns of ``m``'s rows with its deltas resolved."""
+        base = self.read_files(m.files(buckets), schema)
+        if not m.deltas:
+            return base
+        newer = self.read_deltas(m, schema, buckets)
+        return overlay(base, newer.take(last_rows(newer, m.merge_keys)), m.merge_keys)
+
     def read_arrow(self, buckets: list[int] | None = None) -> pa.Table:
         """:meth:`read` of the current version on the driver, for
         snapshots small enough to hold there (the watermark row)."""
         m = self.manifest()
-        return self.read_files(m.files(buckets), arrow_schema(m.schema))
+        return self._resolved(m, arrow_schema(m.schema), buckets)
 
     def column_max(self, col: str) -> Any:
-        """``max(col)`` over the current version (``None`` when it has
-        no non-null value), from the parquet footer statistics of its
-        files. A row group whose footer has no min/max for ``col``
-        (and is not all null) has the column itself read."""
+        """``max(col)`` over the current version's base and delta files
+        (``None`` when it has no non-null value), from their parquet
+        footer statistics. A row group whose footer has no min/max for
+        ``col`` (and is not all null) has the column itself read. A
+        base row a delta overrides still counts, so this is exact for
+        append-only tables (the append-only high-water marks, its one
+        caller), whose rows are never rewritten, and an upper bound
+        otherwise."""
         top = None
-        for rel in self.manifest().files():
+        for rel in self.manifest().all_files():
             pf = pq.ParquetFile(self.path / rel)
             md = pf.metadata
             j = [md.schema.column(i).path for i in range(md.num_columns)].index(col)
@@ -457,10 +568,34 @@ class VersionedTable:
                     top = v
         return top
 
-    def num_rows(self) -> int:
-        """Rows in the current version, from its files' footers."""
-        files = self.manifest().files()
+    def _footer_rows(self, files: list[str]) -> int:
         return sum(pq.read_metadata(self.path / f).num_rows for f in files)
+
+    def counted(self, buckets: dict[str, list[str]]) -> dict[str, int]:
+        """Rows per bucket of freshly written ``buckets``, from their
+        footers: the ``rows`` a Spark write commits."""
+        return {b: self._footer_rows(fs) for b, fs in buckets.items()}
+
+    def base_rows(self, m: Manifest) -> int:
+        """Base rows of ``m``: from its counts, and from the footers of
+        a bucket written without one."""
+        return sum(
+            m.bucket_rows[b] if b in m.bucket_rows else self._footer_rows(fs)
+            for b, fs in m.buckets.items()
+        )
+
+    def delta_buckets(self, m: Manifest) -> set[int]:
+        """The buckets ``m``'s deltas hold rows of."""
+        return set(pc.unique(self.read_deltas(m, pa.schema([]))[BUCKET_COL]).to_pylist())
+
+    def num_rows(self) -> int:
+        """Rows in the current version: its files' footers when it has
+        no deltas, else its keys resolved."""
+        m = self.manifest()
+        if not m.deltas:
+            return self._footer_rows(m.files())
+        full = arrow_schema(m.schema)
+        return self._resolved(m, pa.schema([full.field(k) for k in m.merge_keys])).num_rows
 
     def write_buckets(self, parts: dict[int, pa.Table]) -> dict[str, list[str]]:
         """Write one file per bucket under a fresh tx dir, laid out as
@@ -475,21 +610,31 @@ class VersionedTable:
             out[str(b)] = [rel]
         return out
 
+    def write_delta(self, rows: pa.Table) -> dict[str, Any]:
+        """Write ``rows`` (with their ``__bucket`` column) as one delta
+        file under a fresh tx dir; return its manifest entry."""
+        rel = f"data/tx-{uuid.uuid4().hex[:12]}/delta-{uuid.uuid4().hex}.parquet"
+        (self.path / rel).parent.mkdir(parents=True)
+        pq.write_table(rows, self.path / rel)
+        return {"file": rel, "rows": rows.num_rows}
+
     # ---- write -------------------------------------------------------------
 
     def _write_tx(self, df: DataFrame, num_buckets: int, keys: list[str]) -> dict[str, list[str]]:
         """Write df into a fresh tx dir partitioned by bucket; return
         bucket -> relative file list."""
+        # one shuffle, co-locating each bucket into one task's output
+        return self.write_bucketed(
+            df.withColumn(BUCKET_COL, bucket_expr(keys, num_buckets)).repartition(F.col(BUCKET_COL))
+        )
+
+    def write_bucketed(self, df: DataFrame) -> dict[str, list[str]]:
+        """Write ``df``, which carries its ``__bucket`` column and is
+        partitioned by it, into a fresh tx dir; return bucket ->
+        relative file list."""
         txid = f"tx-{uuid.uuid4().hex[:12]}"
         out = self.path / "data" / txid
-        (
-            df.withColumn(BUCKET_COL, bucket_expr(keys, num_buckets))
-            # one shuffle, co-locating each bucket into one task's output
-            .repartition(F.col(BUCKET_COL))
-            .write.partitionBy(BUCKET_COL)
-            .mode("error")
-            .parquet(str(out))
-        )
+        df.write.partitionBy(BUCKET_COL).mode("error").parquet(str(out))
         buckets: dict[str, list[str]] = {}
         for bdir in sorted(out.glob(f"{BUCKET_COL}=*")):
             b = bdir.name.split("=", 1)[1]
@@ -508,12 +653,12 @@ class VersionedTable:
         prev = self.manifest()
         df = df.select(*prev.schema.names)
         new_buckets = self._write_tx(df, prev.num_buckets, prev.merge_keys)
-        m = Manifest(
+        m = replace(
+            prev,
             version=prev.version + 1,
-            schema_json=prev.schema_json,
-            merge_keys=prev.merge_keys,
-            num_buckets=prev.num_buckets,
             buckets=new_buckets,
+            bucket_rows=self.counted(new_buckets),
+            deltas=[],
             meta={**prev.meta, **(meta or {})},
         )
         self._commit(m, prev.version)
@@ -524,22 +669,36 @@ class VersionedTable:
         replaced: dict[str, list[str]],
         expected_prev: int,
         meta: dict[str, Any] | None = None,
+        rows: dict[str, int] | None = None,
+        delta: dict[str, Any] | None = None,
     ) -> int:
-        """Commit a new version replacing only the given buckets'
-        file lists; an empty list drops its bucket."""
+        """Commit a new version on ``expected_prev``.
+
+        With ``delta`` (an entry of :meth:`write_delta`), append it to
+        the delta list; ``replaced`` is then empty. Otherwise replace
+        only the given buckets' file lists (an empty list drops its
+        bucket), with ``rows`` their row counts where known, and
+        clear the delta list when any bucket is replaced: replacing
+        buckets is a fold, whose new files hold every delta row."""
         prev = self.manifest(expected_prev)
-        buckets = dict(prev.buckets)
+        buckets, counts, deltas = dict(prev.buckets), dict(prev.bucket_rows), prev.deltas
+        if delta:
+            deltas = deltas + [delta]
+        elif replaced:
+            deltas = []
         for b, files in replaced.items():
+            counts.pop(b, None)
             if files:
                 buckets[b] = files
             else:
                 buckets.pop(b, None)
-        m = Manifest(
+        counts.update(rows or {})
+        m = replace(
+            prev,
             version=expected_prev + 1,
-            schema_json=prev.schema_json,
-            merge_keys=prev.merge_keys,
-            num_buckets=prev.num_buckets,
             buckets=buckets,
+            bucket_rows=counts,
+            deltas=deltas,
             meta={**prev.meta, **(meta or {})},
         )
         self._commit(m, expected_prev)
@@ -549,17 +708,11 @@ class VersionedTable:
         """RESTORE TABLE ... VERSION AS OF — the reorg fast path.
 
         Data files are immutable, so restoring is just committing a new
-        version whose manifest equals the old one."""
+        version whose manifest (base files, counts and deltas) equals
+        the old one."""
         target = self.manifest(version)
         prev = self.current_version()
-        m = Manifest(
-            version=prev + 1,
-            schema_json=target.schema_json,
-            merge_keys=target.merge_keys,
-            num_buckets=target.num_buckets,
-            buckets=target.buckets,
-            meta={**target.meta, "restoredFrom": version},
-        )
+        m = replace(target, version=prev + 1, meta={**target.meta, "restoredFrom": version})
         self._commit(m, prev)
         return m.version
 
@@ -569,9 +722,9 @@ class VersionedTable:
         """Snapshot expiration (Iceberg ``expireSnapshots`` / Delta
         ``VACUUM`` semantics): drop every version manifest older than
         the newest ``retain_last``, and physically delete the data
-        files no retained manifest references. Without it a
-        continuously-committed table grows unboundedly even though only
-        the tip is ever read.
+        files, base or delta, that no retained manifest references.
+        Without it a continuously-committed table grows unboundedly
+        even though only the tip is ever read.
 
         Safety properties:
 
@@ -610,8 +763,7 @@ class VersionedTable:
         keep, drop = versions[-retain_last:], versions[:-retain_last]
         live: set[str] = set()
         for v in keep:
-            for files in self.manifest(v).buckets.values():
-                live.update(files)
+            live.update(self.manifest(v).all_files())
         files_removed = bytes_removed = 0
         now = time.time()
         data_dir = self.path / "data"

@@ -21,24 +21,31 @@ One entry point, two physical paths, chosen by the batch's type:
   list of tuples in the table's column order, which
   :func:`prepare_rows` turns into one) merge with pyarrow and start no
   Spark job. The work is columnar: Arrow casts the batch and checks
-  NOT NULL, a group-by over the row index keeps each key's last row
-  (skipped when a single-column key does not repeat),
+  NOT NULL, :func:`..table.last_rows` keeps each key's last row, and
   :func:`..table.bucket_ids` hashes the keys into the buckets
-  :func:`bucket_expr` gives them, and a sort by bucket id splits the
-  rows. Only the affected buckets' files are read, and each affected
-  bucket is rewritten as one file. For a block of tens of rows, the
-  fixed cost of a Spark action is most of the work, so this is what
-  makes a block visible in milliseconds;
+  :func:`bucket_expr` gives them. The batch, sorted by bucket, is then
+  appended to the table as one delta file, and no base file is read or
+  written, so the merge costs what the batch costs (the reference's
+  ``ON CONFLICT`` upsert costs the same at any table size). A merge
+  *folds* instead when the table has no base rows, already holds
+  ``FOLD_DELTAS`` deltas, or its delta rows and the batch pass
+  ``FOLD_SHARE`` of its base rows: it reads each delta file once and
+  the base files of every bucket the deltas or the batch touch, lays
+  the deltas, then the batch, over the base rows key by key, rewrites
+  those buckets one file each and clears the delta list. Deltas
+  therefore stay a bounded share of the table, and each row is
+  rewritten O(1) times amortised, as in an LSM tree's merge;
 - **DataFrames** (bulk hydration, rollups) merge in Spark: the batch
-  is hashed into the table's fixed buckets, only the affected buckets
-  are read back, merged latest-wins with a window, and rewritten. Into
-  a table with no files the merge is a plain write in one job.
+  is hashed into the table's fixed buckets, the buckets the batch or
+  the deltas touch are read back (deltas resolved), merged latest-wins
+  with a window, and rewritten, which clears the delta list. Into a
+  table with no files the merge is a plain write through one shuffle.
 
 Both paths write the same layout and commit through
 :meth:`VersionedTable.commit_buckets` with the same retry, so a table
-takes merges from either path in any order. A merge rewrites every
-bucket its keys hash into, so the bytes it writes scale with the rows
-per touched bucket (table size over bucket count), not with the batch.
+takes merges from either path in any order. A fold, or a Spark merge,
+rewrites every bucket its rows hash into, so its bytes scale with the
+rows per touched bucket; a delta merge writes only the batch.
 """
 
 from __future__ import annotations
@@ -47,21 +54,31 @@ from typing import Any
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
-from pyspark.sql import DataFrame, Window, functions as F, types as T
+from pyspark.sql import DataFrame, functions as F, types as T
 
 from rootstock_collective_state_sync_spark.sinks.table import (
     BUCKET_COL,
+    SEQ_COL,
     CommitConflict,
+    Manifest,
     VersionedTable,
     arrow_schema,
     bucket_expr,
     bucket_ids,
+    last_per_key,
+    last_rows,
+    overlay,
     with_retry,
 )
 
-_SEQ = "__seq"
 _NOT_NULL = "NOT NULL violation in batch for one of"
+
+#: A driver merge folds once the table holds this many deltas, which
+#: bounds the files a reader opens per table.
+FOLD_DELTAS = 8
+#: ... or once its delta rows and the batch would pass this share of its
+#: base rows, which bounds the rows a reader resolves.
+FOLD_SHARE = 1.0
 
 
 def prepare_batch(df: DataFrame, schema: T.StructType) -> DataFrame:
@@ -154,7 +171,7 @@ def merge_upsert(
         return _merge_arrow(table, batch, meta, max_retries, initial_delay)
     m0 = table.manifest()
     schema, keys, nb = m0.schema, m0.merge_keys, m0.num_buckets
-    if not m0.buckets:
+    if not m0.buckets and not m0.deltas:
         try:
             return _write_into_empty(table, batch, m0, meta)
         except CommitConflict:
@@ -165,40 +182,36 @@ def merge_upsert(
 
     # last occurrence of a key in the batch wins: tag arrival order
     # BEFORE any shuffle moves rows around.
-    src = src.withColumn(_SEQ, F.monotonically_increasing_id())
+    src = src.withColumn(SEQ_COL, F.monotonically_increasing_id())
     src = src.withColumn(BUCKET_COL, bucket_expr(keys, nb)).cache()
     try:
-        affected = [r[0] for r in src.select(BUCKET_COL).distinct().collect()]
+        affected = {r[0] for r in src.select(BUCKET_COL).distinct().collect()}
 
         def attempt() -> int:
             prev = table.manifest()
+            # the fold covers every bucket a delta holds rows of too
+            touched = sorted(affected | table.delta_buckets(prev))
             tgt = (
-                table.read(buckets=affected)
-                .withColumn(_SEQ, F.lit(-1).cast("long"))
+                table.read(prev.version, buckets=touched)
+                .withColumn(SEQ_COL, F.lit(-1).cast("long"))
                 .withColumn(BUCKET_COL, bucket_expr(keys, nb))
             )
-            merged = _last_per_key(tgt.unionByName(src), keys).select(*schema.names)
-            # merged covers exactly the affected buckets (src and tgt
+            merged = last_per_key(tgt.unionByName(src), keys).select(*schema.names)
+            # merged covers exactly the touched buckets (src and tgt
             # were both restricted to them); empty list drops a bucket.
             new_files = table._write_tx(merged, nb, keys)
-            replaced = {str(b): new_files.get(str(b), []) for b in affected}
-            return table.commit_buckets(replaced, prev.version, meta=meta)
+            replaced = {str(b): new_files.get(str(b), []) for b in touched}
+            return table.commit_buckets(replaced, prev.version, meta=meta, rows=table.counted(new_files))
 
         return with_retry(attempt, max_retries=max_retries, initial_delay=initial_delay)
     finally:
         src.unpersist()
 
 
-def _last_per_key(df: DataFrame, keys: list[str]) -> DataFrame:
-    """Keep each key's last row; ``_SEQ`` orders the rows."""
-    w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(F.col(_SEQ).desc())
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1)
-
-
 def _write_into_empty(table: VersionedTable, batch: DataFrame, m0, meta) -> int:
-    """Merge into a table with no files: a plain write in one job.
-    NOT NULL is checked in the same pass, and the last row per key is
-    kept."""
+    """Merge into a table with no files: a plain write through one
+    shuffle. NOT NULL is checked in the same pass, and the last row per
+    key is kept."""
     schema = m0.schema
     required = [f.name for f in schema.fields if not f.nullable]
     msg = f"{_NOT_NULL} {required}"
@@ -210,18 +223,26 @@ def _write_into_empty(table: VersionedTable, batch: DataFrame, m0, meta) -> int:
             for f in schema.fields
         ]
     )
-    # tag arrival order before the shuffle moves rows around
-    src = src.withColumn(_SEQ, F.monotonically_increasing_id())
-    merged = _last_per_key(src, m0.merge_keys).select(*schema.names)
     try:
-        new_files = table._write_tx(merged, m0.num_buckets, m0.merge_keys)
+        new_files = table.write_bucketed(_last_per_key_bucketed(src, m0.merge_keys, m0.num_buckets))
     except Exception as exc:
         if _NOT_NULL in str(exc):
             raise ValueError(msg) from None
         raise
     if not new_files:
         return m0.version
-    return table.commit_buckets(new_files, m0.version, meta=meta)
+    return table.commit_buckets(new_files, m0.version, meta=meta, rows=table.counted(new_files))
+
+
+def _last_per_key_bucketed(src: DataFrame, keys: list[str], num_buckets: int) -> DataFrame:
+    """Each key's last row of ``src`` with its ``__bucket``, partitioned
+    by bucket through one shuffle: the bucket is a function of the key,
+    so the window over ``(__bucket, keys)`` runs inside the partitions
+    the write needs."""
+    # tag arrival order before the shuffle moves rows around
+    src = src.withColumn(SEQ_COL, F.monotonically_increasing_id())
+    src = src.withColumn(BUCKET_COL, bucket_expr(keys, num_buckets)).repartition(F.col(BUCKET_COL))
+    return last_per_key(src, [BUCKET_COL] + keys).drop(SEQ_COL)
 
 
 def _merge_arrow(
@@ -231,7 +252,8 @@ def _merge_arrow(
     max_retries: int,
     initial_delay: float,
 ) -> int:
-    """The driver-side merge: pyarrow reads and writes, no Spark job."""
+    """The driver-side merge: a delta append or a fold, pyarrow reads
+    and writes, no Spark job."""
     m0 = table.manifest()
     schema, keys, nb = m0.schema, m0.merge_keys, m0.num_buckets
     if not isinstance(src, pa.Table):
@@ -239,52 +261,44 @@ def _merge_arrow(
     src = _conform(src, schema)
     if not src.num_rows:
         return m0.version
-    keep = np.arange(src.num_rows)
-    if len(keys) > 1 or pc.count_distinct(src[keys[0]], mode="all").as_py() < len(keep):
-        # last occurrence of a key wins: the highest row index per key
-        seq = pa.Table.from_arrays([src[k] for k in keys] + [pa.array(keep)], names=keys + [_SEQ])
-        last = seq.group_by(keys, use_threads=False).aggregate([(_SEQ, "max")])
-        keep = np.sort(last[_SEQ + "_max"].to_numpy())
-    # split into buckets: sort the kept rows by bucket id
-    buckets = bucket_ids(src, keys, [schema[k].dataType for k in keys], nb)[keep]
-    order = np.argsort(buckets, kind="stable")
-    src, buckets = src.take(keep[order]), buckets[order]
-    starts = np.flatnonzero(np.diff(buckets, prepend=-1))
-    ends = np.append(starts[1:], len(buckets))
-    parts = {int(buckets[a]): src.slice(a, b - a) for a, b in zip(starts, ends)}
+    src = src.take(last_rows(src, keys))
+    ids = bucket_ids(src, keys, [schema[k].dataType for k in keys], nb)
+    src = src.append_column(BUCKET_COL, pa.array(ids, pa.int32()))
+    src = src.take(np.argsort(ids, kind="stable"))
 
     def attempt() -> int:
         prev = table.manifest()
-        out = {}
-        for b, part in parts.items():
-            tgt = table.read_files(prev.files([b]), part.schema)
-            if tgt.num_rows:
-                tgt = tgt.filter(pc.invert(_key_in(tgt, part, keys)))
-                part = pa.concat_tables([tgt, part])
-            out[b] = part
-        return table.commit_buckets(table.write_buckets(out), prev.version, meta=meta)
+        if _folds(table, prev, src.num_rows):
+            return _fold(table, prev, src, meta)
+        return table.commit_buckets({}, prev.version, meta=meta, delta=table.write_delta(src))
 
     return with_retry(attempt, max_retries=max_retries, initial_delay=initial_delay)
 
 
-def _key_in(tgt: pa.Table, src: pa.Table, keys: list[str]):
-    """Mask of the ``tgt`` rows whose key occurs in ``src`` (a null
-    key part matches a null, as in the Spark path's window)."""
-    if len(keys) == 1:
-        return pc.is_in(tgt[keys[0]], value_set=src[keys[0]].combine_chunks())
-    return pc.is_in(_key_bytes(tgt, keys), value_set=_key_bytes(src, keys).combine_chunks())
+def _folds(table: VersionedTable, m: Manifest, batch_rows: int) -> bool:
+    """Whether a driver merge of ``batch_rows`` rows into ``m`` folds.
+    Every count comes from the manifest."""
+    base = table.base_rows(m)
+    pending = sum(d["rows"] for d in m.deltas) + batch_rows
+    return not base or len(m.deltas) >= FOLD_DELTAS or pending > FOLD_SHARE * base
 
 
-def _key_bytes(tbl: pa.Table, keys: list[str]) -> pa.ChunkedArray:
-    """Each row's composite key as one binary value: per part, its
-    byte length (``N`` for null), ``:`` and its bytes. The length
-    prefix keeps the encoding unambiguous."""
-    pieces = []
-    for k in keys:
-        col = tbl[k]
-        if not (pa.types.is_binary(col.type) or pa.types.is_string(col.type)):
-            col = col.cast(pa.string())
-        col = col.cast(pa.binary())
-        size = pc.fill_null(pc.binary_length(col).cast(pa.string()), "N")
-        pieces += [size.cast(pa.binary()), pc.fill_null(col, b"")]
-    return pc.binary_join_element_wise(*pieces, b":")
+def _fold(table: VersionedTable, m: Manifest, src: pa.Table, meta) -> int:
+    """Rewrite the buckets that ``m``'s deltas and ``src`` (the batch,
+    with its ``__bucket`` column) touch, with the deltas and then the
+    batch laid over their base rows, and clear the delta list. Each
+    delta file and each touched bucket's base files are read once."""
+    keys = m.merge_keys
+    if m.deltas:
+        src = pa.concat_tables([table.read_deltas(m, arrow_schema(m.schema)), src])
+        src = src.take(last_rows(src, keys))
+        src = src.take(np.argsort(src[BUCKET_COL].to_numpy(), kind="stable"))
+    ids = src[BUCKET_COL].to_numpy()
+    starts = np.flatnonzero(np.diff(ids, prepend=-1))
+    ends = np.append(starts[1:], len(ids))
+    out = {}
+    for a, z in zip(starts, ends):
+        b, part = int(ids[a]), src.slice(a, z - a).drop_columns([BUCKET_COL])
+        out[b] = overlay(table.read_files(m.files([b]), part.schema), part, keys)
+    rows = {str(b): part.num_rows for b, part in out.items()}
+    return table.commit_buckets(table.write_buckets(out), m.version, meta=meta, rows=rows)

@@ -1,7 +1,7 @@
 """Commit protocol of :class:`VersionedTable`, Spark-free.
 
-Only metadata commits run here (``create``, ``commit_buckets``,
-``restore``, ``vacuum``), so no session is needed. A crash is injected
+Only metadata commits and driver merges (a delta append and a fold)
+run here, so no session is needed. A crash is injected
 at each publish call of a commit — ``os.replace`` / ``os.link`` as
 ``sinks.table`` sees them — and a fresh ``VersionedTable`` on the same
 path must then read the pre- or post-commit manifest and accept the
@@ -12,7 +12,9 @@ slot taken while the pointer still names the old version.
 
 from __future__ import annotations
 
+import json
 import os
+import re
 import threading
 
 import pytest
@@ -23,6 +25,7 @@ from rootstock_collective_state_sync_spark.sinks.table import (
     CommitConflict,
     VersionedTable,
 )
+from rootstock_collective_state_sync_spark.sinks.upsert import FOLD_DELTAS, merge_upsert
 
 SCHEMA = T.StructType([T.StructField("k", T.LongType(), False)])
 
@@ -71,6 +74,27 @@ def _two_versions(t: VersionedTable) -> None:
     t.commit_buckets({"0": ["data/a.parquet"]}, 1)
 
 
+def _with_deltas(t: VersionedTable) -> None:
+    """40 base rows, then deltas up to the count that makes the next
+    driver merge fold."""
+    _create(t)
+    merge_upsert(t, [(k,) for k in range(40)])
+    for k in range(FOLD_DELTAS):
+        merge_upsert(t, [(100 + k,)])
+    assert len(t.manifest().deltas) == FOLD_DELTAS
+
+
+def _delta(t: VersionedTable) -> None:
+    m = t.manifest()
+    merge_upsert(t, [(7,), (200,)])
+    assert len(t.manifest().deltas) == len(m.deltas) + 1
+
+
+def _fold(t: VersionedTable) -> None:
+    merge_upsert(t, [(7,), (300,)])
+    assert not t.manifest().deltas
+
+
 OPS = {
     # name: (setup, operation under test)
     "create": (lambda t: None, _create),
@@ -79,12 +103,18 @@ OPS = {
         lambda t: t.commit_buckets({"1": ["data/b.parquet"]}, 2),
     ),
     "restore": (_two_versions, lambda t: t.restore(1)),
+    "delta": (lambda t: (_create(t), merge_upsert(t, [(k,) for k in range(40)])), _delta),
+    "fold": (_with_deltas, _fold),
 }
 
 
 def _state(path) -> str | None:
+    """The current manifest, with the random names of the files a merge
+    writes masked, so two runs of one merge compare equal."""
     t = VersionedTable(None, path)
-    return t.manifest().to_json() if t.exists() else None
+    if not t.exists():
+        return None
+    return re.sub(r"data/tx-[0-9a-f]+/[^\"]+", "data/tx-*", t.manifest().to_json())
 
 
 def _next_commit(path) -> None:
@@ -215,3 +245,59 @@ def test_a_manifest_with_per_file_statistics_still_reads_and_commits(tmp_path):
     t.restore(v3)
     assert sorted(t.read_arrow()["k"].to_pylist()) == [1, 2, 3]
     assert t.manifest().meta == {**legacy, "restoredFrom": v3}
+
+
+def _keys(t: VersionedTable) -> list[int]:
+    return sorted(t.read_arrow()["k"].to_pylist())
+
+
+def test_vacuum_keeps_the_deltas_a_retained_manifest_lists(tmp_path):
+    """Delta files are live while a retained manifest lists them, and
+    are deleted once none does."""
+    t = VersionedTable(None, tmp_path / "t")
+    _create(t)
+    v2 = merge_upsert(t, [(k,) for k in range(20)])
+    merge_upsert(t, [(1,), (50,)])  # v3: a delta
+    d1 = t.manifest().deltas[0]["file"]
+    t.restore(v2)  # v4 lists no delta; v3 still does
+    assert t.vacuum(retain_last=2, grace_seconds=0.0)["files_removed"] == 0
+    assert (t.path / d1).exists()
+    assert t.vacuum(retain_last=1, grace_seconds=0.0)["files_removed"] == 1
+    assert not (t.path / d1).exists()
+    assert _keys(t) == list(range(20))
+
+    merge_upsert(t, [(51,)])  # v5: a delta on the restored base
+    d2 = t.manifest().deltas[0]["file"]
+    assert t.vacuum(retain_last=1, grace_seconds=0.0)["files_removed"] == 0
+    assert (t.path / d2).exists()
+    assert _keys(t) == list(range(20)) + [51]
+    assert on_disk(t) == set(t.manifest().all_files())
+
+
+def on_disk(t: VersionedTable) -> set[str]:
+    return {str(p.relative_to(t.path)) for p in (t.path / "data").rglob("*.parquet")}
+
+
+def test_a_manifest_without_deltas_or_row_counts_reads_and_takes_commits(tmp_path):
+    """A manifest written before tables kept deltas has neither
+    ``deltas`` nor ``bucketRows``: it reads as it did, its base rows
+    come from the footers, and it takes delta merges and folds."""
+    t = VersionedTable(None, tmp_path / "t")
+    _create(t)
+    v2 = merge_upsert(t, [(k,) for k in range(30)])
+    d = json.loads(t.manifest().to_json())
+    del d["deltas"], d["bucketRows"]
+    d["version"] = v2 + 1
+    t._manifest_path(v2 + 1).write_text(json.dumps(d))
+    m = t.manifest()
+    assert m.deltas == [] and m.bucket_rows == {}
+    assert _keys(t) == list(range(30)) and t.num_rows() == 30
+    assert t.base_rows(m) == 30
+
+    merge_upsert(t, [(3,), (30,)])
+    assert len(t.manifest().deltas) == 1
+    assert _keys(t) == list(range(31)) and t.num_rows() == 31
+    merge_upsert(t, [(k,) for k in range(31, 70)])  # past the base rows: a fold
+    m = t.manifest()
+    assert not m.deltas and sum(m.bucket_rows.values()) == 70
+    assert _keys(t) == list(range(70)) and t.column_max("k") == 69

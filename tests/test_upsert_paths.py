@@ -96,12 +96,12 @@ def contents(table) -> list[tuple]:
     return sorted(out, key=repr)
 
 
-def buckets_of_keys(table) -> dict[tuple, str]:
-    """key -> the bucket whose files hold it, from the manifest."""
+def buckets_of_keys(table) -> dict[tuple, int]:
+    """key -> the bucket whose base or delta rows hold it."""
     m = table.manifest()
     out = {}
-    for b in m.buckets:
-        part = table.read_arrow(buckets=[int(b)])
+    for b in range(m.num_buckets):
+        part = table.read_arrow(buckets=[b])
         for key in zip(*(part[k].to_pylist() for k in m.merge_keys)):
             assert key not in out, f"key {key} in buckets {out[key]} and {b}"
             out[key] = b
@@ -156,10 +156,15 @@ def test_paths_agree_for_every_key_type(spark, new_table, keys):
 @given(data=st.data())
 def test_random_batch_sequences_agree(spark, new_table, data):
     """Random batch sequences through both paths, and through a table
-    that takes each batch on a randomly chosen path."""
+    that takes each batch on a randomly chosen path. Up to ten batches
+    over small key pools, so the driver merges both append deltas and
+    fold (the delta rows soon pass the base rows), and the mixed table
+    takes Spark merges on top of deltas."""
     keys = data.draw(st.sampled_from(KEY_SETS), label="keys")
     schema = schema_for(keys)
-    batches = data.draw(st.lists(st.lists(row_strategy(keys), max_size=10), min_size=1, max_size=3))
+    batches = data.draw(
+        st.lists(st.lists(row_strategy(keys), min_size=1, max_size=6), min_size=2, max_size=10)
+    )
     on_driver = data.draw(st.lists(st.booleans(), min_size=len(batches), max_size=len(batches)))
     driver, spark_t, mixed = new_table(keys), new_table(keys), new_table(keys)
     for batch, d in zip(batches, on_driver):
@@ -169,6 +174,7 @@ def test_random_batch_sequences_agree(spark, new_table, data):
         merge_upsert(mixed, batch if d else df)
     assert_same(driver, spark_t, keys, batches)
     assert contents(mixed) == contents(driver)
+    assert buckets_of_keys(mixed) == buckets_of_keys(driver)
 
 
 def test_empty_batch_commits_nothing(spark, new_table):
@@ -255,6 +261,18 @@ def test_write_into_empty_rejects_not_null_in_a_late_partition(spark, new_table)
     with pytest.raises(ValueError, match="NOT NULL violation"):
         merge_upsert(t, spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), loose))
     assert t.current_version() == 1 and t.num_rows() == 0
+
+
+def test_write_into_empty_shuffles_once(spark):
+    """The last-row window and the bucketed write share one shuffle:
+    the bucket is a function of the key, so partitioning by bucket
+    serves the window over ``(__bucket, keys)`` and the write alike."""
+    from rootstock_collective_state_sync_spark.sinks.upsert import _last_per_key_bucketed
+
+    rows = [(f"k{i % 7}", Decimal(i), f"r{i}", None, i) for i in range(40)]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema_for(("s",)))
+    plan = _last_per_key_bucketed(df, ["s"], NUM_BUCKETS)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
 
 
 # -- driver-side reads ------------------------------------------------------------
