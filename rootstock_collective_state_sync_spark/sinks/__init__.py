@@ -12,14 +12,13 @@ from rootstock_collective_state_sync_spark.sinks.export import (
     validate_export,
 )
 from rootstock_collective_state_sync_spark.sinks.table import TableCatalog, VersionedTable
-from rootstock_collective_state_sync_spark.sinks.upsert import merge_upsert, prepare_batch
+from rootstock_collective_state_sync_spark.sinks.upsert import merge_upsert
 
 __all__ = [
     "TableCatalog",
     "VersionedTable",
     "export_training_shards",
     "merge_upsert",
-    "prepare_batch",
     "shard_manifest",
     "validate_export",
 ]

@@ -44,21 +44,27 @@ exactly as a copy-on-write table.
 
 What the sync engine uses, and from where:
 
-- writes: :func:`..sinks.upsert.merge_upsert` (``_write_tx`` on its
-  Spark path, :meth:`VersionedTable.write_delta` and
-  :meth:`VersionedTable.write_buckets` on its driver path, all
-  committed by :meth:`VersionedTable.commit_buckets`). Both place
-  a key in the same bucket: Spark through :func:`bucket_expr`, the
-  driver through :func:`bucket_ids`, the same XXH64 run over numpy
+- writes: :func:`..sinks.upsert.merge_upsert` (:meth:`VersionedTable.write_delta`
+  and :meth:`VersionedTable.write_buckets` for its driver merge,
+  :meth:`VersionedTable.write_bucketed` for a DataFrame written into
+  an empty table, all committed by :meth:`VersionedTable.commit_buckets`).
+  Both place a key in the same bucket: Spark through :func:`bucket_expr`,
+  the driver through :func:`bucket_ids`, the same XXH64 run over numpy
   ``uint64`` lanes for a whole batch at once;
 - driver-side reads that start no Spark job: ``read_arrow`` (the
-  watermark row, the change log), ``column_max`` (append-only
-  high-water marks) and ``num_rows`` (bulk-hydration counts);
-- reorg recovery: ``history`` and ``restore``;
-- Spark reads: ``read`` (the Spark merge, the graph store, the
-  benchmark's replica check); ``overwrite`` is the graph store's
+  watermark row, the change log, the proposal-state refresh),
+  ``column_max`` (append-only high-water marks) and ``num_rows``
+  (bulk-hydration counts);
+- reorg recovery: ``restore``;
+- Spark reads: ``read``, called by the graph store, by the rollup
+  merge (the current rows its increment touches) and by the
+  benchmark's replica check; ``overwrite`` is the graph store's
   snapshot replace;
 - retention: ``vacuum`` (expires old versions and unreferenced files).
+
+``history`` has no caller in the engine. It stays only because the
+benchmark's tracer (``perfbench/run.py``) wraps it by name; it goes
+when that tracer changes (ROADMAP item 7).
 """
 
 from __future__ import annotations
@@ -254,10 +260,12 @@ def _hash_part(h: np.ndarray, col: pa.Array, dtype: T.DataType) -> None:
     if not len(col):
         return
     valid = col.is_valid().to_numpy(zero_copy_only=False)
-    if isinstance(dtype, (T.BooleanType, T.ByteType, T.ShortType, T.IntegerType)):
+    # Spark hashes a date as its int day number and a timestamp as its
+    # long microseconds
+    if isinstance(dtype, (T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.DateType)):
         fixed = pc.fill_null(col.cast(pa.int32()), 0).to_numpy().astype("<i4")
-    elif isinstance(dtype, T.LongType):
-        fixed = pc.fill_null(col, 0).to_numpy().astype("<i8")
+    elif isinstance(dtype, (T.LongType, T.TimestampType, T.TimestampNTZType)):
+        fixed = pc.fill_null(col.cast(pa.int64()), 0).to_numpy().astype("<i8")
     elif isinstance(dtype, T.DecimalType) and dtype.precision <= 18:
         # the unscaled value, in the low word of each 16-byte decimal
         lanes = np.frombuffer(col.buffers()[1], "<i8").reshape(-1, 2)
@@ -289,9 +297,9 @@ def bucket_ids(
     tbl: pa.Table, keys: list[str], types: list[T.DataType], num_buckets: int
 ) -> np.ndarray:
     """The bucket ``bucket_expr`` assigns to each row of ``tbl``, as an
-    int array. Binary, string, integer and long keys are hashed without
-    per-row Python; a decimal key wider than 18 digits builds its
-    hashed bytes row by row."""
+    int array. Binary, string, integer, long, date and timestamp keys
+    are hashed without per-row Python; a decimal key wider than 18
+    digits builds its hashed bytes row by row."""
     h = np.full(tbl.num_rows, 42, np.uint64)
     for k, t in zip(keys, types):
         _hash_part(h, tbl[k].combine_chunks(), t)
@@ -317,7 +325,7 @@ def last_rows(tbl: pa.Table, keys: list[str]) -> np.ndarray:
 
 def key_in(tgt: pa.Table, src: pa.Table, keys: list[str]):
     """Mask of the ``tgt`` rows whose key occurs in ``src`` (a null
-    key part matches a null, as in the Spark path's window)."""
+    key part matches a null, as in :meth:`VersionedTable.read`'s window)."""
     if len(keys) == 1:
         return pc.is_in(tgt[keys[0]], value_set=src[keys[0]].combine_chunks())
     return pc.is_in(_key_bytes(tgt, keys), value_set=_key_bytes(src, keys).combine_chunks())
@@ -457,13 +465,12 @@ class VersionedTable:
 
     # ---- read --------------------------------------------------------------
 
-    def read(self, version: int | None = None, buckets: list[int] | None = None) -> DataFrame:
-        """Read a snapshot (optionally bucket-pruned) as a DataFrame.
-        Deltas are resolved with a window over the merge keys, each
-        read filtered on its ``__bucket`` column when ``buckets`` is
-        given; a snapshot without deltas is a plain scan."""
+    def read(self, version: int | None = None) -> DataFrame:
+        """Read a snapshot as a DataFrame. Deltas are resolved with a
+        window over the merge keys; a snapshot without deltas is a
+        plain scan."""
         m = self.manifest(version)
-        files = [str(self.path / f) for f in m.files(buckets)]
+        files = [str(self.path / f) for f in m.files()]
         if not files:
             df = self.spark.createDataFrame([], m.schema)
         else:
@@ -498,8 +505,6 @@ class VersionedTable:
         parts = [df.withColumn(SEQ_COL, F.lit(-1))]
         for i, d in enumerate(m.deltas):
             delta = self.spark.read.schema(tagged).parquet(str(self.path / d["file"]))
-            if buckets is not None:
-                delta = delta.filter(F.col(BUCKET_COL).isin(list(buckets)))
             parts.append(delta.drop(BUCKET_COL).withColumn(SEQ_COL, F.lit(i)))
         union = reduce(DataFrame.unionByName, parts)
         return last_per_key(union, m.merge_keys).drop(SEQ_COL)
@@ -583,10 +588,6 @@ class VersionedTable:
             m.bucket_rows[b] if b in m.bucket_rows else self._footer_rows(fs)
             for b, fs in m.buckets.items()
         )
-
-    def delta_buckets(self, m: Manifest) -> set[int]:
-        """The buckets ``m``'s deltas hold rows of."""
-        return set(pc.unique(self.read_deltas(m, pa.schema([]))[BUCKET_COL]).to_pylist())
 
     def num_rows(self) -> int:
         """Rows in the current version: its files' footers when it has

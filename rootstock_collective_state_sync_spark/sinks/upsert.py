@@ -14,38 +14,32 @@ Semantics (parity with the reference's ``executeUpsert``,
 - re-applying the same batch is a no-op on table content (idempotent);
 - commit races retry with exponential backoff (``dbUpsert.ts:25-48``).
 
-One entry point, two physical paths, chosen by the batch's type:
+One entry point and one merge routine. Rows held on the driver (an
+Arrow table: what the sync loop builds from GraphQL pages, bounded by
+its ``merge_chunk_rows``; or a list of tuples in the table's column
+order, which :func:`prepare_rows` turns into one) merge with pyarrow
+and start no Spark job. The work is columnar: Arrow casts the batch
+and checks NOT NULL, :func:`..table.last_rows` keeps each key's last
+row, and :func:`..table.bucket_ids` hashes the keys into the buckets
+:func:`bucket_expr` gives them. The batch, sorted by bucket, is then
+appended to the table as one delta file, and no base file is read or
+written, so the merge costs what the batch costs (the reference's
+``ON CONFLICT`` upsert costs the same at any table size). A merge
+*folds* instead when the table has no base rows, already holds
+``FOLD_DELTAS`` deltas, or its delta rows and the batch pass
+``FOLD_SHARE`` of its base rows: it reads each delta file once and the
+base files of every bucket the deltas or the batch touch, lays the
+deltas, then the batch, over the base rows key by key, rewrites those
+buckets one file each and clears the delta list. Deltas therefore stay
+a bounded share of the table, and each row is rewritten O(1) times
+amortised, as in an LSM tree's merge.
 
-- **rows held on the driver** (an Arrow table: what the sync loop
-  builds from GraphQL pages, bounded by its ``merge_chunk_rows``; or a
-  list of tuples in the table's column order, which
-  :func:`prepare_rows` turns into one) merge with pyarrow and start no
-  Spark job. The work is columnar: Arrow casts the batch and checks
-  NOT NULL, :func:`..table.last_rows` keeps each key's last row, and
-  :func:`..table.bucket_ids` hashes the keys into the buckets
-  :func:`bucket_expr` gives them. The batch, sorted by bucket, is then
-  appended to the table as one delta file, and no base file is read or
-  written, so the merge costs what the batch costs (the reference's
-  ``ON CONFLICT`` upsert costs the same at any table size). A merge
-  *folds* instead when the table has no base rows, already holds
-  ``FOLD_DELTAS`` deltas, or its delta rows and the batch pass
-  ``FOLD_SHARE`` of its base rows: it reads each delta file once and
-  the base files of every bucket the deltas or the batch touch, lays
-  the deltas, then the batch, over the base rows key by key, rewrites
-  those buckets one file each and clears the delta list. Deltas
-  therefore stay a bounded share of the table, and each row is
-  rewritten O(1) times amortised, as in an LSM tree's merge;
-- **DataFrames** (bulk hydration, rollups) merge in Spark: the batch
-  is hashed into the table's fixed buckets, the buckets the batch or
-  the deltas touch are read back (deltas resolved), merged latest-wins
-  with a window, and rewritten, which clears the delta list. Into a
-  table with no files the merge is a plain write through one shuffle.
-
-Both paths write the same layout and commit through
-:meth:`VersionedTable.commit_buckets` with the same retry, so a table
-takes merges from either path in any order. A fold, or a Spark merge,
-rewrites every bucket its rows hash into, so its bytes scale with the
-rows per touched bucket; a delta merge writes only the batch.
+A DataFrame (a rollup increment, a bulk hydration) is projected onto
+the schema in Spark and collected once with ``toArrow()`` into that
+same merge, so its callers send only batches that fit on the driver.
+Into a table with no files it is written instead, through one shuffle
+and without leaving Spark: the partition-parallel DataSource's bulk
+hydration lands there.
 """
 
 from __future__ import annotations
@@ -81,31 +75,13 @@ FOLD_DELTAS = 8
 FOLD_SHARE = 1.0
 
 
-def prepare_batch(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """Project an incoming batch onto the declared schema.
-
-    - drops undeclared columns (``dbUpsert.ts:7-11``);
-    - flattens nested FK structs ``{id: …}`` to the id value
-      (``dbUpsert.ts:13-21``);
-    - casts to declared types (overflow raises — uint256 policy);
-    - raises when a declared NOT NULL column is missing or null
-      (Spark does not enforce nullability on write; the reference
-      delegated this to Postgres constraints).
-    """
-    out = _project(df, schema)
-    required = [f.name for f in schema.fields if not f.nullable]
-    if required:
-        # engine-side NOT NULL enforcement, one distributed pass
-        bad = out.filter(
-            " OR ".join(f"`{c}` IS NULL" for c in required)
-        ).limit(1).count()
-        if bad:
-            raise ValueError(f"{_NOT_NULL} {required}")
-    return out
-
-
 def _project(df: DataFrame, schema: T.StructType) -> DataFrame:
-    """:func:`prepare_batch` without its NOT NULL probe."""
+    """Project a DataFrame batch onto the declared schema: undeclared
+    columns are dropped (``dbUpsert.ts:7-11``), nested FK structs
+    ``{id: …}`` become the id (``dbUpsert.ts:13-21``), and columns are
+    cast to the declared types (overflow raises: uint256 policy). A
+    missing NOT NULL column raises; a null in one is the merge's
+    check."""
     in_fields = {f.name: f for f in df.schema.fields}
     cols = []
     for f in schema.fields:
@@ -143,9 +119,9 @@ def prepare_rows(rows: list[tuple], schema: T.StructType) -> pa.Table:
 
 
 def _conform(src: pa.Table, schema: T.StructType) -> pa.Table:
-    """:func:`prepare_batch` for an Arrow table: the schema's columns in
-    its order, cast to its types (a value out of range raises); a null
-    in a NOT NULL column raises."""
+    """An Arrow batch projected onto ``schema``: its columns in its
+    order, cast to its types (a value out of range raises); a null in a
+    NOT NULL column raises."""
     out = src.select(schema.names).cast(arrow_schema(schema))
     required = [f.name for f in schema.fields if not f.nullable]
     if any(out[c].null_count for c in required):
@@ -157,55 +133,24 @@ def merge_upsert(
     table: VersionedTable,
     batch: DataFrame | pa.Table | list[tuple],
     meta: dict[str, Any] | None = None,
-    max_retries: int = 3,
-    initial_delay: float = 0.1,
 ) -> int:
     """MERGE ``batch`` INTO ``table`` ON its merge keys; returns the new
     table version (or the current one for an empty batch).
 
-    ``batch`` is a DataFrame (merged in Spark) or rows held on the
-    driver, merged there with no Spark job: an Arrow table with the
-    table's column names, or a list of tuples in its column order.
+    ``batch`` is rows held on the driver, merged there with no Spark
+    job (an Arrow table with the table's column names, or a list of
+    tuples in its column order), or a DataFrame: written in Spark into
+    a table with no files, else collected into the same driver merge.
     """
-    if isinstance(batch, (pa.Table, list, tuple)):
-        return _merge_arrow(table, batch, meta, max_retries, initial_delay)
-    m0 = table.manifest()
-    schema, keys, nb = m0.schema, m0.merge_keys, m0.num_buckets
-    if not m0.buckets and not m0.deltas:
-        try:
-            return _write_into_empty(table, batch, m0, meta)
-        except CommitConflict:
-            pass  # another writer filled the table first: merge into it
-    src = prepare_batch(batch, schema)
-    if not src.take(1):
-        return m0.version
-
-    # last occurrence of a key in the batch wins: tag arrival order
-    # BEFORE any shuffle moves rows around.
-    src = src.withColumn(SEQ_COL, F.monotonically_increasing_id())
-    src = src.withColumn(BUCKET_COL, bucket_expr(keys, nb)).cache()
-    try:
-        affected = {r[0] for r in src.select(BUCKET_COL).distinct().collect()}
-
-        def attempt() -> int:
-            prev = table.manifest()
-            # the fold covers every bucket a delta holds rows of too
-            touched = sorted(affected | table.delta_buckets(prev))
-            tgt = (
-                table.read(prev.version, buckets=touched)
-                .withColumn(SEQ_COL, F.lit(-1).cast("long"))
-                .withColumn(BUCKET_COL, bucket_expr(keys, nb))
-            )
-            merged = last_per_key(tgt.unionByName(src), keys).select(*schema.names)
-            # merged covers exactly the touched buckets (src and tgt
-            # were both restricted to them); empty list drops a bucket.
-            new_files = table._write_tx(merged, nb, keys)
-            replaced = {str(b): new_files.get(str(b), []) for b in touched}
-            return table.commit_buckets(replaced, prev.version, meta=meta, rows=table.counted(new_files))
-
-        return with_retry(attempt, max_retries=max_retries, initial_delay=initial_delay)
-    finally:
-        src.unpersist()
+    if isinstance(batch, DataFrame):
+        m0 = table.manifest()
+        if not m0.buckets and not m0.deltas:
+            try:
+                return _write_into_empty(table, batch, m0, meta)
+            except CommitConflict:
+                pass  # another writer filled the table first: merge into it
+        batch = _project(batch, m0.schema).toArrow()
+    return _merge_arrow(table, batch, meta)
 
 
 def _write_into_empty(table: VersionedTable, batch: DataFrame, m0, meta) -> int:
@@ -246,11 +191,7 @@ def _last_per_key_bucketed(src: DataFrame, keys: list[str], num_buckets: int) ->
 
 
 def _merge_arrow(
-    table: VersionedTable,
-    src: pa.Table | list[tuple],
-    meta: dict[str, Any] | None,
-    max_retries: int,
-    initial_delay: float,
+    table: VersionedTable, src: pa.Table | list[tuple], meta: dict[str, Any] | None
 ) -> int:
     """The driver-side merge: a delta append or a fold, pyarrow reads
     and writes, no Spark job."""
@@ -272,7 +213,7 @@ def _merge_arrow(
             return _fold(table, prev, src, meta)
         return table.commit_buckets({}, prev.version, meta=meta, delta=table.write_delta(src))
 
-    return with_retry(attempt, max_retries=max_retries, initial_delay=initial_delay)
+    return with_retry(attempt)
 
 
 def _folds(table: VersionedTable, m: Manifest, batch_rows: int) -> bool:

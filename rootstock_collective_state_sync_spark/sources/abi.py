@@ -211,7 +211,7 @@ def make_multicall_fn(
     post: PostFn = http_json_rpc,
     block_tag: str = "latest",
 ):
-    """A ready-to-use ``MulticallFn`` for :func:`..rpc.multicall_states`:
+    """A ready-to-use ``MulticallFn`` for :func:`..rpc.refresh_proposal_states`:
     hex proposal ids -> ``{id: rawState}`` via ONE ``eth_call`` to
     Multicall3 per batch. Failed inner calls are dropped from the map
     (parity with the reference's warn-and-skip,

@@ -1,15 +1,14 @@
-"""Batched RPC enrichment (multicall) as a distributed operator.
+"""Proposal-state refresh through batched RPC (multicall), on the driver.
 
 Parity: the reference batches N ``state(proposalId)`` eth_calls into
 one multicall and diff-updates rows whose on-chain state changed
 (``blockProposalStateStrategy.ts:29-131`` — S6 + J1 + K2).
 
-Spark shape: ``mapInPandas`` over the id column — each Arrow batch
-issues ONE batched RPC for its ids (vectorized enrichment), so RPC
-round-trips scale with partition count, not row count. The on-chain
-states are joined to the stored ones and only the rows whose state
-differs are merged back (set-based, replacing the reference's per-row
-update loop).
+Shape: the live proposals are read with ``read_arrow`` (no Spark job),
+their ids go out ``MULTICALL_BATCH`` to a call, and only the rows whose
+state differs are relabeled and merged back as one Arrow batch through
+the driver merge. The calls and the merge follow the live proposals;
+the read is one driver-side pass over the table's files.
 
 The RPC callable is injectable; :func:`.abi.make_multicall_fn` is the
 production default — a pure-Python ``state(uint256)`` ABI encoder +
@@ -20,11 +19,10 @@ deterministic fake or a canned JSON-RPC ``post``).
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable
 
-import pandas as pd
-
-from pyspark.sql import DataFrame, functions as F, types as T
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from rootstock_collective_state_sync_spark.sinks import VersionedTable, merge_upsert
 
@@ -43,6 +41,9 @@ PROPOSAL_STATES = (
 # the reference refreshes only proposals still in flight (:20-27)
 LIVE_RAW_STATES = (0, 1, 4, 5)
 
+#: ids per multicall
+MULTICALL_BATCH = 500
+
 MulticallFn = Callable[[list[str]], dict[str, int]]
 
 
@@ -54,50 +55,9 @@ def _no_rpc(ids: list[str]) -> dict[str, int]:
     )
 
 
-def state_label_expr(raw_col: str = "rawState"):
-    """C4: enum -> label as a chained CASE expression."""
-    expr = F.lit("Unknown")
-    col = F.col(raw_col)
-    for i, label in reversed(list(enumerate(PROPOSAL_STATES))):
-        expr = F.when(col == i, label).otherwise(expr)
-    return expr
-
-
-def multicall_states(
-    ids_df: DataFrame,
-    multicall_fn: MulticallFn = _no_rpc,
-    id_col: str = "id",
-    batch_size: int = 500,
-) -> DataFrame:
-    """(id, rawState) from batched RPC calls: one multicall per Arrow
-    chunk of ``batch_size`` ids per partition."""
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.BinaryType(), False),
-            T.StructField("rawState", T.IntegerType(), False),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            raw_ids = ["0x" + bytes(b).hex() for b in pdf[id_col]]
-            for i in range(0, len(raw_ids), batch_size):
-                chunk = raw_ids[i : i + batch_size]
-                states = multicall_fn(chunk)
-                # ids the call dropped (inner-call failure) are skipped,
-                # not errored — reference warn-and-skip semantics
-                # (blockProposalStateStrategy.ts:54-61)
-                ok = [x for x in chunk if x in states]
-                if not ok:
-                    continue
-                yield pd.DataFrame(
-                    {
-                        id_col: [bytes.fromhex(x[2:]) for x in ok],
-                        "rawState": [int(states[x]) for x in ok],
-                    }
-                )
-
-    return ids_df.select(id_col).mapInPandas(batches, schema)
+def state_label(raw: int) -> str:
+    """C4: the label of a ``rawState`` value; out of range is ``Unknown``."""
+    return PROPOSAL_STATES[raw] if 0 <= raw < len(PROPOSAL_STATES) else "Unknown"
 
 
 def refresh_proposal_states(
@@ -108,15 +68,24 @@ def refresh_proposal_states(
     """S6+J1+K2 end-to-end: read live proposals, fetch on-chain states
     in batched RPC calls, merge back ONLY the rows whose state
     differs. Returns the new table version (the current one when no
-    state changed)."""
-    live = table.read().filter(F.col("rawState").isin(*live_states))
-    onchain = multicall_states(live, multicall_fn)
-    changed = (
-        live.withColumnRenamed("rawState", "_storedState")
-        .drop("state")
-        .join(onchain, "id")
-        .filter(F.col("rawState") != F.col("_storedState"))
-        .drop("_storedState")
-        .withColumn("state", state_label_expr("rawState"))
-    )
-    return merge_upsert(table, changed)
+    state changed). Starts no Spark job."""
+    rows = table.read_arrow()
+    live = rows.filter(pc.is_in(rows["rawState"], value_set=pa.array(live_states, rows["rawState"].type)))
+    ids = ["0x" + b.hex() for b in live["id"].to_pylist()]
+    stored = live["rawState"].to_pylist()
+    changed, raw = [], []
+    for i in range(0, len(ids), MULTICALL_BATCH):
+        chunk = ids[i : i + MULTICALL_BATCH]
+        states = multicall_fn(chunk)
+        # ids the call dropped (inner-call failure) are skipped, not
+        # errored — reference warn-and-skip semantics
+        # (blockProposalStateStrategy.ts:54-61)
+        for j, x in enumerate(chunk, start=i):
+            if x in states and int(states[x]) != stored[j]:
+                changed.append(j)
+                raw.append(int(states[x]))
+    out = live.take(changed)
+    for name, values in (("rawState", raw), ("state", [state_label(r) for r in raw])):
+        i = out.schema.get_field_index(name)
+        out = out.set_column(i, name, pa.array(values, out.schema.field(i).type))
+    return merge_upsert(table, out)

@@ -28,7 +28,7 @@ import logging
 import os
 import shutil
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from rootstock_collective_state_sync_spark.sinks import TableCatalog
 from rootstock_collective_state_sync_spark.sinks.table import Manifest, VersionedTable
@@ -146,14 +146,9 @@ class ReorgManager:
         build tmp, live -> old, tmp -> live, drop old."""
         live_root = self.engine.catalog.root
         tmp_root = live_root.with_name(live_root.name + f"_tmp_{uuid.uuid4().hex[:6]}")
-        shadow = SyncEngine(
-            spark=self.engine.spark,
-            schema=self.engine.schema,
-            catalog=TableCatalog(self.engine.spark, tmp_root),
-            client=self.engine.client,
-            page_size=self.engine.page_size,
-            merge_chunk_rows=self.engine.merge_chunk_rows,
-        )
+        # the live engine's settings (bucket count, page and chunk
+        # sizes, ...) over the shadow catalog, with a fresh throttle
+        shadow = replace(self.engine, catalog=TableCatalog(self.engine.spark, tmp_root), _last_run={})
         shadow.bootstrap()
         head = self.chain.head_block()
         shadow.sync_from_changelog(head)

@@ -143,16 +143,18 @@ def test_multicall_fn_for_network_resolves_registry():
         abi.multicall_fn_for_network("sepolia", "0x" + "cd" * 20)
 
 
-def test_multicall_states_skips_dropped_ids(spark):
-    """mapInPandas enrichment tolerates ids the RPC could not answer."""
-    from rootstock_collective_state_sync_spark.sources.rpc import multicall_states
+def test_refresh_skips_dropped_ids(spark, tmp_table_dir):
+    """The refresh tolerates ids the RPC could not answer: their rows
+    stay as they were, the others are updated."""
+    from tests.test_multimodal_rpc import proposals
+    from rootstock_collective_state_sync_spark.sources.rpc import refresh_proposal_states
 
     ids = [bytes([i]) * 32 for i in range(4)]
-    df = spark.createDataFrame([(i,) for i in ids], "id binary")
+    table = proposals(spark, tmp_table_dir, [(i, "p", 0, "Pending") for i in ids])
 
     def fn(hex_ids):
         return {h: 1 for h in hex_ids if h != "0x" + ids[2].hex()}
 
-    rows = multicall_states(df, fn).collect()
-    got = sorted(bytes(r.id).hex() for r in rows)
-    assert got == sorted(i.hex() for i in ids if i != ids[2])
+    refresh_proposal_states(table, fn)
+    got = {bytes(r["id"]): (r["rawState"], r["state"]) for r in table.read_arrow().to_pylist()}
+    assert got == {i: (0, "Pending") if i == ids[2] else (1, "Active") for i in ids}

@@ -11,6 +11,8 @@ from rootstock_collective_state_sync_spark.operators import multimodal as M
 from rootstock_collective_state_sync_spark.sinks import TableCatalog
 from rootstock_collective_state_sync_spark.sources import rpc
 
+from tests.test_upsert_paths import jobs_started
+
 
 @pytest.fixture()
 def docs(spark):
@@ -150,39 +152,42 @@ def pid(i: int) -> bytes:
     return bytes([i]) * 4
 
 
-def test_refresh_proposal_states(spark, tmp_table_dir):
+def proposals(spark, tmp_table_dir, rows):
+    """A Proposal table holding ``rows``."""
+    from rootstock_collective_state_sync_spark.sinks import merge_upsert
+
     table = TableCatalog(spark, tmp_table_dir).table("Proposal").create(
         PROPOSAL_SCHEMA, ["id"], num_buckets=4
     )
-    from rootstock_collective_state_sync_spark.sinks import merge_upsert
+    merge_upsert(table, spark.createDataFrame(rows, PROPOSAL_SCHEMA))
+    return table
 
-    merge_upsert(
-        table,
-        spark.createDataFrame(
-            [
-                (pid(1), "p1", 0, "Pending"),    # live, will become Active
-                (pid(2), "p2", 1, "Active"),     # live, unchanged
-                (pid(3), "p3", 7, "Executed"),   # terminal: not refreshed
-                (pid(4), "p4", 4, "Succeeded"),  # live, will become Queued
-            ],
-            PROPOSAL_SCHEMA,
-        ),
+
+def test_refresh_proposal_states(spark, tmp_table_dir):
+    table = proposals(
+        spark,
+        tmp_table_dir,
+        [
+            (pid(1), "p1", 0, "Pending"),    # live, will become Active
+            (pid(2), "p2", 1, "Active"),     # live, unchanged
+            (pid(3), "p3", 7, "Executed"),   # terminal: not refreshed
+            (pid(4), "p4", 4, "Succeeded"),  # live, will become Queued
+        ],
     )
     v_before = table.current_version()
+    sent = []
 
     def fake_multicall(ids: list[str]) -> dict[str, int]:
-        out = {}
-        for h in ids:
-            i = bytes.fromhex(h[2:])[0]
-            # KeyError for any non-live proposal: if the terminal p3
-            # were queried, the whole job would fail — this IS the
-            # "only live proposals hit the RPC" assertion (the fn runs
-            # in worker processes, so a driver-side counter can't see
-            # the calls)
-            out[h] = {1: 1, 2: 1, 4: 5}[i]  # p1: 0->1, p2: 1->1, p4: 4->5
-        return out
+        sent.append(ids)
+        # p1: 0->1, p2: 1->1, p4: 4->5
+        return {h: {1: 1, 2: 1, 4: 5}[bytes.fromhex(h[2:])[0]] for h in ids}
 
+    before = jobs_started(spark)
     rpc.refresh_proposal_states(table, fake_multicall)
+    assert jobs_started(spark) == before
+    # one call, with exactly the live ids: the terminal p3 is not queried
+    assert len(sent) == 1
+    assert sorted(sent[0]) == sorted("0x" + pid(i).hex() for i in (1, 2, 4))
     rows = {bytes(r.id)[0]: (r.rawState, r.state) for r in table.read().collect()}
     assert rows[1] == (1, "Active")      # updated + relabeled
     assert rows[2] == (1, "Active")      # matched but unchanged -> untouched
@@ -191,18 +196,15 @@ def test_refresh_proposal_states(spark, tmp_table_dir):
     assert table.current_version() > v_before
 
 
-def test_state_label_expr(spark):
-    df = spark.createDataFrame([(i,) for i in range(9)], ["rawState"])
-    labels = [
-        r.l for r in df.select(rpc.state_label_expr().alias("l")).orderBy("rawState").collect()
-    ]
-    assert labels == list(rpc.PROPOSAL_STATES) + ["Unknown"]
+def test_state_label():
+    labels = [rpc.state_label(i) for i in range(-1, 9)]
+    assert labels == ["Unknown"] + list(rpc.PROPOSAL_STATES) + ["Unknown"]
 
 
-def test_multicall_no_rpc_raises(spark):
-    df = spark.createDataFrame([(b"\x01",)], ["id"])
-    with pytest.raises(Exception, match="no RPC endpoint"):
-        rpc.multicall_states(df).collect()
+def test_multicall_no_rpc_raises(spark, tmp_table_dir):
+    table = proposals(spark, tmp_table_dir, [(pid(1), "p1", 0, "Pending")])
+    with pytest.raises(NotImplementedError, match="no RPC endpoint"):
+        rpc.refresh_proposal_states(table)
 
 
 def test_resize_ppm_nearest_neighbor_exact():

@@ -13,6 +13,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from dataclasses import replace
 from pathlib import Path
 
 import pytest
@@ -481,6 +482,22 @@ def test_reorg_shadow_rebuild_equivalence(spark, tmp_path, world):
     fresh = _sync_to_head(spark, tmp_path, world, "fresh")
     assert table_state(eng, "VoteCast") == table_state(fresh, "VoteCast")
     assert mgr.detect() is None
+
+
+def test_reorg_rebuild_keeps_the_engine_settings(spark, tmp_path, world):
+    """The shadow engine of a rebuild is the live engine over another
+    catalog: a 4-bucket engine rebuilds 4-bucket tables."""
+    eng = replace(make_engine(spark, tmp_path, world), num_buckets=4)
+    eng.bootstrap(at_block=world.chain().head_block().number)
+    eng.sync_from_changelog(world.chain().head_block())
+    _reorged_world(world)
+    ReorgManager(engine=eng, chain=world.chain()).recover_rebuild()
+    names = eng.catalog.list_tables()
+    assert "VoteCast" in names
+    for name in names:
+        t = eng.catalog.table(name)
+        assert {t.manifest(v).num_buckets for v in t._versions()} == {4}, name
+    assert table_state(eng, "VoteCast") == expected_votes(world)
 
 
 def test_append_only_strategy(spark, tmp_path, world):
@@ -965,9 +982,7 @@ def test_lookback_with_multicall_refresh_e2e(spark, tmp_path, world):
         lookback_refresh=lambda b: rpc.refresh_proposal_states(table, fn),
     )
     assert res["lookback:Proposal"] == 2
-    # (fake_post runs in worker processes — `posted` can't observe the
-    # call count from the driver; one-eth_call-per-batch is asserted
-    # in tests/test_abi.py::test_make_multicall_fn_end_to_end)
+    assert len(posted) == 1  # both live proposals in one eth_call
     rows = {bytes(r.id)[-1]: (r.rawState, r.state) for r in table.read().collect()}
     assert rows[1] == (1, "Active")   # diff-updated + relabeled
     assert rows[2] == (0, "Pending")  # unchanged on chain -> untouched

@@ -15,11 +15,9 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import Row, functions as F, types as T
 
-from rootstock_collective_state_sync_spark.sinks import (
-    TableCatalog,
-    merge_upsert,
-    prepare_batch,
-)
+from rootstock_collective_state_sync_spark.sinks import TableCatalog, merge_upsert
+
+from tests.test_upsert_paths import jobs_started
 
 SCHEMA = T.StructType(
     [
@@ -120,9 +118,12 @@ def test_not_null_violation_raises(spark, table):
 
 
 def test_missing_not_null_column_raises(spark, table):
+    merge_upsert(table, make(spark, [("b", Decimal(2), None)]))
+    v = table.current_version()
     df = spark.createDataFrame([("a",)], ["id"])
     with pytest.raises(ValueError, match="missing NOT NULL"):
-        prepare_batch(df, SCHEMA)
+        merge_upsert(table, df)
+    assert table.current_version() == v
 
 
 def test_restore_version(spark, table):
@@ -150,13 +151,26 @@ def test_merge_only_rewrites_affected_buckets(spark, table):
         F.lit(None).cast("string").alias("note"),
     )
     merge_upsert(table, big)
-    before = table.manifest().buckets
+    before = table.manifest()
     merge_upsert(table, make(spark, [("k1", Decimal(999), "touched")]))
-    after = table.manifest().buckets
-    changed = [b for b in before if before[b] != after.get(b)]
-    assert len(changed) == 1  # exactly the bucket k1 hashes into
+    after = table.manifest()
+    assert after.buckets == before.buckets  # no base bucket rewritten
+    assert [d["rows"] for d in after.deltas] == [d["rows"] for d in before.deltas] + [1]
     assert rows(table)["k1"] == (Decimal(999), "touched")
     assert sum(1 for _ in table.read().collect()) == 200
+
+
+def test_dataframe_into_filled_table_runs_one_job(spark, table):
+    """A DataFrame merged into a table with files is collected once and
+    merged on the driver: one Spark job, one delta appended."""
+    merge_upsert(table, make(spark, [("a", Decimal(1), "x"), ("b", Decimal(2), None)]))
+    batch = make(spark, [("a", Decimal(10), "y"), ("c", Decimal(3), None)])
+    before = jobs_started(spark)
+    merge_upsert(table, batch)
+    assert jobs_started(spark) == before + 1
+    m = table.manifest()
+    assert [d["rows"] for d in m.deltas] == [2]
+    assert rows(table) == {"a": (Decimal(10), "y"), "b": (Decimal(2), None), "c": (Decimal(3), None)}
 
 
 def test_catalog_create_all_and_list(spark, tmp_table_dir):

@@ -1,16 +1,18 @@
-"""Parity of the two merge paths behind ``merge_upsert``.
+"""Parity of the two batch kinds behind ``merge_upsert``.
 
-Rows held on the driver merge with pyarrow; DataFrames merge in Spark,
-and into a table with no files a DataFrame is written, not merged.
-The same batches through either path must give the same table
-contents and the same bucket for every key, over every key type the
-entity compiler emits (string, binary, int/long, Decimal(38,0),
-boolean and composite keys), and a table must accept merges from both
-paths in turn.
+Rows held on the driver merge with pyarrow; a DataFrame is projected in
+Spark and collected into that same merge, and into a table with no
+files it is written, not merged. The same batches as rows or as
+DataFrames must give the same table contents and the same bucket for
+every key, over every key type the entity compiler emits (string,
+binary, int/long, Decimal(38,0), boolean and composite keys) and the
+timestamp and date keys a rollup groups by, and a table must accept
+both kinds in turn.
 """
 
 from __future__ import annotations
 
+from datetime import date, datetime, timezone
 from decimal import Decimal
 
 import pyarrow as pa
@@ -32,6 +34,8 @@ KEY_TYPES = {
     "l": T.LongType(),
     "d": T.DecimalType(38, 0),
     "z": T.BooleanType(),
+    "t": T.TimestampType(),
+    "dt": T.DateType(),
 }
 
 # byte lengths that take every branch of the XXH64 kernel: the 4-byte
@@ -50,9 +54,14 @@ KEY_POOLS = {
     "l": [0, -1, 2**40, 2**63 - 1, -(2**63)],
     "d": [Decimal(v) for v in (0, -1, 10**18 + 7, -(10**18) - 3, 10**38 - 1, -(10**38 - 1), -255)],
     "z": [True, False],
+    "t": [datetime(1970, 1, 1, tzinfo=timezone.utc), datetime(2024, 5, 6, 7, 0, tzinfo=timezone.utc),
+          datetime(1969, 12, 31, 23, 59, 59, 999999, tzinfo=timezone.utc)],
+    "dt": [date(1970, 1, 1), date(2024, 5, 6), date(1900, 2, 28)],
 }
 
-KEY_SETS = [("s",), ("b",), ("i",), ("l",), ("d",), ("z",), ("s", "i"), ("d", "b", "z")]
+KEY_SETS = [
+    ("s",), ("b",), ("i",), ("l",), ("d",), ("z",), ("t",), ("dt",), ("s", "i"), ("d", "b", "z"), ("t", "s"),
+]
 
 
 def schema_for(keys: tuple[str, ...]) -> T.StructType:
@@ -159,7 +168,7 @@ def test_random_batch_sequences_agree(spark, new_table, data):
     that takes each batch on a randomly chosen path. Up to ten batches
     over small key pools, so the driver merges both append deltas and
     fold (the delta rows soon pass the base rows), and the mixed table
-    takes Spark merges on top of deltas."""
+    takes DataFrame merges on top of deltas."""
     keys = data.draw(st.sampled_from(KEY_SETS), label="keys")
     schema = schema_for(keys)
     batches = data.draw(
@@ -216,7 +225,7 @@ def test_decimal_overflow_raises_on_both_paths(spark, new_table):
 
 def test_fk_objects_flatten_on_both_paths(spark, new_table):
     """A nested ``{id: …}`` FK object is written as its id: a struct
-    column on the Spark path, a dict value on the driver path."""
+    column in a DataFrame, a dict value in driver-held rows."""
     driver, spark_t = new_table(("s",)), new_table(("s",))
     merge_upsert(driver, [({"id": "a"}, Decimal(5), None, None, None)])
     fk = T.StructType(
@@ -233,7 +242,7 @@ def test_fk_objects_flatten_on_both_paths(spark, new_table):
 def test_write_into_empty_equals_merge_into_empty(spark, new_table):
     """Duplicate ids across partitions: the last one wins on the write
     path as on the driver merge, the row count comes from the footers,
-    and merging the same frame again (now the Spark merge) is a no-op."""
+    and merging the same frame again (now a driver merge) is a no-op."""
     keys = ("s",)
     schema = schema_for(keys)
     rows = [(f"k{i % 7}", Decimal(i), f"r{i}", None, i) for i in range(40)]

@@ -11,11 +11,15 @@ last folds them into the buckets. Per size it reports:
 - ``cycle_s_mean``: the mean merge over the whole cycle, fold included;
 - reader overhead, each read timed at ``FOLD_DELTAS`` deltas and again
   once folded (55 rows more): ``read_arrow()`` on the driver and, with
-  ``--spark``, the Spark ``read()`` run to the end through a noop write.
+  ``--spark``, the Spark ``read()`` run to the end through a noop write;
+- with ``--spark``, ``dataframe_merge``: one more merge of 55 rows
+  passed as a DataFrame (a rollup's or a caller's batch), its seconds
+  and the Spark jobs it starts.
 
 ``ratio_1m_to_3k`` divides the 10^6-row delta merge by the 3k-row one
 (ROADMAP item 4's bar: within 2x). Prints one JSON line. The merges
-start no Spark job; only ``--spark`` starts a session (two cores, 2 GB).
+of driver-held rows start no Spark job; only ``--spark`` starts a
+session (two cores, 2 GB).
 
 Usage: python tools/merge_probe.py [--sizes 3000,100000,1000000] [--spark]
 """
@@ -85,6 +89,18 @@ def reads(table: VersionedTable, spark) -> dict:
     return out
 
 
+def dataframe_merge(table: VersionedTable, rng: random.Random, ids: list[bytes], spark) -> dict:
+    """One merge of a 55-row DataFrame batch: its seconds and the Spark
+    jobs it starts."""
+    keys = rng.sample(ids, BATCH_UPDATES) + [rng.randbytes(32) for _ in range(BATCH_INSERTS)]
+    df = spark.createDataFrame(batch(rng, keys, 0), SCHEMA)
+    tracker = spark.sparkContext.statusTracker()
+    jobs = lambda: max(tracker.getJobIdsForGroup(), default=-1)  # noqa: E731
+    before = jobs()
+    secs = timed(lambda: merge_upsert(table, df))
+    return {"s": round(secs, 4), "spark_jobs": jobs() - before}
+
+
 def probe(root: str, size: int, rng: random.Random, spark) -> dict:
     table = VersionedTable(spark, os.path.join(root, f"t{size}"))
     table.create(SCHEMA, ["id"], num_buckets=BUCKETS)
@@ -108,7 +124,7 @@ def probe(root: str, size: int, rng: random.Random, spark) -> dict:
         )
     assert not table.manifest().deltas, "the last merge of the cycle folds"
     assert table.num_rows() == size + (FOLD_DELTAS + 1) * BATCH_INSERTS
-    return {
+    out = {
         "delta_merge_s_p50": round(statistics.median(secs[:-1]), 4),
         "delta_rows_written_p50": statistics.median(w["rows"] for w in written[:-1]),
         "fold_s": round(secs[-1], 4),
@@ -119,13 +135,16 @@ def probe(root: str, size: int, rng: random.Random, spark) -> dict:
         "reads_at_max_deltas": at_deltas,
         "reads_folded": reads(table, spark),
     }
+    if spark is not None:
+        out["dataframe_merge"] = dataframe_merge(table, rng, ids, spark)
+    return out
 
 
 def main(argv=None) -> int:
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--sizes", default="3000,100000,1000000")
     p.add_argument("--seed", type=int, default=1)
-    p.add_argument("--spark", action="store_true", help="also time the Spark read()")
+    p.add_argument("--spark", action="store_true", help="also time the Spark read() and a DataFrame merge")
     args = p.parse_args(argv)
     rng = random.Random(args.seed)
     spark = None
