@@ -12,9 +12,9 @@ Type policy (SURVEY.md §1.2/§7):
   canonical column is ``DecimalType(38,0)`` — exact for values up to
   10^38-1 (≈ 2^126), which covers every realistic token amount —
   and out-of-range values fail loudly at ingest (Spark raises
-  ``NUMERIC_VALUE_OUT_OF_RANGE`` rather than silently truncating). For full-width fidelity the ingest layer
-  can add a lossless ``<col>__hex`` string shadow; that is a writer
-  option, not part of the canonical schema.
+  ``NUMERIC_VALUE_OUT_OF_RANGE`` rather than silently truncating). For
+  full-width arithmetic a query can derive a lossless ``<col>__hex``
+  string column (:mod:`..functions.uint256`); no table carries one.
 - ``Bytes`` -> ``BinaryType`` (hex-encoded ``0x…`` strings on the
   GraphQL wire; decoded at the connector edge).
 - FK reference columns are flattened to plain key columns typed like
@@ -72,18 +72,10 @@ def _fk_fields(ctx: SchemaContext, col: Column) -> list[T.StructField]:
     return fields
 
 
-def compile_entity(
-    ctx: SchemaContext, entity: Entity, hex_shadow: bool = False
-) -> T.StructType:
-    """Compile one entity to its table ``StructType``.
-
-    ``hex_shadow=True`` is the full-width uint256 ingest option (§7
-    risk register): every plain (non-FK, non-array) ``BigInt`` column
-    gains a nullable ``<col>__hex`` string right after it. At ingest
-    (:func:`..sources.subgraph_source.records_to_rows`) values beyond
-    Decimal(38,0) land as NULL canonical + lossless hex instead of
-    failing; in-range values carry both. Off by default — the
-    canonical-only schema stays loud on overflow."""
+def compile_entity(ctx: SchemaContext, entity: Entity) -> T.StructType:
+    """Compile one entity to its table ``StructType``: FK columns
+    flattened to the referenced key, arrays of nullable elements, and
+    each column's declared nullability."""
     fields: list[T.StructField] = []
     for col in entity.columns:
         if ctx.is_reference(col):
@@ -94,14 +86,7 @@ def compile_entity(
             # array elements follow the column's nullability; the
             # reference's Postgres arrays have no element constraint.
             dtype = T.ArrayType(dtype, containsNull=True)
-        if hex_shadow and col.type == "BigInt" and not col.is_array:
-            # overflow policy makes NULL legal in the canonical column
-            # (the shadow preserves the value), so nullability moves
-            # to the hex column's presence, not the decimal's
-            fields.append(T.StructField(col.name, dtype, True))
-            fields.append(T.StructField(f"{col.name}__hex", T.StringType(), True))
-        else:
-            fields.append(T.StructField(col.name, dtype, col.nullable))
+        fields.append(T.StructField(col.name, dtype, col.nullable))
     return T.StructType(fields)
 
 

@@ -7,7 +7,7 @@ Spark's widest exact numeric is ``DecimalType(38,0)`` (10^38-1 ≈
 
 - canonical column: ``DecimalType(38,0)``, overflow fails loudly;
 - optional lossless shadow: ``<col>__hex`` (0x-prefixed, lowercase,
-  minimal-width hex string) written at ingest for values that must
+  minimal-width hex string) that a query derives for values that must
   round-trip at full width;
 - full-width arithmetic, when needed, runs on the shadow via an
   Arrow-batched Pandas UDF over Python ints (exact at any width).
@@ -65,8 +65,7 @@ def from_hex_checked(col: Column) -> Column:
 
 def with_hex_shadow(df: DataFrame, cols: list[str]) -> DataFrame:
     """Attach a lossless ``<col>__hex`` shadow next to each canonical
-    decimal column (the ingest-side option described in the schema
-    compiler)."""
+    decimal column."""
     for c in cols:
         df = df.withColumn(f"{c}__hex", to_hex_shadow(F.col(c)))
     return df

@@ -87,8 +87,6 @@ def get_spark(
         # TIMESTAMP(NANOS) parquet columns surface as LongType instead
         # of erroring (converted back to timestamps in plans/tables.py)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # let Python data sources (subgraph connector) receive filters
-        .config("spark.sql.python.filterPushdown.enabled", "true")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -52,12 +52,11 @@ What the sync engine uses, and from where:
   the driver through :func:`bucket_ids`, the same XXH64 run over numpy
   ``uint64`` lanes for a whole batch at once;
 - driver-side reads that start no Spark job: ``read_arrow`` (the
-  watermark row, the change log, the proposal-state refresh),
-  ``column_max`` (append-only high-water marks) and ``num_rows``
-  (bulk-hydration counts);
+  watermark row, the change log, the proposal-state refresh, and the
+  buckets a rollup increment touches), ``column_max`` (append-only
+  high-water marks) and ``num_rows`` (bulk-hydration counts);
 - reorg recovery: ``restore``;
-- Spark reads: ``read``, called by the graph store, by the rollup
-  merge (the current rows its increment touches) and by the
+- Spark reads: ``read``, called by the graph store and by the
   benchmark's replica check; ``overwrite`` is the graph store's
   snapshot replace;
 - retention: ``vacuum`` (expires old versions and unreferenced files).

@@ -34,12 +34,12 @@ buckets one file each and clears the delta list. Deltas therefore stay
 a bounded share of the table, and each row is rewritten O(1) times
 amortised, as in an LSM tree's merge.
 
-A DataFrame (a rollup increment, a bulk hydration) is projected onto
-the schema in Spark and collected once with ``toArrow()`` into that
-same merge, so its callers send only batches that fit on the driver.
-Into a table with no files it is written instead, through one shuffle
-and without leaving Spark: the partition-parallel DataSource's bulk
-hydration lands there.
+A DataFrame is projected onto the schema in Spark and collected once
+with ``toArrow()`` into that same merge, so its callers send only
+batches that fit on the driver. Into a table with no files it is
+written instead, through one shuffle and without leaving Spark: the
+partition-parallel DataSource's bulk hydration, the one DataFrame
+caller in the package, lands there.
 """
 
 from __future__ import annotations

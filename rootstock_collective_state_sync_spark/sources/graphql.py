@@ -20,9 +20,12 @@ is injectable (any ``(url, json_body) -> dict`` callable) so tests and
 air-gapped runs never open sockets.
 
 Keyset pagination (``subgraphSyncer.ts:24-37``): ``first: N`` +
-``id_gt: cursor`` pages until a short page arrives. The Spark
-DataSource (:mod:`.subgraph_source`) parallelizes this by id-range
-partitioning; this module provides the single-range loop.
+``id_gt: cursor`` pages until a short page arrives. The caller's
+``where`` (the engine's changelog, append-only and look-back filters)
+rides along on every page; the cursor and an optional exclusive
+``id_lt`` bound own the id range. The Spark DataSource
+(:mod:`.subgraph_source`) walks disjoint id ranges in parallel; this
+module provides the single-range loop.
 """
 
 from __future__ import annotations
@@ -156,22 +159,13 @@ def first_page_request(
     would issue — factored out so callers can prefetch page 1 of many
     strategies in ONE batched document (cross-strategy coalescing,
     T7/X6; reference ``batchExecutor.ts:78-131``) and hand the records
-    back to the per-strategy pagination loop for any remaining pages."""
-    w = dict(where or {})
-    # Intersect with any caller-pushed id bounds instead of clobbering
-    # them (a pushed `id > X` must survive the cursor walk): ids are
-    # compared lexicographically by the indexer — the same ordering the
-    # id-range partitioner and the keyset cursor already rely on — so
-    # max/min of the strings is the exact intersection.
-    w["id_gt"] = (
-        max(str(w["id_gt"]), start_cursor) if "id_gt" in w else start_cursor
-    )
+    back to the per-strategy pagination loop for any remaining pages.
+
+    The cursor and the bound are the page's id range: a ``where`` that
+    names ``id_gt`` or ``id_lt`` itself is overridden."""
+    w = {**(where or {}), "id_gt": start_cursor}
     if id_upper_bound is not None:
-        w["id_lt"] = (
-            min(str(w["id_lt"]), id_upper_bound)
-            if "id_lt" in w
-            else id_upper_bound
-        )
+        w["id_lt"] = id_upper_bound
     return create_entity_query(
         schema,
         entity_name,

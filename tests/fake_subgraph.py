@@ -171,17 +171,6 @@ def failing_batch_transport(url: str, body: dict) -> dict:
     return transport(url, body)
 
 
-#: request log + counting wrapper for the limit-pushdown golden test
-#: (lives here so pytest's module object and the reader's importlib
-#: resolution of "tests.fake_subgraph:counting_transport" share state)
-LIMIT_REQUESTS: list[str] = []
-
-
-def counting_transport(url: str, body: dict) -> dict:
-    LIMIT_REQUESTS.append(body["query"])
-    return transport(url, body)
-
-
 def failing_transport(url: str, body: dict) -> dict:
     """Transport that always errors — exercises planning-probe
     fallback paths."""

@@ -1,12 +1,12 @@
 """Parity of the columnar page converter with the row converter.
 
 ``records_to_arrow`` turns GraphQL pages into the Arrow table the driver
-merge takes. ``records_to_rows`` (the DataSource reader's converter)
-followed by ``prepare_rows`` is the reference: over every primitive,
-arrays with null elements, FK values as ``{id}`` objects and as flat
-ids, missing and null values, odd-length hex and ``Integer`` values
-sent as strings, both must give the same table. No Spark session is
-started.
+merge takes and the DataSource reader yields. ``records_to_rows`` (a
+cell-by-cell converter) followed by ``prepare_rows`` is the reference:
+over every primitive, arrays with null elements, FK values as ``{id}``
+objects and as flat ids, missing and null values, odd-length hex and
+``Integer`` values sent as strings, both must give the same table. No
+Spark session is started.
 """
 
 from __future__ import annotations

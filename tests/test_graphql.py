@@ -5,8 +5,9 @@ Builder coverage mirrors the reference's largest suite
 ``orderBy/orderDirection``, ``where`` rendering incl. nested objects
 and arrays, unknown-entity error. Client coverage mirrors
 ``batching.test.ts``: N queries -> 1 HTTP, ``_meta``, batch-failure
-fallback. The DataSource test runs the real partition-parallel
-pagination end-to-end against the canned transport.
+fallback. The DataSource tests run the real partition-parallel
+pagination end-to-end against the canned transport; filters, order
+and limits over the source are Spark's.
 """
 
 from __future__ import annotations
@@ -267,7 +268,7 @@ def test_datasource_types_and_fk_flattening(subgraph_df):
     assert row.blockNumber == Decimal(1000)
 
 
-def test_datasource_filter_pushdown_results(spark, subgraph_df):
+def test_datasource_filter_results(spark, subgraph_df):
     from pyspark.sql import functions as F
 
     got = subgraph_df.filter(F.col("support") == 1).collect()
@@ -275,324 +276,39 @@ def test_datasource_filter_pushdown_results(spark, subgraph_df):
     assert len(got) == len(want)
 
 
-def test_datasource_limit_option_fetches_one_page(spark):
-    """Golden limit pushdown: a limit-5 single-partition read issues
-    exactly ONE HTTP request whose wire query asks `first: 5` — never
-    a full page-size crawl trimmed client-side."""
+def test_reader_yields_the_driver_walks_arrow_batches(ctx):
+    """The reader converts pages with ``records_to_arrow``, the
+    converter the driver-side sync uses: one partition yields Arrow
+    record batches of the table's Arrow schema holding exactly that
+    converter's rows."""
+    import pyarrow as pa
+
+    from rootstock_collective_state_sync_spark.config import compile_entity
+    from rootstock_collective_state_sync_spark.sinks.table import arrow_schema
     from rootstock_collective_state_sync_spark.sources.subgraph_source import (
-        SubgraphDataSource,
         SubgraphReader,
+        records_to_arrow,
     )
 
-    # reader-level golden (driver-side, so the request log is visible)
-    fake_subgraph.LIMIT_REQUESTS.clear()
+    entity = ctx["VoteCast"]
     r = SubgraphReader(
         {
             "url": "fake://endpoint",
             "config_path": str(FIXTURE),
             "entity": "VoteCast",
             "page_size": "7",
-            "limit": "5",
-            "transport": "tests.fake_subgraph:counting_transport",
-        }
-    )
-    [part] = r.partitions()
-    rows = list(r.read(part))
-    assert len(rows) == 5
-    reqs = fake_subgraph.LIMIT_REQUESTS
-    assert len(reqs) == 1, "limit-5 read must be one HTTP round-trip"
-    assert "first: 5" in reqs[0]
-
-    # end-to-end through the Spark scan (executor-side transport)
-    spark.dataSource.register(SubgraphDataSource)
-    df = (
-        spark.read.format("subgraph")
-        .option("url", "fake://endpoint")
-        .option("config_path", str(FIXTURE))
-        .option("entity", "VoteCast")
-        .option("page_size", 7)
-        .option("limit", 5)
-        .option("transport", "tests.fake_subgraph:transport")
-        .load()
-    )
-    assert df.count() == 5
-
-
-def test_datasource_order_by_option_pushes_remote_sort(spark):
-    """Golden order pushdown (reference subgraphQueryBuilder.ts:181-184):
-    an order_by+limit read issues ONE wire request carrying
-    `orderBy/orderDirection`, and rows arrive pre-ordered — the top-N
-    scan never fetches the full table to sort in Spark."""
-    from rootstock_collective_state_sync_spark.sources.subgraph_source import (
-        SubgraphDataSource,
-        SubgraphReader,
-    )
-
-    # reader-level golden (driver-side request log)
-    fake_subgraph.LIMIT_REQUESTS.clear()
-    r = SubgraphReader(
-        {
-            "url": "fake://endpoint",
-            "config_path": str(FIXTURE),
-            "entity": "VoteCast",
-            "limit": "3",
-            "order_by": "blockNumber",
-            "order_direction": "desc",
-            "transport": "tests.fake_subgraph:counting_transport",
-        }
-    )
-    [part] = r.partitions()
-    rows = list(r.read(part))
-    assert len(rows) == 3
-    reqs = fake_subgraph.LIMIT_REQUESTS
-    assert len(reqs) == 1, "ordered top-3 read must be one HTTP round-trip"
-    assert "first: 3" in reqs[0]
-    assert "orderBy: blockNumber" in reqs[0]
-    assert "orderDirection: desc" in reqs[0]
-
-    # end-to-end: rows arrive pre-ordered, matching the true top-3
-    spark.dataSource.register(SubgraphDataSource)
-    df = (
-        spark.read.format("subgraph")
-        .option("url", "fake://endpoint")
-        .option("config_path", str(FIXTURE))
-        .option("entity", "VoteCast")
-        .option("limit", 3)
-        .option("order_by", "blockNumber")
-        .option("order_direction", "desc")
-        .option("transport", "tests.fake_subgraph:transport")
-        .load()
-    )
-    got = [int(r.blockNumber) for r in df.collect()]
-    want = sorted(
-        (int(r["blockNumber"]) for r in fake_subgraph.universe()),
-        reverse=True,
-    )[:3]
-    assert got == want
-
-
-def test_datasource_order_by_requires_limit():
-    from rootstock_collective_state_sync_spark.sources.subgraph_source import (
-        SubgraphReader,
-    )
-
-    base = {
-        "url": "fake://endpoint",
-        "config_path": str(FIXTURE),
-        "entity": "VoteCast",
-        "order_by": "blockNumber",
-    }
-    with pytest.raises(ValueError, match="order_by requires limit"):
-        SubgraphReader(dict(base))  # no limit
-    with pytest.raises(ValueError, match="order_direction"):
-        SubgraphReader(
-            dict(base, limit="5", order_direction="descending")
-        )
-
-
-def test_multi_partition_ordered_read_globally_ordered(spark):
-    """r08 verdict item 8: ordered reads compose with the parallel
-    scan. With num_partitions=4, each id-range partition issues its
-    own remote-sorted `first: limit` shortlist (4 wire requests, each
-    carrying orderBy + its id bounds) and read_subgraph_ordered's
-    TakeOrderedAndProject merge returns the exact global top-N in
-    order — identical to the single-partition read."""
-    from rootstock_collective_state_sync_spark.sources.subgraph_source import (
-        SubgraphDataSource,
-        SubgraphReader,
-        read_subgraph_ordered,
-    )
-
-    # reader-level golden: 4 partitions -> 4 ordered range requests
-    fake_subgraph.LIMIT_REQUESTS.clear()
-    r = SubgraphReader(
-        {
-            "url": "fake://endpoint",
-            "config_path": str(FIXTURE),
-            "entity": "VoteCast",
-            "limit": "5",
-            "num_partitions": "4",
-            "order_by": "blockNumber",
-            "order_direction": "desc",
-            "id_partitioning": "static",  # this golden pins the static wire shapes
-            "transport": "tests.fake_subgraph:counting_transport",
-        }
-    )
-    parts = r.partitions()
-    assert len(parts) == 4
-    shortlists = [list(r.read(p)) for p in parts]
-    reqs = fake_subgraph.LIMIT_REQUESTS
-    assert len(reqs) == 4, "one ordered request per id-range partition"
-    for req in reqs:
-        assert "orderBy: blockNumber" in req
-        assert "first: 5" in req
-    # interior partitions carry their id bounds on the wire
-    assert sum("id_gt:" in req for req in reqs) == 3  # all but the first
-    assert sum("id_lt:" in req for req in reqs) == 3  # all but the last
-    # every shortlist is that range's own top-5
-    assert all(len(s) <= 5 for s in shortlists)
-
-    # end-to-end: the merged result equals the true global top-5
-    spark.dataSource.register(SubgraphDataSource)
-    df = read_subgraph_ordered(
-        spark,
-        url="fake://endpoint",
-        config_path=str(FIXTURE),
-        entity="VoteCast",
-        order_by="blockNumber",
-        order_direction="desc",
-        limit=5,
-        num_partitions=4,
-        transport="tests.fake_subgraph:transport",
-    )
-    got = [int(row.blockNumber) for row in df.collect()]
-    want = sorted(
-        (int(rec["blockNumber"]) for rec in fake_subgraph.universe()),
-        reverse=True,
-    )[:5]
-    assert got == want
-    # the merge is a top-N, not a global sort
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "simple"
-    )
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_pushed_id_bound_intersects_partition_range(spark):
-    """r09 advice (subgraph_source.py:300): a pushed `id > X` filter
-    must survive the per-partition id-range bounds — the reader
-    intersects (max of lowers, min of uppers) instead of clobbering.
-    Covers BOTH the ordered path (partition bounds written into
-    `where`) and the keyset path (`first_page_request`'s cursor)."""
-    from pyspark.sql.datasource import GreaterThan, LessThan
-
-    from rootstock_collective_state_sync_spark.sources.subgraph_source import (
-        SubgraphDataSource,
-        SubgraphReader,
-    )
-
-    cutoff = "0x80000000"
-    want = [r for r in fake_subgraph.universe() if r["id"] > cutoff]
-    assert 0 < len(want) < fake_subgraph.N_VOTES  # cutoff is interior
-
-    # keyset path, reader-level: partition 0's "0x00" cursor and
-    # partition 1's lower bound must both lose to the pushed bound
-    r = SubgraphReader(
-        {
-            "url": "fake://endpoint",
-            "config_path": str(FIXTURE),
-            "entity": "VoteCast",
-            "page_size": "7",
-            "num_partitions": "4",
+            "num_partitions": "1",
             "transport": "tests.fake_subgraph:transport",
         }
     )
-    list(r.pushFilters([GreaterThan(("id",), bytes.fromhex(cutoff[2:]))]))
-    assert r.pushed_where == {"id_gt": cutoff}
-    rows = [row for p in r.partitions() for row in r.read(p)]
-    got_ids = sorted("0x" + bytes(row[0]).hex() for row in rows)
-    assert got_ids == sorted(rec["id"] for rec in want)
-
-    # ordered path, reader-level: pushed id_lt must shrink the last
-    # partition's unbounded range (and id_gt the first's)
-    fake_subgraph.LIMIT_REQUESTS.clear()
-    r2 = SubgraphReader(
-        {
-            "url": "fake://endpoint",
-            "config_path": str(FIXTURE),
-            "entity": "VoteCast",
-            "limit": "40",
-            "num_partitions": "2",
-            "order_by": "blockNumber",
-            "order_direction": "asc",
-            "transport": "tests.fake_subgraph:counting_transport",
-        }
-    )
-    list(
-        r2.pushFilters(
-            [
-                GreaterThan(("id",), bytes.fromhex(cutoff[2:])),
-                LessThan(("id",), bytes.fromhex("c0000000")),
-            ]
-        )
-    )
-    rows2 = [row for p in r2.partitions() for row in r2.read(p)]
-    got2 = sorted("0x" + bytes(row[0]).hex() for row in rows2)
-    want2 = sorted(
-        rec["id"]
-        for rec in fake_subgraph.universe()
-        if cutoff < rec["id"] < "0xc0000000"
-    )
-    assert got2 == want2
-    # golden: partition 0's wire request carries the PUSHED lower bound
-    # (max("0x00"-cursor, pushed)), partition 1 its own lower "0x80"
-    reqs = fake_subgraph.LIMIT_REQUESTS
-    probes = [q for q in reqs if "first: 1," in q]
-    reqs = [q for q in reqs if "first: 40" in q]
-    # the adaptive planning probes must ALSO carry the pushed bounds
-    # (min/max within the predicate, not the whole table)
-    assert all('id_gt: "0x80000000"' in q for q in probes)
-    assert len(reqs) == 2
-    # every wire bound is AT LEAST as tight as the pushed predicate
-    # (adaptive partition bounds probed within the predicate may be
-    # tighter; they must never be looser)
-    import re as _re
-
-    gts = [_re.search(r'id_gt: "([^"]+)"', q).group(1) for q in reqs]
-    lts = [_re.search(r'id_lt: "([^"]+)"', q).group(1) for q in reqs]
-    assert all(g >= cutoff for g in gts), gts
-    assert all(lt <= "0xc0000000" for lt in lts), lts
-
-    # end-to-end through the Spark scan: filter pushed by Catalyst
-    from pyspark.sql import functions as F
-
-    spark.dataSource.register(SubgraphDataSource)
-    df = (
-        spark.read.format("subgraph")
-        .option("url", "fake://endpoint")
-        .option("config_path", str(FIXTURE))
-        .option("entity", "VoteCast")
-        .option("page_size", 7)
-        .option("num_partitions", 4)
-        .option("transport", "tests.fake_subgraph:transport")
-        .load()
-        .filter(F.col("id") > F.lit(bytes.fromhex(cutoff[2:])))
-    )
-    got_e2e = sorted("0x" + bytes(row.id).hex() for row in df.collect())
-    assert got_e2e == sorted(rec["id"] for rec in want)
-
-
-def test_push_filters_translation(ctx):
-    from pyspark.sql.datasource import EqualTo, GreaterThanOrEqual, In, IsNull
-
-    from rootstock_collective_state_sync_spark.sources.subgraph_source import (
-        SubgraphReader,
-    )
-
-    r = SubgraphReader(
-        {
-            "url": "fake://x",
-            "config_path": str(FIXTURE),
-            "entity": "VoteCast",
-        }
-    )
-    remaining = list(
-        r.pushFilters(
-            [
-                EqualTo(("support",), 1),
-                GreaterThanOrEqual(("blockNumber",), Decimal(1010)),
-                In(("support",), (0, 1)),
-                IsNull(("reason",)),           # not pushable
-                EqualTo(("nope",), 5),          # undeclared column
-            ]
-        )
-    )
-    assert r.pushed_where == {
-        "support": 1,
-        "blockNumber_gte": 1010,
-        "support_in": [0, 1],
-    }
-    assert len(remaining) == 2  # IsNull + undeclared stay Spark-side
+    (partition,) = r.partitions()
+    batches = list(r.read(partition))
+    schema = arrow_schema(compile_entity(ctx, entity))
+    assert len(batches) == 6  # 40 records in pages of 7
+    for b in batches:
+        assert isinstance(b, pa.RecordBatch) and b.schema == schema
+    got = pa.Table.from_batches(batches)
+    assert got.equals(records_to_arrow(ctx, entity, fake_subgraph.universe()))
 
 
 # ---- endpoint construction + API-key masking (C7/C8) -----------------------
@@ -647,47 +363,6 @@ def test_client_repr_masks_key():
     assert "***" in repr(client)
 
 
-def test_datasource_filter_order_limit_compose(spark):
-    """All three pushdowns on one read: the wire query carries the
-    translated where-filter AND orderBy/orderDirection AND first:N,
-    and the rows are the true filtered top-N."""
-    from rootstock_collective_state_sync_spark.sources.subgraph_source import (
-        SubgraphReader,
-    )
-    from pyspark.sql.datasource import EqualTo
-
-    fake_subgraph.LIMIT_REQUESTS.clear()
-    r = SubgraphReader(
-        {
-            "url": "fake://endpoint",
-            "config_path": str(FIXTURE),
-            "entity": "VoteCast",
-            "limit": "2",
-            "order_by": "blockNumber",
-            "order_direction": "desc",
-            "transport": "tests.fake_subgraph:counting_transport",
-        }
-    )
-    leftover = list(r.pushFilters([EqualTo(("support",), 1)]))
-    assert leftover == []  # fully pushed
-    [part] = r.partitions()
-    rows = list(r.read(part))
-    assert len(rows) == 2
-    [req] = fake_subgraph.LIMIT_REQUESTS
-    assert "first: 2" in req and "orderBy: blockNumber" in req
-    assert "support: 1" in req
-    want = sorted(
-        (int(rec["blockNumber"]) for rec in fake_subgraph.universe()
-         if rec["support"] == 1),
-        reverse=True,
-    )[:2]
-    # schema: blockNumber arrives as Decimal at a known column index —
-    # compare via the record count + ordering through the fake's sort
-    got = sorted((int(x[4]) if str(x[4]).isdigit() else None
-                  for x in rows), reverse=True)
-    assert len(got) == len(want)
-
-
 def test_id_range_bounds_byte_for_byte_goldens():
     """r10 verdict item 9: pin the static first-byte id-space split
     exactly — boundary strings are wire-visible (they become id_gt /
@@ -712,118 +387,6 @@ def test_id_range_bounds_byte_for_byte_goldens():
         b = _id_range_bounds(n)
         assert b[0][0] == "0x00" and b[-1][1] is None
         assert all(b[i][1] == b[i + 1][0] for i in range(len(b) - 1))
-
-
-def test_keyset_both_pushed_bounds_wire_golden():
-    """BOTH id_gt and id_lt pushed simultaneously on the KEYSET path
-    at num_partitions=4: every partition's first wire request must
-    carry max(partition_lower, pushed_gt) / min(partition_upper,
-    pushed_lt) byte-for-byte, and the row union must equal the
-    predicate's exact result with no duplicates."""
-    import re
-
-    from pyspark.sql.datasource import GreaterThan, LessThan
-
-    from rootstock_collective_state_sync_spark.sources.subgraph_source import (
-        SubgraphReader,
-    )
-
-    lo, hi = "0x30000000", "0xd0000000"
-    r = SubgraphReader(
-        {
-            "url": "fake://endpoint",
-            "config_path": str(FIXTURE),
-            "entity": "VoteCast",
-            "page_size": "5",
-            "num_partitions": "4",
-            "id_partitioning": "static",  # golden pins 0x40/0x80/0xc0
-            "transport": "tests.fake_subgraph:transport",
-        }
-    )
-    leftovers = list(
-        r.pushFilters(
-            [
-                GreaterThan(("id",), bytes.fromhex(lo[2:])),
-                LessThan(("id",), bytes.fromhex(hi[2:])),
-            ]
-        )
-    )
-    assert leftovers == []  # both bounds consumed by the connector
-    fake_subgraph.CALLS.clear()
-    rows, first_call_idx = [], []
-    for p in r.partitions():
-        first_call_idx.append(len(fake_subgraph.CALLS))
-        rows.extend(r.read(p))
-    want = [rec["id"] for rec in fake_subgraph.universe() if lo < rec["id"] < hi]
-    got = sorted("0x" + bytes(row[0]).hex() for row in rows)
-    assert got == sorted(want) and len(got) == len(set(got))
-
-    # byte-for-byte wire goldens: partition bounds at N=4 are
-    # 0x40/0x80/0xc0; the pushed bounds win exactly where they are
-    # tighter
-    expected = [
-        (lo, "0x40"),          # p0: pushed lower wins, partition upper
-        ("0x40", "0x80"),      # p1: partition bounds strictly inside
-        ("0x80", "0xc0"),      # p2: partition bounds strictly inside
-        ("0xc0", hi),          # p3: partition lower, pushed upper wins
-    ]
-    for i, (want_gt, want_lt) in enumerate(expected):
-        q = fake_subgraph.CALLS[first_call_idx[i]]
-        m_gt = re.search(r'id_gt: "([^"]+)"', q)
-        m_lt = re.search(r'id_lt: "([^"]+)"', q)
-        assert m_gt and m_gt.group(1) == want_gt, (i, q)
-        assert m_lt and m_lt.group(1) == want_lt, (i, q)
-
-
-def test_skewed_prefix_ids_static_split_documented(tmp_path):
-    """Skewed-prefix behavior of the static first-byte split, pinned:
-    when every id shares one first byte, ALL rows land in that byte's
-    partition — correctness holds (complete, disjoint union: the other
-    partitions issue one empty-ranged request each and return zero
-    rows) but scan parallelism collapses to the occupied ranges. The
-    remedy at 100 TB is raising num_partitions (the split is uniform
-    over bytes, so only a pathological single-prefix tenant degrades)
-    — documented here rather than hidden."""
-    import json as _json
-
-    from rootstock_collective_state_sync_spark.sources.subgraph_source import (
-        SubgraphReader,
-    )
-
-    skewed = [
-        {
-            "id": f"0x07{i:06x}",
-            "voter": {"id": f"0x{'aa' * 19}{i % 7:02x}"},
-            "proposal": {"id": f"0x{'bb' * 31}{i % 3:02x}"},
-            "support": i % 3,
-            "weight": str(10**20 + i),
-            "reason": f"reason-{i}",
-            "blockNumber": str(1000 + i),
-        }
-        for i in range(17)
-    ]
-    state = tmp_path / "skewed.json"
-    state.write_text(_json.dumps({"VoteCast": skewed}))
-    r = SubgraphReader(
-        {
-            "url": f"fake-state://{state}",
-            "config_path": str(FIXTURE),
-            "entity": "VoteCast",
-            "page_size": "5",
-            "num_partitions": "4",
-            "id_partitioning": "static",
-            "transport": "tests.fake_subgraph:state_transport",
-        }
-    )
-    per_partition = [list(r.read(p)) for p in r.partitions()]
-    # N=4 ranges: [0x00,0x40) [0x40,0x80) [0x80,0xc0) [0xc0,..) —
-    # every 0x07-prefixed id belongs to partition 0, the others are
-    # provably empty
-    assert [len(rows) for rows in per_partition] == [17, 0, 0, 0]
-    got = sorted(
-        "0x" + bytes(row[0]).hex() for rows in per_partition for row in rows
-    )
-    assert got == sorted(rec["id"] for rec in skewed)
 
 
 def test_adaptive_id_bounds_unit_goldens():
@@ -895,14 +458,17 @@ def test_adaptive_split_balances_skewed_prefix(tmp_path):
         }
     )
     per_partition = [list(r.read(p)) for p in r.partitions()]
-    sizes = [len(rows) for rows in per_partition]
+    sizes = [sum(b.num_rows for b in batches) for batches in per_partition]
     assert len(sizes) == 4
     # balance: every partition holds at least half its ideal share
     # (vs the static split's [64, 0, 0, 0])
     assert min(sizes) >= (n / 4) * 0.5, sizes
     # exact complete disjoint union
     got = sorted(
-        "0x" + bytes(row[0]).hex() for rows in per_partition for row in rows
+        "0x" + v.hex()
+        for batches in per_partition
+        for b in batches
+        for v in b.column("id").to_pylist()
     )
     assert got == sorted(rec["id"] for rec in skewed)
     assert len(got) == len(set(got))
@@ -936,14 +502,8 @@ def test_adaptive_split_live_shaped_skewed_fixture(tmp_path):
     its cursor at id_gt "0x00" and real tenants mint ids under one
     contract prefix). Asserts (a) >= 0.5 per-partition balance where
     the static first-byte split would give [100k, 0, 0, 0], (b) the
-    exact complete disjoint row union, and (c) with a pushed `id_gt`
-    predicate the probed split INTERSECTS it — every partition's wire
-    lower bound is at least as tight as the pushed cutoff and the
-    union is exactly the predicate's rows."""
+    exact complete disjoint row union."""
     import json as _json
-    import re as _re
-
-    from pyspark.sql.datasource import GreaterThan
 
     from rootstock_collective_state_sync_spark.sources.subgraph_source import (
         SubgraphReader,
@@ -966,47 +526,25 @@ def test_adaptive_split_live_shaped_skewed_fixture(tmp_path):
     state = tmp_path / "live_skewed.json"
     state.write_text(_json.dumps({"VoteCast": recs}))
 
-    def reader() -> SubgraphReader:
-        return SubgraphReader(
-            {
-                "url": f"fake-state://{state}",
-                "config_path": str(FIXTURE),
-                "entity": "VoteCast",
-                "page_size": "25000",
-                "num_partitions": "4",
-                "transport": "tests.fake_subgraph:state_transport",
-            }
-        )
-
-    r = reader()
-    parts = r.partitions()
-    per_partition = [list(r.read(p)) for p in parts]
-    sizes = [len(rows) for rows in per_partition]
+    r = SubgraphReader(
+        {
+            "url": f"fake-state://{state}",
+            "config_path": str(FIXTURE),
+            "entity": "VoteCast",
+            "page_size": "25000",
+            "num_partitions": "4",
+            "transport": "tests.fake_subgraph:state_transport",
+        }
+    )
+    per_partition = [list(r.read(p)) for p in r.partitions()]
+    sizes = [sum(b.num_rows for b in batches) for batches in per_partition]
     assert len(sizes) == 4
     assert min(sizes) >= (n / 4) * 0.5, sizes  # static split: [n,0,0,0]
     got = sorted(
-        "0x" + bytes(row[0]).hex() for rows in per_partition for row in rows
+        "0x" + v.hex()
+        for batches in per_partition
+        for b in batches
+        for v in b.column("id").to_pylist()
     )
     assert got == sorted(rec["id"] for rec in recs)
     assert len(got) == len(set(got))
-
-    # pushed id_gt predicate: probe runs WITHIN it, split intersects it
-    cutoff = f"0x{prefix}{60_000:06x}"
-    r2 = reader()
-    leftover = list(
-        r2.pushFilters([GreaterThan(("id",), bytes.fromhex(cutoff[2:]))])
-    )
-    assert leftover == []
-    parts2 = r2.partitions()
-    # every partition's effective lower bound is at least the cutoff:
-    # partition 0 opens at "0x00" but the reader maxes it with the
-    # pushed id_gt; later partitions' probed lowers must sit inside
-    # the predicate's range (intersection, not the whole id space)
-    for p in parts2[1:]:
-        assert p.lower > cutoff, (p.lower, cutoff)
-    rows2 = [row for p in parts2 for row in r2.read(p)]
-    got2 = sorted("0x" + bytes(row[0]).hex() for row in rows2)
-    want2 = sorted(rec["id"] for rec in recs if rec["id"] > cutoff)
-    assert got2 == want2
-    sizes2 = [len(list(r2.read(p))) for p in parts2]
-    assert min(sizes2) >= (len(want2) / 4) * 0.5, sizes2

@@ -1,5 +1,6 @@
 """Incremental rollup: folding N increments must equal a full
-recompute, in batch and through the streaming foreachBatch wiring."""
+recompute, in batch and through the streaming foreachBatch wiring, and
+a fold reads the current rows on the driver."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ from rootstock_collective_state_sync_spark.operators.rollup import (
     stream_into_rollup,
 )
 from rootstock_collective_state_sync_spark.sinks import VersionedTable
+from tests.test_upsert_paths import jobs_started
 
 DIMS = ["hour", "event_type"]
 MEASURES = [
@@ -99,6 +101,29 @@ def test_increment_touches_only_its_keys(spark, rollup_table):
     v2 = _table_state(rollup_table)
     assert v2[(_t(9), "view")] == v1[(_t(9), "view")]
     assert v2[(_t(9), "click")] == (2, 109, 9, 100)
+
+
+def test_fold_into_deltas_reads_on_the_driver(spark, rollup_table, monkeypatch):
+    """Past the first merge the table holds deltas; the next fold starts
+    only the increment's aggregate (its map stage and its collect) and
+    reads the current rows on the driver, never through a Spark scan."""
+    for batch in BATCHES[:2]:
+        merge_rollup(rollup_table, _events(spark, batch), DIMS, MEASURES)
+    assert rollup_table.manifest().deltas
+    increment = _events(spark, BATCHES[2])
+    with monkeypatch.context() as m:
+        m.setattr(VersionedTable, "read", lambda *a, **k: pytest.fail("Spark read of the rollup"))
+        before = jobs_started(spark)
+        merge_rollup(rollup_table, increment, DIMS, MEASURES)
+        assert jobs_started(spark) - before <= 2
+    assert _table_state(rollup_table) == _full_recompute(spark)
+
+
+def test_dims_must_be_the_merge_keys(spark, rollup_table):
+    v0 = rollup_table.current_version()
+    with pytest.raises(ValueError, match="merge keys"):
+        merge_rollup(rollup_table, _events(spark, BATCHES[0]), ["event_type", "hour"], MEASURES)
+    assert rollup_table.current_version() == v0
 
 
 def test_streaming_fold_equals_batch(spark, rollup_table, tmp_path):

@@ -1,19 +1,14 @@
-"""Full-width uint256 ingest option: <col>__hex shadow columns,
-NULL-canonical overflow handling, and the DataSource round trip."""
+"""uint256 ingest policy: a BigInt beyond Decimal(38,0) fails loudly
+rather than landing truncated."""
 
 from __future__ import annotations
 
-from decimal import Decimal
 from pathlib import Path
 
 import pytest
 
 from rootstock_collective_state_sync_spark.config import load_entities
 from rootstock_collective_state_sync_spark.config.schema_compiler import compile_entity
-from rootstock_collective_state_sync_spark.functions.uint256 import (
-    from_hex_checked,
-    hex_add,
-)
 from rootstock_collective_state_sync_spark.sources.subgraph_source import (
     records_to_rows,
 )
@@ -26,44 +21,6 @@ HUGE = 2**200  # far beyond Decimal(38,0)
 @pytest.fixture(scope="module")
 def ctx():
     return load_entities(FIXTURE)
-
-
-def test_shadow_schema_adds_hex_columns(ctx):
-    entity = ctx["VoteCast"]
-    plain = compile_entity(ctx, entity)
-    shadow = compile_entity(ctx, entity, hex_shadow=True)
-    assert "weight__hex" not in plain.fieldNames()
-    names = shadow.fieldNames()
-    assert "weight__hex" in names
-    # shadow sits right after its canonical column
-    assert names.index("weight__hex") == names.index("weight") + 1
-    # FK columns never get shadows (keys, not amounts)
-    assert not any(n.endswith("__hex") and n.startswith("voter") for n in names)
-
-
-def test_overflow_lands_as_null_plus_hex(ctx, spark):
-    entity = ctx["VoteCast"]
-    rec = {
-        "id": "0x01",
-        "voter": {"id": "0x" + "aa" * 20},
-        "proposal": {"id": "0x" + "bb" * 32},
-        "support": 1,
-        "weight": str(HUGE),
-        "reason": "r",
-        "blockNumber": "7",
-    }
-    rows = records_to_rows(ctx, entity, [rec], hex_shadow=True)
-    df = spark.createDataFrame(rows, compile_entity(ctx, entity, hex_shadow=True))
-    r = df.collect()[0]
-    assert r["weight"] is None and r["weight__hex"] == hex(HUGE)
-    assert r["blockNumber"] == Decimal(7) and r["blockNumber__hex"] == "0x7"
-    # the shadow round-trips: full-width arithmetic then checked narrow
-    doubled = df.select(
-        from_hex_checked(hex_add("weight__hex", "weight__hex")).alias("d"),
-        from_hex_checked("blockNumber__hex").alias("b"),
-    ).collect()[0]
-    assert doubled["d"] is None  # still out of canonical range
-    assert doubled["b"] == Decimal(7)
 
 
 def test_without_shadow_overflow_is_loud(ctx, spark):
@@ -80,27 +37,3 @@ def test_without_shadow_overflow_is_loud(ctx, spark):
     rows = records_to_rows(ctx, entity, [rec])
     with pytest.raises(Exception):
         spark.createDataFrame(rows, compile_entity(ctx, entity)).collect()
-
-
-def test_datasource_shadow_roundtrip(spark):
-    from rootstock_collective_state_sync_spark.sources.subgraph_source import (
-        SubgraphDataSource,
-    )
-
-    spark.dataSource.register(SubgraphDataSource)
-    df = (
-        spark.read.format("subgraph")
-        .option("url", "fake://x")
-        .option("config_path", str(FIXTURE))
-        .option("entity", "VoteCast")
-        .option("page_size", 10)
-        .option("num_partitions", 2)
-        .option("uint256_shadow", "true")
-        .option("transport", "tests.fake_subgraph:transport")
-        .load()
-    )
-    rows = df.select("weight", "weight__hex").collect()
-    assert len(rows) == 40
-    for r in rows:  # fixture weights are ~1e20: in range, both forms
-        assert r["weight"] is not None
-        assert int(r["weight__hex"], 16) == int(r["weight"])
