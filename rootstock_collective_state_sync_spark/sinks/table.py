@@ -843,7 +843,13 @@ class TableCatalog:
         return created
 
 
-def with_retry(fn, max_retries: int = 3, initial_delay: float = 0.1):
+#: :func:`with_retry`'s retries and first delay (reference defaults,
+#: ``dbUpsert.ts:25-48``)
+COMMIT_RETRIES = 3
+COMMIT_RETRY_DELAY_S = 0.1
+
+
+def with_retry(fn):
     """Exponential-backoff retry around a commit-ish callable
     (reference ``withRetry``, ``dbUpsert.ts:25-48``: delay doubles per
     attempt)."""
@@ -852,7 +858,7 @@ def with_retry(fn, max_retries: int = 3, initial_delay: float = 0.1):
         try:
             return fn()
         except CommitConflict:
-            if attempt >= max_retries:
+            if attempt >= COMMIT_RETRIES:
                 raise
-            time.sleep(initial_delay * (2**attempt))
+            time.sleep(COMMIT_RETRY_DELAY_S * (2**attempt))
             attempt += 1

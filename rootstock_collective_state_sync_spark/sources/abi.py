@@ -18,7 +18,7 @@ irrelevant.
 
 from __future__ import annotations
 
-from typing import Callable
+from rootstock_collective_state_sync_spark.sources.graphql import Transport, http_transport
 
 # Same address on every EVM chain (CREATE2), including Rootstock.
 MULTICALL3_ADDRESS = "0xcA11bde05977b3631167028862bE2a173976CA11"
@@ -185,37 +185,17 @@ def decode_aggregate3(data: bytes) -> list[tuple[bool, bytes]]:
     return out
 
 
-# ---- JSON-RPC transport ----------------------------------------------------
-
-PostFn = Callable[[str, dict], dict]
-
-
-def http_json_rpc(url: str, payload: dict) -> dict:
-    """Default POST via urllib — swap for tests / custom auth."""
-    import json
-    import urllib.request
-
-    req = urllib.request.Request(
-        url,
-        data=json.dumps(payload).encode(),
-        headers={"Content-Type": "application/json"},
-    )
-    with urllib.request.urlopen(req, timeout=30) as resp:  # noqa: S310
-        return json.loads(resp.read())
-
-
 def make_multicall_fn(
     rpc_url: str,
     governor_address: str,
     multicall_address: str = MULTICALL3_ADDRESS,
-    post: PostFn = http_json_rpc,
-    block_tag: str = "latest",
+    post: Transport = http_transport,
 ):
     """A ready-to-use ``MulticallFn`` for :func:`..rpc.refresh_proposal_states`:
     hex proposal ids -> ``{id: rawState}`` via ONE ``eth_call`` to
-    Multicall3 per batch. Failed inner calls are dropped from the map
-    (parity with the reference's warn-and-skip,
-    ``blockProposalStateStrategy.ts:54-61``)."""
+    Multicall3 per batch, at the ``latest`` block. Failed inner calls
+    are dropped from the map (parity with the reference's
+    warn-and-skip, ``blockProposalStateStrategy.ts:54-61``)."""
 
     def multicall_fn(ids: list[str]) -> dict[str, int]:
         if not ids:
@@ -229,7 +209,7 @@ def make_multicall_fn(
             "method": "eth_call",
             "params": [
                 {"to": multicall_address, "data": "0x" + encode_aggregate3(calls).hex()},
-                block_tag,
+                "latest",
             ],
         }
         resp = post(rpc_url, payload)
@@ -249,23 +229,18 @@ def multicall_fn_for_network(
     network: str,
     governor_address: str,
     multicall_address: str = MULTICALL3_ADDRESS,
-    post: PostFn = http_json_rpc,
-    block_tag: str = "latest",
+    post: Transport = http_transport,
 ):
     """:func:`make_multicall_fn` with the RPC URL resolved from the
-    named chain registry (``streaming.chain.CHAINS`` — parity
-    ``createClient.ts:8-17`` + ``config/chain.ts:15-24``), so the S6
-    enrichment path composes with the same mainnet/testnet/regtest
-    names the chain client uses."""
-    from rootstock_collective_state_sync_spark.streaming.chain import CHAINS
+    named chain registry (:meth:`..streaming.chain.HttpChain.from_network`
+    — parity ``createClient.ts:8-17`` + ``config/chain.ts:15-24``), so
+    the S6 enrichment path composes with the same
+    mainnet/testnet/regtest names the chain client uses."""
+    from rootstock_collective_state_sync_spark.streaming.chain import HttpChain
 
-    spec = CHAINS.get(network)
-    if spec is None:
-        raise ValueError(f"Unsupported network: {network}")
     return make_multicall_fn(
-        spec.rpc_url,
+        HttpChain.from_network(network).rpc_url,
         governor_address,
         multicall_address=multicall_address,
         post=post,
-        block_tag=block_tag,
     )

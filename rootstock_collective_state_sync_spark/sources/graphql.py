@@ -197,6 +197,9 @@ def build_batch_query(requests: list[GraphQLRequest]) -> str:
 
 Transport = Callable[[str, dict], dict]
 
+#: pages one keyset walk may take before it is taken as not terminating
+MAX_PAGES = 100_000
+
 
 def build_endpoint(url: str, subgraph_id: str, api_key: str | None = None) -> str:
     """C8: final endpoint URL from provider parts (reference
@@ -232,7 +235,8 @@ def mask_api_key(endpoint: str) -> str:
 
 
 def http_transport(url: str, body: dict) -> dict:
-    """Default transport: JSON POST (production path)."""
+    """Default transport: JSON POST (production path). The chain
+    client and the multicall post their JSON-RPC bodies with it too."""
     req = urllib.request.Request(
         url,
         data=json.dumps(body).encode(),
@@ -270,7 +274,6 @@ class SubgraphClient:
     # request metrics (parity: subgraphProvider.ts:27-62) — bounded
     http_requests: int = 0
     queries_sent: int = 0
-    batched_savings: int = 0
 
     @classmethod
     def from_provider(
@@ -320,7 +323,6 @@ class SubgraphClient:
         doc = build_batch_query(requests)
         self.http_requests += 1
         self.queries_sent += len(requests)
-        self.batched_savings += len(requests) - 1
         resp = self.transport(self.url, {"query": doc})
         if resp.get("errors"):
             raise GraphQLError(str(resp["errors"]))
@@ -357,7 +359,6 @@ class SubgraphClient:
         doc = build_batch_query(requests)
         self.http_requests += 1
         self.queries_sent += len(requests)
-        self.batched_savings += len(requests) - 1
         resp = self.transport(self.url, {"query": doc})
         if resp.get("errors"):
             if len(requests) == 1:
@@ -384,14 +385,13 @@ class SubgraphClient:
         where: dict[str, Any] | None = None,
         start_cursor: str = "0x00",
         id_upper_bound: str | None = None,
-        max_pages: int = 100000,
     ):
         """Keyset pagination generator: yields record pages until a
         short page signals completion (``subgraphSyncer.ts:24-37``).
         ``id_upper_bound`` (exclusive) lets partitioned readers walk
         disjoint id ranges in parallel."""
         cursor = start_cursor
-        for _ in range(max_pages):
+        for _ in range(MAX_PAGES):
             req = first_page_request(
                 schema,
                 entity_name,
@@ -407,4 +407,4 @@ class SubgraphClient:
                 cursor = records[-1]["id"]
             if len(records) < page_size:
                 return
-        raise GraphQLError(f"pagination did not terminate after {max_pages} pages")
+        raise GraphQLError(f"pagination did not terminate after {MAX_PAGES} pages")

@@ -63,14 +63,13 @@ def state_label(raw: int) -> str:
 def refresh_proposal_states(
     table: VersionedTable,
     multicall_fn: MulticallFn = _no_rpc,
-    live_states: tuple[int, ...] = LIVE_RAW_STATES,
 ) -> int:
     """S6+J1+K2 end-to-end: read live proposals, fetch on-chain states
     in batched RPC calls, merge back ONLY the rows whose state
     differs. Returns the new table version (the current one when no
     state changed). Starts no Spark job."""
     rows = table.read_arrow()
-    live = rows.filter(pc.is_in(rows["rawState"], value_set=pa.array(live_states, rows["rawState"].type)))
+    live = rows.filter(pc.is_in(rows["rawState"], value_set=pa.array(LIVE_RAW_STATES, rows["rawState"].type)))
     ids = ["0x" + b.hex() for b in live["id"].to_pylist()]
     stored = live["rawState"].to_pylist()
     changed, raw = [], []

@@ -14,10 +14,11 @@ in-memory / file-backed chains for tests.
 from __future__ import annotations
 
 import json
-import urllib.request
 from dataclasses import dataclass, field
 from pathlib import Path
-from typing import Callable, Protocol
+from typing import Protocol
+
+from rootstock_collective_state_sync_spark.sources.graphql import Transport, http_transport
 
 
 @dataclass(frozen=True)
@@ -32,24 +33,6 @@ class ChainClient(Protocol):
     def head_block(self) -> Block: ...
 
     def get_block(self, number: int) -> Block | None: ...
-
-
-#: (url, json-rpc request body) -> json-rpc response body — same
-#: injectable-transport shape as ``sources.graphql.Transport``, so
-#: tests swap sockets for an in-process fake.
-RpcTransport = Callable[[str, dict], dict]
-
-
-def http_rpc_transport(url: str, body: dict) -> dict:
-    """Default transport: JSON-RPC 2.0 POST (production path)."""
-    req = urllib.request.Request(
-        url,
-        data=json.dumps(body).encode(),
-        headers={"Content-Type": "application/json"},
-        method="POST",
-    )
-    with urllib.request.urlopen(req, timeout=30) as resp:
-        return json.loads(resp.read())
 
 
 class ChainRpcError(RuntimeError):
@@ -90,11 +73,11 @@ class HttpChain:
     ``getBlock``/``watchBlocks`` reads, ``createClient.ts:19-22``).
     The transport is injectable exactly like
     :class:`..sources.graphql.SubgraphClient`'s, so every sync/reorg
-    e2e runs against an in-process fake — and production swaps in
-    :func:`http_rpc_transport` with a registry URL."""
+    e2e runs against an in-process fake — and production posts with
+    :func:`..sources.graphql.http_transport` to a registry URL."""
 
     rpc_url: str
-    transport: RpcTransport = field(default=http_rpc_transport)
+    transport: Transport = field(default=http_transport)
     #: transient-transport retries (parity with viem's default
     #: retryCount=3). Only TRANSPORT exceptions retry — a JSON-RPC
     #: `error` member is the node answering and retrying it would
@@ -105,7 +88,7 @@ class HttpChain:
 
     @classmethod
     def from_network(
-        cls, network: str, transport: RpcTransport = http_rpc_transport
+        cls, network: str, transport: Transport = http_transport
     ) -> "HttpChain":
         """Resolve a named chain (reference ``createClient.ts:8-17``
         semantics: non-string config is a TypeError, unknown names

@@ -5,16 +5,25 @@ The engine analog of the reference's lifecycle (SURVEY §3):
 - :meth:`SyncEngine.bootstrap` — entry point 1 (``main.ts:9-36``):
   compile schemas -> create tables -> full hydration of every entity.
 - :meth:`SyncEngine.run_block` — entry point 2
-  (``blockWatcher.ts:42-49,118-133``): the ordered per-block strategy
-  pipeline with per-strategy error isolation; throttled strategies
-  skip blocks below their interval (T2).
-- change-log-driven selective sync (T4,
-  ``blockChangeLogStrategy.ts:14-116``): read the CDC feed past the
-  stored watermark, re-sync only the entities it names, advance the
-  ``LastProcessedBlock`` singleton (K3).
-- append-only event sync (T5, ``blockVaultHistoryStrategy.ts:54-78``):
-  fetch only rows above the stored ``max(blockNumber)`` and merge
-  (idempotent by PK, so overlap is harmless).
+  (``blockWatcher.ts:42-49,118-133``): one block's ordered steps, each
+  isolated so one failure never starves the others, each skipping
+  blocks below its interval (T2). Each walk's filter is fixed once, at
+  the start of the block, before any step merges; its first page and
+  every later one are fetched under it. The steps, in order:
+
+  1. change-log-driven selective sync (``changelog``, T4,
+     ``blockChangeLogStrategy.ts:14-116``): read the CDC feed past the
+     stored watermark, re-sync only the entities it names, advance the
+     ``LastProcessedBlock`` singleton (K3);
+  2. append-only event sync (``append:<name>``, T5,
+     ``blockVaultHistoryStrategy.ts:54-78``): fetch only rows with
+     ``blockNumber`` above the table's ``max(blockNumber)`` and merge
+     (idempotent by PK, so overlap is harmless);
+  3. look-back-window sync (``lookback:<name>``, F3,
+     ``blockProposalStrategy.ts:20,51-53,88-93``): re-fetch the
+     entities with ``createdAtBlock`` inside the trailing window;
+  4. the caller's ``extra_steps``, such as the proposal-state refresh
+     (S6, :func:`..sources.rpc.refresh_proposal_states`).
 
 Unlike the reference — which buffers every page in driver memory
 before any write (``subgraphSyncer.ts:124-127``, SURVEY §3.1 note) —
@@ -56,6 +65,7 @@ from rootstock_collective_state_sync_spark.sinks import TableCatalog, merge_upse
 from rootstock_collective_state_sync_spark.sources.graphql import SubgraphClient, first_page_request
 from rootstock_collective_state_sync_spark.sources.subgraph_source import (
     SubgraphDataSource,
+    _hex_to_bytes,
     records_to_arrow,
 )
 from rootstock_collective_state_sync_spark.streaming.chain import Block
@@ -64,11 +74,6 @@ log = logging.getLogger(__name__)
 
 WATERMARK_ENTITY = "LastProcessedBlock"
 CHANGELOG_ENTITY = "BlockChangeLog"
-
-
-def _hex_to_bytes(h: str) -> bytes:
-    s = h[2:] if h.startswith("0x") else h
-    return bytes.fromhex(s)
 
 
 @dataclass
@@ -213,14 +218,19 @@ class SyncEngine:
         in one routed document (T7) as :meth:`run_block` does."""
         # schema-membership guard (F7): silently drop unknown names
         names = [n for n in names if n in self.schema and n != WATERMARK_ENTITY]
+        pages = self._first_pages([(n, where) for n in names])
+        return {n: self.sync_entity(n, where, meta, first_page=p) for n, p in zip(names, pages)}
+
+    def _first_pages(self, walks: list[tuple[str, dict[str, Any] | None]]) -> list[list[dict] | None]:
+        """First pages of ``(entity, where)`` walks in one routed
+        document (T7); if it fails, each walk paginates on its own."""
         try:
-            pages = self.client.execute_routed(
-                [first_page_request(self.schema, n, self.page_size, where=where) for n in names]
+            return self.client.execute_routed(
+                [first_page_request(self.schema, n, self.page_size, where=w) for n, w in walks]
             )
         except Exception:
-            log.exception("coalesced first pages of %s failed", names)
-            pages = [None] * len(names)  # each entity paginates on its own
-        return {n: self.sync_entity(n, where, meta, first_page=p) for n, p in zip(names, pages)}
+            log.exception("coalesced first pages of %s failed", [n for n, _ in walks])
+            return [None] * len(walks)
 
     # ---- watermark singleton (K3) -------------------------------------------
 
@@ -266,8 +276,7 @@ class SyncEngine:
     def _changelog_where(self, head: Block) -> dict[str, Any] | None:
         """Filter for the next changelog read, or ``None`` if the
         stored watermark already covers the head (short-circuit,
-        X12). Factored out so ``run_block`` can prefetch page 1 in
-        the coalesced batch."""
+        X12)."""
         wm = self.get_watermark()
         if wm and wm.number >= head.number:
             return None
@@ -286,8 +295,8 @@ class SyncEngine:
         ``_change_block`` incremental filter, F4), ingests the change
         log itself, and advances the watermark. ``where`` is the
         :meth:`_changelog_where` filter when the caller has already
-        read the watermark for it (``run_block``'s plan); without it
-        the watermark is read here.
+        read the watermark for it (``run_block``); without it the
+        watermark is read here.
         """
         if where is None:
             where = self._changelog_where(head)
@@ -328,169 +337,82 @@ class SyncEngine:
         )
         return counts
 
-    def _append_where(self, name: str, block_col: str) -> dict[str, Any]:
-        """High-water-mark filter for an append-only entity (T5); the
-        mark comes from the table's parquet footer statistics."""
-        top = self.catalog.table(name).column_max(block_col)
-        from_block = int(top) + 1 if top is not None else 0
-        return {f"{block_col}_gte": from_block}
+    def _append_where(self, name: str) -> dict[str, Any]:
+        """T5 filter of an append-only entity: the rows above the
+        table's high-water mark, read from its parquet footers."""
+        top = self.catalog.table(name).column_max("blockNumber")
+        return {"blockNumber_gte": int(top) + 1 if top is not None else 0}
 
-    def sync_append_only(
-        self,
-        name: str,
-        head: Block,
-        block_col: str = "blockNumber",
-        first_page: list[dict] | None = None,
-    ) -> int:
-        """T5: immutable event stream — fetch only rows above the
-        stored high-water mark; merge keeps re-fetches idempotent. The
-        version is stamped with ``head``'s height, so a reorg restore
-        below it rolls the fetched rows back."""
-        return self.sync_entity(
-            name,
-            where=self._append_where(name, block_col),
-            meta={"blockNumber": head.number},
-            first_page=first_page,
-        )
-
-    # ---- look-back window strategy (F3) --------------------------------------
-
-    def _lookback_where(self, name: str, head: Block, block_col: str) -> dict[str, Any]:
-        from_block = max(head.number - self.lookback_window, 0)
-        return {f"{block_col}_gt": from_block}
-
-    def sync_lookback(
-        self,
-        name: str,
-        head: Block,
-        block_col: str = "createdAtBlock",
-        first_page: list[dict] | None = None,
-        refresh_fn: Callable[[Block], Any] | None = None,
-    ) -> int:
-        """F3: look-back-window sync (reference
-        ``blockProposalStrategy.ts:20,51-53,88-93``): re-fetch only
-        entities created within the trailing window
-        (``{block_col}_gt: head - 25000``) — the reference's proposal
-        strategy, which bounds per-block work to the governance-active
-        window regardless of total history size. ``refresh_fn`` (when
-        given) runs after the merge — the hook the proposal-state
-        multicall refresh (:mod:`..sources.rpc`) plugs into."""
-        where = self._lookback_where(name, head, block_col)
-        n = self.sync_entity(
-            name,
-            where=where,
-            meta={"blockNumber": head.number},
-            first_page=first_page,
-        )
-        if refresh_fn is not None:
-            refresh_fn(head)
-        return n
+    def _lookback_where(self, head: Block) -> dict[str, Any]:
+        """F3 filter (``blockProposalStrategy.ts:20,51-53,88-93``): the
+        entities created within the trailing ``lookback_window``."""
+        return {"createdAtBlock_gt": max(head.number - self.lookback_window, 0)}
 
     # ---- per-block pipeline (T8) ---------------------------------------------
+
+    @staticmethod
+    def _isolated(label: str, block: Block, step: Callable[..., Any], *args: Any) -> Any:
+        """``step(*args)``; its exception is logged and becomes its
+        result, so one failure never starves the others
+        (``blockWatcher.ts:118-133``)."""
+        try:
+            return step(*args)
+        except Exception as exc:
+            log.exception("strategy %s failed at block %s", label, block.number)
+            return exc
 
     def run_block(
         self,
         block: Block,
         append_only_entities: list[str] = (),
-        extra_steps: list[tuple[str, Callable[[Block], Any]]] = (),
         lookback_entities: list[str] = (),
-        lookback_block_col: str = "createdAtBlock",
-        lookback_refresh: Callable[[Block], Any] | None = None,
+        extra_steps: list[tuple[str, Callable[[Block], Any]]] = (),
     ) -> dict[str, Any]:
-        """Ordered strategy pipeline for one block; each step isolated
-        so one failure never starves the others
-        (``blockWatcher.ts:118-133``).
+        """One block's ordered steps, each isolated; returns each
+        step's result (rows per entity, ``"throttled"`` or the
+        exception it raised) by label.
 
-        Cross-strategy request coalescing (T7/X6, reference
-        ``batchExecutor.ts:78-131,181-199``): every non-throttled
-        batchable step (changelog, append-only, look-back) contributes
-        its first-page query to ONE aliased GraphQL document per
-        block; :meth:`SubgraphClient.execute_routed` demuxes results
-        back per step, which then paginates further only if its first
-        page was full. N strategies -> 1 HTTP round-trip in steady
-        state. ``extra_steps`` (arbitrary callables) stay unbatched.
+        The walks come first, in this order: ``changelog`` (T4), then
+        ``append:<name>`` (T5, rows above the table's
+        ``max(blockNumber)``) and ``lookback:<name>`` (F3,
+        ``createdAtBlock`` inside the trailing window), each stamped
+        with ``block``'s height. Before any of them merges, every
+        walk that its throttle (T2) lets run fixes its filter, and
+        their first pages come in ONE routed GraphQL document (T7/X6,
+        ``batchExecutor.ts:78-131,181-199``); a walk pages further,
+        under the same filter, only if its first page was full. Then
+        ``extra_steps`` run in order, each throttled under its own
+        label: the proposal-state refresh (S6,
+        :func:`..sources.rpc.refresh_proposal_states`) is one of them.
         """
+        planned = [("changelog", CHANGELOG_ENTITY, self._changelog_where, block)]
+        planned += [(f"append:{n}", n, self._append_where, n) for n in append_only_entities]
+        planned += [(f"lookback:{n}", n, self._lookback_where, block) for n in lookback_entities]
         results: dict[str, Any] = {}
-        # (label, request, consume(block, first_page) -> result)
-        batched: list[tuple[str, Any, Callable[[Block, list[dict] | None], Any]]] = []
-
-        def plan(label: str, build) -> None:
-            """Throttle-check a batchable step and stage its prefetch."""
+        walks: list[tuple[str, str, dict[str, Any]]] = []
+        for label, name, where_of, arg in planned:
             if self._throttled(label, block.number):
                 results[label] = "throttled"
-                return
-            try:
-                staged = build()
-            except Exception as exc:  # isolation also for the planning read
-                log.exception("strategy %s failed planning block %s", label, block.number)
-                results[label] = exc
-                return
-            if staged is None:
+                continue
+            where = self._isolated(label, block, where_of, arg)
+            if where is None:  # the watermark already covers the block (X12)
                 results[label] = {}
-                return
-            batched.append((label, staged[0], staged[1]))
+            elif isinstance(where, Exception):
+                results[label] = where
+            else:
+                walks.append((label, name, where))
 
-        def plan_changelog():
-            where = self._changelog_where(block)
-            if where is None:
-                return None  # short-circuit: head already processed
-            req = first_page_request(
-                self.schema, CHANGELOG_ENTITY, self.page_size, where=where
-            )
-            return req, lambda b, page: self.sync_from_changelog(b, first_page=page, where=where)
-
-        plan("changelog", plan_changelog)
-
-        for name in append_only_entities:
-
-            def plan_append(n=name):
-                where = self._append_where(n, "blockNumber")
-                req = first_page_request(self.schema, n, self.page_size, where=where)
-                return req, lambda b, page, nn=n: self.sync_append_only(
-                    nn, b, first_page=page
-                )
-
-            plan(f"append:{name}", plan_append)
-
-        for name in lookback_entities:
-
-            def plan_lookback(n=name):
-                where = self._lookback_where(n, block, lookback_block_col)
-                req = first_page_request(self.schema, n, self.page_size, where=where)
-                return req, lambda b, page, nn=n: self.sync_lookback(
-                    nn,
-                    b,
-                    block_col=lookback_block_col,
-                    first_page=page,
-                    refresh_fn=lookback_refresh,
-                )
-
-            plan(f"lookback:{name}", plan_lookback)
-
-        # ONE coalesced round-trip for all staged first pages
-        pages: list[list[dict] | None]
-        if batched:
-            try:
-                pages = self.client.execute_routed([req for _, req, _ in batched])
-            except Exception:
-                log.exception("coalesced batch failed at block %s", block.number)
-                pages = [None] * len(batched)  # full per-step fallback
-        else:
-            pages = []
-        for (label, _, consume), page in zip(batched, pages):
-            try:
-                results[label] = consume(block, page)
-            except Exception as exc:  # per-strategy isolation (T8)
-                log.exception("strategy %s failed at block %s", label, block.number)
-                results[label] = exc
+        meta = {"blockNumber": block.number}
+        pages = self._first_pages([(name, where) for _, name, where in walks])
+        for (label, name, where), page in zip(walks, pages):
+            if label == "changelog":
+                results[label] = self._isolated(label, block, self.sync_from_changelog, block, page, where)
+            else:
+                results[label] = self._isolated(label, block, self.sync_entity, name, where, meta, page)
 
         for label, fn in extra_steps:
             if self._throttled(label, block.number):
                 results[label] = "throttled"
-                continue
-            try:
-                results[label] = fn(block)
-            except Exception as exc:
-                log.exception("strategy %s failed at block %s", label, block.number)
-                results[label] = exc
+            else:
+                results[label] = self._isolated(label, block, fn, block)
         return results

@@ -10,6 +10,7 @@ canonical branch (``reorgCleanupStrategy.ts:21-56`` semantics).
 
 from __future__ import annotations
 
+import inspect
 import json
 import os
 import re
@@ -508,11 +509,12 @@ def test_append_only_strategy(spark, tmp_path, world):
         (5, "VoteCast", {**vote(8), "blockNumber": "5"})
     )
     head = world.chain().head_block()
-    n = eng.sync_append_only("VoteCast", head)
+    n = eng.run_block(head, append_only_entities=["VoteCast"])["append:VoteCast"]
     assert n >= 1
     assert "0x%08x" % 8 in {"0x" + k for k in table_state(eng, "VoteCast")}
-    # re-run: idempotent, nothing newer
-    assert eng.sync_append_only("VoteCast", head) <= n
+    # next block: idempotent, nothing newer
+    nxt = Block(head.number + 1, "0x06", 0)
+    assert eng.run_block(nxt, append_only_entities=["VoteCast"])["append:VoteCast"] <= n
 
 
 def claim(i: int, block: int) -> dict:
@@ -840,12 +842,16 @@ def test_lookback_strategy_fetches_only_window(spark, tmp_path, world):
 
     refreshed: list[int] = []
     head = world.chain().head_block()  # number 7 -> createdAtBlock_gt 5
-    n = eng.sync_lookback(
-        "Proposal", head, refresh_fn=lambda b: refreshed.append(b.number)
+    res = eng.run_block(
+        head,
+        lookback_entities=["Proposal"],
+        extra_steps=[("proposal_state", lambda b: refreshed.append(b.number))],
     )
+    n = res["lookback:Proposal"]
     assert n == 2  # proposals 2 (block 6) and 3 (block 7); 1 is outside
     assert refreshed == [7]
 
+    eng._last_run.clear()  # a restarted follower runs the block again
     res = eng.run_block(head, lookback_entities=["Proposal"])
     assert res["lookback:Proposal"] == 2
 
@@ -876,6 +882,80 @@ def test_run_block_batch_failure_falls_back_per_step(spark, tmp_path, world):
     )
     assert res["changelog"] == {}
     assert res["append:VoteCast"] == 0
+
+
+def test_run_block_reads_each_high_water_mark_once(spark, tmp_path, world, monkeypatch):
+    """An append-only walk fixes its filter once per block: one
+    ``column_max`` per append-only table per ``run_block``."""
+    from rootstock_collective_state_sync_spark.sinks.table import VersionedTable
+
+    eng = make_engine(spark, tmp_path, world)
+    eng.bootstrap(at_block=5)
+    reads: list[str] = []
+    column_max = VersionedTable.column_max
+
+    def counting(self, col):
+        reads.append(self.path.name)
+        return column_max(self, col)
+
+    monkeypatch.setattr(VersionedTable, "column_max", counting)
+    res = eng.run_block(
+        world.chain().head_block(), append_only_entities=["VoteCast", "ClaimedRewardsHistory"]
+    )
+    assert not [v for v in res.values() if isinstance(v, Exception)], res
+    assert sorted(reads) == ["ClaimedRewardsHistory", "VoteCast"]
+
+
+def test_append_only_walk_keeps_its_filter_after_the_changelog_merges(spark, tmp_path, world):
+    """The change log merges new votes into ``VoteCast`` before the
+    append-only walk of the same table runs; every page of that walk is
+    still fetched under the ``blockNumber_gte`` its first page was, so
+    it takes every row above the mark it read at the block's start."""
+    eng = make_engine(spark, tmp_path, world)
+    eng.page_size = 1
+    eng.bootstrap(at_block=5)
+    eng.sync_from_changelog(world.chain().head_block())
+    world.extend(
+        synthetic_blocks(6, 2, fork_tag="a"),
+        {
+            6: {"VoteCast": [{**vote(4), "blockNumber": "6"}]},
+            7: {"VoteCast": [{**vote(5), "blockNumber": "7"}, {**vote(6), "blockNumber": "7"}]},
+        },
+    )
+    transport, calls = _counting(world)
+    eng.client = SubgraphClient(url="fake://w", transport=transport)
+    res = eng.run_block(world.chain().head_block(), append_only_entities=["VoteCast"])
+    assert res["changelog"] == {"VoteCast": 3}
+    marks = [int(m) for doc in calls for m in re.findall(r"blockNumber_gte: (\d+)", doc)]
+    assert len(marks) == 4  # three one-row pages and the empty one that ends the walk
+    assert set(marks) == {1}
+    assert res["append:VoteCast"] == 3
+    assert table_state(eng, "VoteCast") == expected_votes(world)
+
+
+def test_a_failing_proposal_state_refresh_is_its_own_step(spark, tmp_path, world):
+    """The proposal-state refresh is an ordinary step: when it raises,
+    the error is reported under its own label and the look-back keeps
+    its row count. ``run_block`` has no hook that ties a refresh to the
+    look-back's result."""
+    world.extend(
+        synthetic_blocks(6, 2, fork_tag="a"),
+        {6: {"Proposal": [proposal(1, created_at=6)]}, 7: {"Proposal": [proposal(2, created_at=7)]}},
+    )
+    eng = make_engine(spark, tmp_path, world, "rf")
+    eng.bootstrap(at_block=7)
+
+    def refresh(block):
+        raise RuntimeError("rpc endpoint down")
+
+    res = eng.run_block(
+        world.chain().head_block(), lookback_entities=["Proposal"], extra_steps=[("proposal_state", refresh)]
+    )
+    assert isinstance(res["proposal_state"], RuntimeError)
+    assert res["lookback:Proposal"] == 2
+    assert list(inspect.signature(SyncEngine.run_block).parameters) == [
+        "self", "block", "append_only_entities", "lookback_entities", "extra_steps",
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -937,7 +1017,7 @@ def test_blockstream_source_offsets(spark, tmp_path):
 
 def test_lookback_with_multicall_refresh_e2e(spark, tmp_path, world):
     """The whole proposal pipeline in one pass (S6+F3+K2): run_block's
-    look-back step syncs in-window proposals, then the refresh hook
+    look-back step syncs in-window proposals, then the refresh step
     fetches on-chain states through the REAL ABI encoder (keccak
     selector -> aggregate3 calldata -> canned JSON-RPC) and
     diff-merges only changed rows."""
@@ -978,8 +1058,7 @@ def test_lookback_with_multicall_refresh_e2e(spark, tmp_path, world):
     res = eng.run_block(
         world.chain().head_block(),
         lookback_entities=["Proposal"],
-        lookback_block_col="createdAtBlock",
-        lookback_refresh=lambda b: rpc.refresh_proposal_states(table, fn),
+        extra_steps=[("proposal_state", lambda b: rpc.refresh_proposal_states(table, fn))],
     )
     assert res["lookback:Proposal"] == 2
     assert len(posted) == 1  # both live proposals in one eth_call
